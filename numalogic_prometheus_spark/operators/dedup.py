@@ -24,6 +24,7 @@ layer; these operators extend dedup to content similarity.
 
 from __future__ import annotations
 
+import re
 import warnings
 
 from pyspark.sql import Column, DataFrame
@@ -478,6 +479,92 @@ def simhash_signature(items: Column, bits: int = 32) -> Column:
     )
 
 
+# Bytes per edge of two longs: the unit the driver-path bound counts in.
+_EDGE_BYTES = 16
+_BYTE_UNITS = {
+    "": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20, "mb": 1 << 20,
+    "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40, "tb": 1 << 40,
+    "p": 1 << 50, "pb": 1 << 50,
+}
+
+
+def driver_edge_bound(spark) -> int:
+    """T, the most edges :func:`connected_components` finishes on the
+    driver: ``spark.sql.autoBroadcastJoinThreshold`` (the bytes Spark
+    already ships to every executor for a broadcast join) over 16 B per
+    two-long edge. A negative threshold turns broadcasts, and with them
+    the driver path, off: -1."""
+    raw = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    num, unit = re.fullmatch(r"\s*(-?\d+)\s*([a-zA-Z]*)\s*", raw).groups()
+    threshold = int(num) * _BYTE_UNITS[unit.lower()]
+    return threshold // _EDGE_BYTES if threshold >= 0 else -1
+
+
+def _components_on_driver(spark, edges, id_type) -> DataFrame:
+    """Min-id components of a collected edge table ``(a, b)`` as a
+    DataFrame ``(id, component)``, rows equal to what the BSP loop
+    returns on the same ``sym``.
+
+    Union-find over dense node indices in id order, always hanging the
+    larger root under the smaller, so every root is its set's minimum;
+    one vectorized pointer-jumping pass then resolves each node to its
+    root. A row with a NULL endpoint adds its other endpoint as a node
+    but joins nothing (NULL matches no key), and makes a NULL ``id`` row
+    labelled with the component of its smallest non-NULL partner (NULL
+    when there is none), as the loop's seed and hop leave it.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import StructField, StructType
+
+    a, b = edges.column("a"), edges.column("b")
+    both = pc.and_(pc.is_valid(a), pc.is_valid(b))
+    ea = pc.filter(a, both).to_numpy()
+    eb = pc.filter(b, both).to_numpy()
+    one_null = pc.invert(both)
+    partners = pc.drop_null(
+        pc.coalesce(pc.filter(a, one_null), pc.filter(b, one_null))
+    ).to_numpy()
+    ids = np.unique(np.concatenate([ea, eb, partners]))
+    parent = list(range(ids.size))
+    for x, y in zip(
+        np.searchsorted(ids, ea).tolist(), np.searchsorted(ids, eb).tolist()
+    ):
+        while parent[x] != x:
+            parent[x] = x = parent[parent[x]]
+        while parent[y] != y:
+            parent[y] = y = parent[parent[y]]
+        if x < y:
+            parent[y] = x
+        elif y < x:
+            parent[x] = y
+    root = np.asarray(parent, dtype=np.int64)
+    while True:
+        hop = root[root]
+        if np.array_equal(hop, root):
+            break
+        root = hop
+    id_col = pa.array(ids)
+    comp_col = pa.array(ids[root], type=id_col.type)
+    if pc.any(one_null).as_py():
+        null_lbl = (
+            ids[root[np.searchsorted(ids, partners.min())]].item()
+            if partners.size
+            else None
+        )
+        id_col = pa.concat_arrays([id_col, pa.nulls(1, id_col.type)])
+        comp_col = pa.concat_arrays(
+            [comp_col, pa.array([null_lbl], type=id_col.type)]
+        )
+    return spark.createDataFrame(
+        pa.table({"id": id_col, "component": comp_col}),
+        StructType(
+            [StructField("id", id_type), StructField("component", id_type)]
+        ),
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -488,45 +575,57 @@ def connected_components(
     """Duplicate-cluster resolution: connected components over a near-dup
     pair relation → (id, component) with component = min member id.
 
-    Iterative min-label propagation WITH pointer doubling: each round
-    every node (1) adopts the smallest label among itself and its
-    neighbors, then (2) compresses one pointer hop (lbl ← lbl's own
-    label). The hop means the best label travels 2^k hops after k
-    rounds, so convergence is O(log diameter) rounds instead of the
-    plain adoption loop's O(diameter) — the sf0.1 simhash giant
-    component settles in 4 rounds with the 1-hop-min seed below
-    (identity-seeded changed counts were 4576→798→13→4→0; the seed
-    prepays the first adoption).
-    Each round: neighbor join + min aggregate + adoption join, hop join
-    (which re-evaluates the adoption subplan — its shuffles are
-    exchange-reused and pinning it per round measured slower), and a
-    convergence-count join — all over the CHECKPOINTED edge relation
-    (the round-7 fix: an untruncated `sym` re-ran the whole upstream
-    pair pipeline every round — 16 s → 4.4 s at sf0.1). The standard
-    BSP shape at 100 TB: no driver-side graph, early exit via the cheap
-    convergence count.
+    Both paths work on ``sym``, the pinned symmetric edge relation, and
+    return one row per node of ``sym``:
+
+    - **Driver path** (at most T edges, T = :func:`driver_edge_bound`,
+      from ``spark.sql.autoBroadcastJoinThreshold``): one bounded
+      collect of ``sym`` in one orientation, union-find on the driver,
+      and the result handed back as a local relation. No rounds, no
+      per-round pins; ``max_iter`` does not apply. The driver holds no
+      more than Spark would broadcast, so the step is bounded by the
+      threshold, not by the data.
+    - **BSP path** (above T, or threshold -1): min-label propagation
+      with pointer doubling over distributed labels, at most
+      ``max_iter`` rounds, ending with a ``RuntimeWarning`` when the
+      labels still change.
+
+    They agree because both compute min-id components: in the loop,
+    every label names a node of its own component and labels only
+    decrease, so the component minimum is always a label and is the
+    fixpoint; union-find roots are set minima by construction.
     """
-    # Truncate the edge lineage ONCE: `sym` is re-read by every round's
-    # neighbor join, and without the cut each round would re-run the
-    # entire upstream pair-generation pipeline (measured: the simhash
-    # pairs plan alone costs seconds per round at sf0.1 — the loop was
-    # paying it 5× over).
+    # `sym` is read by the bounded collect and by every round's neighbor
+    # join; the pin keeps each read from re-running the upstream pair
+    # pipeline.
     sym = truncate_lineage(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct(),
         reliable,
     )
-    # Seed labels with min(id, 1-hop neighbor min) instead of the
-    # identity (r18, VERDICT r17 #1): the seed rides the SAME
-    # groupBy(a) exchange the identity seed's distinct() paid, so round
-    # 1's adoption is prepaid for free and the loop converges one
-    # whole round (= one stage-latency-bound job) earlier — measured
-    # 5 → 4 convergence jobs / 4.00 → 3.07 s on the sf0.1 simhash
-    # graph (probe_cc_r18.py; components asserted identical). The seed
-    # preserves both loop invariants: every label names a node of the
-    # same component, and labels only ever decrease toward the true
-    # component minimum.
+    spark = sym.sparkSession
+    bound = driver_edge_bound(spark)
+    if bound >= 0:
+        # One orientation per edge, plus self-loops and NULL-endpoint
+        # rows, so every node of `sym` appears. coalesce(1) makes this
+        # one task that stops reading after T + 1 rows.
+        head = (
+            sym.filter(
+                (F.col("a") <= F.col("b"))
+                | F.col("a").isNull()
+                | F.col("b").isNull()
+            )
+            .coalesce(1)
+            .limit(bound + 1)
+            .toArrow()
+        )
+        if head.num_rows <= bound:
+            return _components_on_driver(spark, head, sym.schema["a"].dataType)
+    # BSP path. Seed: lbl = min(id, 1-hop neighbor min), which rides the
+    # same groupBy(a) exchange an identity seed would pay and already
+    # satisfies both invariants (a label names a node of the same
+    # component; labels only decrease toward the component minimum).
     labels = truncate_lineage(
         sym.groupBy("a")
         .agg(F.least(F.col("a"), F.min("b")).alias("lbl"))
@@ -534,22 +633,11 @@ def connected_components(
         reliable,
     )
     changed = 0
-    # Frontier shrinking (r18, VERDICT r17 #1 second half, guide §2.4
-    # "shuffle only the active frontier"): labels are monotone
-    # non-increasing, and round k's adoption takes
-    # lbl_k(a) ≤ min(lbl_{k−1}(a), min over neighbors b of lbl_{k−1}(b))
-    # before the hop lowers it further — so a neighbor whose label did
-    # NOT change in round k (lbl_k(b) = lbl_{k−1}(b) ≥ lbl_k(a)) can
-    # never lower a's label in round k+1. From round 2 on the
-    # neighbor-min join therefore only needs the CHANGED labels, which
-    # the convergence filter already isolates on the checkpointed
-    # result. The frontier collapses fast (seeded sf0.1 simhash graph:
-    # 798 → 13 → 4 → 0), so AQE turns the per-round neighbor join into
-    # a broadcast probe of `sym` with no exchange of either side —
-    # measured 2.89 → 2.57 s min-of-4 with identical components
-    # (artifacts/r18/probe_cc6_r18.py). At 100 TB the frontier is the
-    # still-merging component boundary, a vanishing fraction of labels
-    # after the first rounds.
+    # Frontier: labels are monotone non-increasing, and after round k
+    # lbl_k(a) <= lbl_{k-1}(b) for every neighbor b. A neighbor whose
+    # label did not change in round k therefore cannot lower a's label in
+    # round k+1, so each round's neighbor-min join reads only the labels
+    # that changed in the previous round (the seed counts as all changed).
     frontier = labels
     for _ in range(max_iter):
         neighbor_min = (
@@ -561,24 +649,19 @@ def connected_components(
             neighbor_min, labels.id == neighbor_min.a, "left"
         ).select(
             "id",
-            # the round's starting label rides along so convergence can
-            # be read off the checkpointed result with a filter instead
-            # of a labels⋈new_labels shuffle join (r17 optimization,
-            # guide §2.4 — two exchanges per round removed)
+            # the round's starting label rides along, so the convergence
+            # count and the next frontier are filters on the pinned
+            # result instead of joins against the previous labels
             F.col("lbl").alias("old_lbl"),
             F.least(
                 F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))
             ).alias("lbl"),
         )
-        # NOT pinned, deliberately: the hop reads `adopted` twice, but
-        # its shuffles are exchange-reused and both inputs (labels, sym)
-        # are already checkpointed — measured, a per-round
-        # materialization of `adopted` costs more than the duplicated
-        # post-shuffle aggregate+probe it would save.
-        # pointer doubling: follow one label hop (lbl ← adopted[lbl]).
-        # Labels always name a member node whose own label is ≤ theirs,
-        # so the hop preserves the component invariant while letting the
-        # minimum travel 2^k hops by round k.
+        # Pointer doubling: follow one label hop (lbl <- adopted[lbl]).
+        # A label names a node whose own label is <= it, so the hop keeps
+        # both invariants while the minimum travels 2^k hops by round k.
+        # `adopted` is read twice but not pinned: its shuffles are
+        # exchange-reused and its inputs (labels, sym) are pinned.
         hop = adopted.select(
             F.col("id").alias("pid"), F.col("lbl").alias("plbl")
         )
@@ -586,24 +669,14 @@ def connected_components(
             adopted.join(hop, adopted.lbl == hop.pid, "left").select(
                 "id", F.coalesce("plbl", "lbl").alias("lbl"), "old_lbl"
             ),
-            # truncate lineage per round: without this the plan doubles
-            # every iteration and analysis/codegen time goes exponential
+            # the per-round cut keeps the plan from doubling each round
             reliable,
-            # lazy: the convergence count below is the materializing
-            # action, so each round runs ONE job instead of two (r17)
+            # lazy: the convergence count below materializes it, so a
+            # round is one job
             eager=False,
         )
-        # convergence check reads the just-materialized checkpoint — a
-        # shuffle-free filter+count, replacing the old new⋈old equi-join
-        # (2 exchanges + hash join per round on the label relation). The
-        # carried old_lbl equals the old join's o.lbl for the same id by
-        # construction (adopted is a left join off `labels`, one row per
-        # label), so the count is identical.
         changed = new_full.filter(F.col("lbl") != F.col("old_lbl")).count()
         labels = new_full.select("id", "lbl")
-        # next round's neighbor-min source: only the labels that moved
-        # this round (reads the just-materialized checkpoint, no extra
-        # job — same subtree the convergence count scanned)
         frontier = new_full.filter(F.col("lbl") != F.col("old_lbl")).select(
             "id", "lbl"
         )

@@ -540,7 +540,13 @@ def _nh_series_kernel(pdf):
     (< 2^53), so the output is bit-identical to the r17 join-web form —
     gated row-exact by artifacts/r18/probe_nh_r18.py and the golden
     reset fixtures. One series' state is its scrape grid × ≤ ~25
-    buckets, the same per-series bound the join web carried."""
+    buckets, the same per-series bound the join web carried.
+
+    Assumes a UTC session timezone. Arrow hands ``m`` over as naive
+    wall-clock times in the session timezone, and the kernel reads them
+    as unix microseconds: the 90-minute epoch boundaries
+    (``m // _EPOCH_US``) and the hour windows are the unix-time ones
+    only under UTC. :func:`_nh_substrate` asserts it at build."""
     import collections
 
     et = pdf["event_type"].iloc[0]
@@ -636,6 +642,13 @@ def _nh_substrate(
     fleet aggregate) can derive series-level facts without a second
     pass over the substrate."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("value") > 0)
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    if tz != "UTC":
+        raise RuntimeError(
+            "the native-histogram series kernel needs "
+            f"spark.sql.session.timeZone=UTC, got {tz!r}: in another "
+            "timezone its epoch boundaries and hour windows would shift"
+        )
     bounds = F.array(*[F.lit(b) for b in _BOUNDS])
     idx = F.lit(_LO) + F.size(F.filter(bounds, lambda b: b < F.col("value")))
     obs = ev.select(

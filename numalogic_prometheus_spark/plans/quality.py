@@ -113,7 +113,10 @@ def quality_repetition_kernel(docs: DataFrame) -> DataFrame:
     identical to JVM ``length`` and DuckDB ``length`` on the BMP text
     this corpus carries; docs whose token array is NULL or empty drop,
     mirroring the explode form (explode of NULL/[] emits nothing, and
-    the final join was inner on the unigram leg)."""
+    the final join was inner on the unigram leg). A NULL ``n_chars``, or
+    one that leaves no characters (``n_chars - n_tokens + 1 == 0``),
+    gives NULL ``top_token_char_frac`` / ``top_bigram_char_frac`` for
+    that doc."""
 
     def _kernel(batch_iter):
         from collections import Counter
@@ -149,15 +152,21 @@ def quality_repetition_kernel(docs: DataFrame) -> DataFrame:
                     )
                 else:
                     top_bigram_chars = 0
-                chars = float(nc - n_tokens + 1)
+                # NULL or zero-width char counts give NULL char fractions,
+                # as Spark's division did, rather than failing the task
+                chars = None if nc is None else float(nc - n_tokens + 1)
                 out["doc_id"].append(did)
                 out["n_tokens"].append(n_tokens)
                 out["n_distinct"].append(n_distinct)
                 out["top_count"].append(top_count)
                 out["dup_token_frac"].append(1 - n_distinct / float(n_tokens))
                 out["top_token_frac"].append(top_count / float(n_tokens))
-                out["top_token_char_frac"].append(top_token_chars / chars)
-                out["top_bigram_char_frac"].append(top_bigram_chars / chars)
+                out["top_token_char_frac"].append(
+                    top_token_chars / chars if chars else None
+                )
+                out["top_bigram_char_frac"].append(
+                    top_bigram_chars / chars if chars else None
+                )
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(out["doc_id"], type=pa.int64()),

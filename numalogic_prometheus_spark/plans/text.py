@@ -614,12 +614,11 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster resolution ([north-star] dedup final stage): the
     SimHash near-dup pairs become edges of an undirected graph; connected
     components assign every clustered doc its canonical (min-id) survivor.
-    Spark side is BSP min-label propagation with pointer doubling
-    (O(log diameter) rounds; edge relation and per-round state both
-    lineage-pinned — see operators/dedup.py connected_components); the
-    oracle computes the same fixpoint with a DuckDB recursive CTE — an
-    iterative algorithm the differential harness can still check
-    exactly."""
+    Spark side is operators.dedup.connected_components: union-find on
+    the driver while the edge graph is within the broadcast bound T,
+    BSP min-label propagation with pointer doubling above it. Both give
+    min-id components, the fixpoint the oracle's DuckDB recursive CTE
+    computes, so the differential harness checks either path exactly."""
     edges = dedup_simhash_pairs(spark, sf_dir).select("id_a", "id_b")
     comp = D.connected_components(edges)
     return comp.select(F.col("id").alias("doc_id"), "component")

@@ -278,9 +278,10 @@ _SEMANTIC_ORACLE = f"""
 def dedup_semantic_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic dedup final stage: embedding similarity pairs
     (sign-bucket blocked, cosine >= threshold) become edges; connected
-    components resolve
-    transitive clusters; the min-id member of each cluster survives
-    alongside every unclustered doc. `n_members` is the cluster size
+    components (operators.dedup.connected_components: driver union-find
+    within the broadcast bound T, BSP loop above it, the same min-id
+    components either way) resolve transitive clusters; the min-id
+    member of each cluster survives alongside every unclustered doc. `n_members` is the cluster size
     the survivor represents (1 for unique docs) — the weight a
     dedup-aware sampler would use downstream.
 
@@ -409,7 +410,10 @@ def pipeline_curation_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ships with its output.
 
     Scale shape: three map-side per-doc feature passes + the gram
-    explode and the (tiny) component relation from the gates above; the
+    explode and the (tiny) component relation from the gates above (the
+    semantic gate's connected_components, finished on the driver while
+    the edge graph is within the broadcast bound T, as in
+    dedup_semantic_survivors); the
     final assembly is id-equi-joins AQE can broadcast (every gate
     relation except the doc ids themselves collapses to doc-count rows
     or less)."""

@@ -19,6 +19,7 @@ from numalogic_prometheus_spark.operators.promql import (
     increase_with_resets,
 )
 from numalogic_prometheus_spark.operators.relational import asof_join
+from tests.test_storage_layout import _conf
 
 
 def _ts(s: str) -> datetime:
@@ -272,35 +273,77 @@ def test_ewma_irregular_time_constant(spark, tmp_path):
     assert abs(out[_ts("2024-01-01T01:00:00")] - expect) < 1e-6
 
 
+_CHAIN_5 = [(1, 2), (2, 3), (3, 4), (4, 5)]
+
+
 def test_connected_components_warns_on_nonconvergence(spark):
     import warnings as W_
 
     from numalogic_prometheus_spark.operators.dedup import connected_components
 
-    # chain 1-2-3-4-5: min-label needs >1 round; max_iter=1 truncates
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a long, id_b long"
+    # chain 1-2-3-4-5: min-label needs >1 round; max_iter=1 truncates.
+    # Broadcasts off forces the BSP path, the one that has rounds.
+    edges = spark.createDataFrame(_CHAIN_5, "id_a long, id_b long")
+    with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
+        with W_.catch_warnings(record=True) as caught:
+            W_.simplefilter("always")
+            connected_components(edges, max_iter=1).collect()
+    assert any("did not converge" in str(w.message) for w in caught)
+
+
+def test_connected_components_driver_path_ignores_max_iter(spark):
+    """Under the default broadcast threshold the 4-edge chain is
+    finished on the driver: fully merged even with max_iter=1, and no
+    non-convergence warning."""
+    import warnings as W_
+
+    from numalogic_prometheus_spark.operators.dedup import (
+        connected_components,
+        driver_edge_bound,
     )
+
+    assert driver_edge_bound(spark) >= len(_CHAIN_5)
+    edges = spark.createDataFrame(_CHAIN_5, "id_a long, id_b long")
     with W_.catch_warnings(record=True) as caught:
         W_.simplefilter("always")
-        connected_components(edges, max_iter=1).collect()
-    assert any("did not converge" in str(w.message) for w in caught)
+        out = {
+            r["id"]: r["component"]
+            for r in connected_components(edges, max_iter=1).collect()
+        }
+    assert out == {n: 1 for n in range(1, 6)}
+    assert not any("did not converge" in str(w.message) for w in caught)
+
+
+def test_driver_edge_bound_reads_broadcast_threshold(spark):
+    from numalogic_prometheus_spark.operators.dedup import driver_edge_bound
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    for value, bound in [
+        ("-1", -1), ("0", 0), ("160", 10), ("10MB", 655360),
+        ("10485760b", 655360), ("1k", 64),
+    ]:
+        with _conf(spark, key, value):
+            assert driver_edge_bound(spark) == bound, value
 
 
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
     """The `reliable` switch must produce identical labels through
-    df.checkpoint() (DFS-backed, executor-loss-survivable)."""
+    df.checkpoint() (DFS-backed, executor-loss-survivable), on the
+    driver path and on the BSP path."""
     from numalogic_prometheus_spark.operators.dedup import connected_components
 
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     edges = spark.createDataFrame(
         [(2, 1), (2, 3), (10, 11)], "id_a long, id_b long"
     )
-    out = {
-        r["id"]: r["component"]
-        for r in connected_components(edges, reliable=True).collect()
-    }
-    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    for value in (threshold, "-1"):
+        with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", value):
+            out = {
+                r["id"]: r["component"]
+                for r in connected_components(edges, reliable=True).collect()
+            }
+        assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}, value
 
 
 def _seq_ewma(rows, tau_us=3_600_000_000):

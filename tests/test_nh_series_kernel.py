@@ -27,8 +27,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
-from numalogic_prometheus_spark.plans.promql7 import _nh_series_kernel
+from numalogic_prometheus_spark.plans.promql7 import (
+    _nh_series_kernel,
+    _nh_window_deltas,
+)
 
 _MIN = 60_000_000  # one minute in µs
 
@@ -129,3 +133,21 @@ def test_kernel_nanosecond_input():
     pdf = _fixture()
     pdf["m"] = pdf["m"].astype("datetime64[ns]")
     _check(_nh_series_kernel(pdf))
+
+
+def test_substrate_refuses_non_utc_session(spark, sf_dir, monkeypatch):
+    """The kernel reads naive Arrow timestamps as unix µs, which holds
+    only under UTC: a session in another timezone must raise at build,
+    before any (shifted) window is returned. load_table normally re-pins
+    UTC, so the re-pin is switched off to reach the guard."""
+    from numalogic_prometheus_spark.sources import tables
+
+    key = "spark.sql.session.timeZone"
+    monkeypatch.setattr(tables, "pin_session_invariants", lambda s: None)
+    spark.conf.set(key, "America/New_York")
+    try:
+        with pytest.raises(RuntimeError, match="timeZone=UTC"):
+            _nh_window_deltas(spark, sf_dir)
+    finally:
+        spark.conf.set(key, "UTC")
+    assert _nh_window_deltas(spark, sf_dir).columns[:2] == ["event_type", "hour"]

@@ -11,6 +11,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from numalogic_prometheus_spark.operators import metrics as M
+from tests.test_storage_layout import _conf
 
 _value = st.floats(
     min_value=0.0, max_value=100.0, allow_nan=False, allow_infinity=False
@@ -1016,3 +1017,93 @@ def test_cdc_sql_formulation_matches_chunker(blobs):
             out.append((s, e - s, hashlib.md5(data[s:e]).hexdigest()[:16]))
             s = e
         assert chunk_bytes(data) == out
+
+
+# ---------------------------------------------------------------------------
+# connected_components: the driver path (edge graph within the broadcast
+# bound) and the BSP path (broadcasts off) against a pure-Python
+# union-find. Paths take their ids in random order, so a component's
+# minimum usually sits inside the path, not at an end; self-loops,
+# duplicate and reversed edges ride along.
+
+_cc_id = st.integers(min_value=0, max_value=200)
+_cc_settings = settings(
+    max_examples=4,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+
+@st.composite
+def _cc_edges(draw, nulls: bool = False):
+    edges = []
+    for path in draw(
+        st.lists(st.lists(_cc_id, min_size=2, max_size=16, unique=True),
+                 max_size=3)
+    ):
+        edges += list(zip(path, path[1:]))
+    edges += draw(st.lists(st.tuples(_cc_id, _cc_id), max_size=8))
+    edges += [(x, x) for x in draw(st.lists(_cc_id, max_size=2))]
+    if edges:
+        for a, b in draw(st.lists(st.sampled_from(edges), max_size=4)):
+            edges.append((b, a) if draw(st.booleans()) else (a, b))
+    if nulls:
+        for x in draw(st.lists(st.none() | _cc_id, min_size=1, max_size=3)):
+            edges.append((None, x) if draw(st.booleans()) else (x, None))
+    return draw(st.permutations(edges))
+
+
+def _uf_components(edges):
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _cc_rows(spark, edges, broadcast: bool):
+    from numalogic_prometheus_spark.operators.dedup import connected_components
+
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    threshold = "10MB" if broadcast else "-1"
+    with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", threshold):
+        rows = connected_components(df, max_iter=64).collect()
+    return sorted(
+        (tuple(r) for r in rows), key=lambda r: (r[0] is None, r[0] or 0)
+    )
+
+
+@given(edges=_cc_edges())
+@_cc_settings
+def test_connected_components_paths_match_union_find(spark, edges):
+    want = _uf_components(edges)
+    for broadcast in (True, False):
+        got = _cc_rows(spark, edges, broadcast)
+        assert len(got) == len({r[0] for r in got})
+        assert dict(got) == want, broadcast
+
+
+@given(edges=_cc_edges(nulls=True))
+@example(edges=[(1, 2), (3, None), (None, 5), (None, None), (7, 7), (2, 9)])
+@example(edges=[(None, None)])
+@_cc_settings
+def test_connected_components_null_endpoints_match_bsp(spark, edges):
+    # NULL joins nothing: the non-NULL nodes keep their union-find
+    # components, and both paths leave one NULL-id row labelled with the
+    # component of its smallest non-NULL partner
+    driver = _cc_rows(spark, edges, broadcast=True)
+    assert driver == _cc_rows(spark, edges, broadcast=False)
+    want = _uf_components([e for e in edges if None not in e])
+    partners = [x for e in edges if None in e for x in e if x is not None]
+    for x in partners:
+        want.setdefault(x, x)
+    assert dict(driver[:-1]) == want
+    assert driver[-1] == (None, want[min(partners)] if partners else None)

@@ -124,3 +124,36 @@ def test_kernel_edge_rows(spark):
     chars6 = float(10 + 4 - 5 + 1)
     assert math.isclose(d6["top_token_char_frac"], 6 / chars6, rel_tol=0)
     assert math.isclose(d6["top_bigram_char_frac"], 8 / chars6, rel_tol=0)
+
+
+def test_kernel_null_or_zero_width_chars_give_null_fracs(spark):
+    """A NULL n_chars, or one that leaves no characters once the joiner
+    spaces are taken out (n_chars - n_tokens + 1 == 0), yields NULL
+    char fractions for that doc instead of failing the task; the token
+    statistics and the other docs are unaffected."""
+    rows = [
+        (1, "ab cd ab", None),   # NULL n_chars
+        (2, "ab cd ab", 2),      # chars = 2 - 3 + 1 = 0
+        (3, "ab cd ab", 8),      # well-formed control
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, n_chars long")
+    got = {r["doc_id"]: r for r in quality_repetition_kernel(docs).collect()}
+    assert set(got) == {1, 2, 3}
+    for did in (1, 2):
+        r = got[did]
+        assert r["top_token_char_frac"] is None, did
+        assert r["top_bigram_char_frac"] is None, did
+        assert (r["n_tokens"], r["n_distinct"], r["top_count"]) == (3, 2, 2)
+        assert r["top_token_frac"] == 2 / 3.0
+    # "ab" twice: 4 chars over 8 - 3 + 1 = 6; each bigram once: 4 chars
+    assert got[3]["top_token_char_frac"] == 4 / 6.0
+    assert got[3]["top_bigram_char_frac"] == 4 / 6.0
+    # the Spark plan the kernel replaced: NULL n_chars -> NULL fractions
+    # (a zero divisor there is NULL only with ANSI off; under ANSI it
+    # raises DIVIDE_BY_ZERO, so the comparison leaves doc 2 out)
+    ref = {
+        r["doc_id"]: r
+        for r in _jvm_form(docs.filter(F.col("doc_id") != 2)).collect()
+    }
+    assert tuple(ref[1]) == tuple(got[1])
+    assert tuple(ref[3]) == tuple(got[3])
