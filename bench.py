@@ -1,72 +1,55 @@
-"""Headline benchmark (driver contract).
+"""Headline benchmark: one JSON line on stdout.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+Usage: SPARK_GRAFT_SF_DIR=<testdata>/sf0.1 python bench.py
 
-Each query is forced end-to-end with a noop write (computes every row,
-returns nothing to the driver) — the honest analog of a sink at scale,
-with zero collect overhead polluting the measurement.
+Times the HEADLINE entries at $SPARK_GRAFT_SF_DIR (default: the sf0.1
+test data) on local[$SPARK_GRAFT_CPUS]. Each entry is forced
+end to end with a noop write: every row is computed and none is
+collected.
 
-Scheduling is BREADTH-FIRST (VERDICT r14 #1): every HEADLINE entry gets
-one timed pass before ANY entry gets a second; leftover budget buys
-min-merge extras cheapest-first. A degraded run therefore drops PASSES,
-never QUERIES — r14's depth-first min-of-3 spent the budget on the
-cheap prefix and skipped 38 entries. The artifact records `budget_s`,
-`warmup_s`, per-entry `pass_counts`, and `coverage` (timed/total) so a
-degraded window is visible at a glance.
+One untimed warm pass over the sibling sf0.001 directory absorbs JIT and
+codegen for every plan shape. Then whole rounds run over every HEADLINE
+entry, each round in an order shuffled from a fixed seed, until the next
+round would end past BUDGET_S from process start. One round always runs.
 
-Cross-round comparability fields (VERDICT r14 #4):
-- `value_core` — the headline sum restricted to CORE_32, the FROZEN
-  32-entry set of the round-4 artifact (the same set the baseline
-  ratio uses). HEADLINE grows every round, so `value` is only
-  comparable within a round; `value_core` never changes membership and
-  survives set growth. `core_set` records how many of the 32 landed.
-- `sentinel_floor_ratio` — this window's serial-sentinel min divided
-  by SENTINEL_R7_FLOOR_S, the committed reference floor (0.140 s, the
-  quiet-r13 min on sentinel code unchanged since r7). The driver can
-  normalize `value`/`value_core` drift by this ratio instead of
-  running a cross-round forensic: the r14 host epoch measured ~1.46 on
-  unchanged code.
-
-Capture-window quality (VERDICT r15 #1): the capture is gated on the
-SENTINEL, not just loadavg — a pre-capture gate waits (bounded) while
-the warmed sentinel floor exceeds SENTINEL_GATE_RATIO, and a finished
-window that still exceeds it triggers a bounded min-merge recapture
-(CORE_32 first). See SENTINEL_GATE_RATIO for the r15 incident.
-
-Phase provenance (VERDICT r16 #1 + ADVICE r16): every timed pass and
-every sentinel tick is tagged with the capture PHASE that produced it
-(main / retry1 / retry2 / recapture / late). `contended` is no longer
-a global-spread verdict: a window is contended iff some shipped
-timing was NEVER successfully measured during a quiet stretch — a
-storm that rages early and passes before the end no longer brands an
-artifact whose every number was (re)captured quiet, and conversely a
-quiet-looking global floor cannot launder numbers whose only passes
-rode the storm. The artifact records `min_phase_counts` (which phase
-produced each shipped min), `phase_sentinels` (per-phase serial/par
-tick evidence + the quiet verdict), and `storm_tainted_entries` (the
-entries that keep storm-only provenance, empty on a clean artifact) —
-the per-phase floor bookkeeping ADVICE r16 asked for. A LATE
-RECAPTURE phase handles the r16 blind spot (par-storm still raging at
-the recapture decision point but gone by end-of-run): if the final
-par ticks read quiet and tainted entries remain, a bounded min-merge
-re-time (CORE_32 first, cheapest first) runs as phase "late".
+`value` is the sum of the per-entry minimums and `value_core` the same sum
+over the frozen CORE_32 set; HEADLINE grows, CORE_32 never does, so only
+`value_core` compares across rounds. Stdout carries only
+CONTRACT_LINE_FIELDS. The full result goes to BENCH_LATEST.json: per-entry
+minimum (`queries`), `median` and `pass_counts`, `errors` for entries that
+raised or timed out (left out of `queries`), the round `seeds`, and the
+host's steal share over the timed window. Stolen time inflates wall time,
+so read a slow `value` next to `steal_share`.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import threading
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+T0 = time.perf_counter()
 
-from numalogic_prometheus_spark import plans
-from numalogic_prometheus_spark.session import get_session
+import gc  # noqa: E402
+import json  # noqa: E402
+import os  # noqa: E402
+import random  # noqa: E402
+import statistics  # noqa: E402
+import sys  # noqa: E402
+import threading  # noqa: E402
+
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+
+from numalogic_prometheus_spark import plans  # noqa: E402
+from numalogic_prometheus_spark.session import get_session  # noqa: E402
+from perfbench.run import host_cpu_ticks, steal_share  # noqa: E402
+
+# Wall budget from process start. The caller's timeout (600 s) prints
+# nothing if it fires, so rounds stop well short of it.
+BUDGET_S = 420.0
+# Wall ceiling of one entry run; on expiry its jobs are cancelled.
+ENTRY_CEIL_S = 120.0
+# Seed of round i is ROUND_SEED + i.
+ROUND_SEED = 0
 
 # Headline set: one per operator family (SURVEY.md §2C).
 HEADLINE = [
@@ -130,9 +113,8 @@ HEADLINE = [
     "promql_native_histogram_rate_quantile",  # quantile-of-rate composition (r10)
     "vec_ivf_int8_topk",                    # IVF-PQ-lite composed retrieval (r10)
     "text_chunk_contamination",             # chunk-hash eval-leak join (r10)
-    # r11 (VERDICT r10 #7): every entry whose SPARK-side steady-state
-    # exceeds ~2 s at sf0.1 is benched; sweep-log outliers below 2 s
-    # spark-side are documented in HEADLINE_EXCLUDED instead.
+    # every entry whose spark-side steady state exceeds ~2 s at sf0.1;
+    # sweep-log outliers below that are in HEADLINE_EXCLUDED
     "dedup_cluster_components",   # BSP pointer-doubling fixpoint (most expensive entry)
     "join_interval_overlap",      # raw interval-overlap theta join
     "promql_quantile_sliding_dense",  # dense sliding order statistics
@@ -162,11 +144,10 @@ HEADLINE = [
     "quality_repetition_stats",       # windowed n-gram repetition (2.2 s spark-side, r14)
 ]
 
-# VERDICT r10 #7: entries whose committed sf0.1 SWEEP time exceeds the
-# 2 s threshold but which are deliberately NOT in HEADLINE, with the
-# measured reason. tests/test_bench_contract.py asserts this list plus
-# HEADLINE exhaustively covers every >2 s sweep entry, so a new
-# expensive registration cannot silently skip the bench.
+# Entries whose committed sf0.1 sweep line exceeds 2 s but which are not
+# timed here, each with its reason. tests/test_bench_contract.py checks
+# that HEADLINE plus this dict covers every such line, so a new expensive
+# registration cannot skip the bench.
 _SWEEP_DOMINATED = (
     "spark-side steady-state <2 s at sf0.1 (measured r11); the sweep "
     "line also times the DuckDB oracle + full-result hash compare"
@@ -190,9 +171,8 @@ HEADLINE_EXCLUDED = {
     "stream_semantic_contamination": _STREAM_HARNESS,
     "scalar_datetime_funcs": _SWEEP_DOMINATED,
     "join_interval_bucketed": _SWEEP_DOMINATED,
-    # r13: 2.2s sweep line on a loaded host; spark-side min-of-3 is
-    # 1.10s at sf0.1 (the DuckDB 4-table correlated-min oracle + host
-    # noise dominate the sweep line)
+    # spark-side min-of-3 1.10 s; the 4-table correlated-min oracle
+    # dominates the sweep line
     "tpch_q2_min_cost_supplier": _SWEEP_DOMINATED,
     "filter_predicates": _SWEEP_DOMINATED,
     "ts_sessionize_gap": _SWEEP_DOMINATED,
@@ -226,37 +206,20 @@ HEADLINE_EXCLUDED = {
     "promql_info_enrich": _SWEEP_DOMINATED,
     "agg_hll_mergeable_daily": _SWEEP_DOMINATED,
     "scalar_string_funcs": _SWEEP_DOMINATED,
-    # r12 late registration: spark-side 1.75 s min-of-3 at sf0.1; the
-    # sweep line (2.5 s) is dominated by the oracle's token self-join
+    # spark-side min-of-3 1.75 s; the oracle's token self-join dominates
     "text_bigram_lm_score": _SWEEP_DOMINATED,
-    # r14: sweep lines crossed 2 s on the refreshed quiet log but the
-    # spark-side min-of-3 at sf0.1 is far under (0.30-1.30 s measured
-    # this round) — the DuckDB oracle + full-result hash compare
-    # dominate those lines
+    # spark-side min-of-3 0.30-1.30 s
     "agg_unpivot_part_attrs": _SWEEP_DOMINATED,
     "exposition_all_families": _SWEEP_DOMINATED,
     "promql_ts_of_over_time": _SWEEP_DOMINATED,
     "ts_linear_interpolate": _SWEEP_DOMINATED,
     "win_first_last_nth": _SWEEP_DOMINATED,
     "win_rank_variants": _SWEEP_DOMINATED,
-    # r15 oracle conversion (was rows-only): the 16.7 s sf0.1 sweep
-    # line is the DuckDB minmax twin + full-result hash compare;
-    # spark-side min-of-3 is 1.90 s at sf0.1 (MLlib fit agg +
-    # transform), measured this round
+    # spark-side min-of-3 1.90 s; the 16.7 s sweep line is the DuckDB
+    # minmax twin and the hash compare
     "mllib_minmax_scaler": _SWEEP_DOMINATED,
-    # r16: the regenerated sf0.1 sweep ran on a contended window
-    # (1074 s total vs r15's 695 s on identical oracle code) and
-    # pushed these 12 lines over 2 s. Spark-side re-measure that
-    # round: ten at 0.35-1.7 s min-of-3; the two that first read
-    # over (profile_drift_halves 3.2, tpch_q9 4.3) re-measured
-    # 1.73 / 0.98 s against an interleaved sentinel at 2.3x floor.
-    # r17 (ADVICE r16): dedicated re-audit artifact committed —
-    # excluded_audit_r17.py -> EXCLUDED_AUDIT_r17.json, interleaved
-    # sentinel + min-of-3 each, window floor ratio stamped in. All 12
-    # measured 0.36-1.97 s even on a 2.57x-floor window (an UPPER
-    # bound — a quiet window only lowers them), so the exclusions
-    # stand a fortiori; should_promote came back empty. Re-run the
-    # script whenever these lines are questioned.
+    # spark-side min-of-3 0.36-1.97 s on a contended window, an upper
+    # bound (EXCLUDED_AUDIT_r17.json)
     "profile_drift_halves": _SWEEP_DOMINATED,
     "promql_comparison_bool": _SWEEP_DOMINATED,
     "promql_increase_total": _SWEEP_DOMINATED,
@@ -269,12 +232,8 @@ HEADLINE_EXCLUDED = {
     "text_quality_by_source": _SWEEP_DOMINATED,
     "text_simhash_signatures": _SWEEP_DOMINATED,
     "tpch_q9_product_profit": _SWEEP_DOMINATED,
-    # r17: the regenerated sf0.1 sweep log (1157 s total, captured on
-    # a loaded window between bench runs) pushed nine more lines over
-    # 2 s. Spark-side re-measure (EXCLUDED_AUDIT_r17b.json, min-of-3
-    # interleaved sentinel, floor ratio 2.80 stamped — UPPER bounds):
-    # all nine at 0.34-1.18 s, the sweep delta is the DuckDB oracle +
-    # full-result hash compare + window load.
+    # spark-side min-of-3 0.34-1.18 s on a contended window, an upper
+    # bound (EXCLUDED_AUDIT_r17b.json)
     "dedup_exact_survivors": _SWEEP_DOMINATED,
     "pipeline_text_cleaning": _SWEEP_DOMINATED,
     "promql_native_histogram_quantile": _SWEEP_DOMINATED,
@@ -286,57 +245,9 @@ HEADLINE_EXCLUDED = {
     "vec_cosine_topk": _SWEEP_DOMINATED,
 }
 
-
-# Isolated min-of-N floors for entries with measured one-shot warm-up
-# noise (VERDICT r11 #2 / missing #3): promql_mad_over_time sampled
-# 0.62 s and 1.34 s hours apart on identical code in the same quiet
-# harness; a 12-pass isolated decay run (SCALE.md round-11 drift
-# adjudication) pinned its steady-state floor. The floor ships INSIDE
-# the artifact so a noisy one-shot sample stops generating cross-round
-# adjudication work — compare drift suspects against their floor, not
-# against another one-shot.
-NOISY_FLOORS = {
-    "promql_mad_over_time": 0.725,  # SCALE.md:765 (r11 isolated min-of-12)
-    # r15 isolated min-of-12 on a quiet window (SCALE.md round-15 drift
-    # adjudication): total is BUILD-dominated at fixture scale (0.6-1.1s
-    # Python-DSL+analysis vs 0.53s exec at sf0.1), so it rides the build
-    # sentinel's epoch, not the serial sentinel's — compare one-shot
-    # samples against this floor before flagging drift
-    "text_semantic_contamination": 0.796,
-}
-
-def _load_quiet_reference() -> dict:
-    """Per-entry quiet floors from the NEWEST committed
-    BENCH_quiet_r*.json next to this file (self-maintaining across
-    rounds: each round's committed quiet twin becomes the next round's
-    outlier reference). Returns {} when none exists — the outlier
-    re-pass then simply never fires."""
-    import glob as _glob
-    import re as _re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    best, best_round = None, -1
-    for path in _glob.glob(os.path.join(here, "BENCH_quiet_r*.json")):
-        m = _re.search(r"BENCH_quiet_r(\d+)", os.path.basename(path))
-        if m and int(m.group(1)) > best_round:
-            best, best_round = path, int(m.group(1))
-    if best is None:
-        return {}
-    try:
-        with open(best) as fh:
-            ref = json.load(fh).get("queries", {})
-    except (OSError, ValueError):
-        return {}
-    ref = dict(ref)
-    ref["_file"] = os.path.basename(best)
-    return ref
-
-
-# FROZEN cross-round core set (VERDICT r14 #4): exactly the 32 queries
-# of the round-4 artifact (BENCH_r04.json), the set the vs-baseline
-# ratio has used since r4. Membership never changes — `value_core` sums
-# these so the driver has a round-comparable headline even as HEADLINE
-# grows. Do NOT add entries here; new work lands in HEADLINE only.
+# Frozen cross-round core set: exactly the 32 entries of BENCH_r04.json.
+# Membership never changes, so `value_core` compares across rounds while
+# HEADLINE grows; new entries go to HEADLINE only.
 CORE_32 = (
     "agg_pricing_summary", "agg_window_vectors", "counter_hourly",
     "dedup_shingle_minhash_pairs", "dedup_substring_spans",
@@ -353,1136 +264,127 @@ CORE_32 = (
     "vec_int8_quantized_topk", "vec_ivf_topk", "win_topk_per_group",
 )
 
-# Committed serial-sentinel reference floor: min landed counter_hourly
-# tick on a quiet window, sentinel code unchanged since r7 (quiet-r13
-# measured 0.1399 s; COVERAGE.md r14 host-epoch note). The artifact's
-# sentinel_floor_ratio = this window's floor / this constant.
-SENTINEL_R7_FLOOR_S = 0.140
-
-# Capture-window quality bound (VERDICT r15 #1): BENCH_r15's driver
-# artifact rode the round's worst window (sentinel_floor_ratio 1.631,
-# loadavg 6.4 at start — UNDER the 8.0 load gate, so nothing tripped)
-# and graded 2.57x raw on CORE_32 while the same-day quiet twin graded
-# 1.94x. Two mechanisms now gate the capture on the sentinel itself,
-# not just on loadavg:
-#   (a) PRE-CAPTURE GATE — after warmup, min-of-3 serial-sentinel
-#       ticks; while the floor ratio exceeds this bound, wait (bounded
-#       by GATE_BUDGET_FRAC of the budget) and re-measure, so the
-#       timed window starts on the best near-term epoch available;
-#   (b) SLOW-WINDOW RECAPTURE — if the finished window's floor ratio
-#       still exceeds the bound and overrun budget remains, re-time
-#       entries min-merge (CORE_32 first, cheapest first) on the
-#       hopefully-quieter tail, so the artifact keeps the best honest
-#       number per entry rather than the last one.
-# 1.3 sits above the committed quiet windows' own floor jitter
-# (quiet-r13 1.00, quiet-r14 ~1.46 host epoch was a true epoch step —
-# an all-day-slow epoch exhausts the gate and ships with the ratio
-# self-attributing) and well under the 1.63 that branded r15.
-SENTINEL_GATE_RATIO = 1.3
-GATE_BUDGET_FRAC = 0.20
-
-# Committed per-host quiet-band ceiling for the PARALLEL sentinel
-# (ADVICE r14): min-of-3 measured 0.09-0.16 s on every quiet r10-r14
-# window on this host vs 0.68-0.77 s during storms. epoch_slow trips at
-# 2x the band ceiling — a named, committed calibration (the NOISY_FLOORS
-# pattern), not an inline magic number; override on other hardware.
-PAR_SENTINEL_QUIET_CEIL_S = float(
-    os.environ.get("SPARK_GRAFT_PAR_QUIET_CEIL_S", "0.15")
-)
-
-
-def affected_from_log(
-    sentinel_log: list[tuple[float, int]],
-    names: list[str],
-    timed: set[str],
-) -> list[str]:
-    """Queries the contention-retry should re-time, from the main
-    window's position-faithful sentinel log: a tick at execution
-    position p that measured > 2x the window's quiet-band floor (the
-    log's min landed tick) brands the block names[p-5 : p+5] around it
-    (the tick ran BETWEEN query blocks, so both neighbors are suspect;
-    the closing tick at p == len(names) brands the final block).
-    Baselining on the FLOOR, not the median, keeps attribution alive
-    through sustained storms where half or more of the ticks are slow
-    and the median itself is contaminated (ADVICE r14 — with a median
-    baseline such a window re-timed nothing despite contended=true; the
-    floor only needs ONE quiet tick to anchor); the 2x threshold sits
-    above the committed quiet windows' own jitter (observed up to 1.72x
-    floor in BENCH_quiet_r11.json — a 1.5x cut would brand most of a
-    mildly noisy window and untarget the bounded retry, r15
-    self-review). Ticks implausibly below the committed best-ever
-    quiet floor (< 0.7 * SENTINEL_R7_FLOOR_S) are dropped before the
-    min (ADVICE r15): a single anomalously FAST tick (fluke-hot cache,
-    scheduler luck) would otherwise set a baseline that brands nearly
-    the whole window and untargets the bounded retry — the mirror
-    image of the median-under-storm failure the floor baseline fixed.
-    Position-keyed so a
-    timed-out tick — recorded capped, never dropped — cannot shift
-    later attributions (r14 second-review finding). Deduped, original
-    order, restricted to queries that actually got a timing."""
-    if not sentinel_log:
-        return []
-    # fluke guard (ADVICE r15): SENTINEL_R7_FLOOR_S is the fastest tick
-    # EVER landed on a committed quiet window, so a tick materially
-    # below it (< 0.7x) is a measurement fluke, not a quiet anchor —
-    # drop it before taking the floor, else one hot-cache outlier
-    # brands nearly the whole window and untargets the bounded retry.
-    # Plausible ticks keep the one-quiet-tick storm anchoring intact;
-    # if EVERY tick is implausibly fast (a genuinely faster host), fall
-    # back to the raw min rather than inventing a floor.
-    plausible = [
-        s for s, _ in sentinel_log if s >= 0.7 * SENTINEL_R7_FLOOR_S
-    ]
-    floor = min(plausible) if plausible else min(s for s, _ in sentinel_log)
-    affected = [
-        n
-        for s, p in sentinel_log
-        if s > 2.0 * floor
-        for n in names[max(0, p - 5) : p + 5]
-        if n in timed
-    ]
-    return list(dict.fromkeys(affected))
-
-
-def _build_sentinel_plan(spark) -> None:
-    """Fixed, data-free DataFrame construction: 20 chained arithmetic
-    columns + 3 window expressions over spark.range, analyzed but never
-    executed — exercises exactly the py4j-DSL + Catalyst-analysis path
-    whose cost the build sentinel tracks (code must never change
-    round-to-round, like the other sentinels)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    df = spark.range(1000).toDF("id")
-    for i in range(20):
-        df = df.withColumn(f"c{i}", (F.col("id") * (i + 1) + F.lit(i)) % 97)
-    w = Window.partitionBy("c0").orderBy("id")
-    df = df.select(
-        "*",
-        F.row_number().over(w).alias("w0"),
-        F.sum("c1").over(w).alias("w1"),
-        F.lag("c2", 1).over(w).alias("w2"),
-    )
-    df._jdf.queryExecution().analyzed()
-
-
-# stdout-contract whitelist (VERDICT r17 #2 / r18 #2): the driver
-# recovers the bench from a bounded stdout tail that truncated r16's
-# line mid-JSON when the full provenance dict (~12 kB) was printed.
-# ONLY these fields may reach stdout; everything else lives in the
-# BENCH_LATEST.json artifact. `queries` is contract-mandated and its
-# 87 names alone are ~2.9 kB, so the line cannot be made arbitrarily
-# small — tests/test_bench_contract.py pins the whitelist and a size
-# ceiling so provenance can never creep back in.
+# The printed stdout line: only these fields. The full result lives in
+# BENCH_LATEST.json; a reader of a bounded stdout tail must never get a
+# truncated line (tests/test_bench_contract.py pins the set and a size
+# ceiling).
 CONTRACT_LINE_FIELDS = (
-    "metric",
-    "value",
-    "unit",
-    "queries",
-    "sf",
-    "value_core",
-    "contended",
-    "artifact",
+    "metric", "value", "unit", "queries", "sf", "value_core", "artifact",
 )
 
 
 def contract_line(out: dict) -> str:
-    """The ONE printed stdout line: driver-contract fields + three tiny
-    provenance pointers, nothing else."""
+    """The one printed stdout line: the CONTRACT_LINE_FIELDS of `out`."""
     printed = {k: out[k] for k in CONTRACT_LINE_FIELDS if k in out}
     return json.dumps(printed, separators=(",", ":"))
 
 
-def _timed_save(spark, df_fn, limit_s: float) -> tuple[str, str]:
-    """Run ``df_fn().write...save()`` in a thread with a wall ceiling.
-    Returns ("ok"|"err"|"timeout", detail). On timeout the Spark jobs
-    are cancelled so the session stays usable for the next query."""
+def _timed_save(spark, df_fn, limit_s: float) -> tuple[float | None, str]:
+    """Run ``df_fn().write.format("noop").save()`` in a thread with a wall
+    ceiling. Returns (seconds, "") on success and (None, reason) on an
+    error or timeout. On timeout the Spark jobs are cancelled so the
+    session stays usable for the next entry."""
     result: dict = {}
 
     def _run():
         try:
             df_fn().write.mode("overwrite").format("noop").save()
-            result["ok"] = True
         except Exception as exc:  # noqa: BLE001
             result["err"] = f"{type(exc).__name__}: {exc}"[:500]
 
+    t0 = time.perf_counter()
     th = threading.Thread(target=_run, daemon=True)
     th.start()
     th.join(limit_s)
     if th.is_alive():
         spark.sparkContext.cancelAllJobs()
         th.join(30)
-        return "timeout", f"pass exceeded {limit_s:.0f}s (jobs cancelled)"
+        return None, f"exceeded {limit_s:.0f}s (jobs cancelled)"
     if "err" in result:
-        return "err", result["err"]
-    return "ok", ""
+        return None, result["err"]
+    return time.perf_counter() - t0, ""
+
+
+def run_rounds(spark, queries: dict, sf_dir: str, deadline: float) -> dict:
+    """Time every entry of `queries` ({name: fn(spark, sf_dir)}) in whole
+    shuffled rounds until the next round would end after `deadline` (a
+    ``time.perf_counter()`` value); one round always runs. An entry that
+    raises or times out once goes to `errors`, is not run again and is
+    left out of `queries`. Cached tables are cleared before each entry,
+    so self-pinning entries pay their pins every time, and py4j
+    references are collected after it (session.py)."""
+    samples: dict[str, list[float]] = {n: [] for n in queries}
+    errors: dict[str, str] = {}
+    seeds: list[int] = []
+    t_start, ticks0 = time.perf_counter(), host_cpu_ticks()
+    while True:
+        t_round = time.perf_counter()
+        seeds.append(ROUND_SEED + len(seeds))
+        order = sorted(queries)
+        random.Random(seeds[-1]).shuffle(order)
+        for name in order:
+            if name in errors:
+                continue
+            spark.catalog.clearCache()
+            took, err = _timed_save(
+                spark, lambda: queries[name](spark, sf_dir), ENTRY_CEIL_S
+            )
+            gc.collect()
+            if took is None:
+                errors[name] = err
+            else:
+                samples[name].append(took)
+        now = time.perf_counter()
+        if now + (now - t_round) > deadline:
+            break
+    steal = steal_share(ticks0, host_cpu_ticks())
+    timed = {n: s for n, s in samples.items() if n not in errors}
+    mins = {n: round(min(s), 4) for n, s in timed.items()}
+    core = [n for n in CORE_32 if n in mins]
+    return {
+        "value": round(sum(mins.values()), 4),
+        "value_core": round(sum(mins[n] for n in core), 4),
+        "core_set": f"{len(core)}/{len(CORE_32)}",
+        "queries": mins,
+        "median": {n: round(statistics.median(s), 4) for n, s in timed.items()},
+        "pass_counts": {n: len(s) for n, s in samples.items()},
+        "errors": errors,
+        "seeds": seeds,
+        "timed_s": round(time.perf_counter() - t_start, 2),
+        "steal_share": round(steal, 4),
+    }
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # 12g, NOT 64g: a 64g heap on this VM triggers multi-minute GC/memory
-    # stalls mid-run (observed: hash-heavy stages 40× slower, whole runs
-    # timing out); 12g fits every sf0.1 query with headroom and the full
-    # 36-query set completes in ~38s where the 64g runs died.
+    sf_dir = sf_dir.rstrip("/")
+    sf = sf_dir.rsplit("sf", 1)[-1]
+    # 12g, not more: a 64g heap on a small VM stalled whole runs in GC.
     os.environ.setdefault("SPARK_DRIVER_MEM", "12g")
-    # Wall-clock budget: the harness running this prints nothing if we
-    # exceed its timeout, so degrade (fewer warmups/passes) rather than
-    # die. Budget < any plausible external timeout.
-    budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "420"))
-    t_start = time.perf_counter()
-
-    # Load gate (VERDICT r12 #4): BENCH_r12 was captured at loadavg 5.3
-    # start and its one-shots contradicted the quiet twin by up to 2× on
-    # unchanged code. If the 1-minute loadavg says another process is
-    # eating cores, WAIT (bounded) for the storm to pass — BEFORE the
-    # session/warmup spin up, so the gate measures EXTERNAL load, not
-    # the bench's own warmup (r13 self-review finding: gating after the
-    # core-saturating warmup reads our own load and wastes the measured
-    # window on quiet hosts).
-    ncpu = os.cpu_count() or 8
-    load_gate = {"threshold": round(ncpu / 4, 2), "waits_s": []}
-    for _ in range(2):
-        la1 = os.getloadavg()[0]
-        if la1 <= ncpu / 4:
-            break
-        wait = 45.0
-        load_gate["waits_s"].append(round(wait, 1))
-        time.sleep(wait)
-    load_gate["loadavg_after_gate"] = round(os.getloadavg()[0], 2)
-
     spark = get_session(app_name="bench")
+    registry = plans.all_queries()
+    queries = {n: registry[n] for n in HEADLINE}
 
-    queries = plans.all_queries()
-    names = [n for n in HEADLINE if n in queries]
-
-    # Warm the JVM (codegen, shuffle, agg paths) + parquet footers once so
-    # per-query times measure the plan, not session/JIT startup.
-    t_warm0 = time.perf_counter()
-    for t in ("events", "lineitem"):
-        # ceilinged like the plan warms: on a storming epoch an
-        # unbounded table warm could blow through the 10% cap below
-        # before the plan loop even starts (r15 self-review)
-        def _tbl_warm(t=t):
-            df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
-            return df.groupBy(df.columns[0]).count()
-
-        # budget-derived like the plan-warm cap, so the two table warms
-        # cannot eat a double-digit share of a small budget on a
-        # storming epoch (r15 second review: a fixed 15 s ceiling was
-        # up to 17% of a 180 s budget before the plan loop started)
-        _timed_save(spark, _tbl_warm, min(15.0, 0.05 * budget_s))
-    # Warm headline PLANS at the tiniest scale factor: Janino compilation
-    # of the large (partly interpreted) expression trees costs whole
-    # seconds per novel plan shape. Capped at 10% of budget (VERDICT r14
-    # #6 — the old 30% cap ate 126 s on a slow epoch before the first
-    # timed pass; breadth-first pass 1 doubles as warmup under min-merge
-    # for anything not reached here). The walk is in REVERSE headline
-    # order: extras are cheapest-first, so the expensive tail gets the
-    # fewest min-merge passes and benefits most from having its JIT
-    # absorbed outside the timed window, while the cheap prefix reaches
-    # 3 passes and min() discards its pass-1 JIT anyway.
-    n_warmed = 0
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if os.path.isdir(warm_dir) and warm_dir != sf_dir.rstrip("/"):
-        for name in reversed(names):
-            # the ceiling bounds how far one plan can overshoot the
-            # cap, so leave it as headroom below the 10% line. The 10%
-            # is an APPROXIMATE bound, not exact (ADVICE r15): a warm
-            # pass that times out spends its 10 s ceiling plus up to
-            # 30 s of cancel-join inside _timed_save, and the two
-            # ceilinged table warms above accrue to t_warm0 too — on a
-            # storming epoch the measured warmup_s can exceed the 10%
-            # line by those allowances. warmup_s in the artifact
-            # records what actually happened.
-            if time.perf_counter() - t_warm0 > 0.10 * budget_s - 10.0:
-                break
-            # warmup is best-effort; errors/timeouts surface in the
-            # timed pass
-            _timed_save(
-                spark, lambda n=name: queries[n](spark, warm_dir), 10.0
-            )
-            n_warmed += 1
-    warmup_s = round(time.perf_counter() - t_warm0, 2)
-
-    # Quiet-host guard (VERDICT r7 #6): this host shows sporadic external
-    # CPU-contention storms that have twice inflated whole bench windows
-    # ~2x on unchanged code (r6, and r7's rollup outlier — both
-    # root-caused by interleaved A/Bs, SCALE.md). Interleave one pass of
-    # a fixed cheap sentinel throughout the run and record its series +
-    # loadavg: a sentinel spread >2x brands the window contended INSIDE
-    # the artifact, so a slow number can be attributed without a
-    # next-round forensic.
-    sentinel_name = "counter_hourly"
-    sentinel_series: list[float] = []
-    # (seconds, query_position) for every MAIN-window tick, including
-    # timed-out ones (capped at the 60 s ceiling) — the retry needs a
-    # position-faithful record: deriving positions from series indexes
-    # breaks as soon as one tick times out and is dropped from the
-    # headline series (r14 second-review finding)
-    sentinel_log: list[tuple[float, int]] = []
-    # every landed IN-WINDOW tick across all phases (main passes,
-    # contention retries, slow-window recapture). Timings are
-    # min-merged across those same phases, so the floor of THIS series
-    # is the honest epoch companion of the shipped numbers; gate ticks
-    # (pre-window) are excluded.
-    all_window_ticks: list[float] = []
-
-    # -- phase provenance (VERDICT r16 #1 / ADVICE r16) ----------------
-    # Every pass and every sentinel tick carries the phase it ran in,
-    # so "was this shipped number ever measured on a quiet stretch?"
-    # is answerable per entry instead of per window. current_phase is a
-    # one-element list so the nested helpers can reassign it.
-    current_phase = ["main"]
-    # (value, phase, exec-position) for every serial tick — killed
-    # ticks enter capped, as in sentinel_log (storm evidence)
-    serial_log: list[tuple[float, str, int]] = []
-    # (value, phase, exec-position) for every parallel tick, gate
-    # included (the gate's last tick anchors the start of main)
-    par_log: list[tuple[float, str, int]] = []
-    # (name, phase, exec-position) per successful timed pass
-    pass_log: list[tuple[str, str, int]] = []
-    # phase that produced each entry's CURRENT shipped min
-    min_phase: dict[str, str] = {}
-    # Quietness thresholds — both WINDOW-RELATIVE, floored by the
-    # committed calibrations. The serial sentinel scales with sf_dir
-    # (counter_hourly at sf1 is ~10x its sf0.1 self): stormy above 3x
-    # the window's own plausible floor, never below 3x the committed
-    # sf0.1 reference (quiet windows jitter to ~1.9x, storms 3x-8x).
-    # The par sentinel is data-free but rides the JVM's TIERED-JIT warm
-    # state (r17 measurement: a fresh session's par ticks decay
-    # 0.63->0.30 over ~8 executions and only reach the committed
-    # 0.09-0.16 quiet band once the session has run real work), so an
-    # absolute bar false-brands structurally-cold early ticks: stormy
-    # above 2x the window's own par floor, never below 2x the
-    # committed quiet-band ceiling. A window whose EVERY par tick is
-    # slow under-taints on the relative bar — the absolute epoch_slow
-    # backstop (min par > 2x ceiling) then taints every entry instead
-    # (no quiet stretch existed).
-    def _ser_stormy_s() -> float:
-        plausible = [
-            v
-            for v, _, _ in serial_log
-            if v >= 0.7 * SENTINEL_R7_FLOOR_S
-        ]
-        floor = min(plausible) if plausible else SENTINEL_R7_FLOOR_S
-        return 3.0 * max(SENTINEL_R7_FLOOR_S, floor)
-
-    def _par_stormy_s() -> float:
-        vals = [v for v, _, _ in par_log]
-        floor = min(vals) if vals else PAR_SENTINEL_QUIET_CEIL_S
-        return 2.0 * max(PAR_SENTINEL_QUIET_CEIL_S, floor)
-
-    def _sentinel_tick(
-        into: list[float],
-        pos: int = -1,
-        ceiling: float = 60.0,
-        window: bool = True,
-    ) -> None:
-        """One sentinel measurement appended to `into` (shared by the
-        main window and the retry so the two series can never diverge
-        semantically — r14 second-review finding). `window=False`
-        (pre-capture gate) keeps the tick out of the floor-ratio
-        series."""
-        if sentinel_name not in queries:
-            return
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        status, _ = _timed_save(
-            spark, lambda: queries[sentinel_name](spark, sf_dir), ceiling
-        )
-        took = round(time.perf_counter() - t0, 4)
-        if status == "ok":
-            into.append(took)
-            if window:
-                all_window_ticks.append(took)
-                serial_log.append((took, current_phase[0], len(exec_order)))
-            if pos >= 0:
-                sentinel_log.append((took, pos))
-        else:
-            # a tick the storm KILLED is the strongest contention
-            # signal of all — keep it for attribution (capped), even
-            # though the headline series keeps its ok-only semantics
-            if pos >= 0:
-                sentinel_log.append((ceiling, pos))
-            if window:
-                serial_log.append(
-                    (ceiling, current_phase[0], len(exec_order))
-                )
-
-    # PRE-CAPTURE SENTINEL GATE (VERDICT r15 #1a): the loadavg gate
-    # above measures OTHER processes' demand, which r15 proved is not
-    # the same thing as this workload's achievable speed (loadavg 6.4
-    # passed the 8.0 gate while the sentinel ran 1.63x its reference
-    # floor). Measure the thing we actually grade: min-of-3 warmed
-    # serial-sentinel ticks; while the floor ratio exceeds the bound,
-    # wait and re-measure, bounded by GATE_BUDGET_FRAC of the budget so
-    # an all-day storm degrades passes rather than killing coverage.
-    def _par_tick() -> float:
-        """One parallel-sentinel measurement: fixed full-width 32-slice
-        aggregation (multi-core throughput; the code never changes
-        round-to-round). Shared by the gate, the mid-window probe, and
-        the end-of-run series."""
-        t0p = time.perf_counter()
-        spark.range(0, 200_000_000, 1, 32).selectExpr(
-            "sum(id * 2654435761 % 1000003) AS s"
-        ).write.mode("overwrite").format("noop").save()
-        return round(time.perf_counter() - t0p, 4)
-
-    sentinel_gate = {
-        "ratio_bound": SENTINEL_GATE_RATIO,
-        "tick_rounds": [],
-        "waits_s": [],
-    }
-    t_gate0 = time.perf_counter()
-    gate_cap_s = GATE_BUDGET_FRAC * budget_s - 20.0
-    prev_badness: float | None = None
-    while True:
-        gate_ticks: list[float] = []
-        for _ in range(3):
-            # per-tick ceiling 15 s and an in-round cap check: on a
-            # total storm the default 60 s tick ceiling × 3 would eat
-            # 180 s before the first budget check (r16 self-review)
-            if time.perf_counter() - t_gate0 > gate_cap_s:
-                break
-            _sentinel_tick(gate_ticks, window=False, ceiling=15.0)
-        sentinel_gate["tick_rounds"].append(gate_ticks)
-        ratio = (
-            round(min(gate_ticks) / SENTINEL_R7_FLOOR_S, 3)
-            if gate_ticks
-            else None
-        )
-        sentinel_gate["ratio_after_gate"] = ratio
-        # "badness" unifies both axes for the pass/stable logic below:
-        # the serial floor ratio relative to its bound, and — because a
-        # MULTI-CORE storm is invisible to the light serial scan (r16
-        # live capture: serial floor 0.964 while the parallel sentinel
-        # ran 0.34 s = 3x its quiet band, and the window shipped
-        # contended) — one parallel tick relative to 2x its committed
-        # quiet ceiling. The par tick (~0.1-0.7 s) only runs once the
-        # serial floor is in-bound, so a serial storm never pays it.
-        badness = None
-        if ratio is not None:
-            badness = ratio / SENTINEL_GATE_RATIO
-            if badness <= 1.0:
-                # min-of-2: a single gate tick is structurally COLD
-                # (tiered JIT; r17 measured fresh-session par ticks
-                # decaying 0.63->0.30 over ~8 executions) and would
-                # false-flag a quiet host
-                par_tick = min(_par_tick(), _par_tick())
-                sentinel_gate.setdefault("par_ticks", []).append(par_tick)
-                badness = max(
-                    badness, par_tick / (2 * PAR_SENTINEL_QUIET_CEIL_S)
-                )
-                if badness <= 1.0:
-                    break
-        # stop-on-stable (first live run of the gate): a PASSING storm
-        # improves round-over-round; a slow HOST EPOCH does not — two
-        # consecutive over-bound rounds within 15% of each other mean
-        # waiting buys nothing, so stop burning pass budget and ship
-        # self-attributing (the 84 s this rule saves is ~2 extra
-        # passes over the expensive tail)
-        if (
-            badness is not None
-            and prev_badness is not None
-            and badness >= 0.85 * prev_badness
-        ):
-            sentinel_gate["stopped_on_stable"] = True
-            break
-        prev_badness = badness
-        if time.perf_counter() - t_gate0 > gate_cap_s:
-            break  # storm outlasted the gate; ship self-attributing
-        sentinel_gate["waits_s"].append(20.0)
-        time.sleep(20.0)
-
-    if "par_ticks" not in sentinel_gate:
-        # the gate only runs its parallel tick once the serial floor is
-        # in-bound; if it never did, warm the parallel-sentinel plan
-        # here (unmeasured) so the mid-window probe measures the host,
-        # not first-execution JIT (a decaying JIT series reads as a
-        # false par-storm to the spread criterion)
-        _par_tick()
-
-    loadavg_start = os.getloadavg()
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    pass_counts: dict[str, int] = {n: 0 for n in names}
-    # position-faithful execution trace: sentinel-log positions index
-    # THIS list (which grows across all passes), so slow-tick→query
-    # attribution survives the breadth-first reordering of passes 2+
-    exec_order: list[str] = []
-
-
-    def _par_probe() -> float:
-        """One parallel CAPABILITY probe: the MIN of two consecutive
-        ticks, phase- and position-tagged for the provenance ledger
-        (and appended to par_series by callers that feed the legacy
-        global-evidence fields). Min-of-2 because the probe asks "could
-        the host go full-width at this moment" — a single tick's
-        scheduler hiccup or GC pause would taint a quiet neighborhood
-        and churn the late recapture, while a real storm slows BOTH
-        consecutive ticks (observed r14 storms: sustained 0.68-0.77 s
-        for minutes)."""
-        v = min(_par_tick(), _par_tick())
-        par_log.append((v, current_phase[0], len(exec_order)))
-        return v
-
-    # bounded overrun allowance, shared by pass 1 and the contention
-    # retry (VERDICT r13 #3 / r14 #1): the budget itself sits well under
-    # any external timeout, so coverage may spend into the allowance
-    # before any entry is skipped
-    RETRY_OVERRUN_S = 90.0
-    retry_budget = budget_s + RETRY_OVERRUN_S
-    # additional bounded allowance for the LATE recapture phase (r16
-    # blind spot: par storm gone only by end-of-run). 420 + 90 + 60 =
-    # 570 s worst case from process start, still under the 600 s
-    # external timeout the verify recipe assumes, with ~30 s of margin
-    # for the build sentinel + artifact write.
-    LATE_RECAPTURE_S = 60.0
-
-    def _one_pass(name: str, ceiling: float) -> bool:
-        """One timed end-to-end pass of `name`, min-merged into
-        timings. A later failure never erases an earlier number (the
-        old depth-first loop dropped two good passes when pass 3 timed
-        out); an error is recorded only while the entry has no timing.
-        Returns True on a landed pass (the retry phases count those).
-        Every landed pass enters pass_log with its phase + position;
-        min_phase records which phase produced the CURRENT min."""
-        # clear BEFORE each pass: queries that self-materialize with
-        # .cache()/localCheckpoint must pay their full cost every pass
-        spark.catalog.clearCache()
-        # periodic Python gc (r17): py4j wrappers for dead plans hold
-        # JVM references; collecting lets the ContextCleaner drop
-        # checkpoint blocks the trimmed status store has released
-        # (session.py retainedExecutions note). ~10 ms every 5 passes.
-        if len(exec_order) % 5 == 0:
-            import gc
-
+    t_warm = time.perf_counter()
+    warm_dir = os.path.join(os.path.dirname(sf_dir), "sf0.001")
+    if os.path.isdir(warm_dir) and warm_dir != sf_dir:
+        for fn in queries.values():
+            # errors and timeouts surface in the timed rounds
+            _timed_save(spark, lambda: fn(spark, warm_dir), ENTRY_CEIL_S)
             gc.collect()
-        start = time.perf_counter()
-        status, detail = _timed_save(
-            spark, lambda: queries[name](spark, sf_dir), ceiling
-        )
-        exec_order.append(name)
-        if status != "ok":
-            if name not in timings:
-                errors[name] = detail
-            return False
-        took = time.perf_counter() - start
-        pass_log.append((name, current_phase[0], len(exec_order) - 1))
-        if took < timings.get(name, float("inf")):
-            min_phase[name] = current_phase[0]
-        timings[name] = round(min(timings.get(name, float("inf")), took), 4)
-        errors.pop(name, None)
-        pass_counts[name] += 1
-        return True
+    warmup_s = round(time.perf_counter() - t_warm, 2)
 
-    # PASS 1 — breadth-first coverage (VERDICT r14 #1): EVERY headline
-    # entry gets one timed pass before ANY entry gets a second. r14's
-    # depth-first min-of-3 spent the budget on min-passes for the cheap
-    # prefix and skipped 38 entries — all the newest families — making
-    # the headline sum non-comparable. Coverage beats extra passes: a
-    # degraded run drops PASSES, never QUERIES. Pass 1 may spend into
-    # the overrun allowance before skipping; only a storm that blows
-    # through budget + overrun can still skip, and each skipped entry
-    # says so explicitly. The per-pass ceiling keeps a single hung query
-    # from consuming the run (round 5 shipped NO numbers for exactly
-    # that failure class).
-    # start-of-main par anchor (always — the gate's tick is NOT used
-    # as an anchor: it runs structurally cold and would taint the
-    # window's first half on a quiet host; it stays in sentinel_gate
-    # as gate evidence only). The per-pass par-quietness test needs a
-    # tick on both sides of every pass position.
-    par_series: list[float] = []
-    par_series.append(_par_probe())
-
-    for name in names:
-        # budget check BEFORE the sentinel tick: exec_order does not
-        # grow on a skip, so a tick-first ordering would re-fire the
-        # same %5 tick (up to its 60 s ceiling) for EVERY remaining
-        # skipped entry once the budget is gone
-        remaining = retry_budget - (time.perf_counter() - t_start)
-        if remaining <= 0:
-            errors[name] = "skipped: wall budget + overrun exhausted"
-            continue
-        if len(exec_order) % 5 == 0:
-            _sentinel_tick(sentinel_series, pos=len(exec_order))
-        if exec_order and len(exec_order) % 25 == 0:
-            # periodic par anchor (r17): with only 2-3 anchors across a
-            # ~300 s main window, one borderline tick tainted half the
-            # window's passes; ~0.25 s per probe buys per-block
-            # par attribution at the same granularity the serial
-            # sentinel already has
-            par_series.append(_par_probe())
-        _one_pass(name, max(30.0, min(120.0, remaining)))
-
-    # MID-WINDOW parallel probe (r16 live capture: a sustained
-    # ~6-core external load passed the 8.0 load gate, barely moved the
-    # serial sentinel, and was GONE before the end-of-run parallel
-    # series ran — the artifact read "quiet" while value_core measured
-    # 1.9x the same-day quiet twin). One full-width tick taken inside
-    # the window makes that storm class visible: it enters the
-    # parallel series, so the spread criterion below brands the window
-    # and the recapture can rescue it once the storm passes.
-    par_series.append(_par_probe())
-
-    # PASSES 2+ — min-merge extras, cheapest-first, only while inside
-    # 80% of the base budget: cheap entries buy the most noise
-    # reduction per second, and the expensive tail was warmed first
-    # (reverse-order warmup) so its single pass is already steady-state.
-    # Entries still >3 s after 3 passes get up to 2 contention-dodging
-    # extras, as before. Each outer round grants at most one extra pass
-    # per entry, so extras stay breadth-fair too.
-    TARGET_PASSES = 3
-    MAX_PASSES = 5
-
-    def _wants_more(n: str) -> bool:
-        return pass_counts[n] < TARGET_PASSES or (
-            pass_counts[n] < MAX_PASSES and timings[n] > 3.0
-        )
-
-    for _ in range(MAX_PASSES - 1):
-        if time.perf_counter() - t_start > 0.8 * budget_s:
-            break
-        todo = sorted(
-            (n for n in names if n in timings and _wants_more(n)),
-            key=lambda n: timings[n],
-        )
-        if not todo:
-            break
-        for name in todo:
-            if time.perf_counter() - t_start > 0.8 * budget_s:
-                break
-            if len(exec_order) % 5 == 0:
-                _sentinel_tick(sentinel_series, pos=len(exec_order))
-            if len(exec_order) % 25 == 0:
-                par_series.append(_par_probe())
-            remaining = budget_s - (time.perf_counter() - t_start)
-            _one_pass(name, max(30.0, min(120.0, remaining)))
-
-    # Second chance: pass timeouts here are usually transient external
-    # CPU-contention storms (observed: hash-heavy stages slow 30×+ for
-    # minutes, then recover). If budget remains, retry each timed-out
-    # query once — a storm that has passed turns an error into a number.
-    for name in [n for n, e in errors.items() if "exceeded" in e]:
-        remaining = budget_s - (time.perf_counter() - t_start)
-        if remaining < 60:
-            break
-        _one_pass(name, min(120.0, remaining))
-
-    # OUTLIER RE-PASS vs the committed quiet reference (r17 live
-    # capture: the two audio entries stalled +10-12 s each on a
-    # decaying-load window while every sentinel around them read quiet
-    # — the sentinels measure the HOST, not the ENTRY, so an
-    # entry-level stall (e.g. a Python-worker spawn squall) is
-    # invisible to them, and a stalled pass-1 min SELF-REINFORCES:
-    # the entry now looks expensive, so the cheapest-first extra
-    # passes never reach it. Compare each timing against the newest
-    # committed BENCH_quiet_r*.json and give the worst offenders a
-    # priority min-merge re-pass. Honest by construction (min-merge
-    # only tightens; a genuine regression stays visible and is
-    # reported in outliers_vs_reference rather than silently branded).
-    quiet_ref = _load_quiet_reference()
-    outlier_repass: dict = {"reference": quiet_ref.get("_file"), "repassed": []}
-    if quiet_ref:
-        outliers = sorted(
-            (
-                n
-                for n in timings
-                if n in quiet_ref
-                # 2.0x, not 2.5x: a live capture shipped a checkpoint-
-                # heavy entry at 2.49x its floor (+5.3 s into CORE_32)
-                # just under the first cut; the +0.5 s absolute guard
-                # keeps sub-second noise from churning re-passes
-                and timings[n] > 2.0 * quiet_ref[n]
-                and timings[n] - quiet_ref[n] > 0.5
-            ),
-            key=lambda n: quiet_ref[n] - timings[n],  # biggest delta first
-        )[:12]
-        if outliers:
-            par_series.append(_par_probe())
-        for i, name in enumerate(outliers):
-            remaining = retry_budget - (time.perf_counter() - t_start)
-            if remaining < 45:
-                break
-            if i % 5 == 0:
-                _sentinel_tick(sentinel_series, pos=len(exec_order))
-            before = timings[name]
-            _one_pass(name, min(60.0, remaining))
-            outlier_repass["repassed"].append(
-                {"name": name, "before": before, "after": timings[name]}
-            )
-
-    _sentinel_tick(sentinel_series, pos=len(exec_order))  # closing tick
-    # end-of-main par anchor: closes the par-tick interval around the
-    # tail of the main window for the per-pass quietness test
-    par_series.append(_par_probe())
-
-    def _spread_of(series: list[float]) -> float | None:
-        if series and min(series) > 0:
-            return round(max(series) / min(series), 2)
-        return None
-
-    # Bounded IN-RUN contention retry (VERDICT r13 #3): the load gate
-    # guards external load BEFORE the window, but sentinel-spread
-    # contention shows up only AFTER the measured pass — r13 needed 6
-    # manual capture attempts to land a quiet artifact. The retry is
-    # the CHEAP variant the directive suggests (fresh sentinel series
-    # + only the worst-affected entries, never a whole re-pass): a
-    # full main pass uses most of the wall budget, so a whole-pass
-    # retry would simply never fire. The retry is allowed a bounded
-    # overrun (RETRY_OVERRUN_S past budget_s — documented in the
-    # artifact; the budget itself is set well under any external
-    # timeout). Re-timed entries min-merge into the timings (a re-pass
-    # can only tighten); the contended flag reflects the LAST sentinel
-    # series, with every attempt's evidence preserved.
-    def _retry_remaining() -> float:
-        return retry_budget - (time.perf_counter() - t_start)
-
-    # attributed ONCE from the MAIN window's log, before any retry
-    # mutates the series — a fresh retry series' ticks run
-    # back-to-back and carry no positional meaning for the main window
-    affected = affected_from_log(sentinel_log, exec_order, set(timings))
-    contention_retries: list[dict] = []
-    spread = _spread_of(sentinel_series)
-    while (
-        spread is not None
-        and spread > 2.0
-        and len(contention_retries) < 2
-        and _retry_remaining() > 30
-    ):
-        current_phase[0] = f"retry{len(contention_retries) + 1}"
-        par_series.append(_par_probe())  # phase-start par anchor
-        retry_series: list[float] = []
-        for _ in range(4):  # fresh series, cheap (~1-2 s total quiet)
-            if _retry_remaining() < 30:
-                break  # every tick respects the overrun allowance too
-            _sentinel_tick(
-                retry_series, ceiling=min(60.0, _retry_remaining())
-            )
-        n_requeried = 0
-        for name in affected:
-            remaining = _retry_remaining()
-            if remaining < 30:
-                break
-            if n_requeried % 10 == 9:
-                par_series.append(_par_probe())  # mid-phase par anchor
-            if _one_pass(name, min(60.0, remaining)):
-                n_requeried += 1  # retry passes count as passes
-        if _retry_remaining() > 30:
-            _sentinel_tick(
-                retry_series, ceiling=min(60.0, _retry_remaining())
-            )
-        par_series.append(_par_probe())  # phase-end par anchor
-        contention_retries.append(
-            {
-                # the series that TRIGGERED this retry is preserved
-                # here — replacing the headline series must never
-                # discard the contended evidence (r14 self-review)
-                "triggering_series": sentinel_series,
-                "series": retry_series,
-                "spread": _spread_of(retry_series),
-                "n_requeried": n_requeried,
-                "overrun_allowance_s": RETRY_OVERRUN_S,
-            }
-        )
-        # a degenerate retry series (storm still raging: ticks timed
-        # out and were dropped) must not flip `contended` to false on
-        # one lucky sample — require at least 3 landed ticks before
-        # the retry series replaces the original
-        if len(retry_series) < 3:
-            break
-        sentinel_series = retry_series
-        spread = _spread_of(retry_series)
-
-    # SLOW-WINDOW RECAPTURE (VERDICT r15 #1b): the contention retry
-    # above targets spread (spiky storms); a window that is uniformly
-    # slow has spread ~1 and sails through it — exactly the r15
-    # failure (floor ratio 1.631, spread 1.17). If the finished
-    # window's sentinel floor still exceeds the gate bound and overrun
-    # budget remains, re-time entries min-merge on the (hopefully
-    # quieter) tail — CORE_32 first, cheapest first, so the graded
-    # core set gains the most from whatever budget is left. Min-merge
-    # means the artifact keeps the best honest number per entry; a
-    # tail that is still slow tightens nothing and the shipped floor
-    # ratio stays self-attributing.
-    slow_window_recapture = None
-    _floor_ratio_now = (
-        round(min(all_window_ticks) / SENTINEL_R7_FLOOR_S, 3)
-        if all_window_ticks
-        else None
-    )
-    # one end-of-window parallel tick BEFORE the recapture decision:
-    # together with the mid-window probe it detects the par-storm-
-    # then-quiet class (r16 live capture — artifact read quiet, core
-    # 1.9x the quiet twin). Par-spread > 2.5 with a now-quiet tail
-    # means re-timing pays; par still stormy means it will not (the
-    # epoch flags brand the window instead).
-    current_phase[0] = "end"
-    par_series.append(_par_probe())
-    _par_spread = (
-        round(max(par_series) / min(par_series), 2) if par_series else None
-    )
-    _par_storm_passed = (
-        _par_spread is not None
-        and _par_spread > 2.5
-        and par_series[-1] <= 2 * PAR_SENTINEL_QUIET_CEIL_S
-    )
-    if (
-        (
-            (
-                _floor_ratio_now is not None
-                and _floor_ratio_now > SENTINEL_GATE_RATIO
-            )
-            or _par_storm_passed
-        )
-        and _retry_remaining() > 60
-    ):
-        current_phase[0] = "recapture"
-        par_series.append(_par_probe())  # phase-start par anchor
-        rc_series: list[float] = []
-        rc_requeried = 0
-        rc_order = sorted(
-            (n for n in names if n in timings),
-            key=lambda n: (n not in CORE_32, timings[n]),
-        )
-        for i, name in enumerate(rc_order):
-            remaining = _retry_remaining()
-            if remaining < 30:
-                break
-            if i % 5 == 0:
-                _sentinel_tick(rc_series, ceiling=min(60.0, remaining))
-            if i % 10 == 5:
-                par_series.append(_par_probe())  # mid-phase par anchor
-            if _one_pass(name, min(60.0, _retry_remaining())):
-                rc_requeried += 1
-        if _retry_remaining() > 10:
-            _sentinel_tick(
-                rc_series, ceiling=min(60.0, max(10.0, _retry_remaining()))
-            )
-        par_series.append(_par_probe())  # phase-end par anchor
-        current_phase[0] = "end"
-        slow_window_recapture = {
-            "trigger_floor_ratio": _floor_ratio_now,
-            "trigger_par_spread": _par_spread,
-            "ratio_bound": SENTINEL_GATE_RATIO,
-            "series": rc_series,
-            "n_requeried": rc_requeried,
-        }
-        # same replacement rule as the contention retry: the headline
-        # series reflects the LAST substantial evidence, never one
-        # lucky sample
-        if len(rc_series) >= 3:
-            sentinel_series = rc_series
-            spread = _spread_of(rc_series)
-
-    # PARALLEL sentinel (round 10): the serial sentinel is a light scan
-    # that never saturates the 32 cores, so it is blind to sustained
-    # background load / host-epoch drift that only taxes core-saturating
-    # stages (observed r10: serial sentinel flat at 0.96x of r8 while
-    # three unchanged CPU-bound queries measured 1.2-1.9x). This fixed,
-    # data-independent full-width aggregation measures multi-core
-    # throughput directly; compare it across rounds to attribute heavy-
-    # query drift to the host before suspecting a plan.
-    # BUILD sentinel (round 15): a third epoch axis. The serial
-    # sentinel is JVM-execution-dominated and the parallel sentinel is
-    # multi-core-throughput; neither tracks the PYTHON-side cost of
-    # constructing+analyzing a large DataFrame tree (py4j round trips,
-    # Catalyst analysis — all driver single-thread). Entries with big
-    # builder functions (e.g. text_semantic_contamination: 0.6-1.1 s
-    # build vs 0.53 s exec at sf0.1, r15 decomposition in SCALE.md) ride
-    # THIS epoch, so record it: a fixed, data-free expression tree
-    # (20 arithmetic columns + 3 window expressions), built and
-    # analyzed 3 times.
-    build_series = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        _build_sentinel_plan(spark)
-        build_series.append(round(time.perf_counter() - t0, 4))
-
-    # two more end-of-run ticks: the series now spans mid-window,
-    # pre-recapture, and end — min() is still the host-capability
-    # floor; the SPREAD is the partial-storm detector
-    for _ in range(2):
-        par_series.append(_par_probe())
-
-    # ---- phase-provenance quietness verdicts (VERDICT r16 #1) -------
-    # A serial tick is stormy above _ser_stormy_s(), a par tick above
-    # _par_stormy_s() (calibration provenance at the definitions). Short
-    # phases (retries / recapture / late) get a PHASE-level verdict:
-    # quiet iff no stormy tick of either kind landed in the phase and
-    # at least one serial tick landed (a phase whose every tick was
-    # killed is storm evidence, not quiet). The long main window gets a
-    # PER-PASS verdict instead: a pass is quiet iff its nearest serial
-    # ticks on both sides are non-stormy AND its nearest par anchors on
-    # both sides (gate par ticks anchor position 0) are non-stormy —
-    # phase-level would let one early squall taint five minutes of
-    # quiet passes.
-    def _phase_quiet(phase: str) -> bool:
-        """Whole-phase verdict, reported in phase_sentinels (the
-        per-pass verdict below is what taints entries)."""
-        ser = [v for v, ph, _ in serial_log if ph == phase]
-        par = [v for v, ph, _ in par_log if ph == phase]
-        if not ser:
-            return False
-        return max(ser) <= _ser_stormy_s() and (
-            not par or max(par) <= _par_stormy_s()
-        )
-
-    def _near_ok(
-        log: list[tuple[float, str, int]],
-        phases: tuple[str, ...],
-        pos: int,
-        stormy: float,
-    ) -> bool:
-        """True iff the nearest same-phase tick at-or-before `pos` and
-        the nearest one after are both non-stormy; a missing side
-        defers to the side that exists; no tick at all is storm
-        evidence, not quiet."""
-        before = [v for v, ph, p in log if ph in phases and p <= pos]
-        after = [v for v, ph, p in log if ph in phases and p > pos]
-        ok = True
-        if before:
-            ok = ok and before[-1] <= stormy
-        if after:
-            ok = ok and after[0] <= stormy
-        return ok and bool(before or after)
-
-    def _pass_quiet(phase: str, pos: int) -> bool:
-        # gate par ticks anchor the start of main (position 0); every
-        # other phase brackets itself with its own probes
-        par_phases = ("main", "gate") if phase == "main" else (phase,)
-        return _near_ok(
-            serial_log, (phase,), pos, _ser_stormy_s()
-        ) and _near_ok(par_log, par_phases, pos, _par_stormy_s())
-
-    def _tainted() -> list[str]:
-        # absolute epoch backstop: if even the window's FASTEST par
-        # probe exceeds 2x the committed quiet ceiling, no quiet
-        # stretch existed and the relative bar has nothing to anchor
-        # on — every shipped number is storm-provenance
-        all_par = [v for v, _, _ in par_log]
-        if all_par and min(all_par) > 2.0 * PAR_SENTINEL_QUIET_CEIL_S:
-            return sorted(timings)
-        quiet_timed = {
-            name
-            for name, phase, pos in pass_log
-            if _pass_quiet(phase, pos)
-        }
-        return sorted(n for n in timings if n not in quiet_timed)
-
-    storm_tainted = _tainted()
-
-    # ---- LATE RECAPTURE (the r16 blind spot) ------------------------
-    # The slow-window recapture decides on ONE par tick taken right
-    # after the retries; r16's storm was still raging at that instant
-    # and gone by the end-of-run series, so nothing re-timed and the
-    # artifact shipped storm-inflated. If tainted entries remain AND
-    # the end-of-run ticks read quiet, spend a bounded extra window
-    # (LATE_RECAPTURE_S past the retry allowance) re-timing them
-    # min-merge, CORE_32 first, cheapest first.
-    late_recapture = None
-    _end_par = [v for v, ph, _ in par_log if ph == "end"]
-    _end_quiet = bool(_end_par) and min(_end_par[-2:]) <= _par_stormy_s()
-    if (
-        storm_tainted
-        and _end_quiet
-        and retry_budget + LATE_RECAPTURE_S - (time.perf_counter() - t_start)
-        > 45
-    ):
-        current_phase[0] = "late"
-        late_budget = retry_budget + LATE_RECAPTURE_S
-
-        def _late_remaining() -> float:
-            return late_budget - (time.perf_counter() - t_start)
-
-        par_series.append(_par_probe())  # phase-start par anchor
-        # one UNMEASURED settling pass: the first serial tick after the
-        # end-of-run heavy work reads GC/JIT-hot (observed 0.68 s vs
-        # 0.20-0.27 s for the rest of the late series) and would taint
-        # the first block of re-times on a quiet tail
-        _timed_save(
-            spark,
-            lambda: queries[sentinel_name](spark, sf_dir),
-            min(30.0, max(10.0, _late_remaining())),
-        )
-        late_series: list[float] = []
-        late_requeried = 0
-        late_order = sorted(
-            (n for n in storm_tainted if n in timings),
-            key=lambda n: (n not in CORE_32, timings[n]),
-        )
-        for i, name in enumerate(late_order):
-            remaining = _late_remaining()
-            if remaining < 30:
-                break
-            if i % 5 == 0:
-                _sentinel_tick(late_series, ceiling=min(60.0, remaining))
-            if i % 10 == 5:
-                par_series.append(_par_probe())  # mid-phase par anchor
-            if _one_pass(name, min(60.0, _late_remaining())):
-                late_requeried += 1
-        if _late_remaining() > 10:
-            _sentinel_tick(
-                late_series,
-                ceiling=min(60.0, max(10.0, _late_remaining())),
-            )
-        par_series.append(_par_probe())  # phase-end par anchor
-        current_phase[0] = "end"
-        late_recapture = {
-            "trigger_tainted": len(storm_tainted),
-            "series": late_series,
-            "n_requeried": late_requeried,
-            "overrun_allowance_s": LATE_RECAPTURE_S,
-        }
-        if len(late_series) >= 3:
-            sentinel_series = late_series
-            spread = _spread_of(late_series)
-        storm_tainted = _tainted()
-
-    phase_names = ["main", "retry1", "retry2", "recapture", "late"]
-    phase_sentinels = {
-        ph: {
-            "serial": [v for v, p, _ in serial_log if p == ph],
-            "par": [v for v, p, _ in par_log if p == ph],
-            "quiet": _phase_quiet(ph),
-        }
-        for ph in phase_names
-        if any(p == ph for _, p, _ in serial_log)
-        or any(p == ph for _, p, _ in par_log)
-    }
-    min_phase_counts: dict[str, int] = {}
-    for n in timings:
-        ph = min_phase.get(n, "main")
-        min_phase_counts[ph] = min_phase_counts.get(ph, 0) + 1
-
-    par_spread_final = (
-        round(max(par_series) / min(par_series), 2) if par_series else None
-    )
     out = {
         "metric": "headline_queries_total",
-        "value": round(sum(timings.values()), 4),
         "unit": "sec",
-        "queries": timings,
-        "errors": errors,
-        # breadth-first scheduling evidence (VERDICT r14 #1): a degraded
-        # window now shows up as lower pass counts, never as skipped
-        # queries — and the artifact says which
-        "budget_s": budget_s,
-        "warmup_s": warmup_s,
-        "n_warmed": n_warmed,
-        "pass_counts": pass_counts,
-        "coverage": f"{len(timings)}/{len(names)}",
-        # frozen-set headline (VERDICT r14 #4): sum over CORE_32, the
-        # round-4 membership that never grows — cross-round comparable
-        # where `value` is not (see module docstring)
-        "value_core": round(
-            sum(timings[n] for n in CORE_32 if n in timings), 4
-        ),
-        "core_set": f"{sum(1 for n in CORE_32 if n in timings)}"
-        f"/{len(CORE_32)}",
-        # this window's serial-sentinel floor vs the committed r7
-        # reference floor — the driver's epoch normalizer (docstring).
-        # The floor is the min over EVERY landed in-window tick (main
-        # passes + contention retries + slow-window recapture): the
-        # timings are min-merged across those same phases, so this is
-        # the epoch companion of the numbers actually shipped.
-        "sentinel_floor_ratio": (
-            round(min(all_window_ticks) / SENTINEL_R7_FLOOR_S, 3)
-            if all_window_ticks
-            else None
-        ),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # contention-guard fields (VERDICT r7 #6): sentinel passes
-        # interleaved through the window + host load; spread >~2 means
-        # the window was externally contended and absolute times are
-        # suspect (the sentinel's code never changes round-to-round)
-        "sentinel": sentinel_name,
-        "sentinel_series": sentinel_series,
-        "sentinel_spread": spread,
-        # r14: a uniformly SLOW window has a small spread but a slow
-        # parallel sentinel (observed: 0.09-0.16 s quiet epochs vs
-        # 0.68-0.77 s during host storms on identical code) — brand
-        # those too, or a storm that taxes every query equally ships
-        # as "quiet". Threshold = 2x the committed per-host quiet-band
-        # ceiling (ADVICE r14 — was an inline 0.30; see
-        # PAR_SENTINEL_QUIET_CEIL_S for the calibration provenance and
-        # the env override for other hardware).
-        "epoch_slow": min(par_series) > 2 * PAR_SENTINEL_QUIET_CEIL_S,
-        # r17: contended is the PHASE-PROVENANCE verdict — true iff
-        # some shipped timing was never successfully measured during a
-        # quiet stretch (see module docstring). The global spread /
-        # epoch fields above and below remain as raw evidence; they no
-        # longer brand an artifact whose every number was (re)captured
-        # quiet, and a quiet-looking global floor cannot launder
-        # storm-only timings. An empty window is contended by
-        # definition.
-        "contended": bool(storm_tainted) or not timings,
-        # the entries that keep storm-only provenance (empty on a
-        # clean artifact) + which phase produced each shipped min +
-        # per-phase tick evidence — ADVICE r16's phase bookkeeping
-        "storm_tainted_entries": storm_tainted,
-        "min_phase_counts": min_phase_counts,
-        "phase_sentinels": phase_sentinels,
-        "late_recapture": late_recapture,
-        # entries re-passed because their timing sat >2.0x (and +0.5 s
-        # over) the newest committed quiet reference — entry-level
-        # stall evidence the host sentinels cannot see; persisting
-        # before==after pairs are either real regressions or a still-
-        # degraded host and deserve a look either way
-        "outlier_repass": outlier_repass,
-        "parallel_sentinel_spread": par_spread_final,
-        "par_sentinel_quiet_ceil_s": PAR_SENTINEL_QUIET_CEIL_S,
-        # in-run contention retries taken (VERDICT r13 #3): each entry
-        # is one bounded re-pass with a fresh sentinel series; the
-        # fields above reflect the LAST series
-        "contention_retries": contention_retries,
-        # pre-capture sentinel gate (VERDICT r15 #1a): tick rounds and
-        # bounded waits taken BEFORE the timed window; a
-        # ratio_after_gate still above ratio_bound means the storm
-        # outlasted the gate budget and the window shipped anyway,
-        # self-attributing via sentinel_floor_ratio
-        "sentinel_gate": sentinel_gate,
-        # slow-window recapture (VERDICT r15 #1b): non-null when the
-        # finished window's floor ratio exceeded the bound and overrun
-        # budget bought a min-merge re-time of the core set
-        "slow_window_recapture": slow_window_recapture,
-        # pre-window wait-and-retry on host load (VERDICT r12 #4):
-        # waits_s lists the bounded sleeps taken before measuring; a
-        # loadavg_after_gate still above threshold means the storm
-        # outlasted the bounded wait and times should be read against
-        # the sentinel series
-        "load_gate": load_gate,
-        "loadavg_start": [round(x, 2) for x in loadavg_start],
-        "loadavg_end": [round(x, 2) for x in os.getloadavg()],
-        # fixed full-width compute; min-of-3 is the host's multi-core
-        # throughput epoch for this window (see comment above)
-        "parallel_sentinel_series": par_series,
-        "parallel_sentinel_sec": min(par_series),
-        # fixed data-free plan construction+analysis; min-of-3 is the
-        # PYTHON/py4j+Catalyst single-thread epoch — build-dominated
-        # entries (SCALE.md r15 decomposition) ride this axis, not the
-        # serial or parallel sentinel
-        "build_sentinel_series": build_series,
-        "build_sentinel_sec": min(build_series),
-        # isolated steady-state floors for known warm-up-noisy entries
-        # (see NOISY_FLOORS): judge/driver should compare these entries'
-        # one-shot samples against the floor before flagging drift
-        "noisy_floors": NOISY_FLOORS,
+        "budget_s": BUDGET_S,
+        "warmup_s": warmup_s,
+        **run_rounds(spark, queries, sf_dir, T0 + BUDGET_S),
         "artifact": "BENCH_LATEST.json",
     }
-    # Self-contained artifact (VERDICT r11 #2): the driver recovers its
-    # BENCH_r{N}.json from a stdout tail, which has truncated the
-    # embedded timings dict before (r11 AND r16: parsed=null). Write the
-    # full result to a committed sidecar so per-query numbers never
-    # depend on stdout capture, then print ONLY the contract-whitelist
-    # line (contract_line) — r16 lost its round-over-round table to a
-    # 2000-char tail truncating the full ~12 kB provenance dump.
     try:
-        artifact_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_LATEST.json"
-        )
-        with open(artifact_path, "w") as fh:
+        with open(os.path.join(ROOT, "BENCH_LATEST.json"), "w") as fh:
             json.dump(out, fh, indent=1, sort_keys=True)
             fh.write("\n")
     except OSError:

@@ -1,6 +1,4 @@
-"""Build an sf1.0-SCALE dataset for the heavy-entry spot sweep
-(VERDICT r8 #2: "making an sf1.0 spot-sweep of the 20 heaviest entries
-feasible — and run it once, committed").
+"""Build an sf1.0-scale dataset for the oracle parity sweep at sf1.
 
 No sf1.0 directory ships in /root/testdata (TESTDATA.md stops at 0.1),
 so this derives one by REPLICATING the driver's sf0.1 tables 10× with
@@ -13,12 +11,13 @@ the LSH band buckets don't degenerate into 10-way identical-copy
 cliques (which would quadratically inflate the candidate stage with
 pairs that exist in no real corpus).
 
-Output: /root/repo/.testdata_sf1/{table}.parquet (gitignored — ~170 MB,
-derived, reproducible). The differential sweep then runs both engines
-on the SAME derived data, so the check stays a fair cross-engine
+Output: .testdata_sf1/{table}.parquet next to this file (gitignored —
+~170 MB, derived, reproducible). The differential sweep then runs both
+engines on the SAME derived data, so the check stays a fair cross-engine
 comparison at ~6M lineitem rows / ~100k events... ×10 of every fact.
 
-Usage: python make_bigsf.py [n_copies]      (default 10)
+Usage: python make_bigsf.py [n_copies]      (default 10), then
+SPARK_GRAFT_SWEEP_SF_DIR=.testdata_sf1 python sweep_oracles.py [NAME ...]
 """
 
 from __future__ import annotations

@@ -77,18 +77,15 @@ def get_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        # Bound the SQL status store's execution retention (r17
-        # checkpoint-block leak investigation — defense-in-depth, with
-        # the PRIMARY mechanism being timely Python gc): repeated runs
-        # of checkpoint-bearing queries (dedup shingle / cluster
-        # components) pin 2 localCheckpoint RDDs per run, and a LATE
-        # gc does not release them (measured: 12 pinned after 6
-        # passes, one gc+2s frees none) — the py4j wrapper refs must
-        # be collected SOON after the run for the ContextCleaner to
-        # unpersist the blocks (per-pass gc keeps the count flat at
-        # ~3; bench.py does this, and long-lived callers should too).
-        # The retention bound keeps the status store itself from
-        # growing unbounded alongside.
+        # Invariant for long-lived callers: run gc.collect() right after
+        # each entry. An entry's localCheckpoint blocks stay pinned while
+        # Python still holds py4j references to its DataFrames; the
+        # ContextCleaner unpersists them only once those references are
+        # collected, and a collection that comes late releases none.
+        # Without it, repeated runs of checkpoint-pinning entries (dedup
+        # shingles, cluster components) grow the pinned-block count by 2
+        # per run. Bounding the SQL status store's execution retention
+        # keeps the store itself from growing alongside.
         .config("spark.sql.ui.retainedExecutions", "50")
         .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
     )

@@ -1,50 +1,58 @@
-"""Full-registry oracle parity sweep at an arbitrary scale factor
-(VERDICT r7 next-round #3): every oracle-backed entry through the
-driver-mimic DuckDB compare (tests/oracle_harness.py — row count,
-sorted columns, canonicalized value multiset) in ONE Spark session.
+"""Oracle parity sweep: registered entries against their DuckDB oracles
+(tests/oracle_harness.py: row count, sorted columns, canonicalized value
+multiset) in one Spark session, at any scale factor.
 
-All prior hash verification ran at sf0.001 (pytest) / sf0.01 (driver);
-sf0.1 is where sum-overflow, approx-tie and timestamp-edge divergence
-would first appear. Usage:
+Usage (from the repository root):
 
-    SPARK_GRAFT_SWEEP_SF_DIR=/root/testdata/sf0.1 python sweep_oracles.py
+    SPARK_GRAFT_SWEEP_SF_DIR=<testdata>/sf0.1 python sweep_oracles.py
+    python sweep_oracles.py --window        # the contract's check window
+    python sweep_oracles.py NAME [NAME ...] # named entries only
 
-Writes one line per entry to stdout and a committed log
-(SWEEP_sf{sf}.log); exits non-zero on any mismatch.
+The full sweep runs every oracle-backed entry and writes
+SWEEP_sf{sf}.log next to this file. ``--window`` runs the first 50
+registered entries, the window the ``__spark_entry__`` contract is checked
+on; named entries run just those. A selected entry without an oracle gets
+the rows-only check. Selected runs print to stdout only: the committed logs record full
+sweeps, and tests/test_bench_contract.py reads SWEEP_sf0.1.log.
 
-Vanilla-session mode (VERDICT r12 #2 — the r12 driver failure was an
-entry whose *fixture writer* silently depended on the engine session's
-Arrow conf, which `RUNTIME_INVARIANTS` deliberately does NOT re-pin):
+``SPARK_GRAFT_SWEEP_VANILLA=1`` runs on a bare session
+(``build_vanilla_session``) instead of the engine's, and its full sweep
+covers every registered entry, rows-only ones included (collect, more than
+0 rows), because the contract checks those too. Its log is
+SWEEP_sf{sf}_vanilla.log.
 
-    SPARK_GRAFT_SWEEP_VANILLA=1 SPARK_GRAFT_SWEEP_SF_DIR=... python sweep_oracles.py
+At sf1: ``python make_bigsf.py``, then
+``SPARK_GRAFT_SWEEP_SF_DIR=.testdata_sf1 python sweep_oracles.py [NAME ...]``.
 
-builds the most vanilla session the driver contract allows — bare
-``SparkSession.builder.master(local[N])`` plus shuffle partitions, NO
-engine confs; only what ``sources.tables.load_table`` itself re-pins
-applies — runs EVERY registered entry (oracle-backed through the DuckDB
-compare, rows-only through a collect-count > 0 check, since the driver
-checks rows-only entries too and r12's failure was one), and writes
-``SWEEP_sf{sf}_vanilla.log``."""
+Exits 1 on any mismatch or error, 2 on an unregistered name.
+"""
 
 from __future__ import annotations
 
+import argparse
+import contextlib
+import gc
 import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
-from numalogic_prometheus_spark import plans
-from numalogic_prometheus_spark.session import get_session
-from tests.oracle_harness import compare, run_oracle
+from numalogic_prometheus_spark import plans  # noqa: E402
+from numalogic_prometheus_spark.session import get_session  # noqa: E402
+from tests.oracle_harness import compare, run_oracle  # noqa: E402
+
+# The contract's check window: the first WINDOW registered entries.
+WINDOW = 50
 
 
 def build_vanilla_session():
-    """The driver-shaped session: master + shuffle partitions and NOTHING
-    else — no Arrow, no AQE tweaks, no timezone/map-dedup/nanos confs
-    (load_table re-pins the runtime invariants itself; anything a query
-    needs beyond that is a latent driver failure, the r12 class)."""
+    """The driver-shaped session: master + shuffle partitions and nothing
+    else: no Arrow, no AQE tweaks, no timezone/map-dedup/nanos confs.
+    load_table re-pins the runtime invariants itself; anything an entry
+    needs beyond that is a latent driver failure."""
     from pyspark.sql import SparkSession
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
@@ -63,74 +71,86 @@ def build_vanilla_session():
     return spark
 
 
-def main() -> None:
+def log_path(sf: str, vanilla: bool, full: bool) -> str | None:
+    """The committed log a sweep writes: only a full-registry sweep writes
+    one; a window or named-entry run returns None (stdout only)."""
+    if not full:
+        return None
+    return os.path.join(ROOT, f"SWEEP_sf{sf}{'_vanilla' if vanilla else ''}.log")
+
+
+def check_entry(spark, sf_dir: str, name: str, query, oracle) -> str:
+    """Run one entry; return its PASS detail or raise. Oracle-backed
+    entries go through the DuckDB compare, the others must return rows."""
+    if oracle is not None:
+        compare(query(spark, sf_dir), run_oracle(sf_dir, oracle), name)
+        return ""
+    n = len(query(spark, sf_dir).collect())
+    if n == 0:  # explicit raise: assert dies under -O
+        raise ValueError(f"{name}: rows-only entry returned 0 rows")
+    return f" (rows-only, {n} rows)"
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--window", action="store_true",
+                    help=f"the first {WINDOW} registered entries only")
+    ap.add_argument("names", nargs="*", help="entries to run (default: all)")
+    args = ap.parse_args(argv)
+    if args.window and args.names:
+        ap.error("--window and entry names are exclusive")
+
+    queries, oracles = plans.all_queries(), plans.all_oracles()
+    unknown = [n for n in args.names if n not in queries]
+    if unknown:
+        print(f"unregistered entries: {unknown}", file=sys.stderr)
+        return 2
+    vanilla = os.environ.get("SPARK_GRAFT_SWEEP_VANILLA") == "1"
+    if args.window:
+        names = list(queries)[:WINDOW]
+    elif args.names:
+        names = args.names
+    else:
+        names = sorted(queries) if vanilla else sorted(oracles)
+
     sf_dir = os.environ.get(
         "SPARK_GRAFT_SWEEP_SF_DIR", "/root/testdata/sf0.1"
     )
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     os.environ.setdefault("SPARK_DRIVER_MEM", "12g")
-    vanilla = os.environ.get("SPARK_GRAFT_SWEEP_VANILLA") == "1"
-    if vanilla:
-        spark = build_vanilla_session()
-    else:
-        spark = get_session(app_name=f"sweep-sf{sf}")
-    queries, oracles = plans.all_queries(), plans.all_oracles()
-    suffix = "_vanilla" if vanilla else ""
-    log_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"SWEEP_sf{sf}{suffix}.log",
-    )
-    # The vanilla sweep covers the WHOLE registry: the driver checks
-    # rows-only entries too (rows>0, no error) and the r12 failure was
-    # exactly such an entry.
-    names = sorted(queries) if vanilla else sorted(oracles)
-    ok = bad = 0
-    t_all = time.perf_counter()
-    with open(log_path, "w") as log:
-        session_note = "vanilla driver-shaped session" if vanilla else "engine session"
-        log.write(
-            f"# oracle parity sweep at {sf_dir} "
-            f"({len(names)} entries, {session_note})\n"
-        )
+    spark = build_vanilla_session() if vanilla else get_session(
+        app_name=f"sweep-sf{sf}")
+    path = log_path(sf, vanilla, full=not (args.window or args.names))
+    with open(path, "w") if path else contextlib.nullcontext() as log:
+
+        def emit(line: str) -> None:
+            print(line, flush=True)
+            if log:
+                log.write(line + "\n")
+                log.flush()
+
+        note = "vanilla driver-shaped session" if vanilla else "engine session"
+        emit(f"# oracle parity sweep at {sf_dir} ({len(names)} entries, {note})")
+        ok = bad = 0
+        t_all = time.perf_counter()
         for name in names:
             t0 = time.perf_counter()
             try:
-                if name in oracles:
-                    compare(
-                        queries[name](spark, sf_dir),
-                        run_oracle(sf_dir, oracles[name]),
-                        name,
-                    )
-                    line = f"PASS {name} {time.perf_counter() - t0:.1f}s"
-                else:
-                    n = len(queries[name](spark, sf_dir).collect())
-                    if n == 0:  # explicit raise: assert dies under -O
-                        raise ValueError(
-                            f"{name}: rows-only entry returned 0 rows"
-                        )
-                    line = (
-                        f"PASS {name} {time.perf_counter() - t0:.1f}s "
-                        f"(rows-only, {n} rows)"
-                    )
+                detail = check_entry(
+                    spark, sf_dir, name, queries[name], oracles.get(name))
+                emit(f"PASS {name} {time.perf_counter() - t0:.1f}s{detail}")
                 ok += 1
             except Exception as exc:  # noqa: BLE001
-                line = (
-                    f"FAIL {name} {time.perf_counter() - t0:.1f}s "
-                    f"{type(exc).__name__}: {str(exc)[:300]}"
-                )
                 traceback.print_exc()
+                emit(f"FAIL {name} {time.perf_counter() - t0:.1f}s "
+                     f"{type(exc).__name__}: {str(exc)[:300]}")
                 bad += 1
-            print(line, flush=True)
-            log.write(line + "\n")
-            log.flush()
-        summary = (
-            f"# {ok}/{ok + bad} green, {bad} mismatches, "
-            f"{time.perf_counter() - t_all:.0f}s total"
-        )
-        print(summary)
-        log.write(summary + "\n")
-    sys.exit(1 if bad else 0)
-
+            # Free the entry's py4j references now, so the JVM can drop
+            # its localCheckpoint blocks (session.py).
+            gc.collect()
+        emit(f"# {ok}/{ok + bad} green, {bad} mismatches, "
+             f"{time.perf_counter() - t_all:.0f}s total")
+    return 1 if bad else 0
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -66,86 +66,6 @@ def test_headline_and_exclusions_resolve():
     assert all(isinstance(r, str) and r.strip() for r in excluded.values())
 
 
-def test_affected_from_log_attribution():
-    """r14 second-review pins: the retry's slow-tick→query attribution
-    must survive dropped/timed-out ticks (position-keyed, no index
-    shift), brand the final block from the closing tick, and return
-    nothing for a flat series."""
-    from bench import affected_from_log
-
-    names = [f"q{i}" for i in range(20)]
-    timed = set(names)
-
-    # flat series → nothing to re-time
-    flat = [(0.2, 0), (0.21, 5), (0.2, 10), (0.22, 15), (0.2, 20)]
-    assert affected_from_log(flat, names, timed) == []
-
-    # one slow mid-window tick at position 10 brands q5..q14 (both
-    # neighboring blocks — the tick ran between them)
-    mid = [(0.2, 0), (0.2, 5), (0.9, 10), (0.2, 15), (0.2, 20)]
-    assert affected_from_log(mid, names, timed) == [
-        f"q{i}" for i in range(5, 15)
-    ]
-
-    # a TIMED-OUT tick is recorded capped at its position — it must
-    # brand its neighborhood, and later ticks keep their own positions
-    # (the old series-index scheme shifted everything left)
-    capped = [(0.2, 0), (60.0, 5), (0.2, 10), (0.2, 15), (0.2, 20)]
-    assert affected_from_log(capped, names, timed) == [
-        f"q{i}" for i in range(0, 10)
-    ]
-
-    # the closing tick (position == len(names)) brands the FINAL block,
-    # not an empty slice
-    closing = [(0.2, 0), (0.2, 5), (0.2, 10), (0.2, 15), (0.9, 20)]
-    assert affected_from_log(closing, names, timed) == [
-        f"q{i}" for i in range(15, 20)
-    ]
-
-    # entries without a timing are excluded; order is preserved, dups
-    # collapsed when two slow ticks overlap
-    overlap = [(0.9, 5), (0.9, 10), (0.2, 15), (0.2, 0), (0.2, 20)]
-    got = affected_from_log(overlap, names, timed - {"q7"})
-    assert got == [f"q{i}" for i in range(0, 15) if i != 7]
-
-    assert affected_from_log([], names, timed) == []
-
-    # ADVICE r14: sustained storm — half or more of the ticks slow. A
-    # median baseline equals the slow value and brands NOTHING despite
-    # contended=true; the quiet-band-floor baseline needs only the one
-    # quiet tick to anchor and brands every slow tick's neighborhood.
-    storm = [(0.2, 0), (0.9, 5), (0.9, 10), (0.9, 15), (0.9, 20)]
-    assert affected_from_log(storm, names, timed) == [
-        f"q{i}" for i in range(0, 20)
-    ]
-
-    # r15 self-review: quiet-band jitter up to ~1.7x floor (the
-    # committed quiet twins' own spread) must NOT brand — the 2x
-    # threshold keeps the bounded retry targeted at storm ticks only
-    jitter = [(0.2, 0), (0.34, 5), (0.31, 10), (0.2, 15), (0.26, 20)]
-    assert affected_from_log(jitter, names, timed) == []
-
-    # ADVICE r15: one implausibly FAST tick (below 0.7x the committed
-    # best-ever quiet floor of 0.140 s) is a measurement fluke, not a
-    # quiet anchor — on a 1.4-1.9x host epoch it would otherwise brand
-    # nearly the whole window. The fluke is dropped; the remaining
-    # plausible ticks (ordinary epoch jitter) brand nothing.
-    fluke = [(0.05, 0), (0.21, 5), (0.22, 10), (0.2, 15), (0.26, 20)]
-    assert affected_from_log(fluke, names, timed) == []
-
-    # ...but the guard must NOT break storm anchoring: a plausible
-    # quiet tick (>= 0.7 * 0.140) still anchors, and storm ticks brand
-    fluke_storm = [(0.15, 0), (0.9, 5), (0.9, 10), (0.9, 15), (0.9, 20)]
-    assert affected_from_log(fluke_storm, names, timed) == [
-        f"q{i}" for i in range(0, 20)
-    ]
-
-    # degenerate: EVERY tick implausibly fast (a genuinely faster
-    # host) falls back to the raw min instead of inventing a floor
-    allfast = [(0.05, 0), (0.05, 5), (0.05, 10), (0.05, 15), (0.05, 20)]
-    assert affected_from_log(allfast, names, timed) == []
-
-
 def test_core32_is_frozen_and_registered():
     """CORE_32 (VERDICT r14 #4) must stay exactly the round-4 artifact
     membership — 32 names, all registered, all in HEADLINE — so
@@ -165,22 +85,6 @@ def test_core32_is_frozen_and_registered():
     r4 = json.loads((_ROOT / "BENCH_r04.json").read_text())
     r4_set = set(r4["parsed"]["queries"])
     assert set(mod.CORE_32) == r4_set, "CORE_32 drifted from the r4 artifact"
-
-
-def test_quiet_reference_loader():
-    """The outlier re-pass reference must resolve to the NEWEST
-    committed quiet twin and carry per-entry floors."""
-    from bench import _load_quiet_reference
-
-    ref = _load_quiet_reference()
-    assert ref, "a BENCH_quiet_r*.json is committed in this repo"
-    import re
-
-    m = re.search(r"BENCH_quiet_r(\d+)", ref["_file"])
-    assert m and int(m.group(1)) >= 17
-    floors = {k: v for k, v in ref.items() if k != "_file"}
-    assert len(floors) >= 80
-    assert all(isinstance(v, float) and v > 0 for v in floors.values())
 
 
 def test_printed_line_is_compact():
@@ -204,25 +108,71 @@ def test_printed_line_is_compact():
         "queries": {n: 123.4567 for n in mod.HEADLINE},
         "sf": 0.1,
         "value_core": 1234.5678,
-        "contended": False,
         "artifact": "BENCH_LATEST.json",
-        # provenance that must NOT leak to stdout
-        "sentinel_series": [0.1] * 40,
+        # artifact-only fields that must NOT leak to stdout
+        "median": {n: 123.4567 for n in mod.HEADLINE},
         "pass_counts": {n: 3 for n in mod.HEADLINE},
-        "min_phase_counts": {"main": 87},
-        "phase_sentinels": {"main": [0.1] * 40},
-        "late_recapture": {},
-        "outlier_repass": {},
-        "load_gate": {"waits_s": []},
-        "noisy_floors": {},
+        "errors": {},
+        "seeds": [0, 1, 2],
+        "steal_share": 0.01,
     }
     line = mod.contract_line(out)
     parsed = json.loads(line)
     assert set(parsed) == set(mod.CONTRACT_LINE_FIELDS) & set(out)
-    assert "pass_counts" not in parsed and "sentinel_series" not in parsed
+    assert set(mod.CONTRACT_LINE_FIELDS) == {
+        "metric", "value", "unit", "queries", "sf", "value_core", "artifact",
+    }
+    assert "pass_counts" not in parsed and "median" not in parsed
     assert "\n" not in line
     assert len(line) < 6000, f"printed line grew to {len(line)} chars"
     # contract fields the driver greps for are all present
     for k in ("metric", "value", "unit", "queries", "sf"):
         assert k in parsed
     assert len(parsed["queries"]) == len(mod.HEADLINE)
+
+
+def test_run_rounds_times_entries_and_reports_errors(spark, sf_dir):
+    """One round over two cheap CORE_32 entries and one entry that
+    raises: both real entries are timed, `value` / `value_core` are
+    sums of their minimums, the failing entry lands in `errors` only,
+    and the result still gives one parseable contract line."""
+    import json
+
+    mod = _load_bench_module()
+    queries = plans.all_queries()
+
+    def broken(spark, sf_dir):
+        raise RuntimeError("broken entry")
+
+    entries = {
+        "counter_hourly": queries["counter_hourly"],
+        "gauge_latest_per_user": queries["gauge_latest_per_user"],
+        "broken_entry": broken,
+    }
+    # a deadline already past: exactly one round
+    res = mod.run_rounds(spark, entries, sf_dir, deadline=0.0)
+
+    real = ["counter_hourly", "gauge_latest_per_user"]
+    assert all(n in mod.CORE_32 for n in real)
+    assert sorted(res["queries"]) == real
+    assert all(res["queries"][n] > 0 for n in real)
+    assert res["pass_counts"] == {
+        "counter_hourly": 1, "gauge_latest_per_user": 1, "broken_entry": 0,
+    }
+    assert res["value"] == round(sum(res["queries"][n] for n in real), 4)
+    assert res["value_core"] == round(
+        sum(res["queries"][n] for n in real if n in mod.CORE_32), 4
+    )
+    assert res["core_set"] == "2/32"
+    assert list(res["errors"]) == ["broken_entry"]
+    assert "RuntimeError: broken entry" in res["errors"]["broken_entry"]
+    assert "broken_entry" not in res["median"]
+    assert res["seeds"] == [mod.ROUND_SEED]
+    assert 0.0 <= res["steal_share"] <= 1.0
+
+    line = mod.contract_line({"metric": "headline_queries_total",
+                              "unit": "sec", "sf": 0.001, **res})
+    assert "\n" not in line
+    parsed = json.loads(line)
+    assert parsed["queries"] == res["queries"]
+    assert parsed["value_core"] == res["value_core"]

@@ -3,7 +3,7 @@
 the telescoped window-delta substrate (VERDICT r17 #5).
 
 The full-relation equivalence against the r17 join-web form was gated
-row-exact by artifacts/r18/probe_nh_r18.py and the entry semantics
+row-exact by a one-off probe (OPTIMIZATION_r18.md) and the entry semantics
 stay pinned by the golden reset fixtures
 (tests/test_native_histogram_rate_golden.py) and the DuckDB oracles.
 This test pins the kernel's own edge machinery on a hand-computed
