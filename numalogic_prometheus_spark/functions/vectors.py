@@ -5,23 +5,10 @@ Floats are widened to double before arithmetic so Spark and the DuckDB
 oracle (`embedding::DOUBLE[]`) see identical inputs; at dim ≲ a few
 hundred, summation-order noise is ≪ the 6dp round used by the queries.
 
-Every helper is DUAL-MODE (r16 build-cost pass): pass COLUMN NAMES
-(strings) and the expression is generated as one SQL string parsed
-JVM-side in a single py4j round trip; pass Column objects and the
-original python-composed form is used. The two forms build the same
-Catalyst expression (same HOF, same lambda, same summation order — a
-bit-identity A/B over the full sf0.1 N×C expansion measured 0 mismatch
-rows), but the SQL-string route builds ~4x faster: composing lambda
-expressions object-by-object over py4j costs a JVM round trip per node,
-which dominated the vec family's plan-construction time (measured
-min-of-5 on the IVF N×C leg: build 131→31 ms). An UNROLLED 64-term
-element_at chain was also measured and REJECTED: bit-identical but
-~3x slower to execute than the HOF's internal loop.
-
-At 100 TB the SQL-string route is also the right production shape: the
-expression is a constant of the plan, not per-row work — build cost
-does not scale with data, but a long-lived session constructs these
-plans thousands of times.
+Every helper takes column names (or SQL text) and builds ONE SQL string,
+parsed JVM-side in a single py4j round trip: composing the same lambdas
+Column-object by Column-object costs a round trip per node, about 4× the
+build time for an equal expression.
 """
 
 from __future__ import annotations
@@ -41,37 +28,22 @@ def _l2_sql(a: str) -> str:
     return f"sqrt(aggregate({a}, 0.0D, (acc, x) -> acc + x * x))"
 
 
-def to_double_array(col: Column | str) -> Column:
-    if isinstance(col, str):
-        # CAST of an array casts its elements; float→double widening is
-        # exact, identical to the per-element transform below — and it
-        # codegens with no lambda at all.
-        return F.expr(f"CAST({col} AS ARRAY<DOUBLE>)")
-    return F.transform(col, lambda x: x.cast("double"))
+def to_double_array(col: str) -> Column:
+    # CAST of an array casts its elements; float→double widening is
+    # exact and codegens with no lambda at all.
+    return F.expr(f"CAST({col} AS ARRAY<DOUBLE>)")
 
 
-def dot_product(a: Column | str, b: Column | str) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(a, b))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def dot_product(a: str, b: str) -> Column:
+    return F.expr(_dot_sql(a, b))
 
 
-def l2_norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(_l2_sql(a))
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
+def l2_norm(a: str) -> Column:
+    return F.expr(_l2_sql(a))
 
 
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(f"{_dot_sql(a, b)} / ({_l2_sql(a)} * {_l2_sql(b)})")
-    return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
+def cosine_similarity(a: str, b: str) -> Column:
+    return F.expr(f"{_dot_sql(a, b)} / ({_l2_sql(a)} * {_l2_sql(b)})")
 
 
 # Tiebreak modulus for the IVF cell-assignment argmin key. The distance
@@ -79,34 +51,20 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
 # exact in BIGINT on both engines (and still below 2^53 if a double ever
 # carries it). cent_id must stay < MOD or the id bleeds into the
 # distance component and the "tiebreak" silently stops being one —
-# cell_argmin_key raises per-row rather than mis-assign (ADVICE r9).
+# cell_argmin_key raises per-row rather than mis-assign.
 TIEBREAK_MOD = 1_000_000_000
 
 
-def cell_argmin_key(v, nv, cv, nc, cent_id) -> Column:
+def cell_argmin_key(v: str, nv: str, cv: str, nc: str, cent_id: str) -> Column:
     """Composite argmin key for nearest-centroid assignment: rounded
     cosine distance in 1e-6 units, centroid id as the tiebreak. Norms
     are taken as bound columns (hoisted once per row) so the hot N×C
-    expansion runs a single array pass (the dot product). Dual-mode
-    like the helpers above (names → one SQL string)."""
-    if all(isinstance(x, str) for x in (v, nv, cv, nc, cent_id)):
-        dot = _dot_sql(v, cv)
-        return F.expr(
-            f"IF({cent_id} < {TIEBREAK_MOD}, "
-            f"CAST(round((1 - {dot} / ({nv} * {nc})) * 1000000, 0) "
-            f"AS BIGINT) * {TIEBREAK_MOD} + {cent_id}, "
-            f"CAST(raise_error(format_string("
-            f"'cent_id %d >= tiebreak modulus %d', "
-            f"{cent_id}, {TIEBREAK_MOD})) AS BIGINT))"
-        )
-    dist = 1 - dot_product(v, cv) / (nv * nc)
-    bucket = F.round(dist * 1000000, 0).cast("long")
-    return F.when(
-        cent_id < F.lit(TIEBREAK_MOD), bucket * F.lit(TIEBREAK_MOD) + cent_id
-    ).otherwise(
-        F.raise_error(
-            F.format_string(
-                "cent_id %d >= tiebreak modulus %d", cent_id, F.lit(TIEBREAK_MOD)
-            )
-        ).cast("long")
+    expansion runs a single array pass (the dot product)."""
+    return F.expr(
+        f"IF({cent_id} < {TIEBREAK_MOD}, "
+        f"CAST(round((1 - {_dot_sql(v, cv)} / ({nv} * {nc})) * 1000000, 0) "
+        f"AS BIGINT) * {TIEBREAK_MOD} + {cent_id}, "
+        f"CAST(raise_error(format_string("
+        f"'cent_id %d >= tiebreak modulus %d', "
+        f"{cent_id}, {TIEBREAK_MOD})) AS BIGINT))"
     )

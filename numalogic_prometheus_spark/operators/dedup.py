@@ -308,8 +308,8 @@ def shingle_features_arrow(df: DataFrame, k: int = 4, w: int = 3) -> DataFrame:
     window mixing for the Rabin-Karp shingles, ``pd.unique`` for the
     first-occurrence distinct (== array_distinct), and the k affine
     MinHash maps over the distinct set. Bit-exactness vs the JVM
-    expressions is pinned on the full sf0.1 corpus by
-    probe_shingle_r18.py and per-commit by
+    expressions was checked on the full sf0.1 corpus
+    (OPTIMIZATION_r18.md §2) and is pinned per-commit by
     tests/test_shingle_arrow_kernel.py; the DuckDB oracle twin
     (_SHINGLE_HASH_SQL) is unchanged.
 

@@ -538,8 +538,8 @@ def _nh_series_kernel(pdf):
     prev-epoch total, i.e. DetectReset). Every intermediate is an
     integer; ds0/de are float64 conversions of exact µs integers
     (< 2^53), so the output is bit-identical to the r17 join-web form —
-    gated row-exact by artifacts/r18/probe_nh_r18.py and the golden
-    reset fixtures. One series' state is its scrape grid × ≤ ~25
+    gated row-exact (OPTIMIZATION_r18.md §5) and by the golden reset
+    fixtures. One series' state is its scrape grid × ≤ ~25
     buckets, the same per-series bound the join web carried.
 
     Assumes a UTC session timezone. Arrow hands ``m`` over as naive
@@ -693,7 +693,7 @@ def _nh_substrate(
     # boundary/epoch/window machinery vectorized in exact int64 —
     # 2 exchanges total (the (et,m,idx) aggregate feeding the pin and
     # the per-series regroup). Output gated row-exact against the
-    # join-web form (artifacts/r18/probe_nh_r18.py: nonzero-delta rows
+    # join-web form (OPTIMIZATION_r18.md §5: nonzero-delta rows
     # and all entry outputs identical; 2.0 → 1.2 s). Per-series state
     # is the series' own scrape grid × ≤ ~25 buckets; parallelism is
     # the series count, the natural 100 TB partitioning. Semantics

@@ -94,7 +94,8 @@ def quality_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # numerators/denominators and the same IEEE division sequence
     # inside the row: zero exchanges, zero joins (plan pinned by
     # test_repetition_stats_is_exchange_free). Bit-exact on the full
-    # corpus incl. doubles (probe_rep_r18: 1.32 → 0.46 s min-of-4);
+    # corpus incl. doubles (OPTIMIZATION_r18.md §10: 1.32 → 0.46 s
+    # min-of-4);
     # edge semantics (NULL text, empty/whitespace text, single-token
     # docs) pinned against the old form's explode/join behavior in
     # tests/test_repetition_kernel.py. At 100 TB this is a map-only

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from numalogic_prometheus_spark.plans import register
+from numalogic_prometheus_spark.sources.snapshots import read_committed
 from numalogic_prometheus_spark.sources.tables import load_table
 
 # Portable hash-bucket in [0, 100): Spark and DuckDB agree bit-for-bit
@@ -425,7 +426,7 @@ def write_components_snapshot(
     # left (the driver path's local relation or the BSP loop's last
     # round) — locally the tiny relation lands as one file
     # (measured neutral: 2.66 vs 2.70 s for the full entry,
-    # probe_snap_r18.py), while a 100 TB components relation fans out
+    # OPTIMIZATION_r18.md §3), while a 100 TB components relation fans out
     # to advisory-sized files instead of shuffle-partition-count shards.
     build_components(spark, sf_dir).hint("rebalance").write.mode(
         "overwrite"
@@ -438,14 +439,13 @@ def read_components_snapshot(
     """Read a committed components snapshot; refuses a directory whose
     _SUCCESS marker is missing (crashed mid-write) rather than silently
     splitting against a partial fixpoint."""
-    import os
-
-    if not os.path.exists(os.path.join(snapshot_dir, "_SUCCESS")):
+    df = read_committed(spark, snapshot_dir)
+    if df is None:
         raise FileNotFoundError(
             f"components snapshot {snapshot_dir!r} has no _SUCCESS marker "
             "(missing or crashed write)"
         )
-    return spark.read.parquet(snapshot_dir)
+    return df
 
 
 def sample_split_from_snapshot(

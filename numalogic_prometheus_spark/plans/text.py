@@ -547,7 +547,7 @@ def dedup_shingle_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 3.65 s entry at sf0.1. shingle_features_arrow hands whole
     # batches to hashlib/numpy and emits hset AND sig together, so the
     # corpus pass materializes once (measured 2.24 → 0.94 s for the
-    # full entry, probe_shingle_r18.py, outputs asserted identical; the
+    # full entry, OPTIMIZATION_r18.md §2, outputs asserted identical; the
     # bit-exactness of the Python kernel vs the JVM expressions is
     # pinned by tests/test_shingle_arrow_kernel.py). Both legs project
     # from the checkpoint: the banding leg reads only (doc_id, sig),

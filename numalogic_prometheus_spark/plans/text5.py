@@ -291,26 +291,19 @@ def text_chunk_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text_chunk_contamination catches verbatim chunks; neither sees an
 # eval item REWRITTEN into the training corpus. At embedding grain a
 # paraphrase is a near-neighbor, so the check is: eval embeddings probe
-# the shared IVF index (the vec_ivf_filtered_topk coarse quantizer —
-# centroids are a full-corpus artifact), candidates are the training
-# vectors in the probed cells only, and a cosine above the threshold
-# flags the training item as a semantic copy of a benchmark item.
+# the shared IVF index (operators/ivf.py — centroids are a full-corpus
+# artifact), candidates are the training vectors in the probed cells
+# only, and a cosine above the threshold flags the training item as a
+# semantic copy of a benchmark item.
 # ---------------------------------------------------------------------------
 
-from numalogic_prometheus_spark.plans.vectors3 import (  # noqa: E402
-    _IVF_CENTROID_FILTER,
-    _IVF_COS_SQL,
-    _IVF_KEY_SQL,
-    _IVF_NPROBE,
+from numalogic_prometheus_spark.operators import ivf  # noqa: E402
+from numalogic_prometheus_spark.streaming.semantic_contamination import (  # noqa: E402
+    SEM_EVAL_MOD as _SEM_EVAL_MOD,
+    SEM_THRESHOLD as _SEM_THRESHOLD,
+    contamination_partials,
+    flag_contaminated,
 )
-
-_SEM_EVAL_MOD = 11  # mirrors the text contamination family's split
-_SEM_THRESHOLD = 0.30  # same fixture geometry as dedup_semantic_survivors:
-#   synthetic embeddings are near-orthogonal, so 0.30 plays the role
-#   0.9+ plays for real text embeddings; the closest candidate cosine to
-#   the boundary across sf0.001/0.01/0.1 is 2.8e-6 away — far above
-#   cross-engine noise (the raw values are bit-identical anyway: both
-#   engines fold dot/norm left-to-right over the same doubles)
 
 
 @register(
@@ -318,9 +311,9 @@ _SEM_THRESHOLD = 0.30  # same fixture geometry as dedup_semantic_survivors:
     oracle=f"""
     WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     cents AS (SELECT vec_id AS cent_id, v AS cv FROM b
-              WHERE {_IVF_CENTROID_FILTER}),
+              WHERE {ivf.CENTROID_FILTER}),
     assign AS (
-        SELECT vec_id, arg_min(cent_id, {_IVF_KEY_SQL}) AS cell
+        SELECT vec_id, arg_min(cent_id, {ivf.key_sql('b.v')}) AS cell
         FROM b CROSS JOIN cents c
         WHERE b.vec_id % {_SEM_EVAL_MOD} != 0
         GROUP BY vec_id
@@ -328,18 +321,18 @@ _SEM_THRESHOLD = 0.30  # same fixture geometry as dedup_semantic_survivors:
     probes AS (
         SELECT vec_id AS eval_id, cent_id AS cell,
                row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY {_IVF_KEY_SQL}) AS rn
+                                  ORDER BY {ivf.key_sql('b.v')}) AS rn
         FROM b CROSS JOIN cents c
         WHERE b.vec_id % {_SEM_EVAL_MOD} = 0
     ),
     cand AS (
         SELECT p.eval_id, a.vec_id AS train_id
         FROM probes p JOIN assign a ON a.cell = p.cell
-        WHERE p.rn <= {_IVF_NPROBE}
+        WHERE p.rn <= {ivf.NPROBE}
     ),
     sc AS (
         SELECT c.train_id,
-               {_IVF_COS_SQL.format(a='qv.v', b='nv.v')} AS cos
+               {ivf.COS_SQL.format(a='qv.v', b='nv.v')} AS cos
         FROM cand c
         JOIN b qv ON qv.vec_id = c.eval_id
         JOIN b nv ON nv.vec_id = c.train_id
@@ -384,84 +377,23 @@ def text_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical folds) hence DuckDB-expressible; golden with a
     planted paraphrase pair: tests/test_semantic_contamination_golden.py.
     """
-    from numalogic_prometheus_spark.functions.vectors import (
-        cell_argmin_key,
-        dot_product,
-        l2_norm,
-        to_double_array,
-    )
     from numalogic_prometheus_spark.sources.tables import load_table_spread
-    from pyspark.sql import Window as W
 
     e = load_table_spread(spark, sf_dir, "embeddings", "vec_id")
-    b = e.select(
-        "vec_id", to_double_array("embedding").alias("v")
-    ).withColumn("nv", l2_norm("v"))
-    cents = b.filter(F.expr(_IVF_CENTROID_FILTER)).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("v").alias("cv"),
-        F.col("nv").alias("nc"),
+    b = ivf.featurize(e)
+    cents = ivf.centroids(b)
+    index = ivf.assign_cells(
+        b.filter(F.col("vec_id") % _SEM_EVAL_MOD != 0), cents
     )
-    train = b.filter(F.col("vec_id") % _SEM_EVAL_MOD != 0)
-    keyed = train.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cent_id",
-        cell_argmin_key("v", "nv", "cv", "nc", "cent_id").alias("key"),
+    probes = ivf.probe_cells(
+        ivf.query_keys(
+            b.filter(F.col("vec_id") % _SEM_EVAL_MOD == 0), cents, "eval_id"
+        ),
+        "eval_id",
     )
-    assign = keyed.groupBy("vec_id").agg(
-        F.min_by("cent_id", "key").alias("cell")
+    hits = contamination_partials(probes, index).withColumn(
+        "max_cos", F.round("max_cos", 6)
     )
-    assign_v = assign.join(train.select("vec_id", "v", "nv"), "vec_id")
-    wq = W.partitionBy("eval_id").orderBy("key")
-    probes = (
-        b.filter(F.col("vec_id") % _SEM_EVAL_MOD == 0)
-        .select(
-            F.col("vec_id").alias("eval_id"),
-            F.col("v").alias("qv"),
-            F.col("nv").alias("nqv"),
-        )
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "eval_id",
-            "qv",
-            "nqv",
-            F.col("cent_id").alias("cell"),
-            cell_argmin_key("qv", "nqv", "cv", "nc", "cent_id").alias("key"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= _IVF_NPROBE)
-        .drop("rn", "key")
-    )
-    cos = dot_product("qv", "v") / (
-        F.col("nqv") * F.col("nv")
-    )
-    hits = (
-        F.broadcast(probes)
-        .join(assign_v, "cell")
-        .select("vec_id", cos.alias("cos"))
-        .groupBy("vec_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_eval_candidates"),
-            F.sum(
-                F.when(F.col("cos") >= _SEM_THRESHOLD, 1).otherwise(0)
-            ).alias("n_eval_hits"),
-            F.round(F.max("cos"), 6).alias("max_cos"),
-        )
-    )
-    return (
-        e.select("vec_id")
-        .filter(F.col("vec_id") % _SEM_EVAL_MOD != 0)
-        .join(hits, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.coalesce("n_eval_candidates", F.lit(0)).alias(
-                "n_eval_candidates"
-            ),
-            F.coalesce("n_eval_hits", F.lit(0)).alias("n_eval_hits"),
-            "max_cos",
-            F.when(F.coalesce("n_eval_hits", F.lit(0)) > 0, F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("flagged"),
-        )
+    return flag_contaminated(
+        e.select("vec_id").filter(F.col("vec_id") % _SEM_EVAL_MOD != 0), hits
     )

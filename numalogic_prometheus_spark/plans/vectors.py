@@ -44,10 +44,9 @@ from numalogic_prometheus_spark.sources.tables import load_table
 def vec_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array math sanity surface: per-label average L2 norm + dim."""
     e = load_table(spark, sf_dir, "embeddings")
-    vec = to_double_array("embedding")
     return (
         e.select("label", F.size("embedding").cast("long").alias("dim"),
-                 l2_norm(vec).alias("norm"))
+                 l2_norm("CAST(embedding AS ARRAY<DOUBLE>)").alias("norm"))
         .groupBy("label", "dim")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -174,6 +173,49 @@ def _banded_vectors(b: DataFrame, bits: int, bands: int) -> DataFrame:
     )
 
 
+def _banded_topk(
+    spark: SparkSession, sf_dir: str, bits: int, bands: int
+) -> DataFrame:
+    """OR-of-bands ANN top-3: map-side banding, one (band_idx, band_key)
+    candidate equi-join, candidates deduped BEFORE the exact-cosine
+    re-rank so each pair is scored once, per-query top-k. bits/bands
+    are deployment tuning, not plan changes."""
+    e = load_table(spark, sf_dir, "embeddings")
+    b = e.select(
+        "vec_id", to_double_array("embedding").alias("v")
+    )
+    banded = _banded_vectors(b, bits=bits, bands=bands)
+    q = banded.filter(F.expr(_QUERY_FILTER)).select(
+        F.col("vec_id").alias("query_id"), "band_idx", "band_key"
+    )
+    cands = (
+        q.join(banded.select("vec_id", "band_idx", "band_key"), ["band_idx", "band_key"])
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+        .distinct()
+    )
+    scored = (
+        cands.join(
+            b.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv")),
+            "query_id",
+        )
+        .join(
+            b.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv")),
+            "neighbor_id",
+        )
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(cosine_similarity("qv", "cv"), 6).alias("cos_sim"),
+        )
+    )
+    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
+    return (
+        scored.withColumn("rn", F.row_number().over(w).cast("long"))
+        .filter(F.col("rn") <= 3)
+    )
+
+
 @register(
     "vec_ann_signbucket_topk",
     oracle=f"""
@@ -275,45 +317,8 @@ def vec_ann_multiband_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector fixture still yields candidates; at cluster scale raise to
     16-24 bits) bound the in-bucket candidate count at O(N/2^bits) per
     band, while OR-ing the bands recovers the recall a single fine bucket
-    would lose. Candidates = union of
-    same-(band, key) vectors, deduped BEFORE the exact-cosine re-rank so
-    each pair is scored once. At larger corpora scale `bits` up and add
-    bands — the plan shape (map-side banding, one candidate equi-join,
-    per-query top-k) is unchanged."""
-    e = load_table(spark, sf_dir, "embeddings")
-    b = e.select(
-        "vec_id", to_double_array("embedding").alias("v")
-    )
-    banded = _banded_vectors(b, bits=10, bands=2)
-    q = banded.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("query_id"), "band_idx", "band_key"
-    )
-    cands = (
-        q.join(banded.select("vec_id", "band_idx", "band_key"), ["band_idx", "band_key"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .distinct()
-    )
-    scored = (
-        cands.join(
-            b.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv")),
-            "query_id",
-        )
-        .join(
-            b.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv")),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_similarity("qv", "cv"), 6).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= 3)
-    )
+    would lose (`_banded_topk`)."""
+    return _banded_topk(spark, sf_dir, bits=10, bands=2)
 
 
 @register(

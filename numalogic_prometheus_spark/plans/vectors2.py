@@ -1,55 +1,23 @@
-"""Vector search, batch 2 — IVF (inverted-file) ANN and cosine range
-search over `embeddings` ([north-star]: similarity search with an
-explicit scale path beyond LSH sign-bucketing).
-
-IVF is the coarse-quantizer family FAISS popularized: assign every
-vector to its nearest centroid (the "cell"), search only the cells
-nearest the query (`nprobe`). Here the centroid set is data-deterministic
-(every 31st vec_id) so both engines derive identical cells without a
-trained k-means artifact — the *plan shape* is exactly what a trained
-IVF would run: broadcast the centroid table, map-side distance argmin
-with partial aggregation, one shuffle keyed by vec_id, then a
-cell-equi-join for candidates.
-
-100 TB notes: centroids are O(√N)-ish and always broadcastable; the
-assignment aggregate combines map-side so the exchange carries N rows
-(not N×C); candidate volume is bounded by nprobe/n_cells of the corpus.
-Growing the corpus means growing the centroid count, not the plan.
+"""Vector search, batch 2 — IVF (inverted-file) ANN, cosine range
+search and the recall-tuned OR-of-bands ANN over `embeddings`
+([north-star]: similarity search with an explicit scale path beyond LSH
+sign-bucketing). The IVF pipeline and its 100 TB notes live in
+operators/ivf.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from numalogic_prometheus_spark.functions.vectors import (
-    cell_argmin_key,
     cosine_similarity,
-    dot_product,
-    l2_norm,
     to_double_array,
 )
+from numalogic_prometheus_spark.operators import ivf
 from numalogic_prometheus_spark.plans import register
+from numalogic_prometheus_spark.plans.vectors import _QUERY_FILTER, _banded_topk
 from numalogic_prometheus_spark.sources.tables import load_table, load_table_spread
-
-_QUERY_FILTER = "vec_id % 97 = 0"
-_CENTROID_FILTER = "vec_id % 31 = 0"
-
-# Deterministic composite argmin key: rounded cosine distance in 1e-6
-# units, then centroid id as the tiebreak — BIGINT-exact in both engines
-# (bucket ≤ 2e6, so key ≤ ~2.0e15; the Spark twin cell_argmin_key guards
-# cent_id < TIEBREAK_MOD = 1e9 so the id can never bleed into the
-# distance component) so both engines pick the same cell even when two
-# centroids are equidistant.
-_COS_SQL = (
-    "list_dot_product({a}, {b})"
-    " / (sqrt(list_aggregate(list_transform({a}, x -> x*x), 'sum'))"
-    "    * sqrt(list_aggregate(list_transform({b}, x -> x*x), 'sum')))"
-)
-_KEY_SQL = (
-    f"round((1 - {_COS_SQL.format(a='b.v', b='c.cv')}) * 1000000)::BIGINT"
-    " * 1000000000 + c.cent_id"
-)
 
 
 @register(
@@ -57,9 +25,9 @@ _KEY_SQL = (
     oracle=f"""
     WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     cents AS (SELECT vec_id AS cent_id, v AS cv FROM b
-              WHERE {_CENTROID_FILTER}),
+              WHERE {ivf.CENTROID_FILTER}),
     keyed AS (
-        SELECT b.vec_id, c.cent_id, {_KEY_SQL} AS key
+        SELECT b.vec_id, c.cent_id, {ivf.key_sql('b.v')} AS key
         FROM b CROSS JOIN cents c
     ),
     assign AS (SELECT vec_id, arg_min(cent_id, key) AS cell
@@ -76,7 +44,7 @@ _KEY_SQL = (
     ),
     scored AS (
         SELECT cd.query_id, cd.neighbor_id,
-               round({_COS_SQL.format(a='qv.v', b='nv.v')}, 6) AS cos_sim
+               round({ivf.COS_SQL.format(a='qv.v', b='nv.v')}, 6) AS cos_sim
         FROM cands cd
         JOIN b qv ON qv.vec_id = cd.query_id
         JOIN b nv ON nv.vec_id = cd.neighbor_id
@@ -89,79 +57,17 @@ _KEY_SQL = (
     """,
 )
 def vec_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN, nprobe=2, top-3: broadcast centroids → map-side distance
-    keys → min_by partial-agg assignment (one N-row shuffle) → probe the
-    2 nearest cells per query → exact cosine re-rank of in-cell
-    candidates only."""
-    e = load_table_spread(spark, sf_dir, "embeddings", "vec_id")
-    # Norms are hoisted to per-row columns: higher-order functions are
-    # interpreted and re-derive their input per call, so cosine-per-pair
-    # would otherwise re-walk both arrays 3× per (vector, centroid).
-    # With norms bound, the N×C expansion runs ONE array pass (the dot).
-    b = e.select(
-        "vec_id", to_double_array("embedding").alias("v")
-    ).withColumn("nv", l2_norm("v"))
-    cents = b.filter(F.expr(_CENTROID_FILTER)).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("v").alias("cv"),
-        F.col("nv").alias("nc"),
+    """IVF ANN, nprobe=2, top-3 (operators/ivf.py): broadcast centroids →
+    map-side distance keys → min_by partial-agg assignment (one N-row
+    shuffle) → probe the 2 nearest cells per query → exact cosine
+    re-rank of in-cell candidates only."""
+    b = ivf.featurize(load_table_spread(spark, sf_dir, "embeddings", "vec_id"))
+    cents = ivf.centroids(b)
+    probes = ivf.probe_cells(
+        ivf.query_keys(b.filter(F.expr(_QUERY_FILTER)), cents)
     )
-
-    dist_key = cell_argmin_key
-
-    # The N×C expansion carries ONLY (vec_id, cent_id, key): the 64-dim
-    # vector is consumed by the distance expression and dropped before
-    # any exchange, so the assignment aggregate stays a hash aggregate
-    # over three scalar columns (carrying `v` through min_by would both
-    # inflate the shuffle 64× and force a SortAggregate).
-    keyed = b.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cent_id",
-        dist_key("v", "nv", "cv", "nc", "cent_id").alias("key"),
-    )
-    assign = keyed.groupBy("vec_id").agg(F.min_by("cent_id", "key").alias("cell"))
-    # Re-attach vectors to the N-row assignment (AQE broadcasts the
-    # small side at fixture scale; co-partitioned shuffle at 100×).
-    assign_v = assign.join(b, "vec_id")
-    # Probes re-derive keys from the |Q|-row query slice only.
-    wq = W.partitionBy("query_id").orderBy("key")
-    q = b.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("nqv"),
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "qv",
-            "nqv",
-            F.col("cent_id").alias("cell"),
-            dist_key("qv", "nqv", "cv", "nc", "cent_id").alias("key"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= 2)
-        .drop("rn", "key")
-    )
-    # probes is |Q|×nprobe rows — always broadcastable, so the candidate
-    # join never reshuffles the N-row assignment relation.
-    scored = (
-        F.broadcast(probes).join(assign_v, "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                dot_product("qv", "v")
-                / (F.col("nqv") * F.col("nv")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= 3)
+    return ivf.rerank_topk(
+        probes, ivf.assign_cells(b, cents), exclude_self=True, long_rn=True
     )
 
 
@@ -171,10 +77,10 @@ def vec_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     q AS (SELECT vec_id AS query_id, v AS qv FROM b WHERE {_QUERY_FILTER})
     SELECT q.query_id, e.vec_id AS neighbor_id,
-           round({_COS_SQL.format(a='q.qv', b='e.v')}, 6) AS cos_sim
+           round({ivf.COS_SQL.format(a='q.qv', b='e.v')}, 6) AS cos_sim
     FROM q CROSS JOIN b e
     WHERE e.vec_id != q.query_id
-      AND round({_COS_SQL.format(a='q.qv', b='e.v')}, 6) >= 0.8
+      AND round({ivf.COS_SQL.format(a='q.qv', b='e.v')}, 6) >= 0.8
     """,
 )
 def vec_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -221,7 +127,7 @@ def vec_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     scored AS (
         SELECT cd.query_id, cd.neighbor_id,
-               round({_COS_SQL.format(a='qv.v', b='cv.v')}, 6) AS cos_sim
+               round({ivf.COS_SQL.format(a='qv.v', b='cv.v')}, 6) AS cos_sim
         FROM cands cd
         JOIN b qv ON qv.vec_id = cd.query_id
         JOIN b cv ON cv.vec_id = cd.neighbor_id
@@ -238,45 +144,6 @@ def vec_ann_tuned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     6 sign bits — chosen from the measured recall/cost curve in
     tests/test_ann_recall.py (recall@3 = 0.667 while scanning ~14% of the
     corpus; the fixture config's 2×10 bits scans 0.1% but recalls 0 on
-    these near-uniform embeddings). Same plan shape as
-    `vec_ann_multiband_topk` — map-side banding, one (band, key)
-    candidate equi-join, dedup, exact cosine re-rank — only the
-    parameters differ, which is the point: bits/bands are deployment
-    tuning knobs justified by the harness, not code changes."""
-    from numalogic_prometheus_spark.plans.vectors import _banded_vectors
-
-    e = load_table(spark, sf_dir, "embeddings")
-    b = e.select("vec_id", to_double_array("embedding").alias("v"))
-    banded = _banded_vectors(b, bits=6, bands=10)
-    q = banded.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("query_id"), "band_idx", "band_key"
-    )
-    cands = (
-        q.join(
-            banded.select("vec_id", "band_idx", "band_key"),
-            ["band_idx", "band_key"],
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .distinct()
-    )
-    scored = (
-        cands.join(
-            b.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv")),
-            "query_id",
-        )
-        .join(
-            b.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv")),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_similarity("qv", "cv"), 6).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= 3)
-    )
+    these near-uniform embeddings). Same plan as
+    `vec_ann_multiband_topk` (`_banded_topk`); only bits/bands differ."""
+    return _banded_topk(spark, sf_dir, bits=6, bands=10)

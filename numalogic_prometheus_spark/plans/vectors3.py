@@ -23,12 +23,10 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from numalogic_prometheus_spark.functions.vectors import (
-    cell_argmin_key,
     cosine_similarity,
-    dot_product,
-    l2_norm,
     to_double_array,
 )
+from numalogic_prometheus_spark.operators import ivf
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.sources.tables import (
     load_table,
@@ -271,19 +269,6 @@ vec_ann_filtered_topk.__doc__ = vec_ann_filtered_topk.__doc__.format(
 # shared by every filtered query, not rebuilt per predicate.
 # ---------------------------------------------------------------------------
 
-_IVF_CENTROID_FILTER = "vec_id % 31 = 0"  # mirrors plans/vectors2.py
-_IVF_NPROBE = 2
-
-_IVF_COS_SQL = (
-    "list_dot_product({a}, {b})"
-    " / (sqrt(list_aggregate(list_transform({a}, x -> x*x), 'sum'))"
-    "    * sqrt(list_aggregate(list_transform({b}, x -> x*x), 'sum')))"
-)
-_IVF_KEY_SQL = (
-    f"round((1 - {_IVF_COS_SQL.format(a='b.v', b='c.cv')}) * 1000000)::BIGINT"
-    " * 1000000000 + c.cent_id"
-)
-
 
 @register(
     "vec_ivf_filtered_topk",
@@ -291,9 +276,9 @@ _IVF_KEY_SQL = (
     WITH b AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
                FROM embeddings),
     cents AS (SELECT vec_id AS cent_id, v AS cv FROM b
-              WHERE {_IVF_CENTROID_FILTER}),
+              WHERE {ivf.CENTROID_FILTER}),
     assign AS (
-        SELECT vec_id, arg_min(cent_id, {_IVF_KEY_SQL}) AS cell
+        SELECT vec_id, arg_min(cent_id, {ivf.key_sql('b.v')}) AS cell
         FROM b CROSS JOIN cents c
         WHERE b.label = {_FILTER_LABEL}
         GROUP BY vec_id
@@ -301,18 +286,18 @@ _IVF_KEY_SQL = (
     probes AS (
         SELECT vec_id AS query_id, cent_id AS cell,
                row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY {_IVF_KEY_SQL}) AS rn
+                                  ORDER BY {ivf.key_sql('b.v')}) AS rn
         FROM b CROSS JOIN cents c
         WHERE {_QUERY_FILTER}
     ),
     cands AS (
         SELECT p.query_id, a.vec_id AS neighbor_id
         FROM probes p JOIN assign a ON a.cell = p.cell
-        WHERE p.rn <= {_IVF_NPROBE} AND a.vec_id != p.query_id
+        WHERE p.rn <= {ivf.NPROBE} AND a.vec_id != p.query_id
     ),
     scored AS (
         SELECT cd.query_id, cd.neighbor_id,
-               round({_IVF_COS_SQL.format(a='qv.v', b='nv.v')}, 6) AS cos_sim
+               round({ivf.COS_SQL.format(a='qv.v', b='nv.v')}, 6) AS cos_sim
         FROM cands cd
         JOIN b qv ON qv.vec_id = cd.query_id
         JOIN b nv ON nv.vec_id = cd.neighbor_id
@@ -338,79 +323,22 @@ def vec_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the production retrieval shape: predicate pruning at the
     scan, candidate volume bounded by nprobe/n_cells of the FILTERED
     corpus, exact work only on survivors."""
-    e = load_table_spread(spark, sf_dir, "embeddings", "vec_id")
-    b = e.select(
-        "vec_id", "label", to_double_array("embedding").alias("v")
-    ).withColumn("nv", l2_norm("v"))
-    cents = b.filter(F.expr(_IVF_CENTROID_FILTER)).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("v").alias("cv"),
-        F.col("nv").alias("nc"),
+    b = ivf.featurize(
+        load_table_spread(spark, sf_dir, "embeddings", "vec_id"), "label"
     )
-
-    dist_key = cell_argmin_key
-
-    # Predicate FIRST: the filtered corpus enters the N×C expansion,
-    # carrying only scalars into the assignment hash aggregate.
-    corpus_f = b.filter(F.col("label") == _FILTER_LABEL)
-    keyed = corpus_f.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cent_id",
-        dist_key(
-            F.col("v"), F.col("nv"), F.col("cv"), F.col("nc"),
-            F.col("cent_id"),
-        ).alias("key"),
+    cents = ivf.centroids(b)
+    # Predicate FIRST: only the filtered corpus enters the N×C expansion.
+    index = ivf.assign_cells(b.filter(F.col("label") == _FILTER_LABEL), cents)
+    probes = ivf.probe_cells(
+        ivf.query_keys(b.filter(F.expr(_QUERY_FILTER)), cents)
     )
-    assign = keyed.groupBy("vec_id").agg(
-        F.min_by("cent_id", "key").alias("cell")
-    )
-    assign_v = assign.join(corpus_f.select("vec_id", "v", "nv"), "vec_id")
-    wq = W.partitionBy("query_id").orderBy("key")
-    q = b.filter(F.expr("vec_id % 97 = 0")).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("nqv"),
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "qv",
-            "nqv",
-            F.col("cent_id").alias("cell"),
-            dist_key(
-                F.col("qv"), F.col("nqv"), F.col("cv"), F.col("nc"),
-                F.col("cent_id"),
-            ).alias("key"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= _IVF_NPROBE)
-        .drop("rn", "key")
-    )
-    scored = (
-        F.broadcast(probes).join(assign_v, "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                dot_product("qv", "v")
-                / (F.col("nqv") * F.col("nv")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), "neighbor_id"
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= _FILTERED_TOP_K)
+    return ivf.rerank_topk(
+        probes, index, k=_FILTERED_TOP_K, exclude_self=True, long_rn=True
     )
 
 
 vec_ivf_filtered_topk.__doc__ = vec_ivf_filtered_topk.__doc__.format(
-    k=_FILTERED_TOP_K, label=_FILTER_LABEL, nprobe=_IVF_NPROBE
+    k=_FILTERED_TOP_K, label=_FILTER_LABEL, nprobe=ivf.NPROBE
 )
 
 
@@ -430,9 +358,9 @@ vec_ivf_filtered_topk.__doc__ = vec_ivf_filtered_topk.__doc__.format(
     oracle=f"""
     WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     cents AS (SELECT vec_id AS cent_id, v AS cv FROM b
-              WHERE {_IVF_CENTROID_FILTER}),
+              WHERE {ivf.CENTROID_FILTER}),
     keyed AS (
-        SELECT b.vec_id, c.cent_id, {_IVF_KEY_SQL} AS key
+        SELECT b.vec_id, c.cent_id, {ivf.key_sql('b.v')} AS key
         FROM b CROSS JOIN cents c
     ),
     assign AS (SELECT vec_id, arg_min(cent_id, key) AS cell
@@ -469,7 +397,7 @@ vec_ivf_filtered_topk.__doc__ = vec_ivf_filtered_topk.__doc__.format(
         FROM probes p
         JOIN ivfpq i ON i.cell = p.cell
         JOIN qcodes qc ON qc.query_id = p.query_id
-        WHERE p.rn <= {_IVF_NPROBE} AND i.vec_id != p.query_id
+        WHERE p.rn <= {ivf.NPROBE} AND i.vec_id != p.query_id
     ),
     cand AS (
         SELECT query_id, neighbor_id FROM (
@@ -521,23 +449,10 @@ def vec_ivf_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-full-corpus-exact-scan shape in
     tests/test_plan_shape.py::test_ivf_int8_exact_stage_is_candidate_bounded.
     """
-    e = load_table_spread(spark, sf_dir, "embeddings", "vec_id")
-    b = e.select(
-        "vec_id", to_double_array("embedding").alias("v")
-    ).withColumn("nv", l2_norm("v"))
-    cents = b.filter(F.expr(_IVF_CENTROID_FILTER)).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("v").alias("cv"),
-        F.col("nv").alias("nc"),
-    )
-    keyed = b.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cent_id",
-        cell_argmin_key("v", "nv", "cv", "nc", "cent_id").alias("key"),
-    )
-    assign = keyed.groupBy("vec_id").agg(
-        F.min_by("cent_id", "key").alias("cell")
-    )
+    b = ivf.featurize(load_table_spread(spark, sf_dir, "embeddings", "vec_id"))
+    # One N×C key relation feeds both the assignment and the probes.
+    keyed = ivf.cell_keys(b, ivf.centroids(b))
+    assign = ivf.nearest_cell(keyed)
     scale = (
         F.aggregate(
             F.transform(F.col("v"), lambda x: F.abs(x)),
@@ -559,13 +474,12 @@ def vec_ivf_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("qv"),
     )
     ivfpq = assign.join(codes, "vec_id")
-    wq = W.partitionBy("query_id").orderBy("key")
-    probes = (
-        keyed.filter(F.expr(_QUERY_FILTER))
-        .select(F.col("vec_id").alias("query_id"), F.col("cent_id").alias("cell"), "key")
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= _IVF_NPROBE)
-        .select("query_id", "cell")
+    probes = ivf.probe_cells(
+        keyed.filter(F.expr(_QUERY_FILTER)).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("cent_id").alias("cell"),
+            "key",
+        )
     )
     qcodes = codes.filter(F.expr(_QUERY_FILTER)).select(
         F.col("vec_id").alias("query_id"),

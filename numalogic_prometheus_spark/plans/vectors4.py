@@ -11,8 +11,7 @@ Roles (deterministic slices, so both engines derive identical sets
 without a stored artifact):
 * corpus  = vec_id % 11 != 0  (the already-indexed ~91%),
 * batch   = vec_id % 11 == 0  (the incoming ~9%),
-* centroids = corpus rows with vec_id % 31 == 0 (mirrors the
-  vectors2/vectors3 coarse quantizer).
+* centroids = the operators/ivf.py quantizer slice of the CORPUS rows.
 
 100 TB notes: the index — centroids + per-vector cell assignment — is
 the relation a production pipeline materializes ONCE per snapshot
@@ -28,35 +27,15 @@ cell join, so the corpus-side assignment never reshuffles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from numalogic_prometheus_spark.functions.vectors import (
-    cell_argmin_key,
-    dot_product,
-    l2_norm,
-    to_double_array,
-)
+from numalogic_prometheus_spark.operators import ivf
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.sources.tables import load_table_spread
 
 _BATCH_FILTER = "vec_id % 11 = 0"
 _CORPUS_FILTER = "vec_id % 11 != 0"
-_CENTROID_FILTER = "vec_id % 31 = 0"  # applied to corpus rows
-_NPROBE = 2
-_TOP_K = 3
-
-_COS_SQL = (
-    "list_dot_product({a}, {b})"
-    " / (sqrt(list_aggregate(list_transform({a}, x -> x*x), 'sum'))"
-    "    * sqrt(list_aggregate(list_transform({b}, x -> x*x), 'sum')))"
-)
-# Composite argmin key: rounded cosine distance in 1e-6 units, then
-# centroid id tiebreak — BIGINT-exact, id guarded < 1e9 (plans/vectors2.py).
-_KEY_SQL = (
-    f"round((1 - {_COS_SQL.format(a='{v}', b='c.cv')}) * 1000000)::BIGINT"
-    " * 1000000000 + c.cent_id"
-)
 
 
 @register(
@@ -66,28 +45,28 @@ _KEY_SQL = (
     corpus AS (SELECT vec_id, v FROM b WHERE {_CORPUS_FILTER}),
     batch AS (SELECT vec_id, v FROM b WHERE {_BATCH_FILTER}),
     cents AS (SELECT vec_id AS cent_id, v AS cv FROM corpus
-              WHERE {_CENTROID_FILTER}),
+              WHERE {ivf.CENTROID_FILTER}),
     assign AS (
         SELECT co.vec_id,
-               arg_min(c.cent_id, {_KEY_SQL.format(v='co.v')}) AS cell
+               arg_min(c.cent_id, {ivf.key_sql('co.v')}) AS cell
         FROM corpus co CROSS JOIN cents c
         GROUP BY co.vec_id
     ),
     probes AS (
         SELECT bt.vec_id AS query_id, c.cent_id AS cell,
                row_number() OVER (PARTITION BY bt.vec_id
-                                  ORDER BY {_KEY_SQL.format(v='bt.v')})
+                                  ORDER BY {ivf.key_sql('bt.v')})
                    AS rn
         FROM batch bt CROSS JOIN cents c
     ),
     cands AS (
         SELECT p.query_id, a.vec_id AS neighbor_id
         FROM probes p JOIN assign a ON a.cell = p.cell
-        WHERE p.rn <= {_NPROBE}
+        WHERE p.rn <= {ivf.NPROBE}
     ),
     scored AS (
         SELECT cd.query_id, cd.neighbor_id,
-               round({_COS_SQL.format(a='qv.v', b='nv.v')}, 6) AS cos_sim
+               round({ivf.COS_SQL.format(a='qv.v', b='nv.v')}, 6) AS cos_sim
         FROM cands cd
         JOIN b qv ON qv.vec_id = cd.query_id
         JOIN b nv ON nv.vec_id = cd.neighbor_id
@@ -97,7 +76,7 @@ _KEY_SQL = (
                                      ORDER BY cos_sim DESC, neighbor_id)
                       AS rn
         FROM scored
-    ) WHERE rn <= {_TOP_K}
+    ) WHERE rn <= {ivf.TOP_K}
     """,
 )
 def vec_ann_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,73 +87,13 @@ def vec_ann_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the already-ingested corpus (module docstring for the
     snapshot-vs-inline trade). Batch and corpus are disjoint by
     construction, so no self-match filter is needed."""
-    e = load_table_spread(spark, sf_dir, "embeddings", "vec_id")
-    b = e.select(
-        "vec_id", to_double_array("embedding").alias("v")
-    ).withColumn("nv", l2_norm("v"))
+    b = ivf.featurize(load_table_spread(spark, sf_dir, "embeddings", "vec_id"))
     corpus = b.filter(F.expr(_CORPUS_FILTER))
-    cents = corpus.filter(F.expr(_CENTROID_FILTER)).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("v").alias("cv"),
-        F.col("nv").alias("nc"),
+    cents = ivf.centroids(corpus)
+    # The "index": every corpus vector's cell (in production read back
+    # from the snapshot, not recomputed). The per-ingest marginal work
+    # is the batch's probes and the re-rank.
+    probes = ivf.probe_cells(
+        ivf.query_keys(b.filter(F.expr(_BATCH_FILTER)), cents)
     )
-
-    dist_key = cell_argmin_key
-
-    # The "index": every corpus vector's cell (min_by partial agg — one
-    # N-row exchange; in production this relation is read back from the
-    # snapshot, not recomputed).
-    keyed = corpus.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cent_id",
-        dist_key(
-            F.col("v"), F.col("nv"), F.col("cv"), F.col("nc"),
-            F.col("cent_id"),
-        ).alias("key"),
-    )
-    assign = keyed.groupBy("vec_id").agg(
-        F.min_by("cent_id", "key").alias("cell")
-    )
-    assign_v = assign.join(corpus.select("vec_id", "v", "nv"), "vec_id")
-    # The per-ingest marginal work starts here: batch × broadcast
-    # centroids → nprobe cells per query.
-    wq = W.partitionBy("query_id").orderBy("key")
-    probes = (
-        b.filter(F.expr(_BATCH_FILTER))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nv").alias("nqv"),
-        )
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "qv",
-            "nqv",
-            F.col("cent_id").alias("cell"),
-            dist_key(
-                F.col("qv"), F.col("nqv"), F.col("cv"), F.col("nc"),
-                F.col("cent_id"),
-            ).alias("key"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= _NPROBE)
-        .drop("rn", "key")
-    )
-    wk = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), "neighbor_id"
-    )
-    return (
-        F.broadcast(probes).join(assign_v, "cell")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                dot_product("qv", "v")
-                / (F.col("nqv") * F.col("nv")),
-                6,
-            ).alias("cos_sim"),
-        )
-        .withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= _TOP_K)
-    )
+    return ivf.rerank_topk(probes, ivf.assign_cells(corpus, cents))

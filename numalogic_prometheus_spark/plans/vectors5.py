@@ -48,6 +48,7 @@ from numalogic_prometheus_spark.functions.vectors import (
     l2_norm,
     to_double_array,
 )
+from numalogic_prometheus_spark.operators import ivf
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.sources.tables import load_table_spread
 
@@ -79,13 +80,6 @@ _PQ_ASCORE_SQL = " + ".join(
         * n.sc{j} * qs.qsc{j}"""
     for j in range(_M)
 )
-
-_COS_SQL = (
-    "list_dot_product({a}, {b})"
-    " / (sqrt(list_aggregate(list_transform({a}, x -> x*x), 'sum'))"
-    "    * sqrt(list_aggregate(list_transform({b}, x -> x*x), 'sum')))"
-)
-
 
 def _exact_rerank(cand: DataFrame, b: DataFrame) -> DataFrame:
     """Shared exact stage: candidates (query_id, neighbor_id) join the
@@ -141,10 +135,10 @@ def _exact_rerank(cand: DataFrame, b: DataFrame) -> DataFrame:
     )
     SELECT query_id, neighbor_id, cos_sim, rank FROM (
         SELECT c.query_id, c.neighbor_id,
-               round({_COS_SQL.format(a="qv.v", b="nv.v")}, 6) AS cos_sim,
+               round({ivf.COS_SQL.format(a="qv.v", b="nv.v")}, 6) AS cos_sim,
                row_number() OVER (
                    PARTITION BY c.query_id
-                   ORDER BY round({_COS_SQL.format(a="qv.v", b="nv.v")}, 6)
+                   ORDER BY round({ivf.COS_SQL.format(a="qv.v", b="nv.v")}, 6)
                             DESC, c.neighbor_id) AS rank
         FROM cand c
         JOIN b qv ON qv.vec_id = c.query_id
@@ -227,7 +221,7 @@ def vec_pq_subvector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
            FROM p WHERE {_QUERY_FILTER}),
     approx AS (
         SELECT qs.query_id, n.vec_id AS neighbor_id,
-               {_COS_SQL.format(a="n.pv", b="qs.qpv")} AS pscore
+               {ivf.COS_SQL.format(a="n.pv", b="qs.qpv")} AS pscore
         FROM p n JOIN qs ON n.vec_id != qs.query_id
     ),
     cand AS (
@@ -241,10 +235,10 @@ def vec_pq_subvector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT query_id, neighbor_id, cos_sim, rank FROM (
         SELECT c.query_id, c.neighbor_id,
-               round({_COS_SQL.format(a="qv.v", b="nv.v")}, 6) AS cos_sim,
+               round({ivf.COS_SQL.format(a="qv.v", b="nv.v")}, 6) AS cos_sim,
                row_number() OVER (
                    PARTITION BY c.query_id
-                   ORDER BY round({_COS_SQL.format(a="qv.v", b="nv.v")}, 6)
+                   ORDER BY round({ivf.COS_SQL.format(a="qv.v", b="nv.v")}, 6)
                             DESC, c.neighbor_id) AS rank
         FROM cand c
         JOIN b qv ON qv.vec_id = c.query_id

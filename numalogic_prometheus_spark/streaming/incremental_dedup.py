@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from numalogic_prometheus_spark.operators import dedup as D
+from numalogic_prometheus_spark.sources.snapshots import latest_committed
 
 # shared with the batch dedup plans and the cluster-keyed split — see
 # operators/dedup.py NEARDUP_JACCARD
@@ -64,28 +65,6 @@ def featurize_docs(docs: DataFrame) -> DataFrame:
     )
 
 
-def _latest_snapshot(index_dir: str, before: int | None = None) -> str | None:
-    """Newest COMMITTED snapshot (optionally with id < ``before``): a
-    snap dir without _SUCCESS is a crashed write and must not become the
-    authoritative index."""
-    if not os.path.isdir(index_dir):
-        return None
-    ids = sorted(
-        (
-            int(d.split("=", 1)[1])
-            for d in os.listdir(index_dir)
-            if d.startswith("snap=")
-        ),
-        reverse=True,
-    )
-    for sid in ids:
-        if before is not None and sid >= before:
-            continue
-        if os.path.exists(os.path.join(index_dir, f"snap={sid}", "_SUCCESS")):
-            return os.path.join(index_dir, f"snap={sid}")
-    return None
-
-
 def read_index(
     spark: SparkSession, index_dir: str, before: int | None = None
 ) -> DataFrame:
@@ -93,7 +72,7 @@ def read_index(
     the sink passes its batch_id so a REPLAYED batch reads exactly the
     snapshot its first delivery read, never its own output), or an empty
     frame with the index schema."""
-    snap = _latest_snapshot(index_dir, before=before)
+    snap = latest_committed(index_dir, "snap=", before=before)
     if snap is None:
         return spark.createDataFrame([], _INDEX_SCHEMA)
     return spark.read.parquet(snap)

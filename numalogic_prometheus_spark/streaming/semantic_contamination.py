@@ -15,8 +15,8 @@ Exactness argument (why micro-batch splits can't change the result):
 
 * the quantizer and the train-corpus cell assignment are STATIC batch
   artifacts (built once from the corpus, ``_SUCCESS``-gated like every
-  snapshot relation in this repo), so every micro-batch probes the
-  same index bytes;
+  snapshot relation: sources/snapshots.py), so every micro-batch
+  probes the same index bytes;
 * each eval item's probed cells depend only on (its vector, the static
   centroids) — the composite argmin key is per-item, never
   per-batch — so the candidate set per eval item is split-invariant;
@@ -44,35 +44,59 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from numalogic_prometheus_spark.functions.vectors import (
-    cell_argmin_key,
-    dot_product,
+from numalogic_prometheus_spark.operators import ivf
+from numalogic_prometheus_spark.sources.snapshots import (
+    committed_ids,
+    read_committed,
 )
-from numalogic_prometheus_spark.streaming.incremental_ann import (
-    featurize_vectors,
-)
+
+SEM_EVAL_MOD = 11  # mirrors the text contamination family's split
+SEM_THRESHOLD = 0.30  # same fixture geometry as dedup_semantic_survivors:
+#   synthetic embeddings are near-orthogonal, so 0.30 plays the role
+#   0.9+ plays for real text embeddings; the closest candidate cosine to
+#   the boundary across sf0.001/0.01/0.1 is 2.8e-6 away — far above
+#   cross-engine noise (the raw values are bit-identical anyway: both
+#   engines fold dot/norm left-to-right over the same doubles)
 
 _DELTA_SCHEMA = (
     "vec_id long, n_eval_candidates long, n_eval_hits long, max_cos double"
 )
 
 
-def _ivf_params():
-    """The batch entry's constants — imported lazily to keep this module
-    importable without triggering plan registration at import time."""
-    from numalogic_prometheus_spark.plans.text5 import (
-        _SEM_EVAL_MOD,
-        _SEM_THRESHOLD,
-    )
-    from numalogic_prometheus_spark.plans.vectors3 import (
-        _IVF_CENTROID_FILTER,
-        _IVF_NPROBE,
+def contamination_partials(probes: DataFrame, corpus: DataFrame) -> DataFrame:
+    """Per train vector: probe candidates, threshold hits and the
+    UNROUNDED max cosine over the probed cells' members."""
+    return (
+        F.broadcast(probes)
+        .join(corpus, "cell")
+        .select("vec_id", ivf.cosine().alias("cos"))
+        .groupBy("vec_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_eval_candidates"),
+            F.sum(
+                F.when(F.col("cos") >= SEM_THRESHOLD, 1).otherwise(0)
+            ).alias("n_eval_hits"),
+            F.max("cos").alias("max_cos"),
+        )
     )
 
-    return _SEM_EVAL_MOD, _SEM_THRESHOLD, _IVF_CENTROID_FILTER, _IVF_NPROBE
+
+def flag_contaminated(train_ids: DataFrame, hits: DataFrame) -> DataFrame:
+    """The entry's output shape: every train id, zero counts when never
+    probed, and the contaminated flag."""
+    return train_ids.join(hits, "vec_id", "left").select(
+        "vec_id",
+        F.coalesce("n_eval_candidates", F.lit(0)).alias("n_eval_candidates"),
+        F.coalesce("n_eval_hits", F.lit(0)).alias("n_eval_hits"),
+        "max_cos",
+        F.when(F.coalesce("n_eval_hits", F.lit(0)) > 0, F.lit(1))
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("flagged"),
+    )
 
 
 def build_semantic_index(
@@ -84,44 +108,21 @@ def build_semantic_index(
     quantizer is trained on the corpus distribution and shared with the
     query side), and the train vectors (vec_id % MOD != 0) are assigned
     to argmin-key cells and stored partitioned BY cell."""
-    mod, _thr, cent_filter, _np = _ivf_params()
     from numalogic_prometheus_spark.sources.tables import load_table
 
-    b = featurize_vectors(
-        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    )
-    cents = b.filter(F.expr(cent_filter)).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("v").alias("cv"),
-        F.col("nv").alias("nc"),
-    )
+    b = ivf.featurize(load_table(spark, sf_dir, "embeddings"))
+    cents = ivf.centroids(b)
     cents.write.mode("overwrite").parquet(
         os.path.join(index_dir, "centroids")
     )
-    train = b.filter(F.col("vec_id") % mod != 0)
-    keyed = train.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cent_id",
-        cell_argmin_key("v", "nv", "cv", "nc", "cent_id").alias("key"),
-    )
-    assign = keyed.groupBy("vec_id").agg(
-        F.min_by("cent_id", "key").alias("cell")
-    )
-    assign.join(train, "vec_id").select(
-        "vec_id", "cell", "v", "nv"
-    ).write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(index_dir, "corpus")
-    )
-
-
-def _read_gated(spark: SparkSession, path: str) -> DataFrame | None:
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        return None
-    return spark.read.parquet(path)
+    train = b.filter(F.col("vec_id") % SEM_EVAL_MOD != 0)
+    ivf.assign_cells(train, cents).write.mode("overwrite").partitionBy(
+        "cell"
+    ).parquet(os.path.join(index_dir, "corpus"))
 
 
 def read_corpus_index(spark: SparkSession, index_dir: str) -> DataFrame:
-    df = _read_gated(spark, os.path.join(index_dir, "corpus"))
+    df = read_committed(spark, os.path.join(index_dir, "corpus"))
     if df is None:
         raise FileNotFoundError(f"no committed corpus index in {index_dir}")
     return df.select(
@@ -132,9 +133,8 @@ def read_corpus_index(spark: SparkSession, index_dir: str) -> DataFrame:
 def read_centroids(spark: SparkSession, index_dir: str) -> DataFrame:
     """The committed quantizer — like the corpus, a missing or
     uncommitted (no ``_SUCCESS``) artifact is a clear FileNotFoundError,
-    never a downstream NoneType crash inside foreachBatch (r12
-    self-review finding)."""
-    df = _read_gated(spark, os.path.join(index_dir, "centroids"))
+    never a downstream NoneType crash inside foreachBatch."""
+    df = read_committed(spark, os.path.join(index_dir, "centroids"))
     if df is None:
         raise FileNotFoundError(f"no committed centroids in {index_dir}")
     return df
@@ -163,14 +163,13 @@ def write_eval_stream_files(
     import shutil
     import time
 
-    mod, _thr, _cf, _np = _ivf_params()
     from numalogic_prometheus_spark.sources.tables import load_table
 
     os.makedirs(stream_dir, exist_ok=True)
     ev = (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
-        .filter(F.col("vec_id") % mod == 0)
+        .filter(F.col("vec_id") % SEM_EVAL_MOD == 0)
     )
     tmp = stream_dir.rstrip("/") + "_spill"
     for i in range(n_files):
@@ -199,50 +198,16 @@ def make_contamination_sink(index_dir: str, result_dir: str):
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        _mod, thr, _cf, nprobe = _ivf_params()
-        feat = batch_df.transform(featurize_vectors).localCheckpoint(
-            eager=True
-        )
+        feat = batch_df.transform(ivf.featurize).localCheckpoint(eager=True)
         if feat.isEmpty():
             return
         cents = read_centroids(spark, index_dir)
-        corpus = read_corpus_index(spark, index_dir)
-        wq = W.partitionBy("eval_id").orderBy("key")
-        probes = (
-            feat.select(
-                F.col("vec_id").alias("eval_id"),
-                F.col("v").alias("qv"),
-                F.col("nv").alias("nqv"),
-            )
-            .crossJoin(F.broadcast(cents))
-            .select(
-                "eval_id",
-                "qv",
-                "nqv",
-                F.col("cent_id").alias("cell"),
-                cell_argmin_key("qv", "nqv", "cv", "nc", "cent_id").alias("key"),
-            )
-            .withColumn("rn", F.row_number().over(wq))
-            .filter(F.col("rn") <= nprobe)
-            .drop("rn", "key")
+        probes = ivf.probe_cells(
+            ivf.query_keys(feat, cents, "eval_id"), "eval_id"
         )
-        cos = dot_product("qv", "v") / (
-            F.col("nqv") * F.col("nv")
-        )
-        delta = (
-            F.broadcast(probes)
-            .join(corpus, "cell")
-            .select("vec_id", cos.alias("cos"))
-            .groupBy("vec_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_eval_candidates"),
-                F.sum(
-                    F.when(F.col("cos") >= thr, 1).otherwise(0)
-                ).alias("n_eval_hits"),
-                F.max("cos").alias("max_cos"),  # unrounded partial
-            )
-        )
-        delta.write.mode("overwrite").parquet(
+        contamination_partials(
+            probes, read_corpus_index(spark, index_dir)
+        ).write.mode("overwrite").parquet(
             os.path.join(result_dir, f"delta={batch_id}")
         )
 
@@ -276,11 +241,9 @@ def read_contamination(
     onto the full train id set (the corpus index), so never-probed
     docs report zeros like the batch plan's left join."""
     deltas = [
-        os.path.join(result_dir, d)
-        for d in sorted(os.listdir(result_dir))
-        if d.startswith("delta=")
-        and os.path.exists(os.path.join(result_dir, d, "_SUCCESS"))
-    ] if os.path.isdir(result_dir) else []
+        os.path.join(result_dir, f"delta={i}")
+        for i in committed_ids(result_dir, "delta=")
+    ]
     if deltas:
         merged = (
             spark.read.parquet(*deltas)
@@ -294,18 +257,4 @@ def read_contamination(
     else:
         merged = spark.createDataFrame([], _DELTA_SCHEMA)
     train_ids = read_corpus_index(spark, index_dir).select("vec_id")
-    return (
-        train_ids.join(merged, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.coalesce("n_eval_candidates", F.lit(0)).alias(
-                "n_eval_candidates"
-            ),
-            F.coalesce("n_eval_hits", F.lit(0)).alias("n_eval_hits"),
-            "max_cos",
-            F.when(F.coalesce("n_eval_hits", F.lit(0)) > 0, F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("flagged"),
-        )
-    )
+    return flag_contaminated(train_ids, merged)

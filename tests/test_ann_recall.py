@@ -39,7 +39,7 @@ N_CORPUS = 500
 @pytest.fixture(scope="module")
 def corpus(spark, sf_dir):
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return e.select("vec_id", to_double_array(F.col("embedding")).alias("v"))
+    return e.select("vec_id", to_double_array("embedding").alias("v"))
 
 
 @pytest.fixture(scope="module")
@@ -55,7 +55,7 @@ def ground_truth(corpus):
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine_similarity(F.col("qv"), F.col("v")), 6).alias("cos"),
+            F.round(cosine_similarity("qv", "v"), 6).alias("cos"),
         )
     )
     w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
@@ -173,7 +173,7 @@ def test_incremental_recall_floor(spark, sf_dir, corpus):
         .select(
             "query_id",
             "vec_id",
-            cosine_similarity(F.col("qv"), F.col("v")).alias("cos"),
+            cosine_similarity("qv", "v").alias("cos"),
         )
         .withColumn("rn", F.row_number().over(wk))
         .filter(F.col("rn") <= K)

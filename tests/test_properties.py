@@ -139,23 +139,22 @@ def test_ivf_assignment_is_argmin(spark, vecs):
         i: min((key(v, c, cid), cid) for cid, c in cents)[1] for i, v in rows
     }
 
-    from numalogic_prometheus_spark.functions.vectors import dot_product, l2_norm
+    # The engine's own assignment (operators/ivf.py), the code every
+    # IVF entry runs: featurize → quantizer rows → N×C keys → min_by.
+    from numalogic_prometheus_spark.operators import ivf
 
-    b = spark.createDataFrame(rows, "vec_id long, v array<double>").withColumn(
-        "nv", l2_norm(F.col("v"))
+    b = ivf.featurize(
+        spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     )
-    cdf = spark.createDataFrame(cents, "cent_id long, cv array<double>").withColumn(
-        "nc", l2_norm(F.col("cv"))
+    cdf = ivf.featurize(
+        spark.createDataFrame(cents, "vec_id long, embedding array<double>")
+    ).select(
+        F.col("vec_id").alias("cent_id"),
+        F.col("v").alias("cv"),
+        F.col("nv").alias("nc"),
     )
-    dist = 1 - dot_product(F.col("v"), F.col("cv")) / (F.col("nv") * F.col("nc"))
-    k = F.round(dist * 1000000, 0).cast("long") * 100000 + F.col("cent_id")
     got = {
-        r["vec_id"]: r["cell"]
-        for r in b.crossJoin(F.broadcast(cdf))
-        .select("vec_id", "cent_id", k.alias("key"))
-        .groupBy("vec_id")
-        .agg(F.min_by("cent_id", "key").alias("cell"))
-        .collect()
+        r["vec_id"]: r["cell"] for r in ivf.assign_cells(b, cdf).collect()
     }
     assert got == expect
 

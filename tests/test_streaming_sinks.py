@@ -314,3 +314,23 @@ def test_memory_snapshot_row_ceiling(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(runner, "_MEMORY_SINK_ROW_CEILING", 2_000_000)
     out = runner.run_stream_to_memory(agg, output_mode="complete")
     assert out.count() > 2
+
+
+def test_memory_snapshot_drops_sink_view(spark, sf_dir):
+    """The memory sink registers its result as a ``mem_*`` temp view
+    that outlives the stopped query; the snapshot must drop it, or every
+    call keeps its sink's rows registered for the rest of the session."""
+    from numalogic_prometheus_spark.streaming import runner
+
+    def mem_views():
+        return {
+            t.name for t in spark.catalog.listTables()
+            if t.name.startswith("mem_")
+        }
+
+    before = mem_views()
+    out = runner.run_stream_to_memory(
+        stream_events(spark, sf_dir).groupBy("event_type").count()
+    )
+    assert out.count() > 0
+    assert not mem_views() - before
