@@ -107,20 +107,18 @@ def assign_cells(feat: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def query_keys(
-    queries: DataFrame, cents: DataFrame, qid: str = "query_id"
-) -> DataFrame:
+def query_keys(queries: DataFrame, cents: DataFrame) -> DataFrame:
     """Featurized queries × broadcast centroids →
-    ``(qid, qv, nqv, cell, key)``."""
+    ``(query_id, qv, nqv, cell, key)``."""
     return (
         queries.select(
-            F.col("vec_id").alias(qid),
+            F.col("vec_id").alias("query_id"),
             F.col("v").alias("qv"),
             F.col("nv").alias("nqv"),
         )
         .crossJoin(F.broadcast(cents))
         .select(
-            qid,
+            "query_id",
             "qv",
             "nqv",
             F.col("cent_id").alias("cell"),
@@ -129,16 +127,14 @@ def query_keys(
     )
 
 
-def probe_cells(
-    keyed: DataFrame, qid: str = "query_id", nprobe: int = NPROBE
-) -> DataFrame:
-    """Keep each query's ``nprobe`` lowest-key rows of ``keyed``
-    (``query_keys`` output, or any ``(qid, cell, key, …)`` relation) and
-    drop the key."""
-    w = W.partitionBy(qid).orderBy("key")
+def probe_cells(keyed: DataFrame) -> DataFrame:
+    """Keep each query's ``NPROBE`` lowest-key rows of ``keyed``
+    (``query_keys`` output, or any ``(query_id, cell, key, …)``
+    relation) and drop the key."""
+    w = W.partitionBy("query_id").orderBy("key")
     return (
         keyed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= nprobe)
+        .filter(F.col("rn") <= NPROBE)
         .drop("rn", "key")
     )
 
@@ -150,19 +146,16 @@ def cosine() -> Column:
 
 
 def rerank_topk(
-    probes: DataFrame,
-    index: DataFrame,
-    k: int = TOP_K,
-    exclude_self: bool = False,
-    long_rn: bool = False,
+    probes: DataFrame, index: DataFrame, queries_from_index: bool = False
 ) -> DataFrame:
-    """Top-``k`` ``(query_id, neighbor_id, cos_sim, rn)`` by exact cosine
-    (rounded to 6 dp before ranking, ties by neighbor id) over the
-    members of each query's probed cells. ``exclude_self`` drops the
-    query itself when queries are drawn from the index; ``long_rn``
-    casts ``rn`` to BIGINT."""
+    """Top-``TOP_K`` ``(query_id, neighbor_id, cos_sim, rn)`` by exact
+    cosine (rounded to 6 dp before ranking, ties by neighbor id) over
+    the members of each query's probed cells. ``queries_from_index``
+    marks the batch entries, whose queries are a slice of the index:
+    the query itself is dropped from its candidates, and ``rn`` is cast
+    to BIGINT to match their oracles' ``row_number``."""
     cands = F.broadcast(probes).join(index, "cell")
-    if exclude_self:
+    if queries_from_index:
         cands = cands.filter(F.col("vec_id") != F.col("query_id"))
     w = W.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), "neighbor_id"
@@ -174,6 +167,6 @@ def rerank_topk(
             F.col("vec_id").alias("neighbor_id"),
             F.round(cosine(), 6).alias("cos_sim"),
         )
-        .withColumn("rn", rn.cast("long") if long_rn else rn)
-        .filter(F.col("rn") <= k)
+        .withColumn("rn", rn.cast("long") if queries_from_index else rn)
+        .filter(F.col("rn") <= TOP_K)
     )

@@ -386,10 +386,7 @@ def text_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         b.filter(F.col("vec_id") % _SEM_EVAL_MOD != 0), cents
     )
     probes = ivf.probe_cells(
-        ivf.query_keys(
-            b.filter(F.col("vec_id") % _SEM_EVAL_MOD == 0), cents, "eval_id"
-        ),
-        "eval_id",
+        ivf.query_keys(b.filter(F.col("vec_id") % _SEM_EVAL_MOD == 0), cents)
     )
     hits = contamination_partials(probes, index).withColumn(
         "max_cos", F.round("max_cos", 6)

@@ -67,7 +67,7 @@ def vec_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf.query_keys(b.filter(F.expr(_QUERY_FILTER)), cents)
     )
     return ivf.rerank_topk(
-        probes, ivf.assign_cells(b, cents), exclude_self=True, long_rn=True
+        probes, ivf.assign_cells(b, cents), queries_from_index=True
     )
 
 

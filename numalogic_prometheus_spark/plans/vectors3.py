@@ -180,7 +180,6 @@ def vec_int8_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _FILTER_LABEL = 1
-_FILTERED_TOP_K = 3
 
 
 @register(
@@ -202,7 +201,7 @@ _FILTERED_TOP_K = 3
         SELECT *, row_number() OVER (PARTITION BY query_id
                                      ORDER BY cos_sim DESC, neighbor_id) AS rn
         FROM scored
-    ) WHERE rn <= {_FILTERED_TOP_K}
+    ) WHERE rn <= {ivf.TOP_K}
     """,
 )
 def vec_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -246,12 +245,12 @@ def vec_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= _FILTERED_TOP_K)
+        .filter(F.col("rn") <= ivf.TOP_K)
     )
 
 
 vec_ann_filtered_topk.__doc__ = vec_ann_filtered_topk.__doc__.format(
-    k=_FILTERED_TOP_K, label=_FILTER_LABEL
+    k=ivf.TOP_K, label=_FILTER_LABEL
 )
 
 
@@ -306,7 +305,7 @@ vec_ann_filtered_topk.__doc__ = vec_ann_filtered_topk.__doc__.format(
         SELECT *, row_number() OVER (PARTITION BY query_id
                                      ORDER BY cos_sim DESC, neighbor_id) AS rn
         FROM scored
-    ) WHERE rn <= {_FILTERED_TOP_K}
+    ) WHERE rn <= {ivf.TOP_K}
     """,
 )
 def vec_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -332,13 +331,11 @@ def vec_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = ivf.probe_cells(
         ivf.query_keys(b.filter(F.expr(_QUERY_FILTER)), cents)
     )
-    return ivf.rerank_topk(
-        probes, index, k=_FILTERED_TOP_K, exclude_self=True, long_rn=True
-    )
+    return ivf.rerank_topk(probes, index, queries_from_index=True)
 
 
 vec_ivf_filtered_topk.__doc__ = vec_ivf_filtered_topk.__doc__.format(
-    k=_FILTERED_TOP_K, label=_FILTER_LABEL, nprobe=ivf.NPROBE
+    k=ivf.TOP_K, label=_FILTER_LABEL, nprobe=ivf.NPROBE
 )
 
 

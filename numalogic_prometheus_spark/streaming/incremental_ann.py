@@ -75,12 +75,7 @@ def read_centroids(spark: SparkSession, index_dir: str) -> DataFrame | None:
     return read_committed(spark, os.path.join(index_dir, "centroids"))
 
 
-def make_incremental_ann_sink(
-    index_dir: str,
-    result_dir: str,
-    k: int = ivf.TOP_K,
-    nprobe: int = ivf.NPROBE,
-):
+def make_incremental_ann_sink(index_dir: str, result_dir: str):
     """foreachBatch handler: serve top-k neighbors for the micro-batch
     from the pre-batch index, then append the batch to a new snapshot.
     Bind with ``.writeStream.foreachBatch(...)``."""
@@ -106,8 +101,8 @@ def make_incremental_ann_sink(
             ).parquet(os.path.join(index_dir, "centroids"))
             cents = read_centroids(spark, index_dir)
         index = read_index(spark, index_dir, before=batch_id)
-        probes = ivf.probe_cells(ivf.query_keys(feat, cents), nprobe=nprobe)
-        ivf.rerank_topk(probes, index, k=k).write.mode("overwrite").parquet(
+        probes = ivf.probe_cells(ivf.query_keys(feat, cents))
+        ivf.rerank_topk(probes, index).write.mode("overwrite").parquet(
             os.path.join(result_dir, f"batch={batch_id}")
         )
         merged = (

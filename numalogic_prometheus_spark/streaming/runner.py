@@ -67,28 +67,29 @@ def run_stream_to_memory(
     """Run a streaming query to completion into a memory sink and return
     the result as a batch DataFrame (driver-contract-compatible)."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    q = (
-        streaming_df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     spark = streaming_df.sparkSession
-    # Snapshot the sink into a plain DataFrame, then drop the temp view
-    # the memory sink registered under ``name``: it outlives q.stop()
-    # and would otherwise keep the sink's rows for the rest of the
-    # session. The memory sink is driver-resident BY DEFINITION, so the
-    # collect is inherent to the operator — but it is a test/driver
-    # harness seam, and a future streaming entry with an unbounded
-    # result must fail loudly here rather than silently OOM the driver.
-    # The ceiling is far above every registered streaming entry (max
-    # observed: stream_native_histogram_rate, 5.5k rows at sf0.01) and
-    # far below driver-heap danger.
+    # The memory sink registers a temp view under ``name`` when the
+    # query starts; it outlives q.stop() and would otherwise keep the
+    # sink's rows for the rest of the session, so it is dropped however
+    # the run ends (a failed stream included). The memory sink is
+    # driver-resident BY DEFINITION, so the collect is inherent to the
+    # operator — but it is a test/driver harness seam, and a future
+    # streaming entry with an unbounded result must fail loudly here
+    # rather than silently OOM the driver. The ceiling is far above
+    # every registered streaming entry (max observed:
+    # stream_native_histogram_rate, 5.5k rows at sf0.01) and far below
+    # driver-heap danger.
     try:
+        q = (
+            streaming_df.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(name)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
         out = spark.table(name)
         rows = out.limit(_MEMORY_SINK_ROW_CEILING + 1).collect()
         schema = out.schema

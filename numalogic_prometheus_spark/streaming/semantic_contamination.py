@@ -202,9 +202,7 @@ def make_contamination_sink(index_dir: str, result_dir: str):
         if feat.isEmpty():
             return
         cents = read_centroids(spark, index_dir)
-        probes = ivf.probe_cells(
-            ivf.query_keys(feat, cents, "eval_id"), "eval_id"
-        )
+        probes = ivf.probe_cells(ivf.query_keys(feat, cents))
         contamination_partials(
             probes, read_corpus_index(spark, index_dir)
         ).write.mode("overwrite").parquet(

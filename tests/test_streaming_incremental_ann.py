@@ -105,7 +105,7 @@ def _run_stream(spark, sf_dir, tmp_path) -> tuple[str, str]:
     q = (
         stream.writeStream.outputMode("append")
         .foreachBatch(
-            make_incremental_ann_sink(index_dir, result_dir, k=_K, nprobe=_NPROBE)
+            make_incremental_ann_sink(index_dir, result_dir)
         )
         .start()
     )
@@ -166,7 +166,7 @@ def test_replay_is_idempotent(spark, sf_dir, tmp_path):
     batch1 = emb.filter(
         (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
     ).select("vec_id", "embedding")
-    sink = make_incremental_ann_sink(index_dir, result_dir, k=_K, nprobe=_NPROBE)
+    sink = make_incremental_ann_sink(index_dir, result_dir)
     sink(batch1, 1)
     assert _result_map(spark, result_dir, 1) == before
     snap_after = sorted(
@@ -189,7 +189,7 @@ def test_empty_first_batch_defers_quantizer(spark, sf_dir, tmp_path):
 
     index_dir = str(tmp_path / "index")
     result_dir = str(tmp_path / "results")
-    sink = make_incremental_ann_sink(index_dir, result_dir, k=_K, nprobe=_NPROBE)
+    sink = make_incremental_ann_sink(index_dir, result_dir)
 
     empty = spark.createDataFrame([], "vec_id bigint, embedding array<float>")
     sink(empty, 0)

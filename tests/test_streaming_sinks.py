@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from numalogic_prometheus_spark.operators import metrics as M
@@ -333,4 +335,12 @@ def test_memory_snapshot_drops_sink_view(spark, sf_dir):
         stream_events(spark, sf_dir).groupBy("event_type").count()
     )
     assert out.count() > 0
+    assert not mem_views() - before
+    # A stream that fails inside processAllAvailable leaves no view
+    # either: the sink registered it when the query started.
+    failing = stream_events(spark, sf_dir).select(
+        F.raise_error(F.lit("boom")).alias("x")
+    )
+    with pytest.raises(Exception, match="boom"):
+        runner.run_stream_to_memory(failing, output_mode="append")
     assert not mem_views() - before
