@@ -55,7 +55,7 @@ def vec_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QUERY_FILTER = "vec_id % 97 = 0"
+_QUERY_FILTER = "vec_id % 97 = 0"  # the vectors-family query set
 
 
 @register(

@@ -28,12 +28,12 @@ from numalogic_prometheus_spark.functions.vectors import (
 )
 from numalogic_prometheus_spark.operators import ivf
 from numalogic_prometheus_spark.plans import register
+from numalogic_prometheus_spark.plans.vectors import _QUERY_FILTER
 from numalogic_prometheus_spark.sources.tables import (
     load_table,
     load_table_spread,
 )
 
-_QUERY_FILTER = "vec_id % 97 = 0"
 _CAND_PER_QUERY = 9  # 3× the final k
 _TOP_K = 3
 
@@ -186,7 +186,7 @@ _FILTER_LABEL = 1
     "vec_ann_filtered_topk",
     oracle=f"""
     WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-               FROM embeddings WHERE vec_id % 97 = 0),
+               FROM embeddings WHERE {_QUERY_FILTER}),
     scored AS (
         SELECT q.query_id, e.vec_id AS neighbor_id,
                round(list_dot_product(q.qv, e.embedding::DOUBLE[])
@@ -217,7 +217,7 @@ def vec_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF candidate generator and prunes before the exact re-rank."""
     e = load_table(spark, sf_dir, "embeddings")
     q = (
-        e.filter(F.expr("vec_id % 97 = 0"))
+        e.filter(F.expr(_QUERY_FILTER))
         .select(F.col("vec_id").alias("query_id"),
                 to_double_array("embedding").alias("qv"))
     )

@@ -50,9 +50,9 @@ from numalogic_prometheus_spark.functions.vectors import (
 )
 from numalogic_prometheus_spark.operators import ivf
 from numalogic_prometheus_spark.plans import register
+from numalogic_prometheus_spark.plans.vectors import _QUERY_FILTER
 from numalogic_prometheus_spark.sources.tables import load_table_spread
 
-_QUERY_FILTER = "vec_id % 97 = 0"  # the vectors-family query set
 _CAND_PER_QUERY = 9
 _TOP_K = 3
 _M = 4          # sub-quantizers

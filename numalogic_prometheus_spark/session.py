@@ -14,6 +14,26 @@ The engine has exactly one session-level invariant set (SURVEY.md §4.3):
 ``spark.sql.shuffle.partitions`` defaults to the local core count: at
 cluster scale this knob is expected to be overridden (AQE coalescing makes
 over-partitioning cheap, so production would set it high and let AQE trim).
+
+``spark.sql.codegen.cache.maxEntries`` is 4096 (Spark's default is 100).
+The cache holds the classes Janino compiled from Catalyst's generated code;
+an evicted class is compiled again on its next use, and the JIT then
+compiles the new bytecode from scratch. The registry's working set at
+sf0.001 is 2,500 distinct classes over 263 entries (the ``promql``
+benchmark workload alone: 120 over 7 entries), so at 100 every repeated
+pass recompiled. Measured on ``local[4]`` (4 cores), a second
+whole-registry pass compiled 3,486 classes and used 220 s of CPU (115 s
+wall) at 100, against 51 classes and 183 s (93 s wall) at 4096; holding
+the classes raised metaspace from 210 to 229 MB. 4096 holds the whole
+registry with headroom. tests/test_session_posture.py pins that a repeated
+run compiles nothing.
+
+Static confs such as that one reach the JVM only when ``get_session``
+creates the session: ``getOrCreate`` hands back any session that already
+exists, with the confs it was built with.
+``sweep_oracles.build_vanilla_session`` deliberately leaves the bound out:
+that session is shaped like the plain one a caller of the entry contract
+(``__spark_entry__``) builds, which sets none of these confs.
 """
 
 from __future__ import annotations
@@ -77,6 +97,8 @@ def get_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # Holds the registry's generated classes; see the module docstring.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # Invariant for long-lived callers: run gc.collect() right after
         # each entry. An entry's localCheckpoint blocks stay pinned while
         # Python still holds py4j references to its DataFrames; the
