@@ -24,7 +24,6 @@ layer; these operators extend dedup to content similarity.
 
 from __future__ import annotations
 
-import re
 import warnings
 
 from pyspark.sql import Column, DataFrame
@@ -64,19 +63,6 @@ def truncate_lineage(
 def tokens_col(text: Column) -> Column:
     """Whitespace tokens (fixture texts are single-space joined)."""
     return F.split(text, " ")
-
-
-def shingles_col(text: Column, w: int = 3) -> Column:
-    """w-token shingles: slice windows out of the token array — a pure
-    row expression (no explode)."""
-    toks = tokens_col(text)
-    n = F.size(toks)
-    return F.when(n < w, F.array(F.concat_ws(" ", toks))).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n - (w - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, w)),
-        )
-    )
 
 
 def minhash_signature(items: Column, k: int = 8) -> Column:
@@ -481,11 +467,6 @@ def simhash_signature(items: Column, bits: int = 32) -> Column:
 
 # Bytes per edge of two longs: the unit the driver-path bound counts in.
 _EDGE_BYTES = 16
-_BYTE_UNITS = {
-    "": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20, "mb": 1 << 20,
-    "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40, "tb": 1 << 40,
-    "p": 1 << 50, "pb": 1 << 50,
-}
 
 
 def driver_edge_bound(spark) -> int:
@@ -493,10 +474,11 @@ def driver_edge_bound(spark) -> int:
     driver: ``spark.sql.autoBroadcastJoinThreshold`` (the bytes Spark
     already ships to every executor for a broadcast join) over 16 B per
     two-long edge. A negative threshold turns broadcasts, and with them
-    the driver path, off: -1."""
-    raw = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    num, unit = re.fullmatch(r"\s*(-?\d+)\s*([a-zA-Z]*)\s*", raw).groups()
-    threshold = int(num) * _BYTE_UNITS[unit.lower()]
+    the driver path, off: -1. Spark's own SQLConf getter parses the
+    byte string."""
+    threshold = (
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
     return threshold // _EDGE_BYTES if threshold >= 0 else -1
 
 

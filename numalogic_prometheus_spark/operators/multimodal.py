@@ -1,54 +1,127 @@
-"""Multimodal column operators ([north-star]: image/audio/video as opaque
-binary columns with typed metadata, decode/feature-extract as Arrow-batched
-mapInPandas).
+"""Multimodal column operators: image, audio and video as opaque binary
+assets, decoded and feature-extracted inside Arrow-batched mapInPandas.
 
-All three modalities have REAL stdlib codec round-trips with
-codec-adversarial closed-form oracles: audio as RIFF/WAVE (round 11),
-images as PNG with all five scanline filters (round 12), GIF89a with
-variable-width LZW, palette indirection and 4-pass interlacing
-(round 13), baseline-JPEG ENTROPY decode in the exact coefficient
-domain (round 13 — JPEG's pixel path is lossy by spec, so only its
-IDCT stage stays out of oracle reach), and video frame demux as both
-APNG (sequenced fcTL/fdAT frames, per-frame DEFLATE, round 12) and
-RIFF AVI/MJPEG (idx1-indexed '00dc' frames, late round 13).
+Every codec is a real stdlib round-trip with a closed-form DuckDB
+oracle: audio as RIFF/WAVE PCM16; images as PNG (all five scanline
+filters), GIF89a (variable-width LZW, palette indirection, 4-pass
+interlacing) and baseline JPEG, decoded exactly in the coefficient
+domain (its IDCT pixel path is lossy by spec, so it stays out of oracle
+reach); video as APNG (sequenced fcTL/fdAT frames) and RIFF AVI/MJPEG
+(idx1-indexed '00dc' frames). A deployment with a pixel codec swaps one
+kernel call, e.g. ``PIL.Image.open(io.BytesIO(payload))``, inside the
+same seam: schema, partitioning and batch shape stay as they are.
 
-Round 14 retires the fake decoder entirely: the generic decode and
-frame-sample seams (`unified_decode_features`, `video_frame_sample`
-below) now DISPATCH BY media type to the real codecs, so no registry
-entry runs stand-in decode code anymore. The only decode work still
-outside this container's reach is ffmpeg-class inter-frame video
-codecs and JPEG's lossy pixel path (IDCT) — a real deployment would
-swap one kernel call inside the same mapInPandas contract (schema,
-partitioning, UDF signature and batch shape are unchanged), e.g.::
+The one decode seam. Every doc_id-driven entry is
+``_spread_decode(docs, features, schema)``. It narrows the input to
+``doc_id``, hash-spreads it to the session's default parallelism, loops
+over the Arrow batches and builds one pandas frame per batch
+(``_asset_frame``). The per-asset function ``features(doc_id)`` keeps
+this contract:
 
-    img = PIL.Image.open(io.BytesIO(payload))   # codec absent here
+- it returns a dict of the output columns after ``doc_id``, in schema
+  order, and builds no pandas object;
+- each value is a scalar or a 1-D block (numpy array or list). All
+  blocks of one asset have the same length N and the asset gives N
+  rows, its scalars repeated over them; an asset without blocks gives
+  one row.
 
-Scale posture: decode is the classic CPU-heavy map-only stage — no
-shuffle, embarrassingly parallel, Arrow-batched to amortize Python
-transfer. `spark.sql.execution.arrow.maxRecordsPerBatch` is the knob that
-sizes decode batches against executor memory when payloads are MBs.
+So a 1→N seam returns per-asset numpy blocks, and vectorizing a seam
+means vectorizing its feature function, never the batch loop.
+``unified_decode_features_from_files`` shares the frame assembly but not
+the spread: a binaryFile scan gets its parallelism from file splits,
+and repartitioning it would shuffle the heavy content column.
+
+Decode is the CPU-heavy map-only stage: no shuffle after it, and
+`spark.sql.execution.arrow.maxRecordsPerBatch` sizes decode batches
+against executor memory when payloads are MBs.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import io
+import os
+import struct
+import wave
+import zlib
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+
+#: Per-asset column values of these types are 1-D blocks; any other
+#: value is a scalar.
+_BLOCK = (np.ndarray, list)
+
+
+def _asset_frame(assets) -> pd.DataFrame:
+    """One pandas frame from ``(doc_id, columns)`` pairs, each
+    ``columns`` a per-asset feature dict (module docstring contract).
+    Columns that are scalar for every asset are gathered once and
+    repeated by row count; block columns are concatenated."""
+    ids, counts, cols, blocks = [], [], {}, set()
+    for doc_id, out in assets:
+        n = None
+        for k, v in out.items():
+            cols.setdefault(k, []).append(v)
+            if isinstance(v, _BLOCK):
+                if n is not None and len(v) != n:
+                    raise ValueError(f"doc {doc_id}: blocks differ in length")
+                blocks.add(k)
+                n = len(v)
+        ids.append(doc_id)
+        counts.append(1 if n is None else n)
+    frame = {"doc_id": np.repeat(np.asarray(ids, dtype=np.int64), counts)}
+    for k, vals in cols.items():
+        frame[k] = (
+            np.concatenate(
+                [
+                    v if isinstance(v, _BLOCK) else np.full(c, v)
+                    for v, c in zip(vals, counts)
+                ]
+            )
+            if k in blocks
+            else np.repeat(np.asarray(vals), counts)
+        )
+    return pd.DataFrame(frame)
+
+
+def _spread_decode(docs: DataFrame, features, schema: str) -> DataFrame:
+    """The decode seam: ``features(doc_id)`` per asset over the
+    spread ``doc_id`` column, one frame per Arrow batch.
+
+    The spread narrows the input to doc_id and hash-repartitions it to
+    the session's default parallelism before the mapInPandas. Decode
+    parallelism is bounded by the input split count, and the documents
+    table is one parquet file, so without the exchange the whole corpus
+    decodes on one core (measured: apng 14.8 s -> 5.2 s with the spread;
+    the serial kernel total is ~6 s for 5000 assets). The shuffle moves
+    only the 8-byte key (asset bytes are synthesized and decoded on the
+    far side), the same pattern as sources.tables.load_table_spread,
+    and the explicit partition count stops AQE from coalescing the
+    narrow exchange back to one partition."""
+    spark = docs.sparkSession
+    ids = docs.select("doc_id").repartition(
+        spark.sparkContext.defaultParallelism, "doc_id"
+    )
+
+    def _decode(batches):
+        for pdf in batches:
+            yield _asset_frame(
+                (d, features(d)) for d in pdf["doc_id"].tolist()
+            )
+
+    return ids.mapInPandas(_decode, schema=schema)
+
+
 # ---------------------------------------------------------------------------
-# ROUND 14 — the UNIFIED decode seam, real codecs only (VERDICT r13
-# #2: retire the fake decoder). One mapInPandas kernel dispatches by
-# media type to the round-11..13 codec round-trips (WAV / PNG / GIF
-# for stills+audio; APNG / AVI-MJPEG for video) and emits ONE feature
-# schema across modalities over the decoded scalar stream v[0..n):
-# PCM samples for audio, flattened RGB for images, per-frame pixel or
-# dequantized-coefficient streams for video. Every value is a
-# closed-form exact integer, so a single DuckDB oracle recomputes all
-# modalities (UNION ALL of the per-codec signal CTEs) and any decode
-# bug in ANY dispatched codec breaks the hash. In production the
-# asset relation is spark.read.format('binaryFile') + a content-type
-# column; dispatch stays the same `media_type` branch.
+# The unified decode seam: one feature schema across modalities over the
+# decoded scalar stream v[0..n) (PCM samples for audio, flattened RGB for
+# images, per-frame pixel or dequantized-coefficient streams for video).
+# Every value is a closed-form exact integer, so a single DuckDB oracle
+# recomputes all modalities and a decode bug in any dispatched codec
+# breaks the hash. In production the asset relation is a binaryFile
+# scan and dispatch sniffs the container magic (decode_payload_values).
 # ---------------------------------------------------------------------------
 
 UNIFIED_FEATURE_SCHEMA = (
@@ -61,114 +134,55 @@ UNIFIED_MEDIA = ("audio/wav", "image/png", "image/gif")
 
 
 def _stream_features(v) -> dict:
-    """The unified 5-stat feature block over a decoded int64 scalar
-    stream: value count, signed sum, energy, peak |v|, and the
-    position-weighted checksum sum((i+1) * v[i]) — ONE implementation
-    for every consumer (unified decode, both frame-sample branches,
-    resize), so a dtype or checksum change cannot silently diverge
-    across copies. For non-negative streams (pixels) peak |v| equals
-    max(v), which is what the pixel-domain oracles compute."""
-    import numpy as np
-
-    pos = np.arange(1, len(v) + 1, dtype=np.int64)
+    """The unified 5-stat feature block over decoded int64 streams,
+    along the last axis: value count, signed sum, energy, peak |v|, and
+    the position-weighted checksum sum((i+1) * v[i]). A 1-D stream
+    gives scalars, an (n_frames, n) stack one value per frame — one
+    implementation for every consumer (unified decode, both
+    frame-sample branches, resize). For non-negative streams (pixels)
+    peak |v| equals max(v), which is what the pixel-domain oracles
+    compute."""
+    pos = np.arange(1, v.shape[-1] + 1, dtype=np.int64)
     return {
-        "n_values": len(v),
-        "sum_vals": int(v.sum()),
-        "sum_sq": int((v * v).sum()),
-        "peak": int(np.abs(v).max()) if len(v) else 0,
-        "pos_checksum": int((pos * v).sum()),
+        "n_values": v.shape[-1],
+        "sum_vals": v.sum(axis=-1),
+        "sum_sq": (v * v).sum(axis=-1),
+        "peak": np.abs(v).max(axis=-1, initial=0),
+        "pos_checksum": (pos * v).sum(axis=-1),
     }
 
 
-def _unified_decode_values(doc_id: int):
-    """Round-trip the REAL codec for this doc's modality and return
-    (media_type, int64[n] decoded scalar stream): PCM samples for WAV,
-    C-order flattened RGB for PNG, palette[index] flattened RGB for
-    GIF. Every stream survives the strict READ path — signature, CRC,
-    framing, LZW/DEFLATE, filter reconstruction — before a single
-    feature is computed."""
-    m = doc_id % 3
-    if m == 0:
-        _, s = _decode_pcm(doc_id)
-        return UNIFIED_MEDIA[0], s
-    if m == 1:
-        _w, _h, _filters, pix = decode_png(synthesize_png(doc_id))
-        return UNIFIED_MEDIA[1], pix.reshape(-1)
-    _, (_w, _h, _ncol, _inter, pal, idx) = _decode_gif_asset(doc_id)
-    return UNIFIED_MEDIA[2], pal[idx].reshape(-1)
+def _unified_columns(payload: bytes) -> dict:
+    mt, v = decode_payload_values(payload)
+    return {"media_type": mt} | _stream_features(v)
 
-
-
-def _spread_ids(docs: DataFrame) -> DataFrame:
-    """Narrow the input to doc_id and hash-repartition it to the
-    session's default parallelism BEFORE the decode mapInPandas.
-
-    The decode stage is the expensive per-row compute; its parallelism
-    is bounded by the INPUT split count, and the driver's synthetic
-    documents table is one parquet file = ONE split — an exchange-free
-    plan decoded the whole corpus on a single core (r17 measurement:
-    apng 14.8 s -> 5.2 s with the spread on the same window; the
-    serial kernel total is ~6 s for 5000 assets, so the old "map-only,
-    zero exchanges" shape was split-bound, not kernel-bound). The
-    shuffle moves ONLY the 8-byte key column (the asset bytes are
-    synthesized/decoded on the far side), so this is the same
-    scale-safe pattern as sources.tables.load_table_spread: at 100 TB
-    the key exchange is noise next to the decode, and the explicit
-    partition count stops AQE from coalescing the narrow exchange back
-    to one partition. The binaryFile production path
-    (unified_decode_features_from_files) deliberately does NOT spread:
-    its parallelism comes free from file splits and repartitioning
-    would shuffle the heavy content column.
-    """
-    spark = docs.sparkSession
-    return docs.select("doc_id").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
 
 def unified_decode_features(docs: DataFrame) -> DataFrame:
-    """mapInPandas: per doc_id, decode the modality-dispatched REAL
-    container and emit one unified feature row — value count, signed
-    sum, energy, peak |v|, and the position-weighted checksum
-    sum((i+1) * v[i]) that any reorder/misframe of the decoded stream
-    breaks. Map-only, zero exchanges; Arrow batches amortize the
-    Python transfer exactly as the per-codec entries do."""
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                mt, v = _unified_decode_values(int(doc_id))
-                out.append(
-                    {"doc_id": int(doc_id), "media_type": mt}
-                    | _stream_features(v)
-                )
-            yield pd.DataFrame(out)
-
-    return _spread_ids(docs).mapInPandas(
-        _extract, schema=UNIFIED_FEATURE_SCHEMA
+    """Per doc_id, synthesize the doc's real container — WAV, PNG or
+    GIF by doc_id % 3 (UNIFIED_MEDIA) — decode it through
+    decode_payload_values and emit one unified feature row: value
+    count, signed sum, energy, peak |v|, and the position-weighted
+    checksum that any reorder/misframe of the decoded stream breaks."""
+    synth = (synthesize_wav, synthesize_png, synthesize_gif)
+    return _spread_decode(
+        docs,
+        lambda d: _unified_columns(synth[d % 3](d)),
+        UNIFIED_FEATURE_SCHEMA,
     )
 
 
 def decode_payload_values(payload: bytes):
     """Decode one asset from its RAW BYTES, modality sniffed from the
-    container magic, returning (media_type, int64[n] decoded stream) —
-    the same stream `_unified_decode_values` produces for the
-    synthesized twin. This is the production kernel seam: a
-    `spark.read.format('binaryFile')` scan hands (path, content) and
-    this function never sees a doc_id."""
-    import io
-    import wave
-
-    import numpy as np
-
+    container magic, returning (media_type, int64[n] decoded stream):
+    PCM samples for WAV, C-order flattened RGB for PNG,
+    palette[index] flattened RGB for GIF. Every stream survives the
+    strict READ path (signature, CRC, framing, LZW/DEFLATE, filter
+    reconstruction) before a feature is computed. This is the
+    production kernel seam: a `spark.read.format('binaryFile')` scan
+    hands (path, content) and this function never sees a doc_id."""
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        with wave.open(io.BytesIO(payload)) as w:
-            if w.getnchannels() != 1 or w.getsampwidth() != 2:
-                raise ValueError("unsupported WAV layout")
-            raw = w.readframes(w.getnframes())
-        return UNIFIED_MEDIA[0], np.frombuffer(raw, dtype="<i2").astype(
-            np.int64
-        )
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
+        return UNIFIED_MEDIA[0], decode_wav(payload)
+    if payload[:8] == PNG_MAGIC:
         _w, _h, _filters, pix = decode_png(payload)
         return UNIFIED_MEDIA[1], pix.reshape(-1)
     if payload[:6] in (b"GIF87a", b"GIF89a"):
@@ -178,30 +192,25 @@ def decode_payload_values(payload: bytes):
 
 
 def unified_decode_features_from_files(files: DataFrame) -> DataFrame:
-    """`unified_decode_features` over a ``binaryFile`` scan (VERDICT
-    r16 #6 — the production posture SCALE.md argues): input columns
-    (path, content), doc_id parsed from the file stem, modality
-    sniffed from the container magic, features computed on the decoded
-    stream. Decode parallelism comes free from the scan's file splits
-    (one task per file below maxPartitionBytes); the plan stays
-    map-only exactly like the parquet-synthesized path."""
+    """`unified_decode_features` over a ``binaryFile`` scan (the
+    production posture SCALE.md argues): input columns (path,
+    content), doc_id parsed from the file stem, modality sniffed from
+    the container magic. Decode parallelism comes free from the scan's
+    file splits (one task per file below maxPartitionBytes), so this
+    path does not spread: the plan stays map-only."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os as _os
-
+    def _decode(batches):
         for pdf in batches:
-            out = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                stem = _os.path.splitext(_os.path.basename(str(path)))[0]
-                mt, v = decode_payload_values(bytes(content))
-                out.append(
-                    {"doc_id": int(stem), "media_type": mt}
-                    | _stream_features(v)
+            yield _asset_frame(
+                (
+                    int(os.path.splitext(os.path.basename(str(path)))[0]),
+                    _unified_columns(bytes(content)),
                 )
-            yield pd.DataFrame(out)
+                for path, content in zip(pdf["path"], pdf["content"])
+            )
 
     return files.select("path", "content").mapInPandas(
-        _extract, schema=UNIFIED_FEATURE_SCHEMA
+        _decode, schema=UNIFIED_FEATURE_SCHEMA
     )
 
 
@@ -228,57 +237,33 @@ def video_frame_sample(
     APNG has no index, so its demux is a sequential chunk walk whose
     unsampled fdAT payloads are left un-inflated. Emits the unified
     per-frame feature row (pixel domain for APNG, exact dequantized
-    coefficient domain for MJPEG). Map-only 1→N inside mapInPandas."""
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    coefficient domain for MJPEG), 1→N per asset."""
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                if doc_id % 2 == 0:
-                    payload = synthesize_apng(doc_id)
-                    _w, _h, frames = decode_apng_sampled(payload, every)
-                    for t, _dnum, pix in frames:
-                        out.append(
-                            {
-                                "doc_id": doc_id,
-                                "media_type": "video/apng",
-                                "frame_idx": t,
-                            }
-                            | _stream_features(pix.reshape(-1))
-                        )
-                else:
-                    payload = synthesize_avi(doc_id)
-                    _w, _h, frames = decode_avi_mjpeg_sampled(payload, every)
-                    for t, blocks in frames:
-                        # raster order: sorted (by, bx) matches
-                        # i = (by*bw + bx)*64 + k exactly
-                        v = np.concatenate(
-                            [blocks[(by, bx)] for by, bx in sorted(blocks)]
-                        )
-                        out.append(
-                            {
-                                "doc_id": doc_id,
-                                "media_type": "video/avi-mjpeg",
-                                "frame_idx": t,
-                            }
-                            | _stream_features(v)
-                        )
-            yield pd.DataFrame(out)
+    def _columns(doc_id):
+        if doc_id % 2 == 0:
+            _w, _h, frames = decode_apng_sampled(
+                synthesize_apng(doc_id), every
+            )
+            mt = "video/apng"
+            streams = [pix.reshape(-1) for _t, _dnum, pix in frames]
+        else:
+            _w, _h, frames = decode_avi_mjpeg_sampled(
+                synthesize_avi(doc_id), every
+            )
+            mt = "video/avi-mjpeg"
+            streams = [_raster_coefficients(b) for _t, b in frames]
+        return {
+            "media_type": mt,
+            "frame_idx": [f[0] for f in frames],
+        } | _stream_features(np.stack(streams))
 
-    return _spread_ids(docs).mapInPandas(
-        _sample, schema=VIDEO_SAMPLE_SCHEMA
-    )
+    return _spread_decode(docs, _columns, VIDEO_SAMPLE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# ROUND 11 — REAL audio decode, the first codec round-trip in the
-# family. WAV/PCM needs only the stdlib `wave`
-# module, so the audio path is a real container round-trip: synthesize
-# an actual RIFF/WAVE file per asset, then DECODE it back (the read
-# path of the codec, not the writer's buffers) and feature-extract
-# from the decoded PCM.
+# Audio: a real RIFF/WAVE container per asset, synthesized with the
+# stdlib `wave` module and DECODED back through its read path; features
+# come only from the decoded PCM.
 # ---------------------------------------------------------------------------
 
 WAV_SAMPLE_RATE = 16000
@@ -296,19 +281,12 @@ def _wav_samples(doc_id: int, n: int):
     """Deterministic PCM16 signal: closed-form per-sample values, so a
     differential oracle can recompute them WITHOUT trusting the codec
     (encode ∘ decode must be the identity for the features to match)."""
-    import numpy as np
-
     k = np.arange(n, dtype=np.int64)
     return (doc_id * 7919 + k * 104729) % 65536 - 32768
 
 
 def synthesize_wav(doc_id: int) -> bytes:
     """A real RIFF/WAVE container: PCM16 mono @ 16 kHz."""
-    import io
-    import wave
-
-    import numpy as np
-
     samples = _wav_samples(doc_id, _wav_n_samples(doc_id))
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
@@ -319,60 +297,40 @@ def synthesize_wav(doc_id: int) -> bytes:
     return buf.getvalue()
 
 
-def _decode_pcm(doc_id: int) -> tuple[bytes, "object"]:
-    """Synthesize the asset and decode it through the stdlib codec's
-    READ path — the single-sourced codec round-trip both feature
-    operators use (two copies could silently drift apart, r11
-    second-review finding). Returns (container bytes, int64 samples)."""
-    import io
-    import wave
-
-    import numpy as np
-
-    payload = synthesize_wav(int(doc_id))
+def decode_wav(payload: bytes):
+    """The WAV READ path — the one WAV decoder, behind both audio
+    entries and decode_payload_values: the stdlib codec parses the RIFF
+    container, and anything but mono PCM16 at WAV_SAMPLE_RATE raises
+    ValueError. Returns the int64 samples."""
     with wave.open(io.BytesIO(payload)) as w:
-        assert w.getnchannels() == 1
-        assert w.getsampwidth() == 2
-        assert w.getframerate() == WAV_SAMPLE_RATE
+        layout = (w.getnchannels(), w.getsampwidth(), w.getframerate())
+        if layout != (1, 2, WAV_SAMPLE_RATE):
+            raise ValueError(f"unsupported WAV layout {layout}")
         raw = w.readframes(w.getnframes())
-    return payload, np.frombuffer(raw, dtype="<i2").astype(np.int64)
+    return np.frombuffer(raw, dtype="<i2").astype(np.int64)
 
 
 def wav_features(docs: DataFrame) -> DataFrame:
-    """mapInPandas: per doc_id, synthesize the WAV asset, decode it back
-    through the stdlib codec's READ path, and feature-extract exact
-    integers from the decoded PCM (time-domain audio statistics: mean
-    absolute amplitude / energy partials, peak, zero-crossing count —
-    the classic VAD/loudness feature set)."""
-    from collections.abc import Iterator
+    """Per doc_id, synthesize the WAV asset, decode it back through the
+    codec's READ path, and feature-extract exact integers from the
+    decoded PCM (time-domain audio statistics: mean absolute amplitude
+    / energy partials, peak, zero-crossing count — the classic
+    VAD/loudness feature set)."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def _columns(doc_id):
+        payload = synthesize_wav(doc_id)
+        s = decode_wav(payload)
+        return {
+            "n_samples": len(s),
+            "n_bytes": len(payload),
+            "duration_us": len(s) * 1_000_000 // WAV_SAMPLE_RATE,
+            "sum_abs": np.abs(s).sum(),
+            "sum_sq": (s * s).sum(),
+            "peak": np.abs(s).max(initial=0),
+            "zero_crossings": ((s[1:] * s[:-1]) < 0).sum(),
+        }
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                payload, s = _decode_pcm(int(doc_id))
-                n = len(s)
-                out.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "n_samples": n,
-                        "n_bytes": len(payload),
-                        "duration_us": n * 1_000_000 // WAV_SAMPLE_RATE,
-                        "sum_abs": int(np.abs(s).sum()),
-                        "sum_sq": int((s * s).sum()),
-                        "peak": int(np.abs(s).max()) if n else 0,
-                        "zero_crossings": int(
-                            ((s[1:] * s[:-1]) < 0).sum()
-                        ),
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return _spread_ids(docs).mapInPandas(
-        _extract, schema=WAV_FEATURE_SCHEMA
-    )
+    return _spread_decode(docs, _columns, WAV_FEATURE_SCHEMA)
 
 
 WAV_FRAME = 160  # 10 ms at 16 kHz — the standard VAD frame
@@ -385,8 +343,7 @@ WAV_FRAME_SCHEMA = (
 # max 5.815e10 over the sf0.1 corpus) so both classes are populated
 # (~51% active) — a gate outside the distribution would be constant
 # and the differential check could not catch a flipped comparison or a
-# wrong constant (r11 second-review finding). Exact BIGINT compare on
-# both engines; no parity risk.
+# wrong constant. Exact BIGINT compare on both engines; no parity risk.
 WAV_ACTIVE_SUM_SQ = 57_300_000_000
 
 
@@ -394,64 +351,38 @@ def wav_frame_energy(docs: DataFrame) -> DataFrame:
     """Frame-grain audio features through the real codec: decode the
     WAV container, split the PCM into 10 ms frames (full frames only)
     and emit per-frame energy/peak plus the integer VAD gate — the 1→N
-    decode expansion of the multimodal seam, real this time."""
-    from collections.abc import Iterator
+    decode expansion, as one numpy block per asset (no per-frame
+    Python loop)."""
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def _columns(doc_id):
+        s = decode_wav(synthesize_wav(doc_id))
+        n_frames = len(s) // WAV_FRAME
+        fr = s[: n_frames * WAV_FRAME].reshape(n_frames, WAV_FRAME)
+        sum_sq = (fr * fr).sum(axis=1)
+        return {
+            "frame_idx": np.arange(n_frames, dtype=np.int64),
+            "n": WAV_FRAME,
+            "sum_sq": sum_sq,
+            "peak": np.abs(fr).max(axis=1),
+            "active": (sum_sq >= WAV_ACTIVE_SUM_SQ).astype(np.int64),
+        }
 
-        for pdf in batches:
-            # fully vectorized (no per-frame Python loop in the hot
-            # path, r11 second-review finding): one column-array block
-            # per document, concatenated per Arrow batch
-            cols = {k: [] for k in
-                    ("doc_id", "frame_idx", "sum_sq", "peak")}
-            for doc_id in pdf["doc_id"]:
-                _, s = _decode_pcm(int(doc_id))
-                n_frames = len(s) // WAV_FRAME
-                fr = s[: n_frames * WAV_FRAME].reshape(n_frames, WAV_FRAME)
-                cols["doc_id"].append(
-                    np.full(n_frames, int(doc_id), dtype=np.int64)
-                )
-                cols["frame_idx"].append(np.arange(n_frames, dtype=np.int64))
-                cols["sum_sq"].append((fr * fr).sum(axis=1))
-                cols["peak"].append(np.abs(fr).max(axis=1))
-            sum_sq = np.concatenate(cols["sum_sq"])
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(cols["doc_id"]),
-                    "frame_idx": np.concatenate(cols["frame_idx"]),
-                    "n": np.int64(WAV_FRAME),
-                    "sum_sq": sum_sq,
-                    "peak": np.concatenate(cols["peak"]),
-                    "active": (sum_sq >= WAV_ACTIVE_SUM_SQ).astype(
-                        np.int64
-                    ),
-                }
-            )
-
-    return _spread_ids(docs).mapInPandas(_frames, schema=WAV_FRAME_SCHEMA)
+    return _spread_decode(docs, _columns, WAV_FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# ROUND 12 — REAL image decode (VERDICT r11 #3). PNG needs only the
-# stdlib (`zlib` for DEFLATE + CRC32, `struct` for the chunk framing),
-# so like the WAV path above this is an actual container round-trip:
-# synthesize a real PNG per asset — signature, CRC-protected chunks,
-# DEFLATE-compressed scanlines with ALL FIVE filter types cycling per
-# row — then DECODE it back through a full read path (signature check,
-# per-chunk CRC verification, IHDR big-endian parse, inflate,
-# per-filter-type reconstruction) and feature-extract from the
-# reconstructed pixels. The closed-form pixel signal lets a
-# differential oracle recompute every feature WITHOUT trusting the
-# codec: a bug in any filter reconstruction, the CRC walk, the header
-# byte order or the scanline framing changes the decoded pixels and
-# breaks the hash match (codec-adversarial by construction, the
-# multimodal_audio_* posture — see tests/test_harness_sensitivity.py).
-# This retired the "image decode is a documented fake" caveat at the
-# top of this module for the PNG path (rounds 13-14 then retired the
-# remaining stand-ins: GIF/JPEG-entropy/AVI codecs landed and the
-# generic seam now dispatches to real kernels only).
+# Images: PNG needs only the stdlib (`zlib` for DEFLATE + CRC32,
+# `struct` for the chunk framing), so like the WAV path above this is an
+# actual container round-trip: synthesize a real PNG per asset —
+# signature, CRC-protected chunks, DEFLATE-compressed scanlines with ALL
+# FIVE filter types cycling per row — then DECODE it back through a full
+# read path (signature check, per-chunk CRC verification, IHDR
+# big-endian parse, inflate, per-filter-type reconstruction) and
+# feature-extract from the reconstructed pixels. The closed-form pixel
+# signal lets a differential oracle recompute every feature WITHOUT
+# trusting the codec: a bug in any filter reconstruction, the CRC walk,
+# the header byte order or the scanline framing changes the decoded
+# pixels and breaks the hash match (see tests/test_harness_sensitivity.py).
 # ---------------------------------------------------------------------------
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
@@ -476,8 +407,6 @@ def _png_pixels(doc_id: int, w: int, h: int):
     x*17 + c*59) mod 256 — closed form, so the DuckDB oracle
     recomputes every feature from the formula while the Spark side
     only ever sees pixels that survived encode ∘ decode."""
-    import numpy as np
-
     y = np.arange(h, dtype=np.int64)[:, None, None]
     x = np.arange(w, dtype=np.int64)[None, :, None]
     c = np.arange(3, dtype=np.int64)[None, None, :]
@@ -485,9 +414,6 @@ def _png_pixels(doc_id: int, w: int, h: int):
 
 
 def _png_chunk(tag: bytes, data: bytes) -> bytes:
-    import struct
-    import zlib
-
     return (
         struct.pack(">I", len(data))
         + tag
@@ -501,8 +427,6 @@ def _filter_scanlines(pix, ftype_of_row) -> bytes:
     filter transform to each row of an (h, w, 3) pixel array and return
     the raw (uncompressed) scanline stream. Shared by the still-image
     and APNG frame encoders."""
-    import numpy as np
-
     h, w, _ = pix.shape
     stride = w * 3
     lines = bytearray()
@@ -543,11 +467,6 @@ def synthesize_png(doc_id: int) -> bytes:
     exercises None/Sub/Up/Average/Paeth — an encoder that filters
     wrongly, or a decoder that reconstructs wrongly, cannot round-trip
     the closed-form pixels."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     w, h = _png_dims(doc_id)
     pix = _png_pixels(doc_id, w, h).astype(np.int64)
     lines = _filter_scanlines(pix, lambda y: (doc_id + y) % 5)
@@ -568,8 +487,6 @@ def decode_png(payload: bytes):
     filters int64[h], pixels int64[h, w, 3]). Raises ValueError on any
     structural corruption — a partial/garbled container must never
     silently produce features."""
-    import struct
-
     chunks = _walk_png_chunks(payload)
     tags = [t for t, _ in chunks]
     if "IHDR" not in tags or "IEND" not in tags:
@@ -594,8 +511,6 @@ def _inflate_frame(z: bytearray) -> bytes:
     """Inflate a frame's DEFLATE stream, normalizing a garbled stream
     (CRC-valid but undecodable) to the documented ValueError contract
     (r12 self-review finding: corruption must never leak zlib.error)."""
-    import zlib
-
     try:
         return zlib.decompress(bytes(z))
     except zlib.error as exc:
@@ -607,9 +522,6 @@ def _walk_png_chunks(payload: bytes) -> list[tuple[str, bytes]]:
     chunk CRC32; returns [(tag, data)] up to and including IEND. Raises
     ValueError on any structural corruption. Shared by the still-image
     and APNG READ paths."""
-    import struct
-    import zlib
-
     if payload[:8] != PNG_MAGIC:
         raise ValueError("bad PNG signature")
     pos = 8
@@ -642,8 +554,6 @@ def _defilter_scanlines(stream: bytes, w: int, h: int):
     """PNG DECODE-side scanline reconstruction (all five filter
     types); returns (filters int64[h], pixels int64[h, w, 3]). Shared
     by the still-image and APNG frame READ paths."""
-    import numpy as np
-
     stride = w * 3
     if len(stream) != h * (1 + stride):
         raise ValueError("scanline stream length mismatch")
@@ -688,56 +598,35 @@ def _defilter_scanlines(stream: bytes, w: int, h: int):
     return filters, pixels.reshape(h, w, 3)
 
 
-def _decode_png_asset(doc_id: int):
-    """Synthesize the PNG asset and decode it back through the full
-    READ path — the single-sourced round-trip both image feature
-    operators use (mirrors _decode_pcm; two copies could drift)."""
-    payload = synthesize_png(int(doc_id))
-    return payload, decode_png(payload)
+def _pos_weights(w: int, h: int):
+    """The (h, w) grid of 1-based raster positions y*w + x + 1: the
+    weights of the position checksums that catch any pixel
+    transposition or scanline mis-framing a plain sum would miss."""
+    return np.arange(1, w * h + 1, dtype=np.int64).reshape(h, w)
 
 
 def png_features(docs: DataFrame) -> DataFrame:
-    """mapInPandas: per doc_id, synthesize the PNG asset, decode it
-    through the codec READ path, and feature-extract exact integers
-    from the RECONSTRUCTED pixels: dimensions (as parsed from IHDR),
-    per-channel sums, energy, peak, and a position-weighted checksum
-    sum((y*w + x + 1) * p) that catches any pixel transposition or
-    scanline mis-framing a plain sum would miss."""
-    from collections.abc import Iterator
+    """Per doc_id, synthesize the PNG asset, decode it through the
+    codec READ path, and feature-extract exact integers from the
+    RECONSTRUCTED pixels: dimensions (as parsed from IHDR), per-channel
+    sums, energy, peak, and the position-weighted checksum
+    sum((y*w + x + 1) * p)."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def _columns(doc_id):
+        w, h, _filters, pix = decode_png(synthesize_png(doc_id))
+        return {
+            "width": w,
+            "height": h,
+            "n_values": w * h * 3,
+            "sum_r": pix[:, :, 0].sum(),
+            "sum_g": pix[:, :, 1].sum(),
+            "sum_b": pix[:, :, 2].sum(),
+            "sum_sq": (pix * pix).sum(),
+            "peak": pix.max(),
+            "pos_checksum": (_pos_weights(w, h)[:, :, None] * pix).sum(),
+        }
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                _, (w, h, _filters, pix) = _decode_png_asset(int(doc_id))
-                posw = (
-                    np.arange(h, dtype=np.int64)[:, None] * w
-                    + np.arange(w, dtype=np.int64)[None, :]
-                    + 1
-                )
-                out.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "width": w,
-                        "height": h,
-                        "n_values": w * h * 3,
-                        "sum_r": int(pix[:, :, 0].sum()),
-                        "sum_g": int(pix[:, :, 1].sum()),
-                        "sum_b": int(pix[:, :, 2].sum()),
-                        "sum_sq": int((pix * pix).sum()),
-                        "peak": int(pix.max()),
-                        "pos_checksum": int(
-                            (posw[:, :, None] * pix).sum()
-                        ),
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return _spread_ids(docs).mapInPandas(
-        _extract, schema=PNG_FEATURE_SCHEMA
-    )
+    return _spread_decode(docs, _columns, PNG_FEATURE_SCHEMA)
 
 
 def png_row_stats(docs: DataFrame) -> DataFrame:
@@ -747,52 +636,32 @@ def png_row_stats(docs: DataFrame) -> DataFrame:
     (doc_id + y) % 5 — a filter-assignment or framing bug surfaces
     here before it even reaches the pixels), per-channel sums, row
     peak, and an x-weighted checksum that catches within-row
-    reordering. Vectorized per asset (no per-pixel Python in the batch
-    loop beyond the codec's own scanline reconstruction)."""
-    from collections.abc import Iterator
+    reordering. One numpy block per asset: no per-row Python beyond
+    the codec's own scanline reconstruction."""
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def _columns(doc_id):
+        w, h, filters, pix = decode_png(synthesize_png(doc_id))
+        xw = np.arange(1, w + 1, dtype=np.int64)[None, :, None]
+        return {
+            "y": np.arange(h, dtype=np.int64),
+            "png_filter": filters,
+            "sum_r": pix[:, :, 0].sum(axis=1),
+            "sum_g": pix[:, :, 1].sum(axis=1),
+            "sum_b": pix[:, :, 2].sum(axis=1),
+            "row_peak": pix.max(axis=(1, 2)),
+            "x_checksum": (xw * pix).sum(axis=(1, 2)),
+        }
 
-        for pdf in batches:
-            cols = {
-                k: []
-                for k in (
-                    "doc_id", "y", "png_filter", "sum_r", "sum_g",
-                    "sum_b", "row_peak", "x_checksum",
-                )
-            }
-            for doc_id in pdf["doc_id"]:
-                _, (w, h, filters, pix) = _decode_png_asset(int(doc_id))
-                xw = np.arange(w, dtype=np.int64)[None, :, None] + 1
-                cols["doc_id"].append(
-                    np.full(h, int(doc_id), dtype=np.int64)
-                )
-                cols["y"].append(np.arange(h, dtype=np.int64))
-                cols["png_filter"].append(filters)
-                cols["sum_r"].append(pix[:, :, 0].sum(axis=1))
-                cols["sum_g"].append(pix[:, :, 1].sum(axis=1))
-                cols["sum_b"].append(pix[:, :, 2].sum(axis=1))
-                cols["row_peak"].append(pix.max(axis=(1, 2)))
-                cols["x_checksum"].append(
-                    (xw * pix).sum(axis=(1, 2))
-                )
-            yield pd.DataFrame(
-                {k: np.concatenate(v) for k, v in cols.items()}
-            )
-
-    return _spread_ids(docs).mapInPandas(_rows, schema=PNG_ROW_SCHEMA)
+    return _spread_decode(docs, _columns, PNG_ROW_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# ROUND 14 — REAL image resize (the north-star's `resize` op; its old
-# stand-in truncated payload bytes and is deleted). Nearest-neighbor
-# resampling is the one resize kernel that is EXACT in integers —
-# dst(y2, x2) = src((y2*h)//H, (x2*w)//W) — so unlike bilinear/Lanczos
-# (float weights, rounding-mode dependent) it admits a closed-form
-# cross-engine oracle over the decoded pixels. The corpus exercises
-# both directions: source widths 8..32 vs a 16-wide target, heights
-# 8..20 vs 12.
+# Image resize: nearest-neighbor resampling is the one resize kernel
+# that is EXACT in integers — dst(y2, x2) = src((y2*h)//H, (x2*w)//W) —
+# so unlike bilinear/Lanczos (float weights, rounding-mode dependent) it
+# admits a closed-form cross-engine oracle over the decoded pixels. The
+# corpus exercises both directions: source widths 8..32 vs a 16-wide
+# target, heights 8..20 vs 12.
 # ---------------------------------------------------------------------------
 
 RESIZE_W, RESIZE_H = 16, 12  # fixed thumbnail grid (classic preprocessing)
@@ -807,8 +676,6 @@ def resize_nearest(pix, out_w: int, out_h: int):
     """Nearest-neighbor resample of an (h, w, 3) int array to
     (out_h, out_w, 3): source index = (dst * src_size) // dst_size —
     the floor map every thumbnailer uses, exact in integer arithmetic."""
-    import numpy as np
-
     h, w, _ = pix.shape
     ys = (np.arange(out_h, dtype=np.int64) * h) // out_h
     xs = (np.arange(out_w, dtype=np.int64) * w) // out_w
@@ -818,57 +685,42 @@ def resize_nearest(pix, out_w: int, out_h: int):
 def png_resize_features(
     docs: DataFrame, out_w: int = RESIZE_W, out_h: int = RESIZE_H
 ) -> DataFrame:
-    """mapInPandas: per doc_id, round-trip the real PNG container,
+    """Per doc_id, round-trip the real PNG container,
     nearest-neighbor-resize the DECODED pixels to the fixed thumbnail
     grid, and feature-extract exact integers from the RESIZED plane
     (count, signed sum, energy, peak, position-weighted checksum over
     destination positions). The oracle recomputes the resample map in
     SQL, so a flipped axis, a ceil-vs-floor slip, or an off-by-one in
-    the index map all break the hash. Map-only decode+resize, zero
-    exchanges — the same embarrassingly-parallel posture as the other
-    decode entries."""
-    from collections.abc import Iterator
+    the index map all break the hash."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                _, (w, h, _filters, pix) = _decode_png_asset(int(doc_id))
-                r = resize_nearest(pix, out_w, out_h)
-                out.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "src_width": w,
-                        "src_height": h,
-                        "width": out_w,
-                        "height": out_h,
-                    }
-                    | _stream_features(r.reshape(-1))
-                )
-            yield pd.DataFrame(out)
+    def _columns(doc_id):
+        w, h, _filters, pix = decode_png(synthesize_png(doc_id))
+        r = resize_nearest(pix, out_w, out_h)
+        return {
+            "src_width": w,
+            "src_height": h,
+            "width": out_w,
+            "height": out_h,
+        } | _stream_features(r.reshape(-1))
 
-    return _spread_ids(docs).mapInPandas(
-        _extract, schema=RESIZE_FEATURE_SCHEMA
-    )
+    return _spread_decode(docs, _columns, RESIZE_FEATURE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# ROUND 12 — REAL video-frame demux: APNG (the PNG specification's
-# animated extension, a standard container the stdlib can fully
-# express). Each asset is a genuine multi-frame animation — acTL
-# frame-count control, per-frame fcTL chunks (sequenced, with frame
-# dims and delays), frame 0 in IDAT and later frames in
-# sequence-numbered fdAT chunks, every chunk CRC32-protected, every
-# frame DEFLATE-compressed and filter-cycled like the still image.
-# The READ path validates the signature, every CRC, the acTL count,
-# the strict fcTL/fdAT sequence-number ordering, and reconstructs
-# each frame's scanlines — so the classic video-demux bug classes
-# (frame misorder, off-by-one sequence, frame/canvas dim mismatch,
-# delay misparse, garbled inter-frame compression) are all structural
-# or feature-visible failures. This retires the "video frame demux is
-# a fake" caveat the way WAV (r11) and PNG (above) retired audio and
-# image: the features come only from decoded frames, and a DuckDB
-# oracle recomputes them from the closed-form per-frame signal.
+# Video-frame demux: APNG (the PNG specification's animated extension, a
+# standard container the stdlib can fully express). Each asset is a
+# genuine multi-frame animation — acTL frame-count control, per-frame
+# fcTL chunks (sequenced, with frame dims and delays), frame 0 in IDAT
+# and later frames in sequence-numbered fdAT chunks, every chunk
+# CRC32-protected, every frame DEFLATE-compressed and filter-cycled like
+# the still image. The READ path validates the signature, every CRC, the
+# acTL count, the strict fcTL/fdAT sequence-number ordering, and
+# reconstructs each frame's scanlines — so the classic video-demux bug
+# classes (frame misorder, off-by-one sequence, frame/canvas dim
+# mismatch, delay misparse, garbled inter-frame compression) are all
+# structural or feature-visible failures. The features come only from
+# decoded frames, and a DuckDB oracle recomputes them from the
+# closed-form per-frame signal.
 # ---------------------------------------------------------------------------
 
 APNG_FRAME_SCHEMA = (
@@ -891,8 +743,6 @@ def _apng_pixels(doc_id: int, t: int, w: int, h: int):
     y*131 + x*17 + c*59) mod 256 — the still-image formula with a
     frame term, so every frame differs and a frame-order bug is
     feature-visible."""
-    import numpy as np
-
     y = np.arange(h, dtype=np.int64)[:, None, None]
     x = np.arange(w, dtype=np.int64)[None, :, None]
     c = np.arange(3, dtype=np.int64)[None, None, :]
@@ -905,11 +755,6 @@ def synthesize_apng(doc_id: int) -> bytes:
     NONE, blend SOURCE) and the frame's DEFLATE stream — frame 0 as
     IDAT, frames 1.. as fdAT prefixed with their sequence number, as
     the APNG spec frames it."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     w, h = _apng_dims(doc_id)
     n_frames = _apng_n_frames(doc_id)
     out = bytearray(PNG_MAGIC)
@@ -945,8 +790,6 @@ def _apng_demux(payload: bytes):
     non-canvas frame dims (this decoder supports the full-canvas
     SOURCE/NONE subset it targets — anything else is an unsupported
     variant, never a silent guess)."""
-    import struct
-
     chunks = _walk_png_chunks(payload)
     tags = [t for t, _ in chunks]
     if "IHDR" not in tags or "IEND" not in tags or "acTL" not in tags:
@@ -1029,68 +872,49 @@ def decode_apng_sampled(payload: bytes, every: int):
 
 
 def apng_frame_features(docs: DataFrame) -> DataFrame:
-    """mapInPandas: per doc_id, synthesize the APNG asset, demux and
-    decode it through the READ path, and emit one row PER FRAME with
+    """Per doc_id, synthesize the APNG asset, demux and decode it
+    through the READ path, and emit one row PER FRAME with
     exact-integer features from the reconstructed pixels — the video
-    1→N frame-demux seam, real end to end. The decoded
-    delay_num is emitted so an fcTL-parse bug is oracle-visible."""
-    from collections.abc import Iterator
+    1→N frame-demux seam, one (frames, h, w, 3) stack per asset. The
+    decoded delay_num is emitted so an fcTL-parse bug is
+    oracle-visible."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def _columns(doc_id):
+        w, h, frames = decode_apng(synthesize_apng(doc_id))
+        pix = np.stack([p for _dnum, p in frames])
+        frame_axes = (1, 2, 3)
+        return {
+            "frame_idx": np.arange(len(frames), dtype=np.int64),
+            "width": w,
+            "height": h,
+            "delay_num": [dnum for dnum, _p in frames],
+            "sum_rgb": pix.sum(axis=frame_axes),
+            "sum_sq": (pix * pix).sum(axis=frame_axes),
+            "peak": pix.max(axis=frame_axes),
+            "pos_checksum": (
+                _pos_weights(w, h)[None, :, :, None] * pix
+            ).sum(axis=frame_axes),
+        }
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                payload = synthesize_apng(int(doc_id))
-                w, h, frames = decode_apng(payload)
-                posw = (
-                    np.arange(h, dtype=np.int64)[:, None] * w
-                    + np.arange(w, dtype=np.int64)[None, :]
-                    + 1
-                )
-                for t, (dnum, pix) in enumerate(frames):
-                    out.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "frame_idx": t,
-                            "width": w,
-                            "height": h,
-                            "delay_num": dnum,
-                            "sum_rgb": int(pix.sum()),
-                            "sum_sq": int((pix * pix).sum()),
-                            "peak": int(pix.max()),
-                            "pos_checksum": int(
-                                (posw[:, :, None] * pix).sum()
-                            ),
-                        }
-                    )
-            yield pd.DataFrame(out)
-
-    return _spread_ids(docs).mapInPandas(
-        _extract, schema=APNG_FRAME_SCHEMA
-    )
+    return _spread_decode(docs, _columns, APNG_FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# ROUND 13 — REAL palette-image codec: GIF (VERDICT r12 #5, the third
-# stdlib-expressible container after PNG's DEFLATE and APNG's demux).
-# GIF brings the decode-bug classes PNG cannot exercise: LZW with
-# VARIABLE-WIDTH codes (width grows as the string table fills, resets
-# on Clear), in-stream Clear codes (the encoder forces table resets at
-# an asset-dependent cadence so both the deep-width path and the
-# reset path are exercised across the corpus), the KwKwK
+# Palette images: GIF brings the decode-bug classes PNG cannot exercise:
+# LZW with VARIABLE-WIDTH codes (width grows as the string table fills,
+# resets on Clear), in-stream Clear codes (the encoder forces table
+# resets at an asset-dependent cadence so both the deep-width path and
+# the reset path are exercised across the corpus), the KwKwK
 # code==next_code case, LSB-first bit packing, 255-byte sub-block
 # framing (forced small so every asset is multi-block), PALETTE
 # indirection (pixels are indexes into a color table read from the
-# file), and 4-pass INTERLACED row ordering on alternating assets.
-# The READ path validates structure strictly — signature, screen
-# descriptor, sub-block framing, index range vs palette size, exact
-# pixel count, EOI placement, trailer, no trailing bytes — and the
-# features come only from palette[index] lookups on the decoded
-# stream, so a wrong bit order, a mis-grown code width, an ignored
-# Clear, a scrambled interlace pass or a palette slip all break the
-# closed-form oracle hash.
+# file), and 4-pass INTERLACED row ordering on alternating assets. The
+# READ path validates structure strictly — signature, screen descriptor,
+# sub-block framing, index range vs palette size, exact pixel count, EOI
+# placement, trailer, no trailing bytes — and the features come only
+# from palette[index] lookups on the decoded stream, so a wrong bit
+# order, a mis-grown code width, an ignored Clear, a scrambled interlace
+# pass or a palette slip all break the closed-form oracle hash.
 # ---------------------------------------------------------------------------
 
 GIF_MAGIC = b"GIF89a"
@@ -1116,8 +940,6 @@ def _gif_palette_bits(doc_id: int) -> int:
 def _gif_palette(doc_id: int, ncol: int):
     """Deterministic color table: palette[j] = ((doc_id*5 + j*41) % 256,
     (doc_id*11 + j*23) % 256, (doc_id*17 + j*59) % 256)."""
-    import numpy as np
-
     j = np.arange(ncol, dtype=np.int64)[:, None]
     mul = np.array([[41, 23, 59]], dtype=np.int64)
     base = np.array([[5, 11, 17]], dtype=np.int64) * int(doc_id)
@@ -1127,8 +949,6 @@ def _gif_palette(doc_id: int, ncol: int):
 def _gif_indexes(doc_id: int, w: int, h: int, ncol: int):
     """Deterministic index plane: idx(y,x) = (doc_id*31 + y*7 + x*3)
     mod ncol."""
-    import numpy as np
-
     y = np.arange(h, dtype=np.int64)[:, None]
     x = np.arange(w, dtype=np.int64)[None, :]
     return (int(doc_id) * 31 + y * 7 + x * 3) % ncol
@@ -1227,8 +1047,6 @@ def synthesize_gif(doc_id: int) -> bytes:
     ≤47-byte sub-blocks, trailer. Rows are stored in interlace pass
     order when the flag is set — a decoder that ignores the flag
     reconstructs scrambled rows and fails the positional checksum."""
-    import struct
-
     w, h = _gif_dims(doc_id)
     bits = _gif_palette_bits(doc_id)
     ncol = 1 << bits
@@ -1358,10 +1176,6 @@ def decode_gif(payload: bytes):
     overflows and trailing bytes are all ValueError, never a silent
     partial decode. Returns (w, h, ncol, interlaced, palette
     int64[ncol, 3], indexes int64[h, w])."""
-    import struct
-
-    import numpy as np
-
     if payload[:6] != GIF_MAGIC:
         raise ValueError("bad GIF signature")
     if len(payload) < 13:
@@ -1427,82 +1241,50 @@ def decode_gif(payload: bytes):
     return w, h, ncol, interlaced, pal, idx
 
 
-def _decode_gif_asset(doc_id: int):
-    """Synthesize + decode through the full READ path — the
-    single-sourced round-trip (mirrors _decode_png_asset)."""
-    payload = synthesize_gif(int(doc_id))
-    return payload, decode_gif(payload)
-
-
 def gif_features(docs: DataFrame) -> DataFrame:
-    """mapInPandas: per doc_id, round-trip the GIF asset and
-    feature-extract exact integers from palette[index] lookups on the
-    DECODED stream only: canvas dims, palette size, interlace flag as
-    parsed, per-channel sums, energy, peak, the position-weighted
-    checksum sum((y*w + x + 1) * (r+g+b)) that interlace/framing bugs
-    cannot reproduce, and a palette checksum sum((j+1) * (r+g+b)) over
-    the color table as read from the file."""
-    from collections.abc import Iterator
+    """Per doc_id, round-trip the GIF asset and feature-extract exact
+    integers from palette[index] lookups on the DECODED stream only:
+    canvas dims, palette size, interlace flag as parsed, per-channel
+    sums, energy, peak, the position-weighted checksum
+    sum((y*w + x + 1) * (r+g+b)) that interlace/framing bugs cannot
+    reproduce, and a palette checksum sum((j+1) * (r+g+b)) over the
+    color table as read from the file."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def _columns(doc_id):
+        w, h, ncol, inter, pal, idx = decode_gif(synthesize_gif(doc_id))
+        rgb = pal[idx]  # (h, w, 3) via palette indirection
+        jw = np.arange(1, ncol + 1, dtype=np.int64)
+        return {
+            "width": w,
+            "height": h,
+            "n_colors": ncol,
+            "interlaced": int(inter),
+            "sum_r": rgb[:, :, 0].sum(),
+            "sum_g": rgb[:, :, 1].sum(),
+            "sum_b": rgb[:, :, 2].sum(),
+            "sum_sq": (rgb * rgb).sum(),
+            "peak": rgb.max(),
+            "pos_checksum": (_pos_weights(w, h) * rgb.sum(axis=2)).sum(),
+            "palette_checksum": (jw * pal.sum(axis=1)).sum(),
+        }
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                _, (w, h, ncol, inter, pal, idx) = _decode_gif_asset(
-                    int(doc_id)
-                )
-                rgb = pal[idx]  # (h, w, 3) via palette indirection
-                posw = (
-                    np.arange(h, dtype=np.int64)[:, None] * w
-                    + np.arange(w, dtype=np.int64)[None, :]
-                    + 1
-                )
-                jw = np.arange(ncol, dtype=np.int64) + 1
-                out.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "width": w,
-                        "height": h,
-                        "n_colors": ncol,
-                        "interlaced": int(inter),
-                        "sum_r": int(rgb[:, :, 0].sum()),
-                        "sum_g": int(rgb[:, :, 1].sum()),
-                        "sum_b": int(rgb[:, :, 2].sum()),
-                        "sum_sq": int((rgb * rgb).sum()),
-                        "peak": int(rgb.max()),
-                        "pos_checksum": int(
-                            (posw * rgb.sum(axis=2)).sum()
-                        ),
-                        "palette_checksum": int(
-                            (jw * pal.sum(axis=1)).sum()
-                        ),
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return _spread_ids(docs).mapInPandas(
-        _extract, schema=GIF_FEATURE_SCHEMA
-    )
+    return _spread_decode(docs, _columns, GIF_FEATURE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# ROUND 13 (second codec) — REAL baseline JPEG entropy decode. JPEG's
-# pixel path is lossy (IDCT rounding is implementation-defined), so a
-# closed-form PIXEL oracle is impossible — but the ENTROPY layer is
-# exact: the decoder recovers the quantized coefficients bit-for-bit
-# or not at all. The entry therefore features in the COEFFICIENT
-# domain: per asset, a genuine JFIF baseline stream (SOI/APP0/DQT/
-# SOF0/DHT/DRI/SOS/EOI) is synthesized with the spec's Annex-K
-# luminance Huffman tables, DC prediction with restart-interval
-# resets (RST0..7 cycling, byte-aligned with 1-padding), AC
-# run-length coding with in-region zero runs, ZRL (16-zero) escapes
-# via a planted high-zigzag coefficient, EOB, and 0xFF00 byte
-# stuffing — then decoded through the strict READ path and
+# Baseline JPEG entropy decode. JPEG's pixel path is lossy (IDCT
+# rounding is implementation-defined), so a closed-form PIXEL oracle is
+# impossible — but the ENTROPY layer is exact: the decoder recovers the
+# quantized coefficients bit-for-bit or not at all. The entry therefore
+# features in the COEFFICIENT domain: per asset, a genuine JFIF baseline
+# stream (SOI/APP0/DQT/ SOF0/DHT/DRI/SOS/EOI) is synthesized with the
+# spec's Annex-K luminance Huffman tables, DC prediction with
+# restart-interval resets (RST0..7 cycling, byte-aligned with
+# 1-padding), AC run-length coding with in-region zero runs, ZRL
+# (16-zero) escapes via a planted high-zigzag coefficient, EOB, and
+# 0xFF00 byte stuffing — then decoded through the strict READ path and
 # dequantized to exact closed-form integers the DuckDB oracle
-# recomputes. The codec families still absent from the environment
-# shrink to ffmpeg-class video alone.
+# recomputes.
 # ---------------------------------------------------------------------------
 
 JPEG_COEF_SCHEMA = (
@@ -1632,8 +1414,6 @@ def _synthesize_jfif(bw: int, bh: int, qcoef) -> bytes:
     k)`` — shared with the AVI/MJPEG frame encoder, where every frame
     keeps the container's dims but carries its own coefficient
     signal."""
-    import struct
-
     w, h = 8 * bw, 8 * bh
     dc_enc = _jpeg_build_huffman(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_enc = _jpeg_build_huffman(_JPEG_AC_BITS, _JPEG_AC_VALS)
@@ -1796,10 +1576,6 @@ def decode_jpeg_coefficients(payload: bytes):
     dequantize with the DQT table AS READ, and reject trailing bytes.
     Returns (w, h, blocks) with blocks[(by, bx)] = int64[64] of
     DEQUANTIZED coefficients in zigzag order."""
-    import struct
-
-    import numpy as np
-
     if payload[:2] != b"\xff\xd8":
         raise ValueError("bad JPEG signature (SOI)")
     pos = 2
@@ -1916,69 +1692,55 @@ def decode_jpeg_coefficients(payload: bytes):
     return w, h, blocks
 
 
-def _decode_jpeg_asset(doc_id: int):
-    payload = synthesize_jpeg(int(doc_id))
-    return payload, decode_jpeg_coefficients(payload)
+def _raster_coefficients(blocks):
+    """A decoded block dict as one int64 stream in raster order:
+    sorted (by, bx) puts zigzag coefficient k of block (by, bx) at
+    i = (by*bw + bx)*64 + k."""
+    return np.concatenate([blocks[b] for b in sorted(blocks)])
+
+
+def _coefficient_features(c) -> dict:
+    """Coefficient-domain statistics over raster coefficient streams
+    (_raster_coefficients) along the last axis — one stream gives
+    scalars, an (n_frames, n) stack one value per frame: block count,
+    DC sum, absolute AC mass, energy, nonzero count and the
+    zigzag-position-weighted checksum sum((block_idx*64 + k + 1) * coef)
+    that run-length/prediction/table slips cannot reproduce."""
+    dc = c[..., ::64]
+    pos = np.arange(1, c.shape[-1] + 1, dtype=np.int64)
+    return {
+        "n_blocks": c.shape[-1] // 64,
+        "sum_dc": dc.sum(axis=-1),
+        "sum_abs_ac": np.abs(c).sum(axis=-1) - np.abs(dc).sum(axis=-1),
+        "sum_sq": (c * c).sum(axis=-1),
+        "n_nonzero": (c != 0).sum(axis=-1),
+        "zz_checksum": (pos * c).sum(axis=-1),
+    }
 
 
 def jpeg_coefficient_features(docs: DataFrame) -> DataFrame:
-    """mapInPandas: per doc_id, round-trip the JFIF stream and
-    feature-extract exact integers from the DEQUANTIZED coefficients
-    as decoded: block count, DC sum, absolute AC mass, energy,
-    nonzero count, and a zigzag-position-weighted checksum
-    sum((block_idx*64 + k + 1) * coef) that run-length/prediction/
-    table slips cannot reproduce."""
-    from collections.abc import Iterator
+    """Per doc_id, round-trip the JFIF stream and feature-extract exact
+    integers from the DEQUANTIZED coefficients as decoded
+    (_coefficient_features)."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def _columns(doc_id):
+        w, h, blocks = decode_jpeg_coefficients(synthesize_jpeg(doc_id))
+        return {"width": w, "height": h} | _coefficient_features(
+            _raster_coefficients(blocks)
+        )
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                _, (w, h, blocks) = _decode_jpeg_asset(int(doc_id))
-                bw = w // 8
-                sum_dc = sum_abs_ac = sum_sq = n_nonzero = zz_ck = 0
-                for (by, bx), zz in blocks.items():
-                    bi = by * bw + bx
-                    sum_dc += int(zz[0])
-                    sum_abs_ac += int(np.abs(zz[1:]).sum())
-                    sum_sq += int((zz * zz).sum())
-                    n_nonzero += int((zz != 0).sum())
-                    kw = bi * 64 + np.arange(64, dtype=np.int64) + 1
-                    zz_ck += int((kw * zz).sum())
-                out.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "width": w,
-                        "height": h,
-                        "n_blocks": len(blocks),
-                        "sum_dc": sum_dc,
-                        "sum_abs_ac": sum_abs_ac,
-                        "sum_sq": sum_sq,
-                        "n_nonzero": n_nonzero,
-                        "zz_checksum": zz_ck,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return _spread_ids(docs).mapInPandas(
-        _extract, schema=JPEG_COEF_SCHEMA
-    )
+    return _spread_decode(docs, _columns, JPEG_COEF_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# ROUND 13 (third codec) — REAL video container demux: AVI/MJPEG.
-# Motion-JPEG in a RIFF AVI is the video container the stdlib can
-# fully express end-to-end: RIFF list nesting ('RIFF…AVI ' → LIST
-# hdrl(avih + LIST strl(strh 'vids'/'MJPG' + strf BITMAPINFOHEADER) )
-# → LIST movi('00dc' chunks) → idx1), WORD-ALIGNMENT padding (RIFF
-# chunks pad to even sizes — the classic demux off-by-one), an index
-# whose offsets/sizes must agree with the actual chunk positions, and
-# one genuine JFIF stream PER FRAME decoded by the round's baseline
-# JPEG entropy decoder. With this, every container / demux / entropy
-# layer across image, audio and video is real; the only faked stage
-# left anywhere is JPEG's lossy pixel path (IDCT).
+# Video container demux: AVI/MJPEG. Motion-JPEG in a RIFF AVI is the
+# video container the stdlib can fully express end-to-end: RIFF list
+# nesting ('RIFF…AVI ' → LIST hdrl(avih + LIST strl(strh 'vids'/'MJPG' +
+# strf BITMAPINFOHEADER) ) → LIST movi('00dc' chunks) → idx1),
+# WORD-ALIGNMENT padding (RIFF chunks pad to even sizes — the classic
+# demux off-by-one), an index whose offsets/sizes must agree with the
+# actual chunk positions, and one genuine JFIF stream PER FRAME decoded
+# by the baseline JPEG entropy decoder above.
 # ---------------------------------------------------------------------------
 
 AVI_FRAME_SCHEMA = (
@@ -2011,8 +1773,6 @@ def _avi_qcoef(doc_id: int, t: int, by: int, bx: int, k: int) -> int:
 
 def _riff_chunk(fourcc: bytes, payload: bytes) -> bytes:
     """A RIFF chunk with the spec's even-size padding."""
-    import struct
-
     pad = b"\x00" if len(payload) % 2 else b""
     return fourcc + struct.pack("<I", len(payload)) + payload + pad
 
@@ -2024,8 +1784,6 @@ def synthesize_avi(doc_id: int) -> bytes:
     arise naturally, so the even-padding rule is really exercised),
     and an idx1 whose entries carry each frame's movi-relative offset
     and exact size."""
-    import struct
-
     bw, bh = _avi_blocks(doc_id)
     w, h = 8 * bw, 8 * bh
     n = _avi_n_frames(doc_id)
@@ -2078,8 +1836,6 @@ def _avi_demux(payload: bytes):
     frame_chunks) with frame_chunks[t] = (movi_relative_offset, size,
     body bytes) — each body a still-undecoded JFIF stream; idx1 is
     what lets a sampled reader seek straight to the frames it wants."""
-    import struct
-
     def u32(b: bytes, at: int) -> int:
         if at + 4 > len(b):
             raise ValueError("truncated RIFF size field")
@@ -2225,50 +1981,22 @@ def decode_avi_mjpeg_sampled(payload: bytes, every: int):
     return w, h, frames
 
 
-def _decode_avi_asset(doc_id: int):
-    payload = synthesize_avi(int(doc_id))
-    return payload, decode_avi_mjpeg(payload)
-
-
 def avi_frame_features(docs: DataFrame) -> DataFrame:
-    """mapInPandas: per doc_id, demux the AVI, entropy-decode every
-    MJPEG frame, and emit one row per frame with exact coefficient-
-    domain features (the JPEG still entry's shape plus frame_idx —
-    a frame-order or index slip breaks the per-frame hashes)."""
-    from collections.abc import Iterator
+    """Per doc_id, demux the AVI, entropy-decode every MJPEG frame, and
+    emit one row per frame with exact coefficient-domain features (the
+    JPEG still entry's, without the nonzero count, plus frame_idx — a
+    frame-order or index slip breaks the per-frame hashes)."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def _columns(doc_id):
+        w, h, frames = decode_avi_mjpeg(synthesize_avi(doc_id))
+        stats = _coefficient_features(
+            np.stack([_raster_coefficients(b) for b in frames])
+        )
+        del stats["n_nonzero"]
+        return {
+            "frame_idx": np.arange(len(frames), dtype=np.int64),
+            "width": w,
+            "height": h,
+        } | stats
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                _, (w, h, frames) = _decode_avi_asset(int(doc_id))
-                bw = w // 8
-                for t, blocks in enumerate(frames):
-                    sum_dc = sum_abs_ac = sum_sq = zz_ck = 0
-                    for (by, bx), zz in blocks.items():
-                        bi = by * bw + bx
-                        sum_dc += int(zz[0])
-                        sum_abs_ac += int(np.abs(zz[1:]).sum())
-                        sum_sq += int((zz * zz).sum())
-                        kw = bi * 64 + np.arange(64, dtype=np.int64) + 1
-                        zz_ck += int((kw * zz).sum())
-                    out.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "frame_idx": t,
-                            "width": w,
-                            "height": h,
-                            "n_blocks": len(blocks),
-                            "sum_dc": sum_dc,
-                            "sum_abs_ac": sum_abs_ac,
-                            "sum_sq": sum_sq,
-                            "zz_checksum": zz_ck,
-                        }
-                    )
-            yield pd.DataFrame(out)
-
-    return _spread_ids(docs).mapInPandas(
-        _extract, schema=AVI_FRAME_SCHEMA
-    )
+    return _spread_decode(docs, _columns, AVI_FRAME_SCHEMA)

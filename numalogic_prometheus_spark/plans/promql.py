@@ -18,6 +18,7 @@ from numalogic_prometheus_spark.operators.promql import (
     topk_per_group,
 )
 from numalogic_prometheus_spark.plans import register
+from numalogic_prometheus_spark.plans.metrics import _BOUNDS_SQL
 from numalogic_prometheus_spark.sources.tables import load_table
 from numalogic_prometheus_spark.functions.timeutil import epoch_us
 
@@ -108,8 +109,6 @@ def promql_rate_per_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.date_trunc("hour", "ts").alias("hour")
     ).agg((F.sum("increase") / 3600.0).alias("rate_per_sec"))
 
-
-_BOUNDS_SQL = ",".join(str(b) for b in M.DEFAULT_BUCKETS)
 
 _BUCKET_CTE = f"""
     WITH buckets AS (

@@ -48,6 +48,7 @@ from numalogic_prometheus_spark.functions.timeutil import epoch_us_sql
 from numalogic_prometheus_spark.operators import metrics as M
 from numalogic_prometheus_spark.operators.promql import histogram_fraction
 from numalogic_prometheus_spark.plans import register
+from numalogic_prometheus_spark.plans.metrics import _BOUNDS_SQL
 from numalogic_prometheus_spark.sources.tables import load_table
 
 
@@ -180,7 +181,6 @@ def promql_quantile_agg_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _FRAC_LO = 0.175  # strictly inside bucket (0.1, 0.25]
 _FRAC_HI = 3.0    # strictly inside bucket (2.5, 5.0]
-_BOUNDS_SQL = ",".join(str(b) for b in M.DEFAULT_BUCKETS)
 
 
 @register(

@@ -77,6 +77,7 @@ from numalogic_prometheus_spark.functions.timeutil import epoch_us
 from numalogic_prometheus_spark.operators.relational import asof_join
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.sources.tables import load_table
+from numalogic_prometheus_spark.streaming.nh_rate import EPOCH_US as _EPOCH_US
 
 _LO, _HI = -10, 12  # boundary ladder 2^LO .. 2^HI (23 exact doubles)
 _BOUNDS = [2.0 ** k for k in range(_LO, _HI + 1)]
@@ -440,9 +441,6 @@ def promql_native_histogram_stddev(
         stdvar.alias("stdvar_value"),
         stddev.alias("stddev_value"),
     )
-
-
-_EPOCH_US = 5_400_000_000  # 90-min counter epochs: resets land mid-hour
 
 
 _NH_RATE_CTE = f"""

@@ -293,28 +293,13 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs each doc with its bucket canonical only (linear output; the
     all-pairs form is quadratic in duplicate-cluster size). The shingle
     variant below is the looser/realistic-selectivity path."""
-    from numalogic_prometheus_spark.functions.hashing import hash32
-
     d = load_table_spread(spark, sf_dir, "documents", "doc_id")
-    # Two-stage materialization (VERDICT.md next-round #3/#7). Stage 1
-    # pins the distinct-token arrays: minhash_signature duplicates its
-    # input EXPRESSION into every seed branch, and higher-order functions
-    # are interpreted (no codegen CSE), so feeding it the raw
-    # split-distinct expression would re-run that build k+1 times per
-    # row — the checkpoint turns it into a bound column reference.
-    tok_arrays = d.select(
-        "doc_id", F.array_distinct(D.tokens_col(F.col("text"))).alias("toks0")
-    ).transform(D.truncate_lineage)
-    # Stage 2 pins one compact feature row per doc (k=8 signature + the
-    # hashed token set — ints, same portable hash as the oracle), read by
-    # the banding self-join sides and both verify legs. No full-corpus
-    # cache, no exploded-item joins; the verify is a per-row
-    # array_intersect Jaccard on int sets.
-    feat = tok_arrays.select(
-        "doc_id",
-        D.minhash_signature(F.col("toks0"), k=8).alias("sig"),
-        F.array_distinct(F.transform("toks0", hash32)).alias("toks"),
-    ).transform(D.truncate_lineage)
+    # The shared featurizer's two pins: the distinct-token arrays (so the
+    # k seed branches read a bound column, not k+1 re-runs of the split),
+    # then one compact (sig, toks) row per doc, read by the banding
+    # self-join sides and both verify legs; the verify is a per-row
+    # array_intersect Jaccard on the hashed int sets.
+    feat = D.minhash_band_features(d, k=8)
     cands = D.lsh_canonical_pairs(feat, "doc_id", "sig", bands=1, rows=8)
     scored = D.jaccard_by_sets(cands, feat, "doc_id", "toks")
     return scored.filter(F.col("jaccard") >= NEARDUP_JACCARD).select(
@@ -471,7 +456,6 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SHINGLE_C_SQL = "(" + ", ".join(str(c) for c in D.SHINGLE_C) + ")"
 _SHINGLE_HASH_SQL = f"""
         SELECT doc_id,
                list_distinct(list_transform(

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from numalogic_prometheus_spark.plans import register
+from numalogic_prometheus_spark.plans.text4 import _EVAL_MOD
 from numalogic_prometheus_spark.sources.tables import load_table
 
 _CHUNK = 128  # chars per chunk
@@ -208,7 +209,6 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # serving index uses.
 # ---------------------------------------------------------------------------
 
-_EVAL_MOD = 11  # mirrors plans/text4.py: every 11th doc is "benchmark"
 _CHUNK_FLAG = 0.5
 
 

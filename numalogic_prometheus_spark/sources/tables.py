@@ -145,15 +145,6 @@ def load_table_spread(
     return df.repartition(spark.sparkContext.defaultParallelism, F.col(key))
 
 
-def _size_bytes(conf_val: str) -> int:
-    """Parse a Spark size conf ('134217728', '128m', '1g') to bytes."""
-    s = conf_val.strip().lower().removesuffix("b")
-    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    if s and s[-1] in mult:
-        return int(float(s[:-1]) * mult[s[-1]])
-    return int(s)
-
-
 # Analyzed-plan nodes that preserve the scan's split width 1:1. Leaf
 # scan relations (DSv1 LogicalRelation, DSv2 relation, catalog/hive
 # relations) plus row-wise projection/filter and naming plumbing.
@@ -212,9 +203,8 @@ def _estimated_scan_splits(spark: SparkSession, df: DataFrame) -> int | None:
         return None
     if not files:
         return None
-    max_split = _size_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    max_split = sql_conf.filesMaxPartitionBytes()
     splits = 0
     for f in files:
         path = f.removeprefix("file:")

@@ -57,7 +57,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_EPOCH_US = 5_400_000_000  # keep in lockstep with plans/promql7._EPOCH_US
+EPOCH_US = 5_400_000_000  # 90-min counter epochs: resets land mid-hour
 
 _NONE = -1  # sentinel for "never emitted" / "no last minute" (c >= 0)
 
@@ -106,7 +106,7 @@ def stateful_nh_bucket_cums(grouped) -> DataFrame:
             mat = cnt.to_numpy(dtype="int64")  # [n_scrapes, n_buckets]
             scrapes = cnt.index.to_numpy()
             scrape_us = scrapes.astype("datetime64[us]").astype("int64")
-            epochs = scrape_us // _EPOCH_US
+            epochs = scrape_us // EPOCH_US
             straddle = m_last != _NONE and int(scrape_us[0]) == m_last
             # within-epoch cumulative with cross-batch carry-in: segment
             # ids restart the cumsum at each epoch change; the first

@@ -535,7 +535,7 @@ def test_semantic_contamination_probe_broadcasts_no_cartesian(spark, sf_dir):
 def test_audio_decode_is_spread_map(spark, sf_dir):
     """The WAV feature entries: one narrow (doc_id) scan, then EXACTLY
     ONE exchange — the pre-decode hash-repartition of the 8-byte key
-    column (operators/multimodal.py:_spread_ids) — feeding the
+    column (operators/multimodal.py:_spread_decode) — feeding the
     Arrow-batched mapInPandas. r17 finding: the old zero-exchange
     "pure map" shape was SPLIT-BOUND, not kernel-bound — the synthetic
     documents table is one parquet split, so the whole corpus decoded

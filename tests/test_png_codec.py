@@ -339,7 +339,6 @@ def test_registered_oracles_match_real_decoders_directly():
 
     from numalogic_prometheus_spark import plans
     from numalogic_prometheus_spark.operators.multimodal import (
-        _decode_png_asset,
         decode_apng,
         synthesize_apng,
     )
@@ -352,7 +351,7 @@ def test_registered_oracles_match_real_decoders_directly():
 
     want = {}
     for d in ids:
-        _, (w, h, _f, pix) = _decode_png_asset(d)
+        w, h, _f, pix = decode_png(synthesize_png(d))
         posw = (
             np.arange(h, dtype=np.int64)[:, None] * w
             + np.arange(w, dtype=np.int64)[None, :]
@@ -442,12 +441,11 @@ def test_resize_features_match_closed_form():
     from numalogic_prometheus_spark.operators.multimodal import (
         RESIZE_H,
         RESIZE_W,
-        _decode_png_asset,
         resize_nearest,
     )
 
     for d in list(range(40)) + [1234, 99991]:
-        _, (w, h, _f, pix) = _decode_png_asset(d)
+        w, h, _f, pix = decode_png(synthesize_png(d))
         r = resize_nearest(pix, RESIZE_W, RESIZE_H)
         # independent recomputation (no codec, no resize kernel)
         exp = np.empty((RESIZE_H, RESIZE_W, 3), dtype=np.int64)
