@@ -33,6 +33,8 @@ DEFAULT_BUCKETS = (
     0.005, 0.01, 0.025, 0.05, 0.075, 0.1, 0.25, 0.5, 0.75,
     1.0, 2.5, 5.0, 7.5, 10.0,
 )
+# DuckDB list literal of the same bounds, for the oracles
+DEFAULT_BUCKETS_SQL = ",".join(str(b) for b in DEFAULT_BUCKETS)
 
 
 def counter(df: DataFrame, keys: Sequence[str | Column], value: str = "value") -> DataFrame:

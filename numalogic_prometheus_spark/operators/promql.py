@@ -10,6 +10,8 @@ this module closes that gap with pure Spark SQL compositions:
   cumulative ``le`` buckets (reads discipline A6's output, reference
   metrics.py:173-177).
 - ``topk_per_group`` — PromQL ``topk()``.
+- ``instant_vector_cents`` — the instant-vector selector the cross-series
+  aggregators read.
 
 Everything is window functions + expressions: one shuffle per partition
 key, no UDFs, fully oracle-checkable.
@@ -43,6 +45,17 @@ def increase_with_resets(
             ),
         )
         .drop("__raw_delta")
+    )
+
+
+def instant_vector_cents(ev: DataFrame) -> DataFrame:
+    """Instant vector over the events relation: the latest sample per
+    (event_type, user_id) series as exact integer ``cents``, with ts
+    then event_id deciding ties. One partial aggregation, one exchange
+    on the series key."""
+    cents = F.round(F.col("value") * 100).cast("long")
+    return ev.groupBy("event_type", "user_id").agg(
+        F.max_by(cents, F.struct("ts", "event_id")).alias("cents")
     )
 
 

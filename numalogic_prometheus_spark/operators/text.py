@@ -19,6 +19,12 @@ STOPWORDS_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 # Fingerprint modulus: keeps the bag-of-words hash sum in a stable range.
 FP_MOD = 2_147_483_647  # 2^31 - 1
 
+# Contamination split: ids divisible by EVAL_MOD stand in for "the
+# benchmark set" and the rest for the training corpus, in every
+# contamination check (n-gram, chunk and embedding grain, batch and
+# streaming).
+EVAL_MOD = 11
+
 
 # SQL-string fast paths (r16 build-cost pass, the functions/vectors.py
 # discipline): pass the text COLUMN NAME and the whole expression is

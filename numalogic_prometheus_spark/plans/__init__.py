@@ -19,10 +19,13 @@ _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
 
 # Query modules, imported lazily so a bug in one module doesn't take down
-# the whole registry surface at import time.
-# Registration order is per-module; the DRIVER-FACING order (the driver
-# verifies a 50-entry prefix of queries()) is controlled by _CHECK_FIRST
-# below, which all_queries()/all_oracles() move to the front.
+# the whole registry surface at import time. An entry registers when its
+# module is first imported, so the registry lists entries in this
+# tuple's order, except where a plan module imports another in its body
+# (streaming2 imports promql9). all_queries() and all_oracles() move
+# the _CHECK_FIRST names to the front, so this order never changes which
+# entries the __spark_entry__ contract checks; appending a module moves
+# no entry.
 _MODULES = (
     "text",
     "vectors",
@@ -39,9 +42,6 @@ _MODULES = (
     "scalars",
     "metrics",
     "promql",
-    # Round-2+ additions live at the tail: positions 51+ are outside the
-    # driver's check window, so appending here never displaces the
-    # entries queued for verification at positions 1-50.
     "tpch2",
     "timeseries",
     "vectors2",
@@ -50,8 +50,6 @@ _MODULES = (
     "ml2",
     "extras2",
     "sampling",
-    # Round-3+ additions: any position is fine — new entries are NOT in
-    # _CHECK_FIRST, so they land behind the check window automatically.
     "promql2",
     "tpch3",
     "rollups",
@@ -78,38 +76,13 @@ _MODULES = (
     "text6",
 )
 
-# ROUND-17 ROTATION (VERDICT r16 next-round #2; per-round narratives
-# live in COVERAGE.md's dated sections — this comment holds ONLY the
-# current window). The driver verifies the first 50 entries of
-# queries(). 14 + 26 + 10 = 50, enumerated by reason:
-#   * the 14 round-11-stale entries deferred from the r16 window BY
-#     NAME (the 8 HEADLINE-benched + the 6 lexicographic tail from the
-#     r16 comment), promised first in line here — all hash-green in
-#     the committed r16 full-registry sweeps, and 8 of the 14
-#     re-executed hash-green by the r16 judge on a vanilla session;
-#   * 36 of the 49 entries whose last driver row is round 12, chosen
-#     by the same rule as r15/r16: the r12-stale set splits into 23
-#     HEADLINE-benched members (per-round bench evidence — the
-#     strongest independent signal) and 26 sweep-only members; the
-#     window takes all 26 sweep-only ones plus the 10
-#     lexicographically-first benched ones (agg_pricing_summary ..
-#     multimodal_image_row_stats), which leaves a lexicographic tail
-#     of 13 benched entries deferred BY NAME to r18 first-in-line:
-#     multimodal_video_apng_frames, profile_column_stats,
-#     promql_alert_firing, promql_burn_rate_multiwindow,
-#     promql_native_histogram_fraction_rate,
-#     promql_native_histogram_rate_quantile_agg,
-#     promql_rate_extrapolated, sample_split_by_cluster,
-#     tpch_q21_sole_late_supplier, tpch_q5_region_volume,
-#     ts_step_resample, vec_matryoshka_prefix_topk, vec_pq_subvector_topk.
-#     All 13 are HEADLINE-benched every round and hash-green in the
-#     committed full-registry sweeps.
-# After r17 the staleness ledger is: nothing older than r12, exactly
-# the 13 enumerated r12 deferrals at r12, everything else r13+, and
-# every registered entry still has a driver row. No new registrations
-# are queued.
+# The __spark_entry__ contract checks the first 50 entries of
+# all_queries(), and these are they, in this order: exactly 50 unique
+# registered names, moved to the front by _front_load.
+# tests/test_registry_contract.py pins that each name resolves and that
+# they fill the window; a typo would silently shrink it. Streaming
+# entries here have no oracle and get the rows-only check.
 _CHECK_FIRST = (
-    # -- r16-deferred round-11-stale entries (14) --
     "dedup_semantic_survivors",
     "dedup_substring_spans",
     "join_interval_overlap",
@@ -124,7 +97,6 @@ _CHECK_FIRST = (
     "vec_ivf_topk",
     "win_lag_rate_reset",
     "win_sliding_range_1h",
-    # -- r12 recency tail: all 26 sweep-only members, lexicographic --
     "agg_conditional_buckets",
     "agg_distinct_counts",
     "agg_rollup_region_nation",
@@ -151,9 +123,6 @@ _CHECK_FIRST = (
     "tpch_q7_nation_volume",
     "vec_cosine_topk",
     "win_running_cumulative",
-    # -- plus the 10 lexicographically-first HEADLINE-benched r12
-    #    members (the remaining 13 are deferred by name to r18 —
-    #    see comment above) --
     "agg_pricing_summary",
     "counter_hourly",
     "dedup_cdc_chunk_pairs",

@@ -95,16 +95,13 @@ def summary_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BOUNDS_SQL = ",".join(str(b) for b in M.DEFAULT_BUCKETS)
-
-
 @register(
     "histogram_cumulative",
     oracle=f"""
     SELECT event_type, le,
            sum(CASE WHEN value <= le THEN 1 ELSE 0 END)::BIGINT AS cum_count
     FROM events
-    CROSS JOIN (SELECT unnest([{_BOUNDS_SQL}, 'inf'::DOUBLE]) AS le) buckets
+    CROSS JOIN (SELECT unnest([{M.DEFAULT_BUCKETS_SQL}, 'inf'::DOUBLE]) AS le) buckets
     GROUP BY event_type, le
     """,
 )
@@ -262,7 +259,7 @@ _LE_SQL = "CASE WHEN isinf(le) THEN '+Inf' ELSE printf('%.3f', le) END"
            || {_LE_SQL} || '"}} '
            || sum(CASE WHEN value <= le THEN 1 ELSE 0 END)::VARCHAR AS line
     FROM events
-    CROSS JOIN (SELECT unnest([{_BOUNDS_SQL}, 'inf'::DOUBLE]) AS le) buckets
+    CROSS JOIN (SELECT unnest([{M.DEFAULT_BUCKETS_SQL}, 'inf'::DOUBLE]) AS le) buckets
     GROUP BY event_type, le
     UNION ALL
     SELECT 'events_meta_info{{event_type="' || event_type || '",props='

@@ -18,7 +18,6 @@ from numalogic_prometheus_spark.operators.promql import (
     topk_per_group,
 )
 from numalogic_prometheus_spark.plans import register
-from numalogic_prometheus_spark.plans.metrics import _BOUNDS_SQL
 from numalogic_prometheus_spark.sources.tables import load_table
 from numalogic_prometheus_spark.functions.timeutil import epoch_us
 
@@ -115,7 +114,7 @@ _BUCKET_CTE = f"""
         SELECT event_type, le,
                sum(CASE WHEN value <= le THEN 1 ELSE 0 END)::BIGINT AS cum_count
         FROM events
-        CROSS JOIN (SELECT unnest([{_BOUNDS_SQL}, 'inf'::DOUBLE]) AS le) b
+        CROSS JOIN (SELECT unnest([{M.DEFAULT_BUCKETS_SQL}, 'inf'::DOUBLE]) AS le) b
         GROUP BY event_type, le
     ),
     enriched AS (

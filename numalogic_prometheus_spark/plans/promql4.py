@@ -46,9 +46,11 @@ from pyspark.sql import functions as F
 
 from numalogic_prometheus_spark.functions.timeutil import epoch_us_sql
 from numalogic_prometheus_spark.operators import metrics as M
-from numalogic_prometheus_spark.operators.promql import histogram_fraction
+from numalogic_prometheus_spark.operators.promql import (
+    histogram_fraction,
+    instant_vector_cents,
+)
 from numalogic_prometheus_spark.plans import register
-from numalogic_prometheus_spark.plans.metrics import _BOUNDS_SQL
 from numalogic_prometheus_spark.sources.tables import load_table
 
 
@@ -168,11 +170,7 @@ def promql_quantile_agg_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary-exact doubles and the value hash-matches without rounding
     (module docstring). Two partial aggregations: per-series max_by,
     then per-family percentile over the series relation."""
-    ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
-    latest = ev.groupBy("event_type", "user_id").agg(
-        F.max_by(cents, F.struct("ts", "event_id")).alias("cents")
-    )
+    latest = instant_vector_cents(load_table(spark, sf_dir, "events"))
     return latest.groupBy("event_type").agg(
         F.percentile("cents", 0.75).alias("p75_cents"),
         F.count(F.lit(1)).cast("long").alias("n_series"),
@@ -191,7 +189,7 @@ _FRAC_HI = 3.0    # strictly inside bucket (2.5, 5.0]
                sum(CASE WHEN value <= le THEN 1 ELSE 0 END)::BIGINT
                    AS cum_count
         FROM events
-        CROSS JOIN (SELECT unnest([{_BOUNDS_SQL}, 'inf'::DOUBLE]) AS le) b
+        CROSS JOIN (SELECT unnest([{M.DEFAULT_BUCKETS_SQL}, 'inf'::DOUBLE]) AS le) b
         GROUP BY event_type, le
     ),
     enriched AS (

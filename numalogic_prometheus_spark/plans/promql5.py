@@ -48,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from numalogic_prometheus_spark.operators.promql import instant_vector_cents
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.sources.tables import load_table
 
@@ -156,11 +157,7 @@ def promql_agg_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combine, one exchange), then one combine over the series
     relation. `avg` is sum_cents ÷ n ÷ 100.0, the exact-integer operand
     sequence both engines share (module docstring)."""
-    ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
-    latest = ev.groupBy("event_type", "user_id").agg(
-        F.max_by(cents, F.struct("ts", "event_id")).alias("cents")
-    )
+    latest = instant_vector_cents(load_table(spark, sf_dir, "events"))
     return latest.groupBy("event_type").agg(
         (F.sum("cents") / 100.0).alias("sum_v"),
         (F.min("cents") / 100.0).alias("min_v"),
@@ -213,11 +210,7 @@ def promql_stddev_agg_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation-order noise (tests/test_rounding_lint.py). Same
     two-level shape as the rest of the aggregator family: per-series
     max_by partial agg, then one combine over the series relation."""
-    ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
-    latest = ev.groupBy("event_type", "user_id").agg(
-        F.max_by(cents, F.struct("ts", "event_id")).alias("cents")
-    )
+    latest = instant_vector_cents(load_table(spark, sf_dir, "events"))
     moments = latest.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("cents").alias("s1"),

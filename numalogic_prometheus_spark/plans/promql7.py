@@ -1,35 +1,21 @@
-"""PromQL read-side operators, round 9 (late batch 4): NATIVE
-HISTOGRAMS — Prometheus 3's headline data-model feature — and the
-PromQL 3 experimental `info()` enrichment function. The reference
-delegates all PromQL evaluation to the Prometheus Query Service
-(reference CHANGELOG.md:10 #168); this engine owns those semantics
-over the canonical samples relation.
+"""PromQL native-histogram entries and the PromQL 3 `info()` function.
+
+The reference delegates all PromQL evaluation to the Prometheus Query
+Service (reference CHANGELOG.md:10 #168); this engine owns those
+semantics over the canonical samples relation. The eight
+native-histogram entries (schema 0, Prometheus 3's headline data-model
+feature) share operators/native_histogram.py: the exact power-of-two
+bucket index, the window-delta substrate and its rate, and the
+exponential quantile and fraction read-outs. Each oracle spells the
+same semantics in DuckDB SQL over the same ladder constants.
 
 Semantics notes (public Prometheus native-histogram spec):
 
-* A native histogram at schema s covers the positive axis with sparse
-  exponential buckets (lower, upper] where upper = γ^idx and
-  γ = 2^(2^−s); at SCHEMA 0 (used here) γ = 2, so every bucket
-  boundary is an exact power of two — which is what makes the operator
-  cross-engine EXACT: bucket membership is decided by comparisons
-  against literal doubles that both engines parse identically (powers
-  of two have exact binary AND decimal representations), with NO
-  log/floor arithmetic whose final-ulp rounding could flip a boundary
-  sample into the wrong bucket (log2(8)=3 is exact, but ln(v)/ln(2)
-  need not be). Negative observations mirror into negative buckets
-  keyed by |v|; v = 0 lands in the zero bucket (zero-threshold 0).
-  The bucket index for v > 0 is the unique idx with
-  2^(idx−1) < v ≤ 2^idx, computed as LO + |{b ∈ bounds : b < v}| over
-  the literal boundary ladder 2^LO..2^HI — values beyond 2^HI collapse
-  into the open-ended overflow bucket (idx HI+1, upper +Inf), the
-  bounded-resolution analog of the native-histogram bucket-limit
-  schema reduction.
-* `histogram_quantile(q, native_histogram)` interpolates
-  EXPONENTIALLY inside the located bucket (the v2.50+ rule for native
-  histograms, vs linear for classic buckets):
-  result = lower · 2^frac with frac the within-bucket count fraction.
-  The single `pow(2.0, frac)` is the entry's one transcendental —
-  final-ulp cross-engine noise is absorbed by the engine-level 1e-6
+* `histogram_quantile(q, native_histogram)` and `histogram_fraction`
+  interpolate EXPONENTIALLY inside the located bucket (the v2.50+ rule
+  for native histograms, vs linear for classic buckets). The quantile's
+  single `pow(2.0, frac)` is its one transcendental — final-ulp
+  cross-engine noise is absorbed by the engine-level 1e-6
   canonicalization exactly like the tanh/regr_slope entries (NO
   in-query round(): tests/test_rounding_lint.py).
 * `histogram_stddev(v)` / `histogram_stdvar(v)` (native-histogram
@@ -68,22 +54,14 @@ broadcast of the fact side, no per-row lookup.
 
 from __future__ import annotations
 
-import numpy as _np
-import pandas as _pd
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from numalogic_prometheus_spark.functions.timeutil import epoch_us
+from numalogic_prometheus_spark.operators import native_histogram as NH
 from numalogic_prometheus_spark.operators.relational import asof_join
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.sources.tables import load_table
-from numalogic_prometheus_spark.streaming.nh_rate import EPOCH_US as _EPOCH_US
-
-_LO, _HI = -10, 12  # boundary ladder 2^LO .. 2^HI (23 exact doubles)
-_BOUNDS = [2.0 ** k for k in range(_LO, _HI + 1)]
-# repr() of a power of two is an EXACT decimal ('0.0009765625',
-# '4096.0') — both engines parse it back to the identical double.
-_BOUNDS_SQL = ", ".join(repr(b) for b in _BOUNDS)
 
 _NH_BUCKETS_CTE = f"""
     WITH tagged AS (
@@ -92,7 +70,7 @@ _NH_BUCKETS_CTE = f"""
                     WHEN value < 0 THEN 'neg'
                     ELSE 'zero' END AS kind,
                CASE WHEN value = 0 THEN NULL
-                    ELSE {_LO} + len(list_filter([{_BOUNDS_SQL}],
+                    ELSE {NH.LO} + len(list_filter([{NH.BOUNDS_SQL}],
                                                  b -> b < abs(value)))
                     END AS idx
         FROM events
@@ -112,10 +90,10 @@ _NH_BUCKETS_CTE = f"""
     SELECT event_type, kind, idx, n,
            CASE kind WHEN 'zero' THEN 0.0
                 WHEN 'pos' THEN pow(2.0, idx - 1)
-                ELSE CASE WHEN idx > {_HI} THEN '-inf'::DOUBLE
+                ELSE CASE WHEN idx > {NH.HI} THEN '-inf'::DOUBLE
                           ELSE -pow(2.0, idx) END END AS lower,
            CASE kind WHEN 'zero' THEN 0.0
-                WHEN 'pos' THEN CASE WHEN idx > {_HI} THEN 'inf'::DOUBLE
+                WHEN 'pos' THEN CASE WHEN idx > {NH.HI} THEN 'inf'::DOUBLE
                                      ELSE pow(2.0, idx) END
                 ELSE -pow(2.0, idx - 1) END AS upper
     FROM sparse
@@ -132,9 +110,7 @@ def promql_native_histogram_buckets(
     logs). Bucket assignment is a map-side literal-array filter inside
     codegen; ONE exchange on the sparse (series, kind, idx) key."""
     ev = load_table(spark, sf_dir, "events")
-    bounds = F.array(*[F.lit(b) for b in _BOUNDS])
-    absv = F.abs(F.col("value"))
-    idx = F.lit(_LO) + F.size(F.filter(bounds, lambda b: b < absv))
+    idx = NH.bucket_index(F.abs(F.col("value")))
     kind = (
         F.when(F.col("value") > 0, "pos")
         .when(F.col("value") < 0, "neg")
@@ -149,10 +125,10 @@ def promql_native_histogram_buckets(
         F.count(F.lit(1)).cast("long").alias("n")
     )
     inf = F.lit(float("inf"))
-    pos_upper = F.when(F.col("idx") > _HI, inf).otherwise(
+    pos_upper = F.when(F.col("idx") > NH.HI, inf).otherwise(
         F.pow(F.lit(2.0), F.col("idx"))
     )
-    neg_lower = F.when(F.col("idx") > _HI, -inf).otherwise(
+    neg_lower = F.when(F.col("idx") > NH.HI, -inf).otherwise(
         -F.pow(F.lit(2.0), F.col("idx"))
     )
     lower = (
@@ -187,7 +163,7 @@ def promql_native_histogram_buckets(
         FROM pos WHERE cum >= total * 0.9
     )
     SELECT event_type, total::BIGINT AS n_obs,
-           CASE WHEN idx > {_HI} THEN pow(2.0, {_HI})
+           CASE WHEN idx > {NH.HI} THEN pow(2.0, {NH.HI})
                 ELSE pow(2.0, idx - 1)
                      * pow(2.0, (total * 0.9 - (cum - n)) / n) END
                AS quantile_value
@@ -206,31 +182,13 @@ def promql_native_histogram_quantile(
     same guard as the classic entry's +Inf rule. The quantile runs
     entirely on the sparse bucket relation (≤ ~30 rows per series)."""
     ev = load_table(spark, sf_dir, "events")
-    bounds = F.array(*[F.lit(b) for b in _BOUNDS])
-    absv = F.abs(F.col("value"))
-    idx = F.lit(_LO) + F.size(F.filter(bounds, lambda b: b < absv))
     sparse = (
         ev.filter(F.col("value") > 0)
-        .select("event_type", idx.alias("idx"))
+        .select("event_type", NH.bucket_index(F.abs(F.col("value"))).alias("idx"))
         .groupBy("event_type", "idx")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    w_cum = W.partitionBy("event_type").orderBy("idx")
-    w_all = W.partitionBy("event_type")
-    pos = sparse.select(
-        "event_type", "idx", "n",
-        F.sum("n").over(w_cum).alias("cum"),
-        F.sum("n").over(w_all).alias("total"),
-    )
-    hit = (
-        pos.filter(F.col("cum") >= F.col("total") * 0.9)
-        .withColumn("rn", F.row_number().over(w_cum))
-        .filter(F.col("rn") == 1)
-    )
-    frac = (F.col("total") * 0.9 - (F.col("cum") - F.col("n"))) / F.col("n")
-    qv = F.when(F.col("idx") > _HI, F.pow(F.lit(2.0), F.lit(_HI))).otherwise(
-        F.pow(F.lit(2.0), F.col("idx") - 1) * F.pow(F.lit(2.0), frac)
-    )
+    hit, qv = NH.exp_quantile(sparse, ["event_type"], "n", 0.9)
     return hit.select(
         "event_type",
         F.col("total").cast("long").alias("n_obs"),
@@ -291,7 +249,7 @@ def promql_info_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
                CASE WHEN value > 0 THEN 1
                     WHEN value < 0 THEN -1 ELSE 0 END AS sgn,
                CASE WHEN value = 0 THEN NULL
-                    ELSE {_LO} + len(list_filter([{_BOUNDS_SQL}],
+                    ELSE {NH.LO} + len(list_filter([{NH.BOUNDS_SQL}],
                                                  b -> b < abs(value)))
                     END AS idx,
                round(value * 100)::BIGINT AS cents
@@ -301,17 +259,17 @@ def promql_info_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT event_type,
                count(*)::BIGINT AS n,
                sum(cents)::BIGINT AS s_cents,
-               coalesce(sum(CASE WHEN sgn <> 0 AND idx <= {_HI}
+               coalesce(sum(CASE WHEN sgn <> 0 AND idx <= {NH.HI}
                             THEN sgn * (1::BIGINT << (idx + 10))
                             ELSE 0 END), 0)::BIGINT AS a_sum,
-               coalesce(sum(CASE WHEN sgn <> 0 AND idx > {_HI}
+               coalesce(sum(CASE WHEN sgn <> 0 AND idx > {NH.HI}
                             THEN sgn ELSE 0 END), 0)::BIGINT AS b_sum,
                -- DuckDB sum(BIGINT) is HUGEINT: the 2^(2idx+20) terms
                -- reach 2^44 and their sum would overflow BIGINT at sf1
-               coalesce(sum(CASE WHEN sgn <> 0 AND idx <= {_HI}
+               coalesce(sum(CASE WHEN sgn <> 0 AND idx <= {NH.HI}
                             THEN (1::BIGINT << (2 * idx + 20))
                             ELSE 0 END), 0) AS c_sum,
-               coalesce(sum(CASE WHEN sgn <> 0 AND idx > {_HI}
+               coalesce(sum(CASE WHEN sgn <> 0 AND idx > {NH.HI}
                             THEN 1 ELSE 0 END), 0)::BIGINT AS d_sum
         FROM tagged GROUP BY event_type
     ),
@@ -359,9 +317,7 @@ def promql_native_histogram_stddev(
     (pure cancellation noise) floors to 0 under the same branch on both
     engines. One map-side bucket tag, ONE exchange on the series key."""
     ev = load_table(spark, sf_dir, "events")
-    bounds = F.array(*[F.lit(b) for b in _BOUNDS])
-    absv = F.abs(F.col("value"))
-    idx = F.lit(_LO) + F.size(F.filter(bounds, lambda b: b < absv))
+    idx = NH.bucket_index(F.abs(F.col("value")))
     sgn = (
         F.when(F.col("value") > 0, F.lit(1))
         .when(F.col("value") < 0, F.lit(-1))
@@ -381,7 +337,7 @@ def promql_native_histogram_stddev(
         F.coalesce(
             F.sum(
                 F.expr(
-                    f"CASE WHEN sgn <> 0 AND idx <= {_HI} THEN"
+                    f"CASE WHEN sgn <> 0 AND idx <= {NH.HI} THEN"
                     " sgn * shiftleft(1L, idx + 10) ELSE 0L END"
                 )
             ),
@@ -392,7 +348,7 @@ def promql_native_histogram_stddev(
         F.coalesce(
             F.sum(
                 F.expr(
-                    f"CASE WHEN sgn <> 0 AND idx > {_HI} THEN sgn"
+                    f"CASE WHEN sgn <> 0 AND idx > {NH.HI} THEN sgn"
                     " ELSE 0 END"
                 )
             ),
@@ -403,7 +359,7 @@ def promql_native_histogram_stddev(
         F.coalesce(
             F.sum(
                 F.expr(
-                    f"CASE WHEN sgn <> 0 AND idx <= {_HI} THEN"
+                    f"CASE WHEN sgn <> 0 AND idx <= {NH.HI} THEN"
                     " CAST(shiftleft(1L, 2 * idx + 20) AS DECIMAL(38,0))"
                     " ELSE CAST(0 AS DECIMAL(38,0)) END"
                 )
@@ -413,7 +369,7 @@ def promql_native_histogram_stddev(
         F.coalesce(
             F.sum(
                 F.expr(
-                    f"CASE WHEN sgn <> 0 AND idx > {_HI} THEN 1"
+                    f"CASE WHEN sgn <> 0 AND idx > {NH.HI} THEN 1"
                     " ELSE 0 END"
                 )
             ),
@@ -446,7 +402,7 @@ def promql_native_histogram_stddev(
 _NH_RATE_CTE = f"""
     WITH ev AS (
         SELECT event_type, date_trunc('minute', ts) AS m,
-               {_LO} + len(list_filter([{_BOUNDS_SQL}], b -> b < value))
+               {NH.bucket_index_sql('value')}
                    AS idx
         FROM events WHERE value > 0
     ),
@@ -456,7 +412,7 @@ _NH_RATE_CTE = f"""
     ),
     dense AS (
         SELECT s.event_type, s.m, b.idx,
-               epoch_us(s.m) // {_EPOCH_US} AS epoch,
+               epoch_us(s.m) // {NH.EPOCH_US} AS epoch,
                coalesce(k.cnt, 0) AS cnt
         FROM (SELECT DISTINCT event_type, m FROM ev) s
         JOIN (SELECT DISTINCT event_type, idx FROM ev) b USING (event_type)
@@ -511,262 +467,6 @@ _NH_RATE_CTE = f"""
 """
 
 
-def _nh_window_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared substrate for the native-histogram range functions: per
-    (series, hour window, bucket idx) the reset-corrected exact-integer
-    increase plus the window's extrapolation inputs
-    (n, si_us, ds0, de). See promql_native_histogram_rate's docstring
-    for the full semantics and scale analysis; the SQL twin is
-    _NH_RATE_CTE's `per_bucket` relation."""
-    per_bucket, _scrapes = _nh_substrate(spark, sf_dir)
-    return per_bucket
-
-
-def _nh_series_kernel(pdf):
-    """Per-series window-delta kernel over the pinned ``bkt`` grid —
-    one Arrow batch in, the series' full (hour window × bucket)
-    ``per_bucket`` grid out, all in exact int64 (r18, VERDICT r17 #5).
-
-    Implements the TELESCOPED delta (see the derivation comment in
-    :func:`_nh_substrate`): per (hour window, bucket)
-    ``delta_n = hsum − fcnt − ctot`` with hsum the hour's count sum,
-    fcnt the count at the window's first scrape, and ctot the sum of
-    prev-epoch totals over the window's UNFLAGGED epoch boundaries
-    (flag = any bucket's count at the boundary scrape below its
-    prev-epoch total, i.e. DetectReset). Every intermediate is an
-    integer; ds0/de are float64 conversions of exact µs integers
-    (< 2^53), so the output is bit-identical to the r17 join-web form —
-    gated row-exact (OPTIMIZATION_r18.md §5) and by the golden reset
-    fixtures. One series' state is its scrape grid × ≤ ~25
-    buckets, the same per-series bound the join web carried.
-
-    Assumes a UTC session timezone. Arrow hands ``m`` over as naive
-    wall-clock times in the session timezone, and the kernel reads them
-    as unix microseconds: the 90-minute epoch boundaries
-    (``m // _EPOCH_US``) and the hour windows are the unix-time ones
-    only under UTC. :func:`_nh_substrate` asserts it at build."""
-    import collections
-
-    et = pdf["event_type"].iloc[0]
-    m = pdf["m"].to_numpy("datetime64[us]").astype("int64")
-    idx = pdf["idx"].to_numpy("int64")
-    cnt = pdf["cnt"].to_numpy("int64")
-    HOUR = 3_600_000_000
-    # scrape grid: unique minutes, sorted
-    sm = _np.unique(m)
-    sep = sm // _EPOCH_US
-    sh = (sm // HOUR) * HOUR
-    # window stats per hour over scrapes (n ≥ 2 keeps a rate window)
-    uh, hstart = _np.unique(sh, return_index=True)
-    n = _np.diff(_np.append(hstart, sm.size))
-    first_m = sm[hstart]
-    last_m = sm[_np.append(hstart[1:], sm.size) - 1]
-    keep = n >= 2
-    uh, n, first_m, last_m = uh[keep], n[keep], first_m[keep], last_m[keep]
-    # epoch-boundary scrapes: epoch differs from the previous scrape's
-    is_bnd = _np.zeros(sm.size, dtype=bool)
-    is_bnd[1:] = sep[1:] != sep[:-1]
-    prev_ep = _np.empty(sm.size, dtype="int64")
-    prev_ep[1:] = sep[:-1]
-    prev_ep[0] = -1
-    ep = m // _EPOCH_US
-    buckets = _np.unique(idx)
-    # prev-epoch totals and boundary-scrape counts (grid-sized maps)
-    tot = collections.defaultdict(int)
-    for i, e, c in zip(idx, ep, cnt):
-        tot[(i, e)] += c
-    at = {}
-    for mm, i, c in zip(m, idx, cnt):
-        at[(mm, i)] = c
-    bnd_m = sm[is_bnd]
-    bnd_pe = prev_ep[is_bnd]
-    # series-level reset flag per boundary: ANY bucket's count at the
-    # boundary below its prev-epoch total (absent rows count as 0,
-    # matching the join web's coalesce(cnt, 0) / coalesce(tot, 0))
-    flagged = {}
-    for mm, pe in zip(bnd_m, bnd_pe):
-        f = 0
-        for b in buckets:
-            if at.get((mm, b), 0) < tot.get((b, pe), 0):
-                f = 1
-                break
-        flagged[mm] = f
-    # accumulate hsum / fcnt / ctot on the (hour, bucket) grid
-    hidx = {h: k for k, h in enumerate(uh)}
-    nb = buckets.size
-    bpos = {b: k for k, b in enumerate(buckets)}
-    hsum = _np.zeros((uh.size, nb), dtype="int64")
-    fcnt = _np.zeros((uh.size, nb), dtype="int64")
-    ctot = _np.zeros((uh.size, nb), dtype="int64")
-    fm = {h: f for h, f in zip(uh, first_m)}
-    for mm, i, c in zip(m, idx, cnt):
-        h = (mm // HOUR) * HOUR
-        k = hidx.get(h)
-        if k is None:
-            continue
-        hsum[k, bpos[i]] += c
-        if mm == fm[h]:
-            fcnt[k, bpos[i]] += c
-    for mm, pe in zip(bnd_m, bnd_pe):
-        if flagged[mm]:
-            continue
-        h = (mm // HOUR) * HOUR
-        k = hidx.get(h)
-        if k is None or mm == fm[h]:
-            continue
-        for b in buckets:
-            ctot[k, bpos[b]] += tot.get((b, pe), 0)
-    hh = _np.repeat(uh, nb)
-    bb = _np.tile(buckets, uh.size)
-    return _pd.DataFrame(
-        {
-            "event_type": et,
-            "hour": _pd.Series(hh).astype("datetime64[us]"),
-            "idx": bb,
-            "n": _np.repeat(n, nb),
-            "si_us": _np.repeat(last_m - first_m, nb),
-            "ds0": _np.repeat(first_m - uh, nb).astype("float64"),
-            "de": _np.repeat(uh + HOUR - last_m, nb).astype("float64"),
-            "delta_n": (hsum - fcnt - ctot).ravel(),
-        }
-    )
-
-
-def _nh_substrate(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(per_bucket, scrapes) — the window-delta relation plus the
-    pinned scrape grid it was built from, so composed entries (the
-    fleet aggregate) can derive series-level facts without a second
-    pass over the substrate."""
-    ev = load_table(spark, sf_dir, "events").filter(F.col("value") > 0)
-    tz = spark.conf.get("spark.sql.session.timeZone")
-    if tz != "UTC":
-        raise RuntimeError(
-            "the native-histogram series kernel needs "
-            f"spark.sql.session.timeZone=UTC, got {tz!r}: in another "
-            "timezone its epoch boundaries and hour windows would shift"
-        )
-    bounds = F.array(*[F.lit(b) for b in _BOUNDS])
-    idx = F.lit(_LO) + F.size(F.filter(bounds, lambda b: b < F.col("value")))
-    obs = ev.select(
-        "event_type",
-        F.date_trunc("minute", "ts").alias("m"),
-        idx.alias("idx"),
-    )
-    from numalogic_prometheus_spark.operators.dedup import truncate_lineage
-
-    bkt = obs.groupBy("event_type", "m", "idx").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    # Pin the bucketed relation ONCE (r17 optimization, guide §2.3
-    # "shuffle keys and metadata instead of payloads" + §2.4): every
-    # downstream consumer derives from bkt, and without the cut each
-    # would re-scan the raw events (the r16 plan carried FOUR full
-    # scans; deriving lazily does not help because Catalyst collapses
-    # aggregate-over-aggregate back into scans). bkt is the scrape-grid
-    # relation (~96 k rows at sf0.1, grid-sized at 100 TB — the raw
-    # samples are aggregated away), so the materialization is tiny
-    # next to the scans it replaces.
-    bkt = truncate_lineage(bkt)
-    scrapes = bkt.select("event_type", "m").distinct()
-
-    # The reset-corrected delta TELESCOPES (r17 rewrite #2, guide §1.1
-    # first-principles + §2.3). Summing the per-step increments over
-    # the hour's consecutive scrapes:
-    #   same-epoch step i:       c(i) − c(i−1)            = cnt(i)
-    #   boundary step, flagged:  c(i) − c(i−1) + prev_c(i) = cnt(i)
-    #     (i−1 is the prev epoch's LAST scrape, so c(i−1) = that
-    #      epoch's total = prev_c(i), and DetectReset adds it back)
-    #   boundary step, unflagged: c(i) − c(i−1) = cnt(i) − tot(e'(i))
-    # hence, per (series, hour window, bucket):
-    #   delta_n = Σ_{scrapes m ∈ hour, m > first_m} cnt(m)
-    #           − Σ_{unflagged boundary m ∈ hour, m > first_m} tot(e'(m))
-    # The r17 form evaluated those terms as ~6 aggregate branches over
-    # bkt stitched by ~22 grid-sized broadcast joins; at any scale each
-    # stage is tiny, so the entry cost was pure STAGE COUNT (42 reads
-    # of the pinned relation). r18 (VERDICT r17 #5, guide §2.3
-    # aggregate-before-shuffle + §4.2): ONE applyInPandas pass per
-    # series over the pinned grid evaluates the whole
-    # boundary/epoch/window machinery vectorized in exact int64 —
-    # 2 exchanges total (the (et,m,idx) aggregate feeding the pin and
-    # the per-series regroup). Output gated row-exact against the
-    # join-web form (OPTIMIZATION_r18.md §5: nonzero-delta rows
-    # and all entry outputs identical; 2.0 → 1.2 s). Per-series state
-    # is the series' own scrape grid × ≤ ~25 buckets; parallelism is
-    # the series count, the natural 100 TB partitioning. Semantics
-    # stay pinned by the shared DuckDB oracle (which still evaluates
-    # the windowed form), the golden reset fixtures, and the streaming
-    # twin (which keeps _nh_deltas_from_cum on the stateful cum
-    # relation, unchanged).
-    per_bucket = bkt.groupBy("event_type").applyInPandas(
-        _nh_series_kernel,
-        "event_type string, hour timestamp, idx long, n long, "
-        "si_us long, ds0 double, de double, delta_n long",
-    )
-    return per_bucket, scrapes
-
-
-def _nh_deltas_from_cum(
-    cum: DataFrame, scrapes: DataFrame | None = None
-) -> DataFrame:
-    """Hourly per-bucket deltas from a dense cumulative relation
-    ``(event_type, m, idx, c, prev_c, reset)`` — the second half of
-    :func:`_nh_window_deltas`, split out so the STREAMING twin
-    (plans/streaming2.stream_native_histogram_rate) can feed it the
-    stateful operator's appended rows instead of the batch windowing.
-    ``scrapes`` (distinct ``(event_type, m)``) may be passed to reuse an
-    existing subtree; by default it derives from ``cum`` (every scrape
-    emits every known bucket, so the distinct is identical)."""
-    if scrapes is None:
-        scrapes = cum.select("event_type", "m").distinct()
-    # Window stats come off the tiny distinct-scrape relation (series ×
-    # scrape-minutes) — broadcast back onto the dense relation.
-    win = (
-        scrapes.groupBy("event_type", F.date_trunc("hour", "m").alias("hour"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.min("m").alias("first_m"),
-            F.max("m").alias("last_m"),
-        )
-        .filter(F.col("n") >= 2)
-    )
-    contrib = cum.withColumn("hour", F.date_trunc("hour", "m")).join(
-        F.broadcast(win), ["event_type", "hour"]
-    )
-    return contrib.groupBy(
-        "event_type",
-        "hour",
-        "idx",
-        "n",
-        (epoch_us("last_m") - epoch_us("first_m")).alias("si_us"),
-        (epoch_us("first_m") - epoch_us("hour")).cast("double").alias("ds0"),
-        (epoch_us("hour") + F.lit(3_600_000_000) - epoch_us("last_m"))
-        .cast("double")
-        .alias("de"),
-    ).agg(
-        (
-            F.sum(F.when(F.col("m") == F.col("last_m"), F.col("c")).otherwise(F.lit(0)))
-            - F.sum(
-                F.when(F.col("m") == F.col("first_m"), F.col("c")).otherwise(F.lit(0))
-            )
-            + F.sum(
-                F.when(
-                    (F.col("m") > F.col("first_m")) & (F.col("reset") == 1),
-                    # prev_c is NULL on a bucket's FIRST streamed
-                    # emission; when that coincides with a series-level
-                    # reset flag the correction mass is 0 (no previous
-                    # cumulative to add back) — without the coalesce the
-                    # NULL poisons the group sum and delta_n for the new
-                    # bucket silently drops (hypothesis split-invariance
-                    # find, r17). Batch-dense input never has NULL here.
-                    F.coalesce(F.col("prev_c"), F.lit(0)),
-                ).otherwise(F.lit(0))
-            )
-        ).alias("delta_n")
-    )
-
-
 @register(
     "promql_native_histogram_rate",
     oracle=_NH_RATE_CTE
@@ -784,7 +484,7 @@ def _nh_deltas_from_cum(
 def promql_native_histogram_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`rate(native_histogram[1h])` / `increase` over the schema-0
     sparse-bucket substrate: bucket-wise reset-corrected increase with
-    Prometheus's boundary extrapolation (VERDICT r9 #3; promql/functions.go
+    Prometheus's boundary extrapolation (promql/functions.go
     histogramRate composed with extrapolatedRate).
 
     The synthetic histogram COUNTER: scrapes are the minutes with ≥1
@@ -810,36 +510,12 @@ def promql_native_histogram_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: delta_n is an exact BIGINT; the rate is ONE identical
     IEEE chain (delta · ((si + ds_sub + de_sub)/si) / 3600) over
     integer-derived doubles — bit-identical cross-engine, unrounded.
-    Scale: the dense (scrape × bucket) relation is series-scrapes ×
-    ≤~25 buckets, NOT raw events; both window passes share one exchange
-    on (series, idx) (the epoch-partitioned cumsum's clustering is
-    satisfied by the subset hash — no second shuffle), then one hash
-    aggregate per grain. 100 TB cost is O(scrape-grid), the same shape
-    Prometheus's own TSDB pays."""
-    return _nh_rate_finalize(_nh_window_deltas(spark, sf_dir))
-
-
-def _nh_rate_finalize(per_bucket: DataFrame) -> DataFrame:
-    """extrapolatedRate's boundary arithmetic over the per-bucket delta
-    relation — shared verbatim by the batch entry above and its
-    streaming twin so the two stay one IEEE operand sequence."""
-    si = F.col("si_us").cast("double")
-    avg_d = si / (F.col("n") - 1).cast("double")
-    thr = avg_d * 1.1
-    ds_sub = F.when(F.col("ds0") >= thr, avg_d / 2.0).otherwise(F.col("ds0"))
-    de_sub = F.when(F.col("de") >= thr, avg_d / 2.0).otherwise(F.col("de"))
-    return per_bucket.filter(F.col("delta_n") != 0).select(
-        "event_type",
-        "hour",
-        "idx",
-        F.col("n").alias("n_scrapes"),
-        F.col("delta_n").cast("long").alias("delta_n"),
-        (
-            F.col("delta_n").cast("double")
-            * ((si + ds_sub + de_sub) / si)
-            / F.lit(3600.0)
-        ).alias("rate_per_sec"),
-    )
+    Scale: the pinned count grid is series-scrapes × ≤~25 buckets, NOT
+    raw events, and the per-series kernel (NH.window_deltas) reads it
+    in one pass over two exchanges. 100 TB cost is O(scrape-grid), the
+    same shape Prometheus's own TSDB pays."""
+    per_bucket, _ = NH.window_deltas(load_table(spark, sf_dir, "events"))
+    return NH.rate_finalize(per_bucket)
 
 
 @register(
@@ -888,7 +564,7 @@ def promql_timestamp_function(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM q WHERE cum >= total * 0.9
     )
     SELECT event_type, hour, total::BIGINT AS n_inc,
-           CASE WHEN idx > {_HI} THEN pow(2.0, {_HI})
+           CASE WHEN idx > {NH.HI} THEN pow(2.0, {NH.HI})
                 ELSE pow(2.0, idx - 1)
                      * pow(2.0, (total * 0.9 - (cum - delta_n)) / delta_n)
                 END AS p90_rate
@@ -904,7 +580,7 @@ def promql_native_histogram_rate_quantile(
     window by the same positive factor, the quantile of the rate
     histogram equals the quantile of the reset-corrected integer bucket
     increases — so the composition drops the factor entirely and the
-    cumulative locate runs on exact BIGINTs (`_nh_window_deltas`),
+    cumulative locate runs on exact BIGINTs (`NH.window_deltas`),
     with the v2.50+ exponential within-bucket interpolation
     lower·2^frac as the only transcendental (absorbed by the engine
     1e-6 canonicalization, same as promql_native_histogram_quantile).
@@ -913,28 +589,13 @@ def promql_native_histogram_rate_quantile(
     quantile), matching Prometheus returning no sample. Overflow-bucket
     hits clamp to the largest finite boundary. One extra window pass
     over the ≤~25-buckets-per-window delta relation — the expensive
-    part (dense scrape×bucket cums) is shared with the rate entry."""
-    per_bucket = _nh_window_deltas(spark, sf_dir)
-    w_cum = W.partitionBy("event_type", "hour").orderBy("idx")
-    w_all = W.partitionBy("event_type", "hour")
-    q = per_bucket.filter(F.col("delta_n") > 0).select(
-        "event_type",
-        "hour",
-        "idx",
+    part (the window-delta substrate) is the rate entry's."""
+    per_bucket, _ = NH.window_deltas(load_table(spark, sf_dir, "events"))
+    hit, qv = NH.exp_quantile(
+        per_bucket.filter(F.col("delta_n") > 0),
+        ["event_type", "hour"],
         "delta_n",
-        F.sum("delta_n").over(w_cum).alias("cum"),
-        F.sum("delta_n").over(w_all).alias("total"),
-    )
-    hit = (
-        q.filter(F.col("cum") >= F.col("total") * 0.9)
-        .withColumn("rn", F.row_number().over(w_cum))
-        .filter(F.col("rn") == 1)
-    )
-    frac = (F.col("total") * 0.9 - (F.col("cum") - F.col("delta_n"))) / F.col(
-        "delta_n"
-    )
-    qv = F.when(F.col("idx") > _HI, F.pow(F.lit(2.0), F.lit(_HI))).otherwise(
-        F.pow(F.lit(2.0), F.col("idx") - 1) * F.pow(F.lit(2.0), frac)
+        0.9,
     )
     return hit.select(
         "event_type",
@@ -944,26 +605,12 @@ def promql_native_histogram_rate_quantile(
     )
 
 
-# histogram_fraction over NATIVE buckets: the fraction bounds sit
-# strictly inside schema-0 buckets, and at schema 0 the exponential
-# within-bucket interpolation collapses to EXACT arithmetic —
-# CDF(x) inside bucket i = cum_before + n_i·(log2(x) − (i−1)) — where
-# log2(x) is a PLAN-TIME literal (repr'd below so both engines parse
-# the identical double). No runtime transcendental at all.
-import math as _math
-
-_FRAC_LO, _FRAC_HI_B = 0.7, 48.0  # inside buckets (0.5,1] i=0, (32,64] i=6
-_LOG2_LO = repr(_math.log2(_FRAC_LO))
-_LOG2_HI = repr(_math.log2(_FRAC_HI_B))
-_IX_LO, _IX_HI_B = 0, 6
-
-
 @register(
     "promql_native_histogram_fraction",
     oracle=f"""
     WITH tagged AS (
         SELECT event_type,
-               {_LO} + len(list_filter([{_BOUNDS_SQL}], b -> b < value))
+               {NH.bucket_index_sql('value')}
                    AS idx
         FROM events WHERE value > 0
     ),
@@ -974,19 +621,19 @@ _IX_LO, _IX_HI_B = 0, 6
     , agg AS (
         SELECT event_type,
                sum(n)::BIGINT AS n_obs,
-               coalesce(sum(CASE WHEN idx < {_IX_HI_B} THEN n END), 0)::BIGINT
+               coalesce(sum(CASE WHEN idx < {NH.IX_HI} THEN n END), 0)::BIGINT
                    AS cb_hi,
-               coalesce(sum(CASE WHEN idx = {_IX_HI_B} THEN n END), 0)::BIGINT
+               coalesce(sum(CASE WHEN idx = {NH.IX_HI} THEN n END), 0)::BIGINT
                    AS na_hi,
-               coalesce(sum(CASE WHEN idx < {_IX_LO} THEN n END), 0)::BIGINT
+               coalesce(sum(CASE WHEN idx < {NH.IX_LO} THEN n END), 0)::BIGINT
                    AS cb_lo,
-               coalesce(sum(CASE WHEN idx = {_IX_LO} THEN n END), 0)::BIGINT
+               coalesce(sum(CASE WHEN idx = {NH.IX_LO} THEN n END), 0)::BIGINT
                    AS na_lo
         FROM sparse GROUP BY event_type
     )
     SELECT event_type, n_obs,
-           ((cb_hi + na_hi * ({_LOG2_HI} - {_IX_HI_B - 1}))
-            - (cb_lo + na_lo * ({_LOG2_LO} - {_IX_LO - 1})))
+           ((cb_hi + na_hi * ({NH.LOG2_HI} - {NH.IX_HI - 1}))
+            - (cb_lo + na_lo * ({NH.LOG2_LO} - {NH.IX_LO - 1})))
            / n_obs::DOUBLE AS fraction
     FROM agg
     """,
@@ -1014,40 +661,13 @@ def promql_native_histogram_fraction(
     classic entry's clamp. One conditional aggregation over the
     map-side bucket tags, ONE exchange on the series key."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("value") > 0)
-    bounds = F.array(*[F.lit(b) for b in _BOUNDS])
-    idx = F.lit(_LO) + F.size(F.filter(bounds, lambda b: b < F.col("value")))
     sparse = (
-        ev.select("event_type", idx.alias("idx"))
+        ev.select("event_type", NH.bucket_index(F.col("value")).alias("idx"))
         .groupBy("event_type", "idx")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-
-    def _exact(cond) -> F.Column:
-        # exact BIGINT partial sum (accumulation-order-free)
-        return F.coalesce(F.sum(F.when(cond, F.col("n"))), F.lit(0)).cast(
-            "long"
-        )
-
-    agg = sparse.groupBy("event_type").agg(
-        F.sum("n").cast("long").alias("n_obs"),
-        _exact(F.col("idx") < _IX_HI_B).alias("cb_hi"),
-        _exact(F.col("idx") == _IX_HI_B).alias("na_hi"),
-        _exact(F.col("idx") < _IX_LO).alias("cb_lo"),
-        _exact(F.col("idx") == _IX_LO).alias("na_lo"),
-    )
-    # the ONLY float work: two literal log2 coefficients applied to
-    # exact integers in one shared operand order
-    cdf_hi = F.col("cb_hi") + F.col("na_hi") * (
-        F.lit(float(_LOG2_HI)) - F.lit(_IX_HI_B - 1)
-    )
-    cdf_lo = F.col("cb_lo") + F.col("na_lo") * (
-        F.lit(float(_LOG2_LO)) - F.lit(_IX_LO - 1)
-    )
-    return agg.select(
-        "event_type",
-        "n_obs",
-        ((cdf_hi - cdf_lo) / F.col("n_obs").cast("double")).alias("fraction"),
-    )
+    agg, fraction = NH.exp_fraction(sparse, ["event_type"], "n", "n_obs")
+    return agg.select("event_type", "n_obs", fraction.alias("fraction"))
 
 
 @register(
@@ -1057,20 +677,20 @@ def promql_native_histogram_fraction(
     , frac_agg AS (
         SELECT event_type, hour,
                sum(delta_n)::BIGINT AS n_inc,
-               coalesce(sum(CASE WHEN idx < {_IX_HI_B} THEN delta_n END),
+               coalesce(sum(CASE WHEN idx < {NH.IX_HI} THEN delta_n END),
                         0)::BIGINT AS cb_hi,
-               coalesce(sum(CASE WHEN idx = {_IX_HI_B} THEN delta_n END),
+               coalesce(sum(CASE WHEN idx = {NH.IX_HI} THEN delta_n END),
                         0)::BIGINT AS na_hi,
-               coalesce(sum(CASE WHEN idx < {_IX_LO} THEN delta_n END),
+               coalesce(sum(CASE WHEN idx < {NH.IX_LO} THEN delta_n END),
                         0)::BIGINT AS cb_lo,
-               coalesce(sum(CASE WHEN idx = {_IX_LO} THEN delta_n END),
+               coalesce(sum(CASE WHEN idx = {NH.IX_LO} THEN delta_n END),
                         0)::BIGINT AS na_lo
         FROM per_bucket GROUP BY 1, 2
         HAVING sum(delta_n) > 0
     )
     SELECT event_type, hour, n_inc,
-           ((cb_hi + na_hi * ({_LOG2_HI} - {_IX_HI_B - 1}))
-            - (cb_lo + na_lo * ({_LOG2_LO} - {_IX_LO - 1})))
+           ((cb_hi + na_hi * ({NH.LOG2_HI} - {NH.IX_HI - 1}))
+            - (cb_lo + na_lo * ({NH.LOG2_LO} - {NH.IX_LO - 1})))
            / n_inc::DOUBLE AS fraction
     FROM frac_agg
     """,
@@ -1081,12 +701,12 @@ def promql_native_histogram_fraction_rate(
     """`histogram_fraction(0.7, 48, rate(native_histogram[1h]))` — the
     SLO BURN query (what share of the last hour's requests landed in
     the good-latency band), completing the rate-composition matrix:
-    rate × {{quantile (registered r10), fraction (this entry)}}.
+    rate × {quantile, fraction}.
 
     Exactness composes both parents' arguments: extrapolatedRate scales
     every bucket of a window by the same positive factor, so the factor
     cancels in the fraction and the CDF arithmetic runs on the
-    reset-corrected exact-BIGINT bucket increases (`_nh_window_deltas`);
+    reset-corrected exact-BIGINT bucket increases (`NH.window_deltas`);
     the v2.50+ exponential within-bucket interpolation collapses at
     schema 0 to two PLAN-TIME log2 literals (repr-pinned, identical in
     both engines) — exact integers through one shared IEEE chain,
@@ -1096,39 +716,14 @@ def promql_native_histogram_fraction_rate(
     contributes n_i = 0 and the CDF falls back to the partial sum
     below it (the sparse-representation clamp, as in the instant
     fraction entry above). Cost: one hash aggregate over the shared
-    ≤~25-buckets-per-window delta relation — the dense scrape×bucket
-    substrate (the expensive part) is shared with the rate and
-    quantile∘rate entries, ONE exchange on (series, idx)."""
-    per_bucket = _nh_window_deltas(spark, sf_dir)
-
-    def _exact(cond) -> F.Column:
-        # exact BIGINT partial sums (accumulation-order-free)
-        return F.coalesce(
-            F.sum(F.when(cond, F.col("delta_n"))), F.lit(0)
-        ).cast("long")
-
-    agg = (
-        per_bucket.groupBy("event_type", "hour")
-        .agg(
-            F.sum("delta_n").cast("long").alias("n_inc"),
-            _exact(F.col("idx") < _IX_HI_B).alias("cb_hi"),
-            _exact(F.col("idx") == _IX_HI_B).alias("na_hi"),
-            _exact(F.col("idx") < _IX_LO).alias("cb_lo"),
-            _exact(F.col("idx") == _IX_LO).alias("na_lo"),
-        )
-        .filter(F.col("n_inc") > 0)
+    ≤~25-buckets-per-window delta relation — the substrate (the
+    expensive part) is the rate entry's."""
+    per_bucket, _ = NH.window_deltas(load_table(spark, sf_dir, "events"))
+    agg, fraction = NH.exp_fraction(
+        per_bucket, ["event_type", "hour"], "delta_n", "n_inc"
     )
-    cdf_hi = F.col("cb_hi") + F.col("na_hi") * (
-        F.lit(float(_LOG2_HI)) - F.lit(_IX_HI_B - 1)
-    )
-    cdf_lo = F.col("cb_lo") + F.col("na_lo") * (
-        F.lit(float(_LOG2_LO)) - F.lit(_IX_LO - 1)
-    )
-    return agg.select(
-        "event_type",
-        "hour",
-        "n_inc",
-        ((cdf_hi - cdf_lo) / F.col("n_inc").cast("double")).alias("fraction"),
+    return agg.filter(F.col("n_inc") > 0).select(
+        "event_type", "hour", "n_inc", fraction.alias("fraction")
     )
 
 
@@ -1154,7 +749,7 @@ def promql_native_histogram_fraction_rate(
     SELECT hour, total::BIGINT AS n_inc,
            (SELECT count(DISTINCT event_type)
             FROM per_bucket)::BIGINT AS n_series,
-           CASE WHEN idx > {_HI} THEN pow(2.0, {_HI})
+           CASE WHEN idx > {NH.HI} THEN pow(2.0, {NH.HI})
                 ELSE pow(2.0, idx - 1)
                      * pow(2.0, (total * 0.9 - (cum - delta_n)) / delta_n)
                 END AS p90_rate
@@ -1193,16 +788,12 @@ def promql_native_histogram_rate_quantile_agg(
     input, grid-sized output; the quantile's two window passes then
     run over ≤~25 rows per hour. The expensive dense substrate is
     shared with the whole rate family."""
-    per_bucket, scrapes = _nh_substrate(spark, sf_dir)
-    # fleet size as a 1-row broadcast, NOT a driver-side .count() —
-    # the whole query stays one lazy Catalyst plan. r17 optimization
-    # (guide §2.3 "don't compute things you throw away"): the count
-    # used to aggregate over per_bucket itself, which duplicated the
-    # ENTIRE windowed substrate as a second plan branch (~1.3 s at
-    # sf0.1). distinct series of per_bucket == distinct series among
-    # hour windows with >= 2 scrapes (every win row joins >= 1 cum row
-    # — win derives from that series' own scrapes), so the count runs
-    # on the pinned scrape grid instead.
+    per_bucket, scrapes = NH.window_deltas(load_table(spark, sf_dir, "events"))
+    # Fleet size as a 1-row broadcast, NOT a driver-side .count(), so
+    # the whole query stays one lazy Catalyst plan; and off the pinned
+    # scrape grid, not per_bucket, so the windowed substrate is not
+    # evaluated twice. The two agree: per_bucket's series are exactly
+    # those with an hour window of >= 2 scrapes.
     n_series = (
         scrapes.groupBy("event_type", F.date_trunc("hour", "m").alias("hour"))
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1212,25 +803,8 @@ def promql_native_histogram_rate_quantile_agg(
     fleet = per_bucket.groupBy("hour", "idx").agg(
         F.sum("delta_n").cast("long").alias("delta_n")
     )
-    w_cum = W.partitionBy("hour").orderBy("idx")
-    w_all = W.partitionBy("hour")
-    q = fleet.filter(F.col("delta_n") > 0).select(
-        "hour",
-        "idx",
-        "delta_n",
-        F.sum("delta_n").over(w_cum).alias("cum"),
-        F.sum("delta_n").over(w_all).alias("total"),
-    )
-    hit = (
-        q.filter(F.col("cum") >= F.col("total") * 0.9)
-        .withColumn("rn", F.row_number().over(w_cum))
-        .filter(F.col("rn") == 1)
-    )
-    frac = (F.col("total") * 0.9 - (F.col("cum") - F.col("delta_n"))) / F.col(
-        "delta_n"
-    )
-    qv = F.when(F.col("idx") > _HI, F.pow(F.lit(2.0), F.lit(_HI))).otherwise(
-        F.pow(F.lit(2.0), F.col("idx") - 1) * F.pow(F.lit(2.0), frac)
+    hit, qv = NH.exp_quantile(
+        fleet.filter(F.col("delta_n") > 0), ["hour"], "delta_n", 0.9
     )
     return hit.crossJoin(F.broadcast(n_series)).select(
         "hour",

@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from numalogic_prometheus_spark.functions.timeutil import epoch_us
+from numalogic_prometheus_spark.operators.promql import instant_vector_cents
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.sources.tables import load_table
 
@@ -76,16 +77,6 @@ _LATEST_CTE = """
         ) WHERE rn = 1
     )
 """
-
-
-def _latest_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Instant vector: latest sample per (event_type, user_id), exact
-    integer cents. One partial aggregation, one exchange."""
-    ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
-    return ev.groupBy("event_type", "user_id").agg(
-        F.max_by(cents, F.struct("ts", "event_id")).alias("cents")
-    )
 
 
 @register(
@@ -118,7 +109,7 @@ def promql_math_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     inputs emit NULL on BOTH engines (module docstring: DuckDB raises
     where PromQL yields NaN). Plan: one partial aggregation to the
     series relation, then pure codegen maps — no further exchange."""
-    s = _latest_series(spark, sf_dir)
+    s = instant_vector_cents(load_table(spark, sf_dir, "events"))
     c = F.col("cents")
     v = c / 100.0
     pi = F.lit(3.141592653589793)
@@ -166,7 +157,7 @@ def promql_comparison_bool(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sum_filtered aggregates the survivors). All comparisons run on
     exact integer cents (3000 = 30.00): no cross-engine tie is
     possible. Two partial aggregations, each with map-side combine."""
-    s = _latest_series(spark, sf_dir)
+    s = instant_vector_cents(load_table(spark, sf_dir, "events"))
     c = F.col("cents")
     one = lambda cond: F.sum(F.when(cond, 1).otherwise(0)).cast("long")  # noqa: E731
     return s.groupBy("event_type").agg(
@@ -206,7 +197,7 @@ def promql_scalar_binop(spark: SparkSession, sf_dir: str) -> DataFrame:
     — Spark broadcasts it (BroadcastNestedLoopJoin over a single row;
     bounded by construction, test_plan_shape pins crossJoin
     boundedness); the fact side never moves."""
-    s = _latest_series(spark, sf_dir)
+    s = instant_vector_cents(load_table(spark, sf_dir, "events"))
     scalar = s.agg(
         (F.sum("cents") / F.count(F.lit(1)) / 100.0).alias("mean_v")
     )

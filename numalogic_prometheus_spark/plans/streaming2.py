@@ -158,23 +158,19 @@ def stream_counter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ROUND 11 — streaming native-histogram rate (VERDICT r10 #4): the
-# bucket-grain counter chained across micro-batches, the streaming twin
-# of plans/promql7.promql_native_histogram_rate. Rows-only BY NATURE:
-# the stateful operator's cross-batch bucket bookkeeping has no DuckDB
-# twin — correctness is pinned instead by an EXACT foreachBatch-style
-# parity test against the batch entry on the same replayed testdata
-# plus a kill/restart determinism test
-# (tests/test_streaming_nh_rate.py), the incremental-ANN/dedup twin
-# protocol.
+# Streaming native-histogram rate: the bucket-grain counter chained
+# across micro-batches, the streaming twin of
+# plans/promql7.promql_native_histogram_rate. Rows-only BY NATURE: the
+# stateful operator's cross-batch bucket bookkeeping has no DuckDB twin.
+# The twin derives the window deltas from cumulative rows
+# (NH.deltas_from_cum), the batch entry from the count grid
+# (NH.window_deltas); their row equality is pinned exactly by
+# tests/test_streaming_nh_rate.py (parity, straddled minutes,
+# kill/restart) and tests/test_nh_stream_split_property.py (any
+# micro-batch split).
 # ---------------------------------------------------------------------------
 
-from numalogic_prometheus_spark.plans.promql7 import (  # noqa: E402
-    _BOUNDS,
-    _LO,
-    _nh_deltas_from_cum,
-    _nh_rate_finalize,
-)
+from numalogic_prometheus_spark.operators import native_histogram as NH  # noqa: E402
 from numalogic_prometheus_spark.streaming.nh_rate import (  # noqa: E402
     latest_emissions,
     stateful_nh_bucket_cums,
@@ -192,28 +188,21 @@ def stream_native_histogram_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense per-scrape bucket rows with reset flags and a seq ordinal; a
     micro-batch boundary inside a scrape minute re-emits the completed
     minute, `latest_emissions` keeps the max-seq row per (series,
-    minute, bucket), and the deduped rows roll up through the SAME
-    delta/extrapolation plan as the batch entry (_nh_deltas_from_cum +
-    _nh_rate_finalize), so the result is bit-identical to
-    promql_native_histogram_rate on replayed data — the unified-model
-    guarantee at histogram grain. 100 TB: state is
+    minute, bucket), and the deduped rows roll up through the
+    cumulative-row delta form (NH.deltas_from_cum) and the batch
+    entry's extrapolation (NH.rate_finalize). The result equals
+    promql_native_histogram_rate row for row on replayed data — the
+    unified-model guarantee at histogram grain. 100 TB: state is
     O(#series × #buckets) not O(#samples); the per-batch kernel is one
-    vectorized pivot+cumsum per series; the rollup is the batch plan's
-    single-exchange aggregation over scrape-grid-sized data."""
-    ev = stream_events(spark, sf_dir).filter(F.col("value") > 0)
-    bounds = F.array(*[F.lit(b) for b in _BOUNDS])
-    idx = F.lit(_LO) + F.size(F.filter(bounds, lambda b: b < F.col("value")))
-    obs = ev.select(
-        "event_type",
-        F.date_trunc("minute", "ts").alias("m"),
-        idx.alias("idx"),
-    )
+    vectorized pivot+cumsum per series; the rollup is one broadcast
+    join and one aggregation over scrape-grid-sized data."""
+    obs = NH.observations(stream_events(spark, sf_dir))
     cum_rows = stateful_nh_bucket_cums(obs.groupBy("event_type"))
     sink = run_stream_to_memory(cum_rows, output_mode="append")
     # last-writer-wins per (series, minute, bucket): a micro-batch
     # boundary inside a scrape minute re-emits the completed minute
     # with a higher seq (streaming/nh_rate.py straddle handling)
-    return _nh_rate_finalize(_nh_deltas_from_cum(latest_emissions(sink)))
+    return NH.rate_finalize(NH.deltas_from_cum(latest_emissions(sink)))
 
 
 from numalogic_prometheus_spark.plans.promql9 import (  # noqa: E402

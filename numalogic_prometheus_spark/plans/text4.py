@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from numalogic_prometheus_spark.operators import dedup as D
 from numalogic_prometheus_spark.operators.dedup import tokens_col
+from numalogic_prometheus_spark.operators.text import EVAL_MOD
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.functions.vectors import (
     cosine_similarity,
@@ -148,7 +149,6 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- benchmark-contamination check ---------------------------------------
 
-_EVAL_MOD = 11  # fixture stand-in for "the benchmark set": every 11th doc
 _GRAM_LEN = 4
 _CONTAM_FLAG = 0.5
 
@@ -163,11 +163,11 @@ _CONTAM_ORACLE = f"""
         WHERE len(string_split(text, ' ')) >= {_GRAM_LEN}
     ),
     g AS (SELECT doc_id, unnest({_GRAMS4_SQL}) AS gram FROM toks),
-    ev AS (SELECT DISTINCT gram FROM g WHERE doc_id % {_EVAL_MOD} = 0),
+    ev AS (SELECT DISTINCT gram FROM g WHERE doc_id % {EVAL_MOD} = 0),
     tr AS (
         SELECT doc_id, count(*) AS n_grams,
                count(*) FILTER (gram IN (SELECT gram FROM ev)) AS n_overlap
-        FROM g WHERE doc_id % {_EVAL_MOD} != 0 GROUP BY doc_id
+        FROM g WHERE doc_id % {EVAL_MOD} != 0 GROUP BY doc_id
     )
     SELECT doc_id, n_grams::BIGINT AS n_grams, n_overlap::BIGINT AS n_overlap,
            n_overlap / n_grams::DOUBLE AS overlap_frac,
@@ -200,12 +200,12 @@ def text_contamination_eval_overlap(spark: SparkSession, sf_dir: str) -> DataFra
         "doc_id", F.explode(grams).alias("gram")
     )
     ev = (
-        base.filter(F.col("doc_id") % _EVAL_MOD == 0)
+        base.filter(F.col("doc_id") % EVAL_MOD == 0)
         .select("gram")
         .distinct()
         .withColumn("hit", F.lit(1))
     )
-    tr = base.filter(F.col("doc_id") % _EVAL_MOD != 0)
+    tr = base.filter(F.col("doc_id") % EVAL_MOD != 0)
     agg = (
         tr.join(F.broadcast(ev), "gram", "left")
         .groupBy("doc_id")
@@ -335,7 +335,7 @@ _CURATION_ORACLE = f"""
         SELECT doc_id, unnest({_GRAMS4_SQL}) AS gram
         FROM d WHERE len(t) >= {_GRAM_LEN}
     ),
-    ev AS (SELECT DISTINCT gram FROM g WHERE doc_id % {_EVAL_MOD} = 0),
+    ev AS (SELECT DISTINCT gram FROM g WHERE doc_id % {EVAL_MOD} = 0),
     cont AS (
         SELECT doc_id, count(*) AS n_grams,
                count(*) FILTER (gram IN (SELECT gram FROM ev)) AS n_hit
@@ -444,7 +444,7 @@ def pipeline_curation_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(grams).alias("gram")
     )
     ev = (
-        g.filter(F.col("doc_id") % _EVAL_MOD == 0)
+        g.filter(F.col("doc_id") % EVAL_MOD == 0)
         .select("gram")
         .distinct()
         .withColumn("hit", F.lit(1))

@@ -33,8 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from numalogic_prometheus_spark.operators.text import EVAL_MOD
 from numalogic_prometheus_spark.plans import register
-from numalogic_prometheus_spark.plans.text4 import _EVAL_MOD
 from numalogic_prometheus_spark.sources.tables import load_table
 
 _CHUNK = 128  # chars per chunk
@@ -223,11 +223,11 @@ _CHUNK_FLAG = 0.5
             FROM documents
         )
     ),
-    ev AS (SELECT DISTINCT h FROM ch WHERE doc_id % {_EVAL_MOD} = 0),
+    ev AS (SELECT DISTINCT h FROM ch WHERE doc_id % {EVAL_MOD} = 0),
     tr AS (
         SELECT doc_id, count(*) AS n_chunks,
                count(*) FILTER (h IN (SELECT h FROM ev)) AS n_overlap
-        FROM ch WHERE doc_id % {_EVAL_MOD} != 0 GROUP BY doc_id
+        FROM ch WHERE doc_id % {EVAL_MOD} != 0 GROUP BY doc_id
     )
     SELECT doc_id, n_chunks::BIGINT AS n_chunks,
            n_overlap::BIGINT AS n_overlap,
@@ -258,12 +258,12 @@ def text_chunk_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", F.posexplode(starts).alias("chunk_idx", "chunk_start")
     ).select("doc_id", F.md5(body.cast("binary")).alias("h"))
     ev = (
-        ch.filter(F.col("doc_id") % _EVAL_MOD == 0)
+        ch.filter(F.col("doc_id") % EVAL_MOD == 0)
         .select("h")
         .distinct()
         .withColumn("hit", F.lit(1))
     )
-    tr = ch.filter(F.col("doc_id") % _EVAL_MOD != 0)
+    tr = ch.filter(F.col("doc_id") % EVAL_MOD != 0)
     agg = (
         tr.join(F.broadcast(ev), "h", "left")
         .groupBy("doc_id")
@@ -299,7 +299,6 @@ def text_chunk_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from numalogic_prometheus_spark.operators import ivf  # noqa: E402
 from numalogic_prometheus_spark.streaming.semantic_contamination import (  # noqa: E402
-    SEM_EVAL_MOD as _SEM_EVAL_MOD,
     SEM_THRESHOLD as _SEM_THRESHOLD,
     contamination_partials,
     flag_contaminated,
@@ -315,7 +314,7 @@ from numalogic_prometheus_spark.streaming.semantic_contamination import (  # noq
     assign AS (
         SELECT vec_id, arg_min(cent_id, {ivf.key_sql('b.v')}) AS cell
         FROM b CROSS JOIN cents c
-        WHERE b.vec_id % {_SEM_EVAL_MOD} != 0
+        WHERE b.vec_id % {EVAL_MOD} != 0
         GROUP BY vec_id
     ),
     probes AS (
@@ -323,7 +322,7 @@ from numalogic_prometheus_spark.streaming.semantic_contamination import (  # noq
                row_number() OVER (PARTITION BY vec_id
                                   ORDER BY {ivf.key_sql('b.v')}) AS rn
         FROM b CROSS JOIN cents c
-        WHERE b.vec_id % {_SEM_EVAL_MOD} = 0
+        WHERE b.vec_id % {EVAL_MOD} = 0
     ),
     cand AS (
         SELECT p.eval_id, a.vec_id AS train_id
@@ -352,7 +351,7 @@ from numalogic_prometheus_spark.streaming.semantic_contamination import (  # noq
            (CASE WHEN coalesce(h.n_eval_hits, 0) > 0
                  THEN 1 ELSE 0 END)::BIGINT AS flagged
     FROM (SELECT vec_id FROM embeddings
-          WHERE vec_id % {_SEM_EVAL_MOD} != 0) t
+          WHERE vec_id % {EVAL_MOD} != 0) t
     LEFT JOIN hits h USING (vec_id)
     """,
 )
@@ -383,14 +382,14 @@ def text_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = ivf.featurize(e)
     cents = ivf.centroids(b)
     index = ivf.assign_cells(
-        b.filter(F.col("vec_id") % _SEM_EVAL_MOD != 0), cents
+        b.filter(F.col("vec_id") % EVAL_MOD != 0), cents
     )
     probes = ivf.probe_cells(
-        ivf.query_keys(b.filter(F.col("vec_id") % _SEM_EVAL_MOD == 0), cents)
+        ivf.query_keys(b.filter(F.col("vec_id") % EVAL_MOD == 0), cents)
     )
     hits = contamination_partials(probes, index).withColumn(
         "max_cos", F.round("max_cos", 6)
     )
     return flag_contaminated(
-        e.select("vec_id").filter(F.col("vec_id") % _SEM_EVAL_MOD != 0), hits
+        e.select("vec_id").filter(F.col("vec_id") % EVAL_MOD != 0), hits
     )

@@ -1,5 +1,5 @@
-"""Stateful streaming twin of the native-histogram rate substrate
-(VERDICT r10 #4; the batch side is plans/promql7._nh_window_deltas).
+"""Stateful streaming twin of the native-histogram rate substrate (the
+batch side is operators/native_histogram.window_deltas).
 
 Per series key, the operator chains the sparse-bucket cumulative
 counters across micro-batches and emits one DENSE row per (scrape
@@ -8,11 +8,11 @@ previous scrape's cumulative ``prev_c`` (NULL on a bucket's first
 emission), the SERIES-level reset flag (any bucket's cumulative
 dropping scrape-over-scrape — Prometheus DetectReset at histogram
 grain), and the emission ordinal ``seq``. Downstream,
-plans/promql7._nh_deltas_from_cum + _nh_rate_finalize turn the rows
-into the identical hourly rate relation the batch entry produces —
+operators/native_histogram.deltas_from_cum + rate_finalize turn the
+rows into the identical hourly rate relation the batch entry produces —
 asserted exactly in tests/test_streaming_nh_rate.py.
 
-STRADDLED MINUTES (the r11 review fix): a micro-batch boundary can
+STRADDLED MINUTES: a micro-batch boundary can
 fall INSIDE a scrape minute (arbitrary with a Kafka source), so the
 batch that closes a minute may only have seen part of it. An append
 sink cannot retract, so the operator re-emits the straddled minute in
@@ -57,7 +57,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-EPOCH_US = 5_400_000_000  # 90-min counter epochs: resets land mid-hour
+from numalogic_prometheus_spark.operators.native_histogram import EPOCH_US
 
 _NONE = -1  # sentinel for "never emitted" / "no last minute" (c >= 0)
 

@@ -48,12 +48,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from numalogic_prometheus_spark.operators import ivf
+from numalogic_prometheus_spark.operators.text import EVAL_MOD
 from numalogic_prometheus_spark.sources.snapshots import (
     committed_ids,
     read_committed,
 )
 
-SEM_EVAL_MOD = 11  # mirrors the text contamination family's split
 SEM_THRESHOLD = 0.30  # same fixture geometry as dedup_semantic_survivors:
 #   synthetic embeddings are near-orthogonal, so 0.30 plays the role
 #   0.9+ plays for real text embeddings; the closest candidate cosine to
@@ -115,7 +115,7 @@ def build_semantic_index(
     cents.write.mode("overwrite").parquet(
         os.path.join(index_dir, "centroids")
     )
-    train = b.filter(F.col("vec_id") % SEM_EVAL_MOD != 0)
+    train = b.filter(F.col("vec_id") % EVAL_MOD != 0)
     ivf.assign_cells(train, cents).write.mode("overwrite").partitionBy(
         "cell"
     ).parquet(os.path.join(index_dir, "corpus"))
@@ -169,7 +169,7 @@ def write_eval_stream_files(
     ev = (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
-        .filter(F.col("vec_id") % SEM_EVAL_MOD == 0)
+        .filter(F.col("vec_id") % EVAL_MOD == 0)
     )
     tmp = stream_dir.rstrip("/") + "_spill"
     for i in range(n_files):

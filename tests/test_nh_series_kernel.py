@@ -1,6 +1,6 @@
-"""Unit pins for the r18 native-histogram series kernel
-(plans/promql7._nh_series_kernel) — the applyInPandas consolidation of
-the telescoped window-delta substrate (VERDICT r17 #5).
+"""Unit pins for the native-histogram series kernel
+(operators/native_histogram.series_kernel) — the one applyInPandas pass
+that evaluates the telescoped window-delta substrate.
 
 The full-relation equivalence against the r17 join-web form was gated
 row-exact by a one-off probe (OPTIMIZATION_r18.md) and the entry semantics
@@ -29,10 +29,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from numalogic_prometheus_spark.plans.promql7 import (
-    _nh_series_kernel,
-    _nh_window_deltas,
+from numalogic_prometheus_spark.operators.native_histogram import (
+    series_kernel,
+    window_deltas,
 )
+from numalogic_prometheus_spark.sources.tables import load_table
 
 _MIN = 60_000_000  # one minute in µs
 
@@ -119,12 +120,12 @@ def _check(out: pd.DataFrame) -> None:
 
 
 def test_kernel_hand_computed_grid():
-    _check(_nh_series_kernel(_fixture()))
+    _check(series_kernel(_fixture()))
 
 
 def test_kernel_input_order_independent():
     pdf = _fixture().sample(frac=1.0, random_state=7).reset_index(drop=True)
-    _check(_nh_series_kernel(pdf))
+    _check(series_kernel(pdf))
 
 
 def test_kernel_nanosecond_input():
@@ -132,7 +133,7 @@ def test_kernel_nanosecond_input():
     # converts via to_numpy("datetime64[us]") and must not truncate
     pdf = _fixture()
     pdf["m"] = pdf["m"].astype("datetime64[ns]")
-    _check(_nh_series_kernel(pdf))
+    _check(series_kernel(pdf))
 
 
 def test_substrate_refuses_non_utc_session(spark, sf_dir, monkeypatch):
@@ -147,7 +148,8 @@ def test_substrate_refuses_non_utc_session(spark, sf_dir, monkeypatch):
     spark.conf.set(key, "America/New_York")
     try:
         with pytest.raises(RuntimeError, match="timeZone=UTC"):
-            _nh_window_deltas(spark, sf_dir)
+            window_deltas(load_table(spark, sf_dir, "events"))
     finally:
         spark.conf.set(key, "UTC")
-    assert _nh_window_deltas(spark, sf_dir).columns[:2] == ["event_type", "hour"]
+    per_bucket, _ = window_deltas(load_table(spark, sf_dir, "events"))
+    assert per_bucket.columns[:2] == ["event_type", "hour"]

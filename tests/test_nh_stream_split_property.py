@@ -68,11 +68,11 @@ def test_random_splits_match_batch(spark, events, cuts):
     from pyspark.sql import functions as F
 
     from numalogic_prometheus_spark.plans import all_queries
-    from numalogic_prometheus_spark.plans.promql7 import (
-        _BOUNDS,
-        _LO,
-        _nh_deltas_from_cum,
-        _nh_rate_finalize,
+    from numalogic_prometheus_spark.operators.native_histogram import (
+        BOUNDS,
+        LO,
+        deltas_from_cum,
+        rate_finalize,
     )
     from numalogic_prometheus_spark.streaming.nh_rate import (
         latest_emissions,
@@ -101,7 +101,7 @@ def test_random_splits_match_batch(spark, events, cuts):
                         dtype="datetime64[us]",
                     ),
                     "idx": [
-                        _LO + sum(bb < r[3] for bb in _BOUNDS)
+                        LO + sum(bb < r[3] for bb in BOUNDS)
                         for r in part
                     ],
                 }
@@ -127,8 +127,8 @@ def test_random_splits_match_batch(spark, events, cuts):
     )
     got = sorted(
         tuple(r)
-        for r in _nh_rate_finalize(
-            _nh_deltas_from_cum(latest_emissions(cum))
+        for r in rate_finalize(
+            deltas_from_cum(latest_emissions(cum))
         ).collect()
     )
 

@@ -76,6 +76,71 @@ def test_native_buckets_boundary_zero_negative_overflow(spark, tmp_path):
     assert "Generate" not in plan and "Join" not in plan
 
 
+def test_bucket_index_matches_oracle_at_every_boundary(spark):
+    """bucket_index against the oracles' DuckDB list_filter fragment at
+    every ladder boundary 2^k, one ulp either side of each, below 2^LO
+    and above 2^HI, for both magnitude forms the entries use (value
+    and abs(value) of its negation). Both engines must give the unique
+    idx with 2^(idx−1) < v ≤ 2^idx, clamped to [LO, HI + 1]."""
+    import math
+
+    import duckdb
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from numalogic_prometheus_spark.operators.native_histogram import (
+        BOUNDS,
+        HI,
+        LO,
+        bucket_index,
+        bucket_index_sql,
+    )
+
+    values = [2.0 ** (LO - 1), 2.0 ** (HI + 1)]
+    for b in BOUNDS:
+        values += [math.nextafter(b, 0.0), b, math.nextafter(b, math.inf)]
+
+    def expect(v: float) -> int:
+        m, e = math.frexp(v)  # v = m·2^e, 0.5 <= m < 1
+        idx = e - 1 if m == 0.5 else e
+        return min(max(idx, LO), HI + 1)
+
+    # the fragment checked here is the one every native-histogram
+    # oracle spells (whitespace aside)
+    from numalogic_prometheus_spark.plans import all_oracles
+
+    def norm(sql: str) -> str:
+        return " ".join(sql.split())
+
+    forms = [norm(bucket_index_sql(m)) for m in ("value", "abs(value)")]
+    nh = [o for n, o in all_oracles().items() if "native_histogram" in n]
+    assert len(nh) == 8
+    assert all(any(f in norm(o) for f in forms) for o in nh)
+
+    want = [expect(v) for v in values]
+    assert want.count(LO) > 1 and want.count(HI + 1) > 1  # both clamps hit
+
+    rows = [(i, v, -v) for i, v in enumerate(values)]
+    sdf = spark.createDataFrame(rows, "i int, value double, neg double")
+    spark_idx = sdf.select(
+        "i",
+        bucket_index(F.col("value")).alias("pos"),
+        bucket_index(F.abs(F.col("neg"))).alias("neg"),
+    ).collect()
+    con = duckdb.connect()
+    con.register("vals", pd.DataFrame(rows, columns=["i", "value", "neg"]))
+    duck_idx = con.execute(
+        f"SELECT i, {bucket_index_sql('value')} AS pos,"
+        f" {bucket_index_sql('abs(neg)')} AS neg FROM vals ORDER BY i"
+    ).fetchall()
+    con.close()
+
+    assert sorted((r["i"], r["pos"], r["neg"]) for r in spark_idx) == [
+        (i, w, w) for i, w in enumerate(want)
+    ]
+    assert duck_idx == [(i, w, w) for i, w in enumerate(want)]
+
+
 def test_native_quantile_exponential_interpolation(spark, tmp_path):
     from numalogic_prometheus_spark.plans.promql7 import (
         promql_native_histogram_quantile,

@@ -815,10 +815,12 @@ def test_native_stddev_moment_equals_direct(spark, cents, tmp_path_factory):
     the algebra the entry docstring claims, checked numerically."""
     from datetime import datetime
 
+    from numalogic_prometheus_spark.operators.native_histogram import (
+        BOUNDS,
+        HI,
+        LO,
+    )
     from numalogic_prometheus_spark.plans.promql7 import (
-        _BOUNDS,
-        _HI,
-        _LO,
         promql_native_histogram_stddev,
     )
 
@@ -837,9 +839,9 @@ def test_native_stddev_moment_equals_direct(spark, cents, tmp_path_factory):
         if v == 0:
             return 0.0
         sign = 1.0 if v > 0 else -1.0
-        idx = _LO + sum(1 for b in _BOUNDS if b < abs(v))
-        if idx > _HI:
-            return sign * 2.0 ** _HI  # bounded-resolution clamp
+        idx = LO + sum(1 for b in BOUNDS if b < abs(v))
+        if idx > HI:
+            return sign * 2.0 ** HI  # bounded-resolution clamp
         return sign * math.sqrt(2.0 ** (idx - 1) * 2.0 ** idx)
 
     n = len(cents)

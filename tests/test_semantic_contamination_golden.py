@@ -18,13 +18,13 @@ def _vec(dim_hot: int, scale: float = 1.0, noise_dim: int | None = None,
 
 
 def test_planted_paraphrase_is_flagged(spark, tmp_path):
+    from numalogic_prometheus_spark.operators.text import EVAL_MOD
     from numalogic_prometheus_spark.plans.text5 import (
-        _SEM_EVAL_MOD,
         _SEM_THRESHOLD,
         text_semantic_contamination,
     )
 
-    assert _SEM_EVAL_MOD == 11
+    assert EVAL_MOD == 11
     # 70 vectors, dim 8. Eval items (vec_id % 11 == 0) get orthogonal
     # one-hot directions e0..e6; training vectors sit on e7 with a tiny
     # 0.05 tilt toward e_{i%7} (cosine vs every eval ≈ 0.05, far below

@@ -6,8 +6,6 @@ across multiple micro-batches, and across a kill + checkpoint restart.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from numalogic_prometheus_spark.plans import all_queries
 
 QUERIES = all_queries()
@@ -139,11 +137,10 @@ def test_multibatch_straddled_minute(spark, tmp_path):
     # saves it: drive the stateful operator directly, check the sink
     # holds superseded duplicates, and that skipping latest_emissions
     # reproduces the old divergence
-    from numalogic_prometheus_spark.plans.promql7 import (
-        _BOUNDS,
-        _LO,
-        _nh_deltas_from_cum,
-        _nh_rate_finalize,
+    from numalogic_prometheus_spark.operators.native_histogram import (
+        deltas_from_cum,
+        observations,
+        rate_finalize,
     )
     from numalogic_prometheus_spark.streaming import (
         run_stream_to_memory,
@@ -153,13 +150,7 @@ def test_multibatch_straddled_minute(spark, tmp_path):
         stateful_nh_bucket_cums,
     )
 
-    evs = stream_events(spark, str(tmp_path)).filter(F.col("value") > 0)
-    bounds = F.array(*[F.lit(x) for x in _BOUNDS])
-    idx = F.lit(_LO) + F.size(F.filter(bounds, lambda x: x < F.col("value")))
-    obs = evs.select(
-        "event_type", F.date_trunc("minute", "ts").alias("m"),
-        idx.alias("idx"),
-    )
+    obs = observations(stream_events(spark, str(tmp_path)))
     sink = run_stream_to_memory(
         stateful_nh_bucket_cums(obs.groupBy("event_type")), "append"
     )
@@ -170,7 +161,7 @@ def test_multibatch_straddled_minute(spark, tmp_path):
         .count()
     )
     assert dups > 0, "fixture did not exercise the straddle re-emission"
-    raw = _rows(_nh_rate_finalize(_nh_deltas_from_cum(sink.drop("seq"))))
+    raw = _rows(rate_finalize(deltas_from_cum(sink.drop("seq"))))
     assert raw != b, "dedup-free rollup should diverge on this fixture"
 
 
@@ -183,11 +174,10 @@ def test_kill_restart_determinism(spark, tmp_path):
     straddle boundary: state (including the previous-minute snapshot
     and the seq ordinal) must survive the checkpoint for the completed
     re-emission to supersede the pre-kill partial row."""
-    from numalogic_prometheus_spark.plans.promql7 import (
-        _BOUNDS,
-        _LO,
-        _nh_deltas_from_cum,
-        _nh_rate_finalize,
+    from numalogic_prometheus_spark.operators.native_histogram import (
+        deltas_from_cum,
+        observations,
+        rate_finalize,
     )
     from numalogic_prometheus_spark.streaming.nh_rate import (
         latest_emissions,
@@ -215,17 +205,7 @@ def test_kill_restart_determinism(spark, tmp_path):
             normalize_event_time,
         )
 
-        stream = normalize_event_time(stream)
-        ev = stream.filter(F.col("value") > 0)
-        bounds = F.array(*[F.lit(b) for b in _BOUNDS])
-        idx = F.lit(_LO) + F.size(
-            F.filter(bounds, lambda b: b < F.col("value"))
-        )
-        obs = ev.select(
-            "event_type",
-            F.date_trunc("minute", "ts").alias("m"),
-            idx.alias("idx"),
-        )
+        obs = observations(normalize_event_time(stream))
         out = stateful_nh_bucket_cums(obs.groupBy("event_type"))
         q = (
             out.writeStream.outputMode("append")
@@ -254,9 +234,7 @@ def test_kill_restart_determinism(spark, tmp_path):
         "event_type string, m timestamp, idx long, c long,"
         " prev_c long, reset integer, seq long",
     )
-    got = _rows(
-        _nh_rate_finalize(_nh_deltas_from_cum(latest_emissions(cum)))
-    )
+    got = _rows(rate_finalize(deltas_from_cum(latest_emissions(cum))))
     want = _rows(QUERIES["promql_native_histogram_rate"](spark, data))
     assert got == want
 

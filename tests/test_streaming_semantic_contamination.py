@@ -30,13 +30,13 @@ def _rows(df) -> list[tuple]:
 
 
 def _eval_items(spark, sf_dir):
-    from numalogic_prometheus_spark.plans.text5 import _SEM_EVAL_MOD
+    from numalogic_prometheus_spark.operators.text import EVAL_MOD
     from numalogic_prometheus_spark.sources.tables import load_table
 
     return (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
-        .filter(F.col("vec_id") % _SEM_EVAL_MOD == 0)
+        .filter(F.col("vec_id") % EVAL_MOD == 0)
     )
 
 
