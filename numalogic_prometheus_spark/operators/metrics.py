@@ -50,27 +50,32 @@ def counter(df: DataFrame, keys: Sequence[str | Column], value: str = "value") -
     )
 
 
+def counter_valid(value: str = "value") -> Column:
+    """A sample a counter may accept: not NULL, not NaN and ≥ 0. NaN
+    needs the explicit isnan() guard: Spark (and DuckDB) order NaN
+    greater than every number, so ``value >= 0`` alone would accept it."""
+    return (
+        F.col(value).isNotNull()
+        & ~F.isnan(F.col(value))
+        & (F.col(value) >= 0)
+    )
+
+
 def counter_guarded(
     df: DataFrame, keys: Sequence[str | Column], value: str = "value"
 ) -> tuple[DataFrame, DataFrame]:
     """Counter discipline with the pinned client's negative-increment
     rejection (reference metrics.py:64-68; prometheus-client semantics:
     ``inc(amount < 0)`` raises ValueError). The relational form diverts
-    invalid samples (negative, NaN, null) to a side relation instead of
-    raising, keeping the accepted aggregate monotone.
-
-    NaN needs an explicit isnan() guard: Spark (and DuckDB) order NaN
-    greater than every number, so ``value >= 0`` alone would accept it.
+    invalid samples (:func:`counter_valid` fails: negative, NaN, null)
+    to a side relation instead of raising, keeping the accepted
+    aggregate monotone.
 
     Returns ``(accepted, rejected)`` — accepted is the counter aggregate
     over valid samples, rejected is the raw invalid-sample relation (a
     dead-letter side output for alerting).
     """
-    valid = (
-        F.col(value).isNotNull()
-        & ~F.isnan(F.col(value))
-        & (F.col(value) >= 0)
-    )
+    valid = counter_valid(value)
     accepted = counter(df.filter(valid), keys, value)
     rejected = df.filter(~F.coalesce(valid, F.lit(False)))
     return accepted, rejected

@@ -3,6 +3,8 @@
 The reference delegates querying to Prometheus's TSDB (SURVEY.md §3.3) —
 this module closes that gap with pure Spark SQL compositions:
 
+- ``cents`` — ``value`` as exact integer cents, the operand every
+  cross-engine-exact sum, difference and counter reads.
 - ``increase_with_resets`` — per-series lag deltas where a negative delta
   means counter reset (TSDB semantics layered over discipline A3's
   monotone counters, reference metrics.py:64-68).
@@ -21,8 +23,28 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+
+
+def cents() -> Column:
+    """``value`` as integer cents, ``round(value * 100)::BIGINT`` in the
+    oracles: sums and differences of cents are exact in both engines,
+    where float prefix sums differ in the last bit (segment-tree vs
+    sequential accumulation)."""
+    return F.round(F.col("value") * 100).cast("long")
+
+
+def lag_deltas(
+    df: DataFrame,
+    keys: Sequence[str],
+    counter: str,
+    order: Sequence[str] = ("ts",),
+) -> DataFrame:
+    """Adds ``raw_delta`` = ``counter`` minus its predecessor in the
+    series; NULL on each series' first row."""
+    w = W.partitionBy(*keys).orderBy(*order)
+    return df.withColumn("raw_delta", F.col(counter) - F.lag(counter).over(w))
 
 
 def increase_with_resets(
@@ -33,18 +55,15 @@ def increase_with_resets(
 ) -> DataFrame:
     """Counter-reset-aware delta per series: a drop in a monotone counter
     means the process restarted, so the post-reset value IS the increase
-    (PromQL `increase` kernel). Rows with no predecessor are dropped."""
-    w = W.partitionBy(*keys).orderBy(*order)
-    out = df.withColumn("__raw_delta", F.col(counter) - F.lag(counter).over(w))
+    (PromQL `increase` kernel). Rows with no predecessor are dropped;
+    ``raw_delta`` stays for callers that read its sign."""
+    delta = F.col("raw_delta")
     return (
-        out.filter(F.col("__raw_delta").isNotNull())
+        lag_deltas(df, keys, counter, order)
+        .filter(delta.isNotNull())
         .withColumn(
-            "increase",
-            F.when(F.col("__raw_delta") < 0, F.col(counter)).otherwise(
-                F.col("__raw_delta")
-            ),
+            "increase", F.when(delta < 0, F.col(counter)).otherwise(delta)
         )
-        .drop("__raw_delta")
     )
 
 
@@ -53,9 +72,8 @@ def instant_vector_cents(ev: DataFrame) -> DataFrame:
     (event_type, user_id) series as exact integer ``cents``, with ts
     then event_id deciding ties. One partial aggregation, one exchange
     on the series key."""
-    cents = F.round(F.col("value") * 100).cast("long")
     return ev.groupBy("event_type", "user_id").agg(
-        F.max_by(cents, F.struct("ts", "event_id")).alias("cents")
+        F.max_by(cents(), F.struct("ts", "event_id")).alias("cents")
     )
 
 

@@ -21,11 +21,11 @@ _ORACLES: dict[str, str] = {}
 # Query modules, imported lazily so a bug in one module doesn't take down
 # the whole registry surface at import time. An entry registers when its
 # module is first imported, so the registry lists entries in this
-# tuple's order, except where a plan module imports another in its body
-# (streaming2 imports promql9). all_queries() and all_oracles() move
-# the _CHECK_FIRST names to the front, so this order never changes which
-# entries the __spark_entry__ contract checks; appending a module moves
-# no entry.
+# tuple's order: a plan module imports only modules listed before it
+# (tests/test_registry_contract.py pins the order). all_queries() and
+# all_oracles() move the _CHECK_FIRST names to the front, so this order
+# never changes which entries the __spark_entry__ contract checks;
+# appending a module moves no entry.
 _MODULES = (
     "text",
     "vectors",

@@ -212,11 +212,7 @@ def counter_monotonic_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows in tests/test_golden_semantics.py). The fixture has no invalid
     rows, so the driver check degenerates to n_rejected=0."""
     ev = load_table(spark, sf_dir, "events")
-    valid = (
-        F.col("value").isNotNull()
-        & ~F.isnan(F.col("value"))
-        & (F.col("value") >= 0)
-    )
+    valid = M.counter_valid()
     return ev.groupBy("event_type").agg(
         F.sum(F.when(valid, 1).otherwise(0)).alias("n_samples"),
         F.sum(F.when(valid, 0).otherwise(1)).alias("n_rejected"),

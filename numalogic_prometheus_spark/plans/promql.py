@@ -12,9 +12,14 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from numalogic_prometheus_spark.operators import metrics as M
+from numalogic_prometheus_spark.operators.counter import (
+    COUNTER_SQL,
+    RATE_PER_HOUR_SQL,
+    counter_increases,
+    rate_per_hour,
+)
 from numalogic_prometheus_spark.operators.promql import (
     histogram_quantile,
-    increase_with_resets,
     topk_per_group,
 )
 from numalogic_prometheus_spark.plans import register
@@ -22,51 +27,9 @@ from numalogic_prometheus_spark.sources.tables import load_table
 from numalogic_prometheus_spark.functions.timeutil import epoch_us
 
 
-def _synthetic_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Monotone-with-wraparound counter per event_type (the fixture has no
-    raw counter column): running sum of value mod 1000, deterministic
-    order (ts, event_id). Matches the oracle CTE used by rate/increase."""
-    ev = load_table(spark, sf_dir, "events")
-    w = (
-        W.partitionBy("event_type")
-        .orderBy("ts", "event_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    cents = F.round(F.col("value") * 100).cast("long")
-    return ev.select(
-        "event_type",
-        "ts",
-        "event_id",
-        (F.sum(cents).over(w) % 1000).alias("c"),
-    )
-
-
-_COUNTER_CTE = """
-    WITH counter AS (
-        -- integer cents before the running sum: cross-engine-exact
-        SELECT event_type, ts, event_id,
-               (sum(round(value * 100)::BIGINT) OVER (
-                   PARTITION BY event_type ORDER BY ts, event_id))::BIGINT % 1000 AS c
-        FROM events
-    ),
-    deltas AS (
-        SELECT event_type, ts, event_id, c,
-               c - lag(c) OVER (PARTITION BY event_type
-                                ORDER BY ts, event_id) AS raw_delta
-        FROM counter
-    ),
-    increase AS (
-        SELECT event_type, ts,
-               CASE WHEN raw_delta < 0 THEN c ELSE raw_delta END AS increase
-        FROM deltas
-        WHERE raw_delta IS NOT NULL
-    )
-"""
-
-
 @register(
     "promql_increase_total",
-    oracle=_COUNTER_CTE
+    oracle=COUNTER_SQL
     + """
     SELECT event_type, sum(increase)::BIGINT AS total_increase,
            count(*) AS n_deltas
@@ -77,36 +40,18 @@ _COUNTER_CTE = """
 def promql_increase_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PromQL `increase()` analog: reset-aware per-series deltas summed
     per series (SURVEY.md §4.3 counter-reset semantics)."""
-    counter = _synthetic_counter(spark, sf_dir)
-    inc = increase_with_resets(
-        counter, ["event_type"], "c", order=["ts", "event_id"]
-    )
+    inc = counter_increases(load_table(spark, sf_dir, "events"))
     return inc.groupBy("event_type").agg(
         F.sum("increase").alias("total_increase"),
         F.count(F.lit(1)).alias("n_deltas"),
     )
 
 
-@register(
-    "promql_rate_per_hour",
-    oracle=_COUNTER_CTE
-    + """
-    SELECT event_type, date_trunc('hour', ts) AS hour,
-           sum(increase) / 3600.0 AS rate_per_sec
-    FROM increase
-    GROUP BY 1, 2
-    """,
-)
+@register("promql_rate_per_hour", oracle=COUNTER_SQL + RATE_PER_HOUR_SQL)
 def promql_rate_per_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PromQL `rate()` analog: reset-aware increase per fixed window over
     the window length in seconds."""
-    counter = _synthetic_counter(spark, sf_dir)
-    inc = increase_with_resets(
-        counter, ["event_type"], "c", order=["ts", "event_id"]
-    )
-    return inc.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hour")
-    ).agg((F.sum("increase") / 3600.0).alias("rate_per_sec"))
+    return rate_per_hour(counter_increases(load_table(spark, sf_dir, "events")))
 
 
 _BUCKET_CTE = f"""
@@ -157,7 +102,7 @@ def promql_histogram_quantile_p90(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "promql_resets_changes",
-    oracle=_COUNTER_CTE
+    oracle=COUNTER_SQL
     + """
     SELECT event_type,
            sum(CASE WHEN raw_delta < 0 THEN 1 ELSE 0 END)::BIGINT AS n_resets,
@@ -170,16 +115,10 @@ def promql_histogram_quantile_p90(spark: SparkSession, sf_dir: str) -> DataFrame
 def promql_resets_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PromQL `resets()` / `changes()` analogs: per-series counts of
     negative deltas (counter restarts) and value changes."""
-    counter = _synthetic_counter(spark, sf_dir)
-    w = W.partitionBy("event_type").orderBy("ts", "event_id")
-    deltas = counter.withColumn("raw_delta", F.col("c") - F.lag("c").over(w))
-    return (
-        deltas.filter(F.col("raw_delta").isNotNull())
-        .groupBy("event_type")
-        .agg(
-            F.sum(F.when(F.col("raw_delta") < 0, 1).otherwise(0)).alias("n_resets"),
-            F.sum(F.when(F.col("raw_delta") != 0, 1).otherwise(0)).alias("n_changes"),
-        )
+    deltas = counter_increases(load_table(spark, sf_dir, "events"))
+    return deltas.groupBy("event_type").agg(
+        F.sum(F.when(F.col("raw_delta") < 0, 1).otherwise(0)).alias("n_resets"),
+        F.sum(F.when(F.col("raw_delta") != 0, 1).otherwise(0)).alias("n_changes"),
     )
 
 
@@ -385,8 +324,6 @@ def promql_irate_last_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative series is a running sum of 2dp-rounded values — integer-like
     units so the cross-engine prefix sum is exact (window prefix sums over
     raw doubles are not reproducible across engines)."""
-    from pyspark.sql import Window as W
-
     ev = load_table(spark, sf_dir, "events")
     cum_w = (
         W.partitionBy("event_type")

@@ -11,7 +11,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from numalogic_prometheus_spark.operators.promql import vector_binop, vector_setop
+from numalogic_prometheus_spark.operators.counter import (
+    counter_deltas,
+    wraparound_counter,
+)
+from numalogic_prometheus_spark.operators.promql import (
+    cents,
+    vector_binop,
+    vector_setop,
+)
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.sources.tables import load_table
 from numalogic_prometheus_spark.functions.timeutil import epoch_us, epoch_us_sql
@@ -20,11 +28,10 @@ from numalogic_prometheus_spark.functions.timeutil import epoch_us, epoch_us_sql
 def _hourly_vector(ev: DataFrame, *labels: str) -> DataFrame:
     """Instant-vector relation: one row per label set, integer-cent sum
     and sample count (cents keep cross-engine sums exact)."""
-    cents = F.round(F.col("value") * 100).cast("long")
     return ev.groupBy(
         *labels, F.date_trunc("hour", "ts").alias("hour")
     ).agg(
-        F.sum(cents).alias("sum_cents"),
+        F.sum(cents()).alias("sum_cents"),
         F.count(F.lit(1)).alias("n"),
     )
 
@@ -196,15 +203,10 @@ def _register_over_time(name: str, out: str, spark_expr, duck_expr: str) -> None
     )
 
 
-def _cents():
-    # built lazily: Column construction needs an active SparkContext
-    return F.round(F.col("value") * 100).cast("long")
-
-
 _register_over_time(
     "promql_sum_over_time",
     "sum_cents_1h",
-    lambda w: F.sum(_cents()).over(w),
+    lambda w: F.sum(cents()).over(w),
     "(sum(round(value * 100)::BIGINT) OVER w)::BIGINT",
 )
 # avg / stdvar emit the UNROUNDED double of an exact-integer ratio: the
@@ -217,7 +219,7 @@ _register_over_time(
 _register_over_time(
     "promql_avg_over_time",
     "avg_1h",
-    lambda w: F.sum(_cents()).over(w) / F.count(F.lit(1)).over(w) / 100.0,
+    lambda w: F.sum(cents()).over(w) / F.count(F.lit(1)).over(w) / 100.0,
     "(sum(round(value * 100)::BIGINT) OVER w)::BIGINT"
     " / (count(*) OVER w) / 100.0",
 )
@@ -247,7 +249,7 @@ def _var_numer(w) -> F.Column:
     # < 2.6e17 ≪ 2^63) and ≥ 0 by Cauchy–Schwarz, so sqrt() is safe in
     # DuckDB (which raises on negative input). The float division/sqrt
     # happen once on identical integers — IEEE-deterministic both sides.
-    c = _cents()
+    c = cents()
     n = F.count(F.lit(1)).over(w)
     s1 = F.sum(c).over(w)
     s2 = F.sum(c * c).over(w)
@@ -332,24 +334,10 @@ def promql_last_over_time(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def promql_resets_per_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PromQL `resets(m[range])`: number of monotonicity breaks per
-    series in the synthetic wraparound counter (same counter relation as
-    promql_increase_total, plans/promql.py:43). A reset is raw_delta < 0
-    — one lag() window pass, one aggregate."""
-    ev = load_table(spark, sf_dir, "events")
-    wsum = (
-        W.partitionBy("event_type")
-        .orderBy("ts", "event_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    wlag = W.partitionBy("event_type").orderBy("ts", "event_id")
-    cents = F.round(F.col("value") * 100).cast("long")
-    counter = ev.select(
-        "event_type", (F.sum(cents).over(wsum) % 1000).alias("c"),
-        F.col("ts"), F.col("event_id"),
-    )
-    deltas = counter.select(
-        "event_type", (F.col("c") - F.lag("c").over(wlag)).alias("raw_delta")
-    )
+    series in the synthetic wraparound counter (operators/counter.py).
+    A reset is raw_delta < 0 — one lag() window pass, one aggregate; a
+    single-sample series counts 0 resets."""
+    deltas = counter_deltas(load_table(spark, sf_dir, "events"))
     return deltas.groupBy("event_type").agg(
         F.count(F.when(F.col("raw_delta") < 0, 1)).alias("resets")
     )
@@ -377,9 +365,9 @@ def promql_changes_per_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     First sample has no predecessor and counts as no change."""
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("event_type").orderBy("ts", "event_id")
-    cents = F.round(F.col("value") * 100).cast("long")
+    c = cents()
     ordered = ev.select(
-        "event_type", cents.alias("v"), F.lag(cents).over(w).alias("prev_v")
+        "event_type", c.alias("v"), F.lag(c).over(w).alias("prev_v")
     )
     return ordered.groupBy("event_type").agg(
         F.count(
@@ -736,9 +724,7 @@ def promql_rate_extrapolated(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; the arithmetic is integer cents + IEEE double ops, no
     transcendentals — hash-verified against DuckDB. Windows are the
     fixed [hour, hour+1h) grid (a step-aligned range query)."""
-    from numalogic_prometheus_spark.plans.promql import _synthetic_counter
-
-    c = _synthetic_counter(spark, sf_dir).withColumn(
+    c = wraparound_counter(load_table(spark, sf_dir, "events")).withColumn(
         "hour", F.date_trunc("hour", "ts")
     )
     wl = W.partitionBy("event_type", "hour").orderBy("ts", "event_id")
@@ -864,7 +850,7 @@ def promql_alert_firing(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = ev.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hour")
     ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
+        F.sum(cents()).alias("cents"),
         F.count(F.lit(1)).alias("n"),
     )
     eval_ = hourly.select(

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from numalogic_prometheus_spark.functions.timeutil import epoch_us, epoch_us_sql
+from numalogic_prometheus_spark.operators.promql import cents
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.sources.tables import (
     load_table,
@@ -174,12 +175,11 @@ def _windowed_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     than O(input × window) pair rows. Columns: event_type, event_id,
     a_us, arr (sorted array<long> of cents)."""
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
     base = ev.select(
         "event_type",
         "event_id",
         epoch_us("ts").alias("a_us"),
-        cents.alias("c"),
+        cents().alias("c"),
         F.expr(f"{epoch_us_sql('ts')} div {_LOOK_US}").alias("bkt"),
     )
     buckets = base.groupBy("event_type", "bkt").agg(

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from numalogic_prometheus_spark.functions.timeutil import epoch_us_sql
 from numalogic_prometheus_spark.operators import metrics as M
 from numalogic_prometheus_spark.operators.promql import (
+    cents,
     histogram_fraction,
     instant_vector_cents,
 )
@@ -273,12 +274,11 @@ def promql_idelta(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer floor-div of the µs difference — positive by construction,
     so Spark `div` and DuckDB `//` agree)."""
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
     w = W.partitionBy("event_type").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
     )
     ranked = ev.select(
-        "event_type", "ts", cents.alias("cents"),
+        "event_type", "ts", cents().alias("cents"),
         F.row_number().over(w).alias("rn"),
     ).filter(F.col("rn") <= 2)
     last_c = F.max(F.when(F.col("rn") == 1, F.col("cents")))

@@ -48,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from numalogic_prometheus_spark.operators.promql import instant_vector_cents
+from numalogic_prometheus_spark.operators.promql import cents, instant_vector_cents
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.sources.tables import load_table
 
@@ -101,8 +101,7 @@ def promql_at_modifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     t = F.lit(_AT_T).cast("timestamp")
     t_off = F.lit(_AT_T_OFF).cast("timestamp")
-    cents = F.round(F.col("value") * 100).cast("long")
-    row = F.struct(F.col("ts"), F.col("event_id"), cents.alias("cents"))
+    row = F.struct(F.col("ts"), F.col("event_id"), cents().alias("cents"))
     at = (
         ev.filter(F.col("ts") <= t)
         .groupBy("event_type")

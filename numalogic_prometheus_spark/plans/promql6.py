@@ -59,6 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from numalogic_prometheus_spark.operators.promql import cents
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.sources.tables import load_table
 
@@ -88,11 +89,10 @@ def promql_histogram_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents; `hist_sum` and `hist_avg` are each ONE IEEE division chain
     from exact BIGINTs, so both ship bit-identical unrounded."""
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
     return ev.groupBy("event_type", "user_id").agg(
         F.count(F.lit(1)).cast("long").alias("hist_count"),
-        (F.sum(cents) / 100.0).alias("hist_sum"),
-        (F.sum(cents) / F.count(F.lit(1)) / 100.0).alias("hist_avg"),
+        (F.sum(cents()) / 100.0).alias("hist_sum"),
+        (F.sum(cents()) / F.count(F.lit(1)) / 100.0).alias("hist_avg"),
     )
 
 

@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 
 from numalogic_prometheus_spark.functions.timeutil import epoch_us
 from numalogic_prometheus_spark.operators import native_histogram as NH
+from numalogic_prometheus_spark.operators.promql import cents
 from numalogic_prometheus_spark.operators.relational import asof_join
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.sources.tables import load_table
@@ -327,7 +328,7 @@ def promql_native_histogram_stddev(
         "event_type",
         sgn.alias("sgn"),
         F.when(F.col("value") == 0, F.lit(None)).otherwise(idx).alias("idx"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents().alias("cents"),
     )
     # variable-amount shifts need expression SQL (F.shiftleft's numBits
     # is a python int); 1L keeps the shift in BIGINT, never 32-bit

@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from numalogic_prometheus_spark.functions.timeutil import epoch_us
-from numalogic_prometheus_spark.operators.promql import instant_vector_cents
+from numalogic_prometheus_spark.operators.promql import cents, instant_vector_cents
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.sources.tables import load_table
 
@@ -250,10 +250,7 @@ def promql_ts_of_over_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact scan (map-side combine, one exchange on the series key);
     the oracle's double row_number is DuckDB-side only."""
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
-    tagged = ev.select(
-        "event_type", "user_id", "ts", cents.alias("cents")
-    )
+    tagged = ev.select("event_type", "user_id", "ts", cents().alias("cents"))
     return tagged.groupBy("event_type", "user_id").agg(
         epoch_us(F.max("ts")).alias("ts_of_last"),
         epoch_us(

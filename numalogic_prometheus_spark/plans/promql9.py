@@ -1,4 +1,4 @@
-"""PromQL alerting, round 11: the Google-SRE MULTIWINDOW BURN-RATE
+"""PromQL alerting: the Google-SRE MULTIWINDOW BURN-RATE
 alert — the production form of error-budget alerting (SRE Workbook ch.5
 "Multiwindow, Multi-Burn-Rate Alerts"), composed from the engine's
 counter-rate substrate. The reference delegates alert evaluation to the
@@ -15,12 +15,14 @@ window makes it RESOLVE promptly once the burn stops — firing requires
 both. Windows are the fixture's scrape-grid analogs of the workbook's
 1h/5m pair.
 
-Exactness: increases are exact integers (the shared `_COUNTER_CTE`
-wraparound-counter substrate); each burn rate is one integer divided by
-one literal (3600.0 / 600.0) then by the literal budget — identical
-IEEE operand sequences cross-engine, emitted UNROUNDED; the `>=`
-threshold compares bit-identical doubles, so firing membership cannot
-flip (the round-8 tie-class rule).
+Exactness: increases are exact integers (the wraparound counter of
+operators/counter.py); each burn rate is one integer divided by one
+literal (3600.0 / 600.0) then by the literal budget — identical IEEE
+operand sequences cross-engine, emitted UNROUNDED; the `>=` threshold
+compares bit-identical doubles, so firing membership cannot flip (the
+round-8 tie-class rule). The evaluation is shared with the streaming
+twin (plans/streaming2.stream_burn_rate_alert), whose increases are
+row-equal to the batch ones on any micro-batch split.
 
 Scale (100 TB design): the per-sample increase relation is ONE window
 pass per series (the counter substrate's single exchange); both burn
@@ -33,84 +35,22 @@ rules over a fleet stays one aggregation with k conditional columns.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from numalogic_prometheus_spark.plans import register
-from numalogic_prometheus_spark.plans.promql import (
-    _COUNTER_CTE,
-    _synthetic_counter,
+from numalogic_prometheus_spark.operators.counter import (
+    BURN_BUDGET,
+    BURN_FACTOR,
+    BURN_SQL_SUFFIX,
+    COUNTER_SQL,
+    burn_rate_evaluate,
+    counter_increases,
 )
-from numalogic_prometheus_spark.operators.promql import increase_with_resets
-
-_BURN_BUDGET = 0.1   # SLO error budget, events/sec
-_BURN_FACTOR = 2.0   # burn-rate multiple that pages
-_SHORT_FROM_MIN = 50  # short window = the hour's last 10 minutes
-
-# The alert evaluation over a per-sample increase relation, shared
-# VERBATIM (one operand sequence, one SQL text) by the batch entry
-# below and its streaming twin (plans/streaming2.stream_burn_rate_alert)
-# so the two cannot drift apart.
-_BURN_SQL_SUFFIX = f"""
-    , agg AS (
-        SELECT event_type, date_trunc('hour', ts) AS hour,
-               sum(increase)::BIGINT AS inc_long,
-               coalesce(sum(CASE WHEN date_part('minute', ts)
-                                      >= {_SHORT_FROM_MIN}
-                                 THEN increase END), 0)::BIGINT AS inc_short
-        FROM increase GROUP BY 1, 2
-    )
-    SELECT event_type, hour, inc_long, inc_short,
-           inc_long / 3600.0 / {_BURN_BUDGET} AS burn_long,
-           inc_short / 600.0 / {_BURN_BUDGET} AS burn_short,
-           (CASE WHEN inc_long / 3600.0 / {_BURN_BUDGET} >= {_BURN_FACTOR}
-                  AND inc_short / 600.0 / {_BURN_BUDGET} >= {_BURN_FACTOR}
-                 THEN 1 ELSE 0 END)::BIGINT AS firing
-    FROM agg
-    """
-
-
-def burn_rate_evaluate(inc: DataFrame) -> DataFrame:
-    """Two-window burn-rate evaluation over per-sample increases
-    ``(event_type, ts, increase)`` — one conditional hash aggregation
-    per (series, hour), then the literal-division burn expressions and
-    the AND-of-windows firing flag."""
-    agg = inc.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hour")
-    ).agg(
-        F.sum("increase").cast("long").alias("inc_long"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.minute("ts") >= _SHORT_FROM_MIN, F.col("increase")
-                )
-            ),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("inc_short"),
-    )
-    burn_long = F.col("inc_long") / F.lit(3600.0) / F.lit(_BURN_BUDGET)
-    burn_short = F.col("inc_short") / F.lit(600.0) / F.lit(_BURN_BUDGET)
-    return agg.select(
-        "event_type",
-        "hour",
-        "inc_long",
-        "inc_short",
-        burn_long.alias("burn_long"),
-        burn_short.alias("burn_short"),
-        F.when(
-            (burn_long >= _BURN_FACTOR) & (burn_short >= _BURN_FACTOR),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("firing"),
-    )
+from numalogic_prometheus_spark.plans import register
+from numalogic_prometheus_spark.sources.tables import load_table
 
 
 @register(
     "promql_burn_rate_multiwindow",
-    oracle=_COUNTER_CTE + _BURN_SQL_SUFFIX,
+    oracle=COUNTER_SQL + BURN_SQL_SUFFIX,
 )
 def promql_burn_rate_multiwindow(
     spark: SparkSession, sf_dir: str
@@ -119,15 +59,13 @@ def promql_burn_rate_multiwindow(
     burn rate AND the trailing-10-minute burn rate both at/over
     {factor}x the {budget}/s budget → firing (module docstring for the
     SRE semantics and the exactness/scale arguments)."""
-    counter = _synthetic_counter(spark, sf_dir)
-    inc = increase_with_resets(
-        counter, ["event_type"], "c", order=["ts", "event_id"]
+    return burn_rate_evaluate(
+        counter_increases(load_table(spark, sf_dir, "events"))
     )
-    return burn_rate_evaluate(inc)
 
 
 promql_burn_rate_multiwindow.__doc__ = (
     promql_burn_rate_multiwindow.__doc__.format(
-        factor=_BURN_FACTOR, budget=_BURN_BUDGET
+        factor=BURN_FACTOR, budget=BURN_BUDGET
     )
 )

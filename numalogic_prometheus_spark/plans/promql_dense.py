@@ -50,6 +50,7 @@ from numalogic_prometheus_spark.functions.timeutil import (
     epoch_us,
     epoch_us_sql,
 )
+from numalogic_prometheus_spark.operators.promql import cents
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.plans.promql3 import (
     _LOOK_US,
@@ -86,12 +87,11 @@ def _bucket_pair_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor↔bucket-array join. Columns: event_type, grp, bkt, event_id,
     a_us, c."""
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
     base = ev.select(
         "event_type",
         "event_id",
         epoch_us("ts").alias("a_us"),
-        cents.alias("c"),
+        cents().alias("c"),
         F.expr(f"{epoch_us_sql('ts')} div {_LOOK_US}").alias("bkt"),
     )
     own = base.withColumn("grp", F.col("bkt"))

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from numalogic_prometheus_spark.operators.promql import cents
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.sources.tables import load_table
 
@@ -22,14 +23,13 @@ from numalogic_prometheus_spark.sources.tables import load_table
 def hourly_rollup(ev: DataFrame) -> DataFrame:
     """The fine-grain rollup a streaming pipeline would maintain
     per-trigger: mergeable partials per (series, hour) in integer cents."""
-    cents = F.round(F.col("value") * 100).cast("long")
     return ev.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hour")
     ).agg(
-        F.sum(cents).alias("sum_cents"),
+        F.sum(cents()).alias("sum_cents"),
         F.count(F.lit(1)).alias("n"),
-        F.min(cents).alias("min_cents"),
-        F.max(cents).alias("max_cents"),
+        F.min(cents()).alias("min_cents"),
+        F.max(cents()).alias("max_cents"),
     )
 
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from numalogic_prometheus_spark.operators.promql import cents
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.sources.tables import load_table
 from numalogic_prometheus_spark.functions.timeutil import epoch_us
@@ -722,12 +723,11 @@ def ts_level_shift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     the partition — two Window passes, not three."""
     w = _SHIFT_W
     samples = _deduped_samples(spark, sf_dir)
-    cents = F.round(F.col("value") * 100).cast("long")
     wo = W.partitionBy("event_type").orderBy("ts")
     s = samples.select(
         "event_type",
         "ts",
-        F.sum(cents).over(wo.rowsBetween(W.unboundedPreceding, 0)).alias("run"),
+        F.sum(cents()).over(wo.rowsBetween(W.unboundedPreceding, 0)).alias("run"),
         F.row_number().over(wo).alias("rn"),
     )
     lag1 = F.lag("run", 1, 0).over(wo)

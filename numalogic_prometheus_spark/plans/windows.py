@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from numalogic_prometheus_spark.operators.counter import counter_increases
 from numalogic_prometheus_spark.plans import register
 from numalogic_prometheus_spark.sources.tables import load_table
 
@@ -94,31 +95,10 @@ def win_lag_rate_reset(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics over A3 counters): lag per series; a negative delta means
     the counter reset, so the increase is the new value itself. The
     monotone-with-wraparound counter is synthesized from a running sum
-    mod 1000 (the fixture has no raw counter column)."""
-    ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("event_type").orderBy("ts", "event_id")
-    # Integer cents before the running sum: float prefix sums differ in
-    # last-bit across engines (segment-tree vs sequential accumulation),
-    # integer sums are exact everywhere.
-    cents = F.round(F.col("value") * 100).cast("long")
-    counter = ev.select(
-        "event_type",
-        "ts",
-        "event_id",
-        (
-            F.sum(cents)
-            .over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-            % 1000
-        ).alias("c"),
-    )
-    deltas = counter.withColumn("raw_delta", F.col("c") - F.lag("c").over(w))
-    return deltas.filter(F.col("raw_delta").isNotNull()).select(
-        "event_type",
-        "event_id",
-        F.col("c").alias("counter_value"),
-        F.when(F.col("raw_delta") < 0, F.col("c"))
-        .otherwise(F.col("raw_delta"))
-        .alias("increase"),
+    mod 1000 (the fixture has no raw counter column, operators/counter.py)."""
+    inc = counter_increases(load_table(spark, sf_dir, "events"))
+    return inc.select(
+        "event_type", "event_id", F.col("c").alias("counter_value"), "increase"
     )
 
 

@@ -14,6 +14,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from numalogic_prometheus_spark.operators.promql import cents
+
 
 def stateful_running_stats(grouped) -> DataFrame:
     """Per-key running (count, sum, sum-of-squares) across micro-batches →
@@ -61,20 +63,25 @@ def stateful_running_stats(grouped) -> DataFrame:
     )
 
 
-def stateful_counter_increase(grouped) -> DataFrame:
+def stateful_counter_increase(ev: DataFrame) -> DataFrame:
     """Streaming counter-reset ``increase`` (SURVEY.md §4.3's named
-    streaming hard part): per series key, chain the synthetic wraparound
-    counter (running cent-sum mod 1000, as plans/promql._synthetic_counter
-    builds batch-side) across micro-batches and emit one reset-corrected
-    increase per sample. The reference's pipeline consumed pre-scraped
-    Prometheus counters (reference metrics.py:64-68 owns only write-side
-    monotonicity); rate evaluation was delegated — this owns it on a
-    stream.
+    streaming hard part) over the events stream ``ev``: per event_type
+    series, chain the wraparound counter of operators/counter.py (running
+    integer-cent sum mod 1000 in (ts, event_id) order) across
+    micro-batches and emit one reset-corrected increase per sample. The
+    reference's pipeline consumed pre-scraped Prometheus counters
+    (reference metrics.py:64-68 owns only write-side monotonicity); rate
+    evaluation was delegated — this owns it on a stream.
 
-    State per key = ``(running, last_c, has_last)`` — the mod-1000
-    running cent-sum, the last emitted counter value, and a
-    first-sample flag: two longs + a boolean, so total state is
-    O(#series) — bounded regardless of stream length (asserted in
+    Contract: the emitted ``(event_type, ts, increase)`` rows equal
+    ``operators.counter.counter_increases`` on the same events for any
+    micro-batch split, signed cents included.
+
+    State per key = ``(running, last_c, has_last)`` — the unreduced
+    running cent-sum (the batch side's BIGINT prefix sum, so the same
+    int64 range), the last emitted counter value, and a first-sample
+    flag: two longs + a boolean, so total state is O(#series) — bounded
+    regardless of stream length (asserted in
     tests/test_streaming_native.py). Assumes per-key in-order delivery
     across batches (the whole micro-batch is materialized and globally
     sorted below — Arrow may deliver one group's batch as several
@@ -82,11 +89,10 @@ def stateful_counter_increase(grouped) -> DataFrame:
     provides the cross-batch part — the standard counter-stream
     contract).
 
-    Emits append-mode per-sample rows ``(event_type, ts, increase)``;
-    the very first sample of a series has no delta and is skipped
-    (batch twin drops the NULL raw_delta row identically). Downstream
-    aggregation to windowed rates stays composable streaming-side or
-    batch-side on the sink.
+    Emits append-mode per-sample rows; the very first sample of a series
+    has no delta and is skipped, as the batch twin drops its NULL
+    raw_delta row. Downstream aggregation to windowed rates stays
+    composable streaming-side or batch-side on the sink.
     """
 
     def update(
@@ -108,11 +114,11 @@ def stateful_counter_increase(grouped) -> DataFrame:
         pdf = pd.concat(list(pdfs), ignore_index=True)
         if len(pdf):
             pdf = pdf.sort_values(["ts", "event_id"])
-            cents = pdf["cents"].to_numpy(dtype="int64")
+            sample_cents = pdf["cents"].to_numpy(dtype="int64")
             # np.fmod keeps sign-of-dividend — Spark/DuckDB `%` semantics;
             # numpy's `%` is sign-of-divisor and would diverge on negative
             # running sums.
-            c = np.fmod(running + np.cumsum(cents), 1000)
+            c = np.fmod(running + np.cumsum(sample_cents), 1000)
             prev = np.empty_like(c)
             prev[1:] = c[:-1]
             if has_last:
@@ -123,13 +129,7 @@ def stateful_counter_increase(grouped) -> DataFrame:
                 valid = np.arange(len(c)) > 0
             delta = c - prev
             increase = np.where(delta < 0, c, delta)
-            # Store the REDUCED running sum: for non-negative cents
-            # (events.value >= 0 by construction) fmod(fmod(a,m)+b,m) ==
-            # fmod(a+b,m), so results are bit-identical while state stays
-            # bounded (the raw sum would eventually overflow int64 on a
-            # long-lived stream and silently wrap in numpy). A signed-
-            # counter variant would need floormod on both batch + stream.
-            running = int(np.fmod(running + int(cents.sum()), 1000))
+            running += int(sample_cents.sum())
             last_c, has_last = int(c[-1]), True
             out = pd.DataFrame(
                 {
@@ -141,7 +141,8 @@ def stateful_counter_increase(grouped) -> DataFrame:
             yield out
         state.update((running, last_c, has_last))
 
-    return grouped.applyInPandasWithState(
+    stream = ev.select("event_type", "ts", "event_id", cents().alias("cents"))
+    return stream.groupBy("event_type").applyInPandasWithState(
         update,
         outputStructType="event_type string, ts timestamp, increase long",
         stateStructType="running long, last_c long, has_last boolean",

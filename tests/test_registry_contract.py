@@ -70,6 +70,34 @@ def test_check_window_names_resolve_and_fill():
     assert names[:50] == list(cf)
 
 
+def test_registry_order_follows_modules():
+    """Past the check window, all_queries() lists each plan module's
+    entries as one run, and the runs follow plans._MODULES. A plan
+    module that imported a later one in its body would register that
+    module's entries early and break this. Checked in a fresh
+    interpreter, as the driver imports the registry: in this process
+    other tests import plan modules directly, in their own order."""
+    import json
+    import pathlib
+    import subprocess
+    import sys
+
+    code = (
+        "import json; from numalogic_prometheus_spark import plans; "
+        "print(json.dumps([fn.__module__.rsplit('.', 1)[-1] "
+        "for name, fn in plans.all_queries().items() "
+        "if name not in plans._CHECK_FIRST]))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=pathlib.Path(__file__).resolve().parent.parent,
+        capture_output=True, text=True, check=True, timeout=300,
+    )
+    mods = json.loads(out.stdout.splitlines()[-1])
+    runs = [m for i, m in enumerate(mods) if i == 0 or mods[i - 1] != m]
+    assert runs == sorted(set(runs), key=plans._MODULES.index)
+
+
 def test_doc_counts_match_live_registry():
     """VERDICT r10 #6 (third straight round with a count nit): the
     COVERAGE.md header and README coverage section state live registry

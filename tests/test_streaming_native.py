@@ -160,29 +160,64 @@ def test_stream_counter_rate_state_bounded_and_matches_batch(spark, sf_dir, stag
     window-function twin sample-for-sample. State stays O(#series):
     one (running, last_c, has_last) tuple per event_type, never per
     sample."""
-    from numalogic_prometheus_spark.operators.promql import increase_with_resets
-    from numalogic_prometheus_spark.plans.promql import _synthetic_counter
+    from numalogic_prometheus_spark.operators.counter import counter_increases
     from numalogic_prometheus_spark.streaming.stateful import (
         stateful_counter_increase,
     )
 
     batch = load_table(spark, sf_dir, "events")
     stream = _read_stream(spark, staged_stream_dir, batch.schema)
-    cents = stream.select(
-        "event_type", "ts", "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    got, progress = _run_named(
-        stateful_counter_increase(cents.groupBy("event_type")), "append"
-    )
+    got, progress = _run_named(stateful_counter_increase(stream), "append")
 
-    want = increase_with_resets(
-        _synthetic_counter(spark, sf_dir), ["event_type"], "c",
-        order=["ts", "event_id"],
-    ).select("event_type", "ts", "increase")
+    want = counter_increases(batch).select("event_type", "ts", "increase")
     assert sorted(map(tuple, got.select("event_type", "ts", "increase").collect())) == \
         sorted(map(tuple, want.collect()))
 
     state = [p_["stateOperators"][0] for p_ in progress if p_.get("stateOperators")]
     assert len(state) >= 4, "expected one micro-batch per staged file"
     assert all(s["numRowsTotal"] <= 5 for s in state), [s["numRowsTotal"] for s in state]
+
+
+def test_stream_counter_signed_cents_across_batch_boundary(spark, tmp_path):
+    """A negative sample just after a micro-batch boundary: the kernel
+    carries the unreduced running cent-sum between batches, so its
+    counter stays the batch prefix sum mod 1000. Series "a" has cents
+    [600, 600 | -700]: c = 600, 200, 500 and the increases are 200 and
+    300. Carrying the sum's remainder (200) instead would give
+    c = fmod(200 - 700, 1000) = -500 after the boundary. Series "b"
+    stays negative throughout."""
+    import pandas as pd
+
+    from numalogic_prometheus_spark.operators.counter import counter_increases
+    from numalogic_prometheus_spark.streaming.stateful import (
+        stateful_counter_increase,
+    )
+
+    parts = [
+        [
+            ("a", "2024-01-01 00:10", 1, 6.0),
+            ("a", "2024-01-01 00:20", 2, 6.0),
+            ("b", "2024-01-01 00:15", 3, -2.5),
+            ("b", "2024-01-01 00:25", 4, 1.0),
+        ],
+        [
+            ("a", "2024-01-01 00:30", 5, -7.0),
+            ("b", "2024-01-01 00:35", 6, -3.0),
+        ],
+    ]
+    for i, rows in enumerate(parts):
+        pdf = pd.DataFrame(rows, columns=["event_type", "ts", "event_id", "value"])
+        pdf["ts"] = pd.to_datetime(pdf["ts"]).astype("datetime64[us]")
+        path = tmp_path / f"part_{i}.parquet"
+        pdf.to_parquet(path, index=False)
+        os.utime(path, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
+
+    batch = spark.read.parquet(str(tmp_path))
+    stream = _read_stream(spark, str(tmp_path), batch.schema)
+    got, progress = _run_named(stateful_counter_increase(stream), "append")
+    assert len([p_ for p_ in progress if p_["numInputRows"]]) == 2
+
+    want = counter_increases(batch).select("event_type", "ts", "increase")
+    rows = sorted(map(tuple, got.select("event_type", "ts", "increase").collect()))
+    assert rows == sorted(map(tuple, want.collect()))
+    assert [r[2] for r in rows if r[0] == "a"] == [200, 300]
